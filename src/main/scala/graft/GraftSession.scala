@@ -9,6 +9,16 @@ import org.apache.spark.sql.SparkSession
   * `nanosAsLong` lets us ingest nanosecond parquet timestamps (the
   * `events` table), which [[graft.queries.QuerySpec.t]] converts to
   * microsecond TIMESTAMP on read.
+  *
+  * The codegen cache is keyed by (context classloader, source), and
+  * local mode compiles each class twice (driver and executor loaders):
+  * curation's steady per-batch working set (≈210 keys) and an 8-query
+  * registry pass (≈110) cycled through Spark's 100-entry default,
+  * recompiling identical code every batch. 512 holds both with
+  * headroom; each retained class costs ≈15–20 KB of heap. The live
+  * status store keeps a short tail only: nothing reads it with the UI
+  * off, and its defaults (1000 SQL executions with plan text, 100k
+  * tasks) are heap a long-running router only accumulates.
   */
 object GraftSession {
   /** Shuffle/spill scratch on tmpfs when available: this container's
@@ -48,6 +58,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "512")
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "1000")
     scratchDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 

@@ -27,16 +27,8 @@ import org.apache.spark.sql.functions._
 object DomainQuota {
 
   /** Zero-domain starting state in the canonical schema. */
-  def emptyState(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("domain", StringType),
-        StructField("n_docs", LongType),
-        StructField("n_admitted", LongType),
-        StructField("admitted_id_sum", LongType))))
-  }
+  def emptyState(spark: SparkSession): DataFrame =
+    AdmissionDeltaStore.emptyState(spark, "domain")
 
   /** One incremental step: fold `newDocs` into per-domain admission
     * `state` under the updated cap. Returns the NEXT state — one row
@@ -148,7 +140,8 @@ final class StreamingDomainQuota(spark: SparkSession, stateDir: String,
 
   // durable-state machinery shared with StreamingMixtureQuota — the
   // rule-specific part of this class is ONLY the admission gate
-  private val store = new AdmissionDeltaStore(spark, stateDir, "domain")
+  private val store = new AdmissionDeltaStore(spark, stateDir, "domain",
+    "StreamingDomainQuota", compactEvery)
 
   /** Live per-domain state (the fold of all deltas); None before the
     * first admission. */
@@ -158,42 +151,10 @@ final class StreamingDomainQuota(spark: SparkSession, stateDir: String,
     * per-domain delta, return the admitted rows (original schema).
     * Pass the foreachBatch `batchId` for replay safety (the -1 default
     * keeps plain append for bounded-loop callers). */
-  def admit(batch: DataFrame, batchId: Long = -1L): DataFrame = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      store.compactExcluding(batchId)
-    val m = materialize.resolveEagerFor(batch)
-    require(m.isEager, s"StreamingDomainQuota needs an EAGER Materialize " +
-      s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
-      "lazy pin could recompute the admitted set against a grown state")
-    val st = store.stateExcluding(batchId)
-      .getOrElse(DomainQuota.emptyState(spark))
-    // pin the canonical projection ONCE: rankedAdmissions reads its
-    // new-slice input three times (totals, domain union, ranking) and
-    // the verdict frame feeds both the admitted join-back and the
-    // state delta — unpinned, the caller's micro-batch plan would
-    // re-evaluate up to four times per admit (the multi-reference
-    // class the exchange-budget gate exists to catch)
-    val nd = m(batch.select(col(idCol).cast("long").as("doc_id"),
-      col(domainCol).cast("string").as("domain")))
-    val verdicts = m(DomainQuota.rankedAdmissions(st, nd))
-    // join back on the id to keep the caller's original schema (the
-    // verdict frame carries only the canonical projection)
-    val admittedIds = verdicts.filter(col("adm")).select(col("doc_id"))
-    val admitted = m(batch.join(
-      broadcastIfSafe(admittedIds.withColumnRenamed("doc_id", "__adm_id")),
-      col(idCol).cast("long") === col("__adm_id")).drop("__adm_id"))
-    store.writeDelta(verdicts.groupBy(col("domain"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("adm"), 1L).otherwise(0L)).as("n_admitted"),
-        sum(when(col("adm"), col("doc_id")).otherwise(0L))
-          .as("admitted_id_sum")), batchId)
-    admitted
-  }
-
-  // the admitted-id set is batch-sized (≤ one micro-batch), so the
-  // broadcast is safe by construction — marked explicitly so AQE
-  // never sorts a micro-batch for a 3-row join
-  private def broadcastIfSafe(df: DataFrame): DataFrame = broadcast(df)
+  def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
+    store.admit(batch, batchId, idCol, materialize,
+      batch.select(col(idCol).cast("long").as("doc_id"),
+        col(domainCol).cast("string").as("domain")))(DomainQuota.rankedAdmissions)
 
   /** Fold the delta partitions into one `batch_id=-2` sentinel
     * partition (StreamingQuota.compact's convention and crash-safe

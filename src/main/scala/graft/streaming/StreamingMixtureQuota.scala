@@ -44,16 +44,8 @@ import org.apache.spark.sql.functions._
 object MixtureQuota {
 
   /** Zero-stratum starting state in the canonical schema. */
-  def emptyState(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("stratum", StringType),
-        StructField("n_docs", LongType),
-        StructField("n_admitted", LongType),
-        StructField("admitted_id_sum", LongType))))
-  }
+  def emptyState(spark: SparkSession): DataFrame =
+    AdmissionDeltaStore.emptyState(spark, "stratum")
 
   /** One incremental step: fold `newDocs` into per-stratum admission
     * `state` under the updated target-share caps. Returns the NEXT
@@ -146,7 +138,8 @@ final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
       graft.operators.Materialize.SessionDefault("StreamingMixtureQuota.admitted"),
     compactEvery: Int = 0) {
 
-  private val store = new AdmissionDeltaStore(spark, stateDir, "stratum")
+  private val store = new AdmissionDeltaStore(spark, stateDir, "stratum",
+    "StreamingMixtureQuota", compactEvery)
 
   /** Live per-stratum state (the fold of all deltas); None before the
     * first admission. */
@@ -156,34 +149,11 @@ final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
     * the per-stratum delta, return the admitted rows (original
     * schema). Pass the foreachBatch `batchId` for replay safety (the
     * -1 default keeps plain append for bounded-loop callers). */
-  def admit(batch: DataFrame, batchId: Long = -1L): DataFrame = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      store.compactExcluding(batchId)
-    val m = materialize.resolveEagerFor(batch)
-    require(m.isEager, s"StreamingMixtureQuota needs an EAGER Materialize " +
-      s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
-      "lazy pin could recompute the admitted set against a grown state")
-    val st = store.stateExcluding(batchId)
-      .getOrElse(MixtureQuota.emptyState(spark))
-    // pin the canonical projection ONCE (the multi-reference rule —
-    // see StreamingDomainQuota.admit)
-    val nd = m(batch.select(col(idCol).cast("long").as("doc_id"),
-        col(stratumCol).cast("string").as("stratum"))
-      .filter(col("stratum").isNotNull))
-    val verdicts = m(MixtureQuota.rankedAdmissions(st, nd, targetBp))
-    val admittedIds = verdicts.filter(col("adm")).select(col("doc_id"))
-    // batch-sized set — broadcast explicitly so AQE never sorts a
-    // micro-batch for a few-row join
-    val admitted = m(batch.join(
-      broadcast(admittedIds.withColumnRenamed("doc_id", "__adm_id")),
-      col(idCol).cast("long") === col("__adm_id")).drop("__adm_id"))
-    store.writeDelta(verdicts.groupBy(col("stratum"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("adm"), 1L).otherwise(0L)).as("n_admitted"),
-        sum(when(col("adm"), col("doc_id")).otherwise(0L))
-          .as("admitted_id_sum")), batchId)
-    admitted
-  }
+  def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
+    store.admit(batch, batchId, idCol, materialize,
+      batch.select(col(idCol).cast("long").as("doc_id"),
+          col(stratumCol).cast("string").as("stratum"))
+        .filter(col("stratum").isNotNull))(MixtureQuota.rankedAdmissions(_, _, targetBp))
 
   /** Fold the delta partitions into one `batch_id=-2` sentinel
     * partition (crash-safe GenerationSwap choreography). */

@@ -134,8 +134,15 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
       if (newParts.isEmpty) legacy
       else legacy.unionByName(spark.read.option("basePath", indexDir)
         .parquet(newParts.map(_.getPath.toString).toSeq: _*))
+    replaceIndex(merged)
+  }
+
+  /** Rewrite the whole index as `rows` in the index layout (one file
+    * per band, band_key-sorted) through the shared crash-safe swap —
+    * [[recoverCompact]] adopts whichever sibling survives a crash. */
+  private def replaceIndex(rows: DataFrame): Unit = {
     val tmp = indexDir + ".compact"
-    merged.repartition(col("band"))
+    rows.repartition(col("band"))
       .sortWithinPartitions(col("band"), col("band_key"))
       .write.partitionBy("batch_id", "band").mode("overwrite").parquet(tmp)
     GenerationSwap.replaceLive(fs, indexDir, tmp)
@@ -155,11 +162,16 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
     recovered = true
   }
 
+  // schema memo: every write after the legacy migration (which reads
+  // the legacy layouts itself) uses one schema, and the dir is
+  // instance-owned — the assumption the memos above already make
+  private val index = new ParquetDir(spark, indexDir, Set("batch_id", "band"))
+
   /** The live view of the index: rows within the retention horizon. */
   private def indexView(): Option[DataFrame] =
     if (!hasIndex) None
     else {
-      val all = spark.read.parquet(indexDir)
+      val all = index.read()
       Some(retention.fold(all)(h =>
         all.filter(col("ingest_ts") >= current_timestamp() - expr(s"INTERVAL $h"))))
     }
@@ -167,11 +179,11 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
   /** Live index rows for the given bands only. `band` is the index's
     * HIVE PARTITION column, so the isin lands in the scan's
     * PartitionFilters — only the touched band directories are listed
-    * and read, the layout PLANS.md promises. (A full batch touches
-    * every band — each doc emits all k/r of them — so the directory
-    * prune pays off on degenerate batches; the layout's main scale win
-    * is that within a band the files are sorted by band_key, giving
-    * parquet row-group min/max skipping on the join key.) */
+    * and read, the layout PLANS.md promises. ([[processBatch]] asks
+    * for every band — each doc emits all k/r of them — so the layout's
+    * main scale win there is that within a band the files are sorted
+    * by band_key, giving parquet row-group min/max skipping on the
+    * join key.) */
   private[streaming] def indexForBands(bands: Seq[Any]): Option[DataFrame] =
     if (bands.isEmpty) None
     else indexView().map(_.filter(col("band").isin(bands: _*)))
@@ -218,10 +230,9 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
     val bs = bandSigs(batch).persist() // batch-sized; read by 3 consumers
     try {
       // cross-batch: similar to any indexed (retained) doc → drop.
-      // The touched-band list is control-plane sized (<= k/r values)
-      // and pushes a partition filter into the index scan.
-      val touched = bs.select(col("band")).distinct().collect().map(_.get(0)).toSeq
-      val crossDropped = indexForBands(touched).map { idxAll =>
+      // Every doc with a signature emits all k/r bands, so the band
+      // list is known without a job over the batch.
+      val crossDropped = indexForBands(0 until k / r).map { idxAll =>
         val idx =
           if (batchId >= 0) idxAll.filter(col("batch_id") =!= batchId)
           else idxAll
@@ -245,7 +256,9 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
       val intraDropped = bucketPairs.select(col("b.id").as(idCol)).distinct()
       val droppedIds = crossDropped.fold(intraDropped)(_.unionByName(intraDropped))
         .distinct()
-      val kept = batch.join(droppedIds, Seq(idCol), "left_anti")
+      // the dropped ids are batch-sized: broadcast them rather than
+      // shuffle the caller's batch into a sort-merge anti-join
+      val kept = batch.join(broadcast(droppedIds), Seq(idCol), "left_anti")
       // pin the kept-set BEFORE the index append (and before releasing
       // bs): pinning AFTER the write evaluated `kept` TWICE — once
       // inside the append's join, once in the pin — re-running the
@@ -290,7 +303,7 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
   }
 
   /** Rows currently in the index (state-size observability/tests). */
-  def indexSize(): Long = if (hasIndex) spark.read.parquet(indexDir).count() else 0L
+  def indexSize(): Long = if (hasIndex) index.read().count() else 0L
 
   /** The mid-stream-safe fold behind `compactEvery`: rows of every
     * batch EXCEPT `batchId`'s relabel into the -2 sentinel (a pure
@@ -299,36 +312,17 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
     * partition carries over untouched for its replay exclusion and
     * dynamic overwrite. Idempotent under replay re-triggering. */
   private def compactExcluding(batchId: Long): Unit = if (hasIndex) {
-    val all = spark.read.parquet(indexDir)
+    val all = index.read()
     val old = all.filter(col("batch_id") =!= batchId)
     val folded = retention.fold(old)(h =>
         old.filter(col("ingest_ts") >= current_timestamp() - expr(s"INTERVAL $h")))
       .withColumn("batch_id", lit(-2L))
-    val tmp = indexDir + ".compact"
-    folded.unionByName(all.filter(col("batch_id") === batchId))
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("band_key"))
-      .write.partitionBy("batch_id", "band").mode("overwrite").parquet(tmp)
-    GenerationSwap.replaceLive(fs, indexDir, tmp)
+    replaceIndex(folded.unionByName(all.filter(col("batch_id") === batchId)))
   }
 
   /** Rewrite the index keeping only rows within the retention horizon
     * — reclaims storage for long-running pipelines. No-op without a
     * retention policy or an index. */
-  def compact(): Unit = if (retention.nonEmpty && hasIndex) {
-    val tmp = indexDir + ".compact"
-    indexView().foreach { live =>
-      // keep the partitioned layout through the rewrite, and swap
-      // crash-safely (rename aside, not delete — [[recoverCompact]]
-      // adopts whichever sibling survives a crash)
-      live.repartition(col("band"))
-        .sortWithinPartitions(col("band"), col("band_key"))
-        .write.partitionBy("batch_id", "band").mode("overwrite").parquet(tmp)
-      // CHECKED swap (GenerationSwap.replaceLive — the shared
-      // choreography): an unchecked false here reported success while
-      // leaving no live index
-      GenerationSwap.replaceLive(fs, indexDir, tmp)
-      ()
-    }
-  }
+  def compact(): Unit =
+    if (retention.nonEmpty && hasIndex) indexView().foreach(replaceIndex)
 }

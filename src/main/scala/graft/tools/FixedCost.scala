@@ -9,7 +9,8 @@ import graft.{GraftSession, SparkEntry}
   *   - plan: optimize + physical planning (executedPlan forced)
   *   - exec1..execN: repeated noop-sink executions under bench
   *     isolation (exec1 pays cold codegen; the later reps show the
-  *     steady-state floor and how much a warm codegen cache buys)
+  *     steady-state floor; a list whose generated classes fit
+  *     [[GraftSession]]'s 512-entry codegen cache compiles only once)
   * plus the executed job/stage counts of the LAST rep.
   *
   * `runMain graft.tools.FixedCost <sfDir> <reps> <q1,q2,...>`

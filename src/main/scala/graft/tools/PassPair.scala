@@ -5,9 +5,11 @@ import graft.{GraftSession, SparkEntry}
 /** Bench-shaped two-pass battery: runs the given queries as PASS 1
   * then PASS 2 (interleaved like Bench's full passes, unlike
   * TimeMany's consecutive reps) and prints both per-query times. The
-  * pass-2 column shows what min-of-passes actually measures — and
-  * whether cross-query codegen-cache eviction makes pass 2 pay cold
-  * compile again. `runMain graft.tools.PassPair <sfDir> <q1,q2,...>`
+  * pass-2 column shows what min-of-passes actually measures. Its old
+  * question — does codegen-cache eviction make pass 2 compile again —
+  * is answered: yes under Spark's 100-entry default (an 8-query pass
+  * is ≈110 keys), so [[GraftSession]] sizes the cache at 512.
+  * `runMain graft.tools.PassPair <sfDir> <q1,q2,...>`
   */
 object PassPair {
   def main(args: Array[String]): Unit = {

@@ -290,6 +290,17 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(!mk(0).contains("\"pf\""))
   }
 
+  test("forked runs pass stdout through unprefixed, so the compact line starts with '{'") {
+    // with sbt's default LoggedOutput every forked stdout line reaches
+    // the caller as "[info] {...}" and no line-based JSON parser ever
+    // matches the compact line; StdoutOutput only applies to forked runs
+    val settings = scala.io.Source.fromFile("build.sbt").getLines()
+      .map(_.replaceAll("//.*", "").trim).filter(_.nonEmpty).toSet
+    assert(settings("outputStrategy := Some(StdoutOutput)"),
+      "build.sbt must set outputStrategy := Some(StdoutOutput)")
+    assert(settings("run / fork := true"), "build.sbt must fork `run`")
+  }
+
   test("compact line carries the rerun count only when reruns happened") {
     val results = names.zipWithIndex.map { case (n, i) =>
       n -> (if (i < 16) 8.99 else 0.99)
