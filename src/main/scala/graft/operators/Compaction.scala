@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions.col
   *
   * File count comes from the directory's ACTUAL byte size (an FS
   * listing — metadata, not data), never from in-memory plan estimates
-  * that miss parquet's compression ratio. The swap is crash-safe in
-  * the same rename-aside order as StreamingQuota.compact: materialize
-  * `.compact` fully, move live aside to `.old`, promote, delete —
-  * every crash point leaves a complete directory to adopt.
+  * that miss parquet's compression ratio. The swap is crash-safe —
+  * the rename-aside choreography of
+  * [[graft.streaming.GenerationSwap.replaceLive]] (materialize
+  * `.compact` fully, move live aside to `.old`, promote, delete), whose
+  * recovery probe runs first, so every crash point leaves a complete
+  * directory to adopt.
   */
 object Compaction {
 
@@ -30,24 +32,9 @@ object Compaction {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(dir)
-    // self-healing (same contract as FilePubSub.compact): a crash
-    // between "live moved aside" and "compacted dir promoted" leaves
-    // live MISSING — finish forward from the complete .compact copy if
-    // it exists, else roll back from .old, so no crash window strands
-    // the directory or loses data
-    if (!fs.exists(live)) {
-      // CHECKED recovery (GenerationSwap contract): an unchecked false
-      // rename here proceeded to delete the .old rollback copy while
-      // live was still absent — the silent-failure class the
-      // choreography exists to kill
-      val tmp0 = new Path(dir + ".compact"); val old0 = new Path(dir + ".old")
-      if (fs.exists(tmp0)) {
-        graft.streaming.GenerationSwap.renameOrThrow(fs, tmp0, live)
-        graft.streaming.GenerationSwap.deleteIfExists(fs, old0)
-      } else if (fs.exists(old0)) {
-        graft.streaming.GenerationSwap.renameOrThrow(fs, old0, live)
-      }
-    }
+    // self-healing: a crash between "live moved aside" and "compacted
+    // dir promoted" left live missing — adopt the surviving sibling
+    graft.streaming.GenerationSwap.recoverReplace(fs, dir)
     val entries = fs.listStatus(live)
     // partitioned layouts (key=value subdirs) would be read through
     // partition discovery and rewritten FLAT — partition columns
@@ -73,14 +60,9 @@ object Compaction {
           .sortWithinPartitions(sortBy.map(col): _*)
       else df.repartition(nFiles)
 
-    val tmp = new Path(dir + ".compact")
-    val old = new Path(dir + ".old")
-    graft.streaming.GenerationSwap.deleteIfExists(fs, tmp)
-    graft.streaming.GenerationSwap.deleteIfExists(fs, old)
-    out.write.mode("overwrite").parquet(tmp.toString)
-    // shared rename-aside choreography — one definition of the crash
-    // contract across compact/migrate sites
-    graft.streaming.GenerationSwap.replaceLive(fs, dir, tmp.toString)
+    val tmp = dir + ".compact"
+    out.write.mode("overwrite").parquet(tmp)
+    graft.streaming.GenerationSwap.replaceLive(fs, dir, tmp)
     nFiles
   }
 }

@@ -1,81 +1,205 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Shared durable-state machinery behind the incremental-admission
-  * operators ([[StreamingDomainQuota]], [[StreamingMixtureQuota]]):
-  * per-key admission state under `stateDir` in [[StreamingQuota]]'s
-  * append-only delta discipline — one `(key, n_docs, n_admitted,
-  * admitted_id_sum)` row per key per batch in a `batch_id=N`
-  * partition; the live state is the per-key SUM of deltas (every
-  * column is an exact Long sum, so folding commutes), with the
-  * replay-safe batch-id exclusion and the crash-safe
-  * [[GenerationSwap]] compaction choreography.
+/** The batch-partitioned state store: the ONE definition of the
+  * on-disk protocol behind every replayable `foreachBatch` operator
+  * ([[StreamingQuota]], [[StreamingNearDup]], [[StreamingDomainQuota]],
+  * [[StreamingMixtureQuota]]) — redelivery mapped onto replayed
+  * micro-batches with an idempotent sink.
   *
-  * What stays OUT of the store is the admission rule itself (domain
-  * fair-share cap vs target-share mixture cap): the operators differ
-  * only there, so the rule is the one thing each keeps and [[admit]]
-  * runs it.
+  * Layout: rows live under `dir`, hive-partitioned by `partitionCols`
+  * (`batch_id` first, then any operator column such as `band`). Only
+  * `batch_id=` dirs and `_`/`.`-prefixed marker files may sit at the
+  * top level; anything else (flat part files, `band=` dirs) is a layout
+  * that predates `batch_id` partitioning and fails loudly rather than
+  * being read as state.
   *
-  * Scale: state is per-key (control-plane-sized — one row per domain
-  * or stratum, never row-scaled); every fold is a map-side-combined
-  * sum over the pruned four-column parquet. */
-private[streaming] final class AdmissionDeltaStore(spark: SparkSession,
-    stateDir: String, keyName: String, owner: String, compactEvery: Int) {
+  * REPLAY: under `foreachBatch` only the current, uncommitted batch id
+  * can re-run. [[state]]`(id)` excludes that id's own partition (a
+  * replayed batch must judge against everything EXCEPT its first
+  * attempt, or it double-counts budgets / self-matches every survivor)
+  * and [[write]]`(rows, id)` dynamic-overwrites exactly that id's
+  * partitions, so a replay is bit-identical. An id of -1 means a
+  * bounded-loop caller outside `foreachBatch`: nothing is excluded and
+  * writes append.
+  *
+  * COMPACTION: `compactEvery` = N > 0 folds the partitions every N
+  * batches (0 = off). Every batch EXCEPT the triggering one folds into
+  * the `batch_id=-2` sentinel (visible to every replay view,
+  * attributable to none) — earlier ids are checkpoint-committed, so
+  * their attribution is dead weight — while the live id keeps its
+  * partition for the replay exclusion and overwrite; re-triggering on a
+  * replay is idempotent. Requires monotonically increasing batch ids
+  * (foreachBatch's own contract). Without it the dir grows one
+  * partition per micro-batch forever. [[compact]] is the quiescent form
+  * that folds every batch (run it only for committed ids).
+  *
+  * CRASH SAFETY: a fold is written in full to `<dir>.compact` and
+  * swapped in by [[GenerationSwap.replaceLive]]; the first read of an
+  * instance runs [[GenerationSwap.recoverReplace]], which adopts
+  * whichever sibling a crash left, so a restart never silently resets
+  * state (an over-admitting quota, a re-admitting near-dup index).
+  *
+  * What stays with each operator: its partition columns, its `fold`
+  * (the live state of a set of rows, e.g. a sum per key; it must be
+  * idempotent over already-folded rows), its `layout` for whole-dir
+  * rewrites, and its admission or dedup rule.
+  */
+private[streaming] final class BatchPartitionedStore(spark: SparkSession,
+    dir: String, partitionCols: Seq[String], compactEvery: Int,
+    layout: DataFrame => DataFrame, fold: DataFrame => DataFrame) {
 
-  private def fs = new org.apache.hadoop.fs.Path(stateDir)
-    .getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private val deltas = new ParquetDir(spark, stateDir, Set("batch_id"))
-
+  /** Recovery is needed once per instance start (an in-process swap
+    * throws rather than crash silently); re-probing on every read
+    * would be a per-micro-batch LIST tax on object stores. An exception
+    * leaves the flag unset so the probe retries. */
   @volatile private var recovered = false
-  private def recoverCompact(): Unit = {
-    if (recovered) return
-    GenerationSwap.recoverReplace(fs, stateDir)
-    recovered = true
-  }
 
   private def hasState: Boolean = {
-    recoverCompact()
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    fs.exists(p) && fs.listStatus(p).exists(
-      _.getPath.getName.startsWith("batch_id="))
+    if (!recovered) {
+      GenerationSwap.recoverReplace(fs, dir)
+      recovered = true
+    }
+    val p = new Path(dir)
+    fs.exists(p) && {
+      val names = fs.listStatus(p).map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      val foreign = names.filterNot(_.startsWith("batch_id="))
+      if (foreign.nonEmpty) throw new IllegalStateException(
+        s"$dir holds ${foreign.take(3).mkString(", ")}: a layout that " +
+          "predates batch_id partitioning, which is not read as state")
+      names.nonEmpty
+    }
   }
 
-  /** Live per-key state (the fold of all deltas); None before the
-    * first admission. `batchId >= 0` excludes that id's own partition
-    * — the replay-safety rule: a replayed batch budgets against
-    * everything EXCEPT its own first attempt. */
-  private def stateExcluding(batchId: Long): Option[DataFrame] =
+  /** A schemaless read runs a footer-inference job per call (per
+    * micro-batch); the dir is instance-owned and always written with
+    * one schema, so the data schema is memoized after the first read.
+    * Partition columns stay out of the memo and are still inferred from
+    * the directory names (a listing, no job). */
+  @volatile private var dataSchema: Option[StructType] = None
+
+  private def readAll(): DataFrame = dataSchema.fold {
+    val df = spark.read.parquet(dir)
+    dataSchema = Some(StructType(df.schema.filterNot(f => partitionCols.contains(f.name))))
+    df
+  }(spark.read.schema(_).parquet(dir))
+
+  /** Raw rows, minus batch `excluding`'s own partition when it is
+    * >= 0 (the replay view); None before the first write. */
+  def view(excluding: Long = -1L): Option[DataFrame] =
     if (!hasState) None
     else {
-      val all = deltas.read()
-      val visible =
-        if (batchId >= 0) all.filter(col("batch_id") =!= batchId) else all
-      Some(visible.groupBy(col(keyName))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("n_admitted")).as("n_admitted"),
-          sum(col("admitted_id_sum")).as("admitted_id_sum")))
+      val all = readAll()
+      Some(if (excluding >= 0) all.filter(col("batch_id") =!= excluding) else all)
     }
 
-  def state(): Option[DataFrame] = stateExcluding(-1L)
+  /** The operator's live state: its fold over the replay view. */
+  def state(excluding: Long = -1L): Option[DataFrame] = view(excluding).map(fold)
 
-  /** Append (or, for a replayed non-negative id, dynamic-overwrite)
-    * one batch's per-key delta partition. */
-  private def writeDelta(delta: DataFrame, batchId: Long): Unit = {
-    val dw = delta.withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
+  /** Write one batch's rows under `batch_id=batchId`: append for -1, a
+    * dynamic overwrite of that id's partitions otherwise. `laidOut`
+    * arranges the rows (batch_id included) before the write. */
+  def write(rows: DataFrame, batchId: Long,
+      laidOut: DataFrame => DataFrame = identity): Unit = {
+    val w = laidOut(rows.withColumn("batch_id", lit(batchId)))
+      .write.partitionBy(partitionCols: _*)
     if (batchId >= 0)
-      dw.option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(stateDir)
-    else dw.mode("append").parquet(stateDir)
+      w.option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(dir)
+    else w.mode("append").parquet(dir)
   }
+
+  /** The `compactEvery` trigger; call at the start of each batch. */
+  def compactIfDue(batchId: Long): Unit =
+    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+      state(batchId).foreach { folded =>
+        replace(sentinel(folded)
+          .unionByName(readAll().filter(col("batch_id") === batchId)))
+      }
+
+  /** Fold every batch into the sentinel partition. */
+  def compact(): Unit = state().foreach(s => replace(sentinel(s)))
+
+  private def sentinel(folded: DataFrame): DataFrame =
+    folded.withColumn("batch_id", lit(-2L))
+
+  /** Rewrite the whole dir as `rows` (which may be read from it):
+    * written to the `.compact` sibling first, then swapped in. */
+  def replace(rows: DataFrame): Unit = {
+    val tmp = dir + ".compact"
+    layout(rows).write.partitionBy(partitionCols: _*).mode("overwrite").parquet(tmp)
+    GenerationSwap.replaceLive(fs, dir, tmp)
+  }
+}
+
+private[streaming] object BatchPartitionedStore {
+  /** The fold of per-batch count deltas: one row per key, each value
+    * column summed (exact Long sums commute, so folded rows fold again
+    * to themselves). */
+  def sumPerKey(key: String, values: Seq[String])(rows: DataFrame): DataFrame =
+    rows.groupBy(col(key)).agg(sum(col(values.head)).as(values.head),
+      values.tail.map(v => sum(col(v)).as(v)): _*)
+}
+
+/** Per-key admission state shared by the incremental-admission
+  * operators ([[StreamingDomainQuota]], [[StreamingMixtureQuota]]) and
+  * their pure folds ([[DomainQuota.admitIncrement]],
+  * [[MixtureQuota.admitIncrement]]): one `(key, n_docs, n_admitted,
+  * admitted_id_sum)` row per key, every column an exact Long sum
+  * (admitted_id_sum pins exact MEMBERSHIP cross-engine, the q181
+  * keeper-sum rule). The operators differ only in the admission rule,
+  * which [[admit]] runs.
+  *
+  * Scale: state is per-key (control-plane-sized — one row per domain or
+  * stratum, never row-scaled); every fold is a map-side-combined sum
+  * over the pruned four-column parquet. */
+private[streaming] object AdmissionDeltaStore {
+
+  val Counts: Seq[String] = Seq("n_docs", "n_admitted", "admitted_id_sum")
+
+  /** The store for one operator's per-key deltas under `stateDir`. */
+  def open(spark: SparkSession, stateDir: String, key: String,
+      compactEvery: Int): BatchPartitionedStore =
+    new BatchPartitionedStore(spark, stateDir, Seq("batch_id"), compactEvery,
+      _.repartition(1), BatchPartitionedStore.sumPerKey(key, Counts))
+
+  /** Zero-key starting state in the canonical schema. */
+  def emptyState(spark: SparkSession, key: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(StructField(key, StringType) +: Counts.map(StructField(_, LongType))))
+  }
+
+  /** `state` in the canonical column types. */
+  def canonical(state: DataFrame, key: String): DataFrame =
+    state.select(col(key).cast("string").as(key) +:
+      Counts.map(c => col(c).cast("long").as(c)): _*)
+
+  /** Per-key counts of `adm`-flagged `(doc_id, key)` verdicts. */
+  def increment(verdicts: DataFrame, key: String): DataFrame =
+    verdicts.groupBy(col(key))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("adm"), 1L).otherwise(0L)).as("n_admitted"),
+        sum(when(col("adm"), col("doc_id")).otherwise(0L)).as("admitted_id_sum"))
+
+  /** `state` + `inc` per key (a key on either side only keeps its own
+    * counts). */
+  def plus(state: DataFrame, inc: DataFrame, key: String): DataFrame =
+    state.join(inc.select(col(key) +: Counts.map(c => col(c).as("i_" + c)): _*),
+        Seq(key), "full_outer")
+      .select(col(key) +: Counts.map(c =>
+        (coalesce(col(c), lit(0L)) + coalesce(col("i_" + c), lit(0L))).as(c)): _*)
 
   /** One replay-safe admission step: `rule(state, canonical)` flags
     * each canonical `(doc_id, key)` row of `batch` with `adm`; the
-    * per-key delta is appended and `batch`'s admitted rows return in
+    * per-key delta is written and `batch`'s admitted rows return in
     * its original schema. The pin must be EAGER: the returned rows are
     * the exact set whose delta was just written (a lazy pin could
     * recompute against a grown state). The rule reads the folded state
@@ -83,80 +207,24 @@ private[streaming] final class AdmissionDeltaStore(spark: SparkSession,
     * feed the join-back and the delta: unpinned, every admit would
     * re-aggregate the delta parquet and re-run the caller's batch plan
     * up to four times. */
-  def admit(batch: DataFrame, batchId: Long, idCol: String,
+  def admit(store: BatchPartitionedStore, key: String, owner: String,
+      batch: DataFrame, batchId: Long, idCol: String,
       materialize: graft.operators.Materialize, canonical: DataFrame)(
       rule: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compactExcluding(batchId)
+    store.compactIfDue(batchId)
     val m = materialize.resolveEagerFor(batch)
     require(m.isEager, s"$owner needs an EAGER Materialize " +
       s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
       "lazy pin could recompute the admitted set against a grown state")
-    val st = stateExcluding(batchId).map(m(_))
-      .getOrElse(AdmissionDeltaStore.emptyState(spark, keyName))
+    val st = store.state(batchId).map(m(_))
+      .getOrElse(emptyState(canonical.sparkSession, key))
     val verdicts = m(rule(st, m(canonical)))
     // the admitted-id set is batch-sized: broadcast explicitly so AQE
     // never sorts a micro-batch for a few-row join
     val admittedIds = verdicts.filter(col("adm")).select(col("doc_id").as("__adm_id"))
     val admitted = m(batch.join(broadcast(admittedIds),
       col(idCol).cast("long") === col("__adm_id")).drop("__adm_id"))
-    writeDelta(verdicts.groupBy(col(keyName))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("adm"), 1L).otherwise(0L)).as("n_admitted"),
-        sum(when(col("adm"), col("doc_id")).otherwise(0L))
-          .as("admitted_id_sum")), batchId)
+    store.write(increment(verdicts, key), batchId)
     admitted
   }
-
-  /** The mid-stream-safe fold (StreamingQuota's discipline): every
-    * delta EXCEPT `batchId`'s own partition collapses into the -2
-    * sentinel; the live id's partition carries over untouched so a
-    * replay of it still excludes and overwrites its first attempt.
-    * Idempotent under replay re-triggering. */
-  private def compactExcluding(batchId: Long): Unit = stateExcluding(batchId).foreach { folded =>
-    replaceState(folded.withColumn("batch_id", lit(-2L))
-      .unionByName(deltas.read().filter(col("batch_id") === batchId)))
-  }
-
-  /** Fold everything into one `batch_id=-2` sentinel partition
-    * (crash-safe: [[GenerationSwap]] — a crash can never silently
-    * reset budgets). */
-  def compact(): Unit =
-    state().foreach(s => replaceState(s.withColumn("batch_id", lit(-2L))))
-
-  private def replaceState(rows: DataFrame): Unit = {
-    val tmp = stateDir + ".compact"
-    rows.repartition(1).write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-    GenerationSwap.replaceLive(fs, stateDir, tmp)
-  }
-}
-
-private[streaming] object AdmissionDeltaStore {
-  /** Zero-key starting state in the canonical schema. */
-  def emptyState(spark: SparkSession, keyName: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField(keyName, StringType),
-        StructField("n_docs", LongType),
-        StructField("n_admitted", LongType),
-        StructField("admitted_id_sum", LongType))))
-  }
-}
-
-/** `spark.read.parquet(dir)` for a dir its owner always writes with one
-  * schema: a schemaless read runs a footer-inference job per call (per
-  * micro-batch), so the data schema is memoized after the first read.
-  * Partition columns stay out of the memo and are still inferred from
-  * the directory names (a listing, no job). */
-private[streaming] final class ParquetDir(spark: SparkSession, dir: String,
-    partitionCols: Set[String]) {
-  @volatile private var dataSchema: Option[StructType] = None
-
-  def read(): DataFrame = dataSchema.fold {
-    val df = spark.read.parquet(dir)
-    dataSchema = Some(StructType(df.schema.filterNot(f => partitionCols(f.name))))
-    df
-  }(spark.read.schema(_).parquet(dir))
 }

@@ -16,9 +16,10 @@ import graft.router.{Ctx, Stages}
   * Every stage is a pure column transform on the STREAMING Dataset —
   * no stream-stream joins, no state — so they are valid on an
   * unbounded stream under any trigger. Stateful curation (cross-batch
-  * dedup, budgets) lives in [[StreamingDedup]] / [[StreamingNearDup]]
-  * / [[StreamingQuota]], which are `foreachBatch`-driven because they
-  * must read their own past.
+  * dedup, budgets) lives in [[StreamingDedup]] (Spark's own state
+  * store) and in [[StreamingNearDup]] / [[StreamingQuota]], which are
+  * `foreachBatch`-driven because they must read their own past — a
+  * replay-safe [[BatchPartitionedStore]] each.
   */
 object CurationStages {
 

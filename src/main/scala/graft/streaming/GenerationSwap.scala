@@ -2,9 +2,12 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Checked filesystem primitives for the atomic generation swap shared
-  * by [[StreamingCdc]] and [[StreamingProfile]] (write `.next` fully,
-  * park live as `.old`, promote, drop `.old`).
+/** Checked filesystem primitives for the two atomic generation swaps:
+  * [[promote]] (write `.next` fully, park live as `.old`, promote, drop
+  * `.old`) for [[StreamingCdc]] and [[StreamingProfile]], and
+  * [[replaceLive]] (the `.compact` rewrite) for [[BatchPartitionedStore]]
+  * and [[graft.operators.Compaction]]. Each comes with its recovery
+  * probe, the one definition of its crash contract.
   *
   * Hadoop's `FileSystem.rename`/`delete` signal failure by RETURNING
   * FALSE (dest exists, src missing, concurrent writer), not by
@@ -35,10 +38,8 @@ private[graft] object GenerationSwap {
 
   /** Replace the live dir with a FULLY-WRITTEN sibling via the
     * rename-aside choreography (park live as `.old`, promote the
-    * sibling, drop `.old`) — the one definition of the crash contract
-    * that StreamingQuota/StreamingNearDup's compact AND legacy-layout
-    * migrations all share (their `recoverCompact` adopts whichever
-    * sibling survives a crash at any step). The sibling must be
+    * sibling, drop `.old`); [[recoverReplace]] adopts whichever
+    * sibling survives a crash at any step. The sibling must be
     * complete before calling: every crash point then leaves either
     * the old live dir or a complete replacement. */
   def replaceLive(fs: FileSystem, liveDir: String, tmpDir: String): Unit = {
@@ -70,9 +71,7 @@ private[graft] object GenerationSwap {
     * silently resetting (a quota state reset over-admits every
     * exhausted key; a near-dup index reset re-admits every duplicate).
     * Leftovers from a completed or recovered swap are dead state and
-    * are swept. ONE definition of the crash contract — the previous
-    * per-operator hand-copies (StreamingQuota/StreamingNearDup) could
-    * drift apart under a future ordering fix. */
+    * are swept. */
   def recoverReplace(fs: FileSystem, liveDir: String): Unit = {
     val live = new Path(liveDir)
     val tmp = new Path(liveDir + ".compact")
@@ -88,9 +87,7 @@ private[graft] object GenerationSwap {
   }
 
   /** Crash recovery for [[promote]]: live missing → adopt the COMPLETE
-    * (`_SUCCESS`-marked) `.next`, else roll back to `.old`. Shared by
-    * StreamingCdc/StreamingProfile (same dedup rationale as
-    * [[recoverReplace]]). */
+    * (`_SUCCESS`-marked) `.next`, else roll back to `.old`. */
   def recoverPromote(fs: FileSystem, stateDir: String): Unit = {
     val live = new Path(stateDir)
     if (!fs.exists(live)) {

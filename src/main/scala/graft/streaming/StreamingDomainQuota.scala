@@ -46,25 +46,11 @@ object DomainQuota {
     * are pruned columnar scans and stay cheap). */
   def admitIncrement(state: DataFrame, newDocs: DataFrame,
       domainCol: String = "domain", idCol: String = "doc_id"): DataFrame = {
-    val st = state.select(col("domain").cast("string").as("domain"),
-      col("n_docs").cast("long").as("n_docs"),
-      col("n_admitted").cast("long").as("n_admitted"),
-      col("admitted_id_sum").cast("long").as("admitted_id_sum"))
+    val st = AdmissionDeltaStore.canonical(state, "domain")
     val nd = newDocs.select(col(idCol).cast("long").as("doc_id"),
       col(domainCol).cast("string").as("domain"))
-    val inc = rankedAdmissions(st, nd)
-      .groupBy(col("domain"))
-      .agg(count(lit(1)).as("i_docs"),
-        sum(when(col("adm"), 1L).otherwise(0L)).as("i_admitted"),
-        sum(when(col("adm"), col("doc_id")).otherwise(0L)).as("i_sum"))
-    st.join(inc, Seq("domain"), "full_outer")
-      .select(col("domain"),
-        (coalesce(col("n_docs"), lit(0L)) +
-          coalesce(col("i_docs"), lit(0L))).as("n_docs"),
-        (coalesce(col("n_admitted"), lit(0L)) +
-          coalesce(col("i_admitted"), lit(0L))).as("n_admitted"),
-        (coalesce(col("admitted_id_sum"), lit(0L)) +
-          coalesce(col("i_sum"), lit(0L))).as("admitted_id_sum"))
+    AdmissionDeltaStore.plus(st,
+      AdmissionDeltaStore.increment(rankedAdmissions(st, nd), "domain"), "domain")
   }
 
   /** The shared gate: new rows ranked per domain (md5 order), offset by
@@ -110,55 +96,42 @@ object DomainQuota {
   }
 }
 
-/** [[DomainQuota]] driven from `foreachBatch`: durable per-domain
-  * state under `stateDir`, [[StreamingQuota]]'s append-only delta
-  * discipline — one (domain, n_docs, n_admitted, admitted_id_sum) row
-  * per domain per batch in a `batch_id=N` partition; the live state is
-  * the per-domain SUM of deltas (every state column is an exact Long
-  * sum, so folding commutes), and [[compact]] folds them when the file
-  * count grows. Replay safety as in StreamingQuota: a replayed batch
-  * id budgets against everything EXCEPT its own first attempt's deltas
-  * and dynamic-overwrites only its own partition, so it admits exactly
-  * the rows of the first attempt.
+/** [[DomainQuota]] driven from `foreachBatch`: one (domain, n_docs,
+  * n_admitted, admitted_id_sum) delta row per domain per batch in a
+  * [[BatchPartitionedStore]] under `stateDir`; the live state is the
+  * per-domain sum of the deltas. Replay safety, `compactEvery` and
+  * crash-safe compaction are the store's (see its scaladoc): a replayed
+  * batch id admits exactly the rows of its first attempt.
   *
   * @param materialize pin strategy for the admitted output — must
   *   resolve EAGER (the StreamingQuota contract): the returned rows
   *   must be the exact set whose delta was just written; a lazy pin
-  *   could recompute against a grown state. */
-/** @param compactEvery fold the delta partitions automatically every N
-  *   batches (0 = off) — StreamingQuota's mid-stream-safe discipline:
-  *   everything EXCEPT the triggering batch's own partition folds into
-  *   the -2 sentinel (only the current, uncommitted id can replay
-  *   under foreachBatch; earlier ids' attribution is dead weight).
-  *   Without it the state dir grows one partition dir per micro-batch
-  *   forever. Requires monotonically increasing batch ids. */
+  *   could recompute against a grown state.
+  * @param compactEvery fold the deltas every N batches (0 = off), as
+  *   [[BatchPartitionedStore]] describes. */
 final class StreamingDomainQuota(spark: SparkSession, stateDir: String,
     domainCol: String = "domain", idCol: String = "doc_id",
     materialize: graft.operators.Materialize =
       graft.operators.Materialize.SessionDefault("StreamingDomainQuota.admitted"),
     compactEvery: Int = 0) {
 
-  // durable-state machinery shared with StreamingMixtureQuota — the
-  // rule-specific part of this class is ONLY the admission gate
-  private val store = new AdmissionDeltaStore(spark, stateDir, "domain",
-    "StreamingDomainQuota", compactEvery)
+  private val store = AdmissionDeltaStore.open(spark, stateDir, "domain", compactEvery)
 
   /** Live per-domain state (the fold of all deltas); None before the
     * first admission. */
   def state(): Option[DataFrame] = store.state()
 
-  /** Admit `batch`'s rows under the updated domain cap, append the
+  /** Admit `batch`'s rows under the updated domain cap, write the
     * per-domain delta, return the admitted rows (original schema).
     * Pass the foreachBatch `batchId` for replay safety (the -1 default
-    * keeps plain append for bounded-loop callers). */
+    * appends, for bounded-loop callers). */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
-    store.admit(batch, batchId, idCol, materialize,
+    AdmissionDeltaStore.admit(store, "domain", "StreamingDomainQuota",
+      batch, batchId, idCol, materialize,
       batch.select(col(idCol).cast("long").as("doc_id"),
         col(domainCol).cast("string").as("domain")))(DomainQuota.rankedAdmissions)
 
-  /** Fold the delta partitions into one `batch_id=-2` sentinel
-    * partition (StreamingQuota.compact's convention and crash-safe
-    * GenerationSwap choreography — a crash can never silently reset
-    * domain budgets). */
+  /** Fold the deltas into the `batch_id=-2` sentinel partition
+    * (crash-safe: a crash can never silently reset domain budgets). */
   def compact(): Unit = store.compact()
 }

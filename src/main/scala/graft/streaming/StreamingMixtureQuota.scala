@@ -61,26 +61,12 @@ object MixtureQuota {
   def admitIncrement(state: DataFrame, newDocs: DataFrame,
       targetBp: Map[String, Int], stratumCol: String = "stratum",
       idCol: String = "doc_id"): DataFrame = {
-    val st = state.select(col("stratum").cast("string").as("stratum"),
-      col("n_docs").cast("long").as("n_docs"),
-      col("n_admitted").cast("long").as("n_admitted"),
-      col("admitted_id_sum").cast("long").as("admitted_id_sum"))
+    val st = AdmissionDeltaStore.canonical(state, "stratum")
     val nd = newDocs.select(col(idCol).cast("long").as("doc_id"),
         col(stratumCol).cast("string").as("stratum"))
       .filter(col("stratum").isNotNull)
-    val inc = rankedAdmissions(st, nd, targetBp)
-      .groupBy(col("stratum"))
-      .agg(count(lit(1)).as("i_docs"),
-        sum(when(col("adm"), 1L).otherwise(0L)).as("i_admitted"),
-        sum(when(col("adm"), col("doc_id")).otherwise(0L)).as("i_sum"))
-    st.join(inc, Seq("stratum"), "full_outer")
-      .select(col("stratum"),
-        (coalesce(col("n_docs"), lit(0L)) +
-          coalesce(col("i_docs"), lit(0L))).as("n_docs"),
-        (coalesce(col("n_admitted"), lit(0L)) +
-          coalesce(col("i_admitted"), lit(0L))).as("n_admitted"),
-        (coalesce(col("admitted_id_sum"), lit(0L)) +
-          coalesce(col("i_sum"), lit(0L))).as("admitted_id_sum"))
+    AdmissionDeltaStore.plus(st, AdmissionDeltaStore.increment(
+      rankedAdmissions(st, nd, targetBp), "stratum"), "stratum")
   }
 
   /** The shared gate: new rows ranked per stratum (md5 order), offset
@@ -119,18 +105,16 @@ object MixtureQuota {
   }
 }
 
-/** [[MixtureQuota]] driven from `foreachBatch`: durable per-stratum
-  * state under `stateDir` via the shared [[AdmissionDeltaStore]]
-  * (StreamingQuota's append-only delta discipline, replay-safe
-  * batch-id exclusion, crash-safe compaction) — the structural twin
-  * of [[StreamingDomainQuota]] with the mixture gate.
+/** [[MixtureQuota]] driven from `foreachBatch`: per-stratum deltas in
+  * a [[BatchPartitionedStore]] under `stateDir` (replay safety,
+  * `compactEvery` and crash-safe compaction are the store's) — the
+  * structural twin of [[StreamingDomainQuota]] with the mixture gate.
   *
   * @param materialize pin strategy for the admitted output — must
   *   resolve EAGER (the StreamingQuota contract): the returned rows
   *   must be the exact set whose delta was just written.
-  * @param compactEvery fold the delta partitions automatically every N
-  *   batches (0 = off), sparing the triggering batch's own partition
-  *   (only the current, uncommitted id can replay under foreachBatch). */
+  * @param compactEvery fold the deltas every N batches (0 = off), as
+  *   [[BatchPartitionedStore]] describes. */
 final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
     targetBp: Map[String, Int],
     stratumCol: String = "stratum", idCol: String = "doc_id",
@@ -138,24 +122,24 @@ final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
       graft.operators.Materialize.SessionDefault("StreamingMixtureQuota.admitted"),
     compactEvery: Int = 0) {
 
-  private val store = new AdmissionDeltaStore(spark, stateDir, "stratum",
-    "StreamingMixtureQuota", compactEvery)
+  private val store = AdmissionDeltaStore.open(spark, stateDir, "stratum", compactEvery)
 
   /** Live per-stratum state (the fold of all deltas); None before the
     * first admission. */
   def state(): Option[DataFrame] = store.state()
 
-  /** Admit `batch`'s rows under the updated target-share caps, append
+  /** Admit `batch`'s rows under the updated target-share caps, write
     * the per-stratum delta, return the admitted rows (original
     * schema). Pass the foreachBatch `batchId` for replay safety (the
-    * -1 default keeps plain append for bounded-loop callers). */
+    * -1 default appends, for bounded-loop callers). */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
-    store.admit(batch, batchId, idCol, materialize,
+    AdmissionDeltaStore.admit(store, "stratum", "StreamingMixtureQuota",
+      batch, batchId, idCol, materialize,
       batch.select(col(idCol).cast("long").as("doc_id"),
           col(stratumCol).cast("string").as("stratum"))
         .filter(col("stratum").isNotNull))(MixtureQuota.rankedAdmissions(_, _, targetBp))
 
-  /** Fold the delta partitions into one `batch_id=-2` sentinel
-    * partition (crash-safe GenerationSwap choreography). */
+  /** Fold the deltas into the `batch_id=-2` sentinel partition
+    * (crash-safe). */
   def compact(): Unit = store.compact()
 }

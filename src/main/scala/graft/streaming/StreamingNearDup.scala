@@ -49,17 +49,10 @@ import graft.functions.{DedupFunctions, TextFunctions}
   *   whose bands were just appended to the index, and a LAZY pin with
   *   lineage kept could legally recompute — re-evaluating
   *   current_timestamp() and drifting from the persisted index. */
-/** @param compactEvery fold the index's batch partitions automatically
-  *   every N batches (0 = off) — StreamingQuota's mid-stream-safe
-  *   discipline: rows of every batch EXCEPT the triggering one relabel
-  *   into the `batch_id=-2` sentinel (only the current, uncommitted id
-  *   can replay under foreachBatch, and its exclusion/overwrite needs
-  *   its own partition — older attribution is dead weight), expired
-  *   rows drop in the same rewrite when `retention` is set (they are
-  *   already invisible to the live view), and the band layout +
-  *   band_key sort carry through. Without the sweep the index grows
-  *   batches × bands directories forever. Requires monotonically
-  *   increasing batch ids. */
+/** @param compactEvery fold the index's batch partitions every N
+  *   batches (0 = off), as [[BatchPartitionedStore]] describes; expired
+  *   rows drop in the same rewrite when `retention` is set, and the
+  *   band layout + band_key sort carry through. */
 final class StreamingNearDup(spark: SparkSession, indexDir: String,
     idCol: String = "doc_id", textCol: String = "text",
     shingleN: Int = 3, k: Int = 12, r: Int = 2,
@@ -69,112 +62,20 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
         "StreamingNearDup.kept"),
     compactEvery: Int = 0) {
 
-  private def fs = new org.apache.hadoop.fs.Path(indexDir)
-    .getFileSystem(spark.sessionState.newHadoopConf())
+  // the index's fold: rows stay as they are (nothing aggregates),
+  // minus the ones past the retention horizon
+  private def withinRetention(rows: DataFrame): DataFrame = retention.fold(rows)(h =>
+    rows.filter(col("ingest_ts") >= current_timestamp() - expr(s"INTERVAL $h")))
 
-  private def hasIndex: Boolean = {
-    recoverCompact()
-    migrateLegacyLayout()
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    // the index is hive-partitioned by band: data lives in band=N
-    // subdirectories (plus _SUCCESS markers at the top level)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      s.getPath.getName.startsWith("batch_id=") ||
-        s.getPath.getName.startsWith("band=") ||
-        s.getPath.getName.endsWith(".parquet")
-    }
-  }
+  // index layout: hive-partitioned by band (the join's directory
+  // prune), one file per band per batch, rows sorted by band_key
+  // within it (parquet row-group min/max skipping on the join key at
+  // corpus scale)
+  private def layout(rows: DataFrame): DataFrame =
+    rows.repartition(col("band")).sortWithinPartitions(col("band"), col("band_key"))
 
-  /** Upgrade guard for BOTH pre-`batch_id` index layouts: the
-    * band-partitioned era (`band=` dirs only — no batch_id level or
-    * column) and the original FLAT era before that (plain part files,
-    * band as a data column). Either one left in place breaks the
-    * first new-format batch: partition discovery rejects the mix
-    * ("conflicting directory structures") and the `batch_id =!= id`
-    * replay filter has no column to read. Detect them and rewrite the
-    * rows under the `batch_id=-2` sentinel (visible to every replay
-    * exclusion, attributable to no batch — the [[StreamingQuota]]
-    * convention) with the shared crash-safe rename-aside swap,
-    * preserving the retained-corpus index across the upgrade instead
-    * of breaking or silently re-admitting every duplicate. Memoized
-    * after the first successful probe (instance-owned dir, new writes
-    * always new-format — no LIST per read forever); an exception
-    * leaves the flag unset so the probe retries. */
-  @volatile private var legacyChecked = false
-  private def migrateLegacyLayout(): Unit = {
-    if (legacyChecked) return
-    migrateLegacyLayoutImpl()
-    legacyChecked = true
-  }
-  private def migrateLegacyLayoutImpl(): Unit = {
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    if (!fs.exists(live)) return
-    val entries = fs.listStatus(live)
-    val legacyDirs = entries.filter(e =>
-      e.isDirectory && e.getPath.getName.startsWith("band="))
-    val legacyFlat = entries.filter(e =>
-      e.isFile && e.getPath.getName.endsWith(".parquet"))
-    if (legacyDirs.isEmpty && legacyFlat.isEmpty) return
-    val bandLegacy =
-      if (legacyDirs.isEmpty) None
-      else Some(spark.read.option("basePath", indexDir)
-        .parquet(legacyDirs.map(_.getPath.toString).toSeq: _*))
-    // flat-era rows carry band as a DATA column — read without
-    // basePath, the partitionBy below re-derives the directory layout
-    val flatLegacy =
-      if (legacyFlat.isEmpty) None
-      else Some(spark.read
-        .parquet(legacyFlat.map(_.getPath.toString).toSeq: _*))
-    val legacy = (bandLegacy.toSeq ++ flatLegacy.toSeq)
-      .reduce(_.unionByName(_))
-      .withColumn("batch_id", lit(-2L))
-    val newParts = entries.filter(e =>
-      e.isDirectory && e.getPath.getName.startsWith("batch_id="))
-    val merged =
-      if (newParts.isEmpty) legacy
-      else legacy.unionByName(spark.read.option("basePath", indexDir)
-        .parquet(newParts.map(_.getPath.toString).toSeq: _*))
-    replaceIndex(merged)
-  }
-
-  /** Rewrite the whole index as `rows` in the index layout (one file
-    * per band, band_key-sorted) through the shared crash-safe swap —
-    * [[recoverCompact]] adopts whichever sibling survives a crash. */
-  private def replaceIndex(rows: DataFrame): Unit = {
-    val tmp = indexDir + ".compact"
-    rows.repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("band_key"))
-      .write.partitionBy("batch_id", "band").mode("overwrite").parquet(tmp)
-    GenerationSwap.replaceLive(fs, indexDir, tmp)
-  }
-
-  /** Crash recovery for [[compact]]'s swap —
-    * [[GenerationSwap.recoverReplace]] (the shared crash contract).
-    * Memoized after the first successful pass: recovery is only needed
-    * once per instance start, and re-probing the filesystem on every
-    * `indexView` read is a per-micro-batch LIST tax on object stores
-    * (the same rationale as [[migrateLegacyLayout]]'s memo); an
-    * exception leaves the flag unset so the probe retries. */
-  @volatile private var recovered = false
-  private def recoverCompact(): Unit = {
-    if (recovered) return
-    GenerationSwap.recoverReplace(fs, indexDir)
-    recovered = true
-  }
-
-  // schema memo: every write after the legacy migration (which reads
-  // the legacy layouts itself) uses one schema, and the dir is
-  // instance-owned — the assumption the memos above already make
-  private val index = new ParquetDir(spark, indexDir, Set("batch_id", "band"))
-
-  /** The live view of the index: rows within the retention horizon. */
-  private def indexView(): Option[DataFrame] =
-    if (!hasIndex) None
-    else {
-      val all = index.read()
-      Some(retention.fold(all)(h =>
-        all.filter(col("ingest_ts") >= current_timestamp() - expr(s"INTERVAL $h"))))
-    }
+  private val index = new BatchPartitionedStore(spark, indexDir,
+    Seq("batch_id", "band"), compactEvery, layout, withinRetention)
 
   /** Live index rows for the given bands only. `band` is the index's
     * HIVE PARTITION column, so the isin lands in the scan's
@@ -183,10 +84,11 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
     * for every band — each doc emits all k/r of them — so the layout's
     * main scale win there is that within a band the files are sorted
     * by band_key, giving parquet row-group min/max skipping on the
-    * join key.) */
-  private[streaming] def indexForBands(bands: Seq[Any]): Option[DataFrame] =
+    * join key.) `excluding` is the replay view's batch id. */
+  private[streaming] def indexForBands(bands: Seq[Any],
+      excluding: Long = -1L): Option[DataFrame] =
     if (bands.isEmpty) None
-    else indexView().map(_.filter(col("band").isin(bands: _*)))
+    else index.state(excluding).map(_.filter(col("band").isin(bands: _*)))
 
   /** (id, sig, band, band_key) for every doc in `batch` with enough
     * text to shingle; too-short docs pass through undeduped (no
@@ -215,27 +117,20 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
     * and appends the survivors' bands to the index. The batch frame
     * must be bounded (a `foreachBatch` frame, not a streaming plan).
     *
-    * REPLAY SAFETY: pass the foreachBatch `batchId`. Index rows carry
-    * it, the cross-batch join EXCLUDES rows of the current id (a
-    * replayed batch must not match its own first attempt's rows —
-    * every survivor would self-match at estSim 1.0 and be dropped,
-    * silently losing the whole batch), and the append overwrites only
-    * this batch's own (batch_id, band) partitions, so a replay is
-    * bit-identical instead of duplicating index rows. The default -1
-    * keeps the legacy append-only behavior for bounded-loop callers
-    * outside foreachBatch. */
+    * REPLAY SAFETY: pass the foreachBatch `batchId` — the cross-batch
+    * join reads the store's replay view (a replayed batch must not match
+    * its own first attempt's rows: every survivor would self-match at
+    * estSim 1.0 and be dropped) and the write overwrites only this
+    * batch's partitions, so a replay is bit-identical. The default -1
+    * appends, for bounded-loop callers outside foreachBatch. */
   def processBatch(batch: DataFrame, batchId: Long = -1L): DataFrame = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compactExcluding(batchId)
+    index.compactIfDue(batchId)
     val bs = bandSigs(batch).persist() // batch-sized; read by 3 consumers
     try {
       // cross-batch: similar to any indexed (retained) doc → drop.
       // Every doc with a signature emits all k/r bands, so the band
       // list is known without a job over the batch.
-      val crossDropped = indexForBands(0 until k / r).map { idxAll =>
-        val idx =
-          if (batchId >= 0) idxAll.filter(col("batch_id") =!= batchId)
-          else idxAll
+      val crossDropped = indexForBands(0 until k / r, batchId).map { idx =>
         bs.join(idx.withColumnRenamed("sig", "idx_sig")
             .select(col("band"), col("band_key"), col("idx_sig")),
             Seq("band", "band_key"))
@@ -280,49 +175,19 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
         s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
         "lazy pin may recompute and drift from the just-appended index")
       val pinned = m(kept)
-      // index only survivors' bands; duplicates contribute no state.
-      // Layout: hive-partitioned by band (the join's directory prune),
-      // one file per band per batch (the repartition), rows sorted by
-      // band_key within it (parquet row-group min/max skipping on the
-      // join key at corpus scale). All batch-sized work.
-      val rows = bs.join(pinned.select(col(idCol)), Seq(idCol))
+      // index only survivors' bands; duplicates contribute no state
+      index.write(bs.join(pinned.select(col(idCol)), Seq(idCol))
         .select(col(idCol), col("band"), col("band_key"), col("sig"),
-          current_timestamp().as("ingest_ts"),
-          lit(batchId).as("batch_id"))
-        .repartition(col("band"))
-        .sortWithinPartitions(col("band"), col("band_key"))
-      val w = rows.write.partitionBy("batch_id", "band")
-      if (batchId >= 0)
-        // dynamic overwrite: a replay rewrites EXACTLY its own
-        // (batch_id, band) partitions — idempotent appends
-        w.option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(indexDir)
-      else w.mode("append").parquet(indexDir)
+          current_timestamp().as("ingest_ts")), batchId, layout)
       pinned
     } finally { bs.unpersist(); () }
   }
 
   /** Rows currently in the index (state-size observability/tests). */
-  def indexSize(): Long = if (hasIndex) index.read().count() else 0L
-
-  /** The mid-stream-safe fold behind `compactEvery`: rows of every
-    * batch EXCEPT `batchId`'s relabel into the -2 sentinel (a pure
-    * relabel — index rows are individual entries, nothing aggregates),
-    * expired rows drop when `retention` is set, and the live id's
-    * partition carries over untouched for its replay exclusion and
-    * dynamic overwrite. Idempotent under replay re-triggering. */
-  private def compactExcluding(batchId: Long): Unit = if (hasIndex) {
-    val all = index.read()
-    val old = all.filter(col("batch_id") =!= batchId)
-    val folded = retention.fold(old)(h =>
-        old.filter(col("ingest_ts") >= current_timestamp() - expr(s"INTERVAL $h")))
-      .withColumn("batch_id", lit(-2L))
-    replaceIndex(folded.unionByName(all.filter(col("batch_id") === batchId)))
-  }
+  def indexSize(): Long = index.view().fold(0L)(_.count())
 
   /** Rewrite the index keeping only rows within the retention horizon
     * — reclaims storage for long-running pipelines. No-op without a
     * retention policy or an index. */
-  def compact(): Unit =
-    if (retention.nonEmpty && hasIndex) indexView().foreach(replaceIndex)
+  def compact(): Unit = if (retention.nonEmpty) index.state().foreach(index.replace)
 }

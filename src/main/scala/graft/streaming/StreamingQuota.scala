@@ -13,12 +13,11 @@ import org.apache.spark.sql.functions._
   * dropped at ingest.
   *
   * Drive from `foreachBatch` (or any loop of bounded frames). State is
-  * an APPEND-ONLY parquet delta table under `stateDir` — one
-  * `(key, n_admitted)` row per key per batch. Appending sidesteps the
-  * read-your-own-overwrite hazard entirely (the state read and the
-  * state write of one batch never touch the same files); the live
-  * "used" view is `sum(n)` per key, and [[compact]] folds the deltas
-  * into one row per key when the file count grows. State size is
+  * one `(key, n)` admitted-count delta row per key per batch in a
+  * [[BatchPartitionedStore]] under `stateDir` (replay safety,
+  * `compactEvery` and crash-safe compaction are the store's). The
+  * state read and write of one batch never touch the same files; the
+  * live "used" view is `sum(n)` per key. State size is
   * control-plane-bounded: |keys seen| × |batches since compact|, never
   * row-scaled.
   *
@@ -42,19 +41,8 @@ import org.apache.spark.sql.functions._
   *   frame must be the exact rows whose delta was just written to the
   *   state; a lazy pin could recompute against a state that has since
   *   grown and return a DIFFERENT admitted set than was counted. */
-/** @param compactEvery fold the delta partitions automatically every N
-  *   batches (0 = off, the default). The quiescent [[compact]] erases
-  *   per-batch attribution, so the automatic form folds everything
-  *   EXCEPT the triggering batch's own partition: under the
-  *   foreachBatch contract only the CURRENT (uncommitted) batch id can
-  *   ever replay — earlier ids are checkpoint-committed before the
-  *   next invocation — so their attribution is dead weight and folding
-  *   them mid-stream is safe, while the live id keeps its partition
-  *   for the replay exclusion/overwrite. Requires monotonically
-  *   increasing batch ids (foreachBatch's own contract); without the
-  *   sweep, the state dir grows one partition dir per micro-batch
-  *   forever — millions of small files on a months-running stream,
-  *   the object-store listing death the epoch sweep exists to stop. */
+/** @param compactEvery fold the deltas every N batches (0 = off), as
+  *   [[BatchPartitionedStore]] describes. */
 final class StreamingQuota(spark: SparkSession, stateDir: String,
     keyCol: String, orderCol: String, tieCol: String, budget: Int,
     materialize: graft.operators.Materialize =
@@ -62,111 +50,26 @@ final class StreamingQuota(spark: SparkSession, stateDir: String,
     compactEvery: Int = 0) {
   require(budget > 0, "budget must be positive")
 
-  private def fs = new org.apache.hadoop.fs.Path(stateDir)
-    .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def hasState: Boolean = {
-    recoverCompact()
-    migrateLegacyLayout()
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      s.getPath.getName.startsWith("batch_id=") ||
-        s.getPath.getName.endsWith(".parquet")
-    }
-  }
-
-  /** Upgrade guard: a state dir written by the pre-`batch_id` version
-    * holds FLAT part files (no partition dirs, no batch_id column).
-    * Left in place, the first new-format read would die on partition
-    * discovery ("conflicting directory structures" once a batch_id=N
-    * dir lands next to them) or on the missing-column filter in
-    * [[usedExcluding]] — a Spark analysis error instead of a usable
-    * signal. Detect the old layout and fold it into the `batch_id=-2`
-    * sentinel partition ([[compact]]'s own convention: visible to
-    * every replay view, attributable to none) via the same
-    * crash-safe rename-aside swap, so an upgraded deployment keeps
-    * its budgets instead of over-admitting every exhausted key.
-    * Memoized after the first successful probe: the state dir is
-    * instance-owned and new writes are always new-format, so paying a
-    * listStatus per read forever (a LIST request per micro-batch on
-    * object stores) would buy nothing; an exception leaves the flag
-    * unset so the probe retries. */
-  @volatile private var legacyChecked = false
-  private def migrateLegacyLayout(): Unit = {
-    if (legacyChecked) return
-    migrateLegacyLayoutImpl()
-    legacyChecked = true
-  }
-  private def migrateLegacyLayoutImpl(): Unit = {
-    val live = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(live)) return
-    val entries = fs.listStatus(live)
-    val flat = entries.filter(e =>
-      e.isFile && e.getPath.getName.endsWith(".parquet"))
-    if (flat.isEmpty) return
-    val legacy = spark.read.parquet(flat.map(_.getPath.toString).toSeq: _*)
-      .groupBy(col(keyCol)).agg(sum(col("n")).as("n"))
-      .withColumn("batch_id", lit(-2L))
-    val newParts = entries.filter(e =>
-      e.isDirectory && e.getPath.getName.startsWith("batch_id="))
-    val merged =
-      if (newParts.isEmpty) legacy
-      else legacy.unionByName(
-        spark.read.option("basePath", stateDir)
-          .parquet(newParts.map(_.getPath.toString).toSeq: _*)
-          .select(col(keyCol), col("n"), col("batch_id")))
-    val tmp = stateDir + ".compact"
-    merged.repartition(1).write.partitionBy("batch_id")
-      .mode("overwrite").parquet(tmp)
-    GenerationSwap.replaceLive(fs, stateDir, tmp)
-  }
-
-  /** Crash recovery for [[compact]] — [[GenerationSwap.recoverReplace]]
-    * (shared crash contract). Memoized after the first successful
-    * pass: recovery is only needed once per instance start (the
-    * in-process [[compact]] swap throws rather than crash silently),
-    * and re-probing 3–5 filesystem RPCs on EVERY read is the same
-    * per-micro-batch LIST tax the legacy-layout probe below memoizes
-    * away; an exception leaves the flag unset so the probe retries. */
-  @volatile private var recovered = false
-  private def recoverCompact(): Unit = {
-    if (recovered) return
-    GenerationSwap.recoverReplace(fs, stateDir)
-    recovered = true
-  }
+  private val store = new BatchPartitionedStore(spark, stateDir, Seq("batch_id"),
+    compactEvery, _.repartition(1), BatchPartitionedStore.sumPerKey(keyCol, Seq("n")))
 
   /** Cumulative admitted count per key (the fold of all deltas);
     * None before the first admission. */
   def used(): Option[DataFrame] = usedExcluding(-1L)
 
-  /** The fold, optionally EXCLUDING one batch id's own deltas — the
-    * replay view: a re-run of batch N must budget against everything
-    * EXCEPT its first attempt's (uncommitted-downstream) counts, or
-    * it under-admits and permanently double-counts the budget. */
   private def usedExcluding(batchId: Long): Option[DataFrame] =
-    if (!hasState) None
-    else {
-      val all = spark.read.parquet(stateDir)
-      val visible =
-        if (batchId >= 0) all.filter(col("batch_id") =!= batchId) else all
-      Some(visible.groupBy(col(keyCol)).agg(sum(col("n")).as("graft_used")))
-    }
+    store.state(batchId).map(_.withColumnRenamed("n", "graft_used"))
 
-  /** Admit up to the remaining budget per key from `batch`; append the
+  /** Admit up to the remaining budget per key from `batch`; write the
     * per-key admitted counts to the state and return the admitted
     * rows (original schema).
     *
-    * REPLAY SAFETY: pass the foreachBatch `batchId`. The budget view
-    * excludes this id's own deltas and the state write overwrites
-    * only this id's partition (dynamic overwrite), so a replayed
-    * batch admits EXACTLY the rows of its first attempt instead of
-    * double-counting against the budget. The -1 default keeps the
-    * legacy append-only behavior for bounded-loop callers. Run
-    * [[compact]] only for ids past the stream's committed checkpoint
-    * (folding erases per-batch attribution). */
+    * REPLAY SAFETY: pass the foreachBatch `batchId` — a replayed batch
+    * admits EXACTLY the rows of its first attempt (the store's replay
+    * view and overwrite). The -1 default appends, for bounded-loop
+    * callers. */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compactExcluding(batchId)
+    store.compactIfDue(batchId)
     val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol), col(tieCol))
     val ranked = batch.withColumn("graft_rk", row_number().over(w))
     val withUsed = usedExcluding(batchId)
@@ -182,54 +85,14 @@ final class StreamingQuota(spark: SparkSession, stateDir: String,
     val admitted = m(withUsed
       .filter(coalesce(col("graft_used"), lit(0L)) + col("graft_rk") <= budget)
       .drop("graft_rk", "graft_used"))
-    val delta = admitted.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(batchId))
-    val dw = delta.write.partitionBy("batch_id")
-    if (batchId >= 0)
-      dw.option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(stateDir)
-    else dw.mode("append").parquet(stateDir)
+    store.write(admitted.groupBy(col(keyCol)).agg(count(lit(1)).as("n")), batchId)
     admitted
   }
 
-  /** The mid-stream-safe fold behind `compactEvery`: every delta
-    * EXCEPT `batchId`'s own partition collapses into the -2 sentinel;
-    * the live id's partition carries over untouched so a replay of it
-    * still excludes and overwrites its first attempt. Same crash-safe
-    * swap as [[compact]] — idempotent, so the same batch replaying
-    * re-triggers it harmlessly (a fold of folded state is stable). */
-  private def compactExcluding(batchId: Long): Unit = if (hasState) {
-    val all = spark.read.parquet(stateDir)
-    val folded = all.filter(col("batch_id") =!= batchId)
-      .groupBy(col(keyCol)).agg(sum(col("n")).as("n"))
-      .withColumn("batch_id", lit(-2L))
-      .select(col(keyCol), col("n"), col("batch_id"))
-    val keep = all.filter(col("batch_id") === batchId)
-      .select(col(keyCol), col("n"), col("batch_id"))
-    val tmp = stateDir + ".compact"
-    folded.unionByName(keep)
-      .repartition(1).write.partitionBy("batch_id")
-      .mode("overwrite").parquet(tmp)
-    GenerationSwap.replaceLive(fs, stateDir, tmp)
-  }
-
-  /** Fold the delta files into one row per key (storage reclaim; same
-    * contract as StreamingNearDup.compact / FilePubSub.compact). The
-    * folded view writes to a sibling dir FIRST — the fold is fully
-    * materialized before the old state is dropped. */
-  def compact(): Unit = used().foreach { u =>
-    val tmp = stateDir + ".compact"
-    // folded rows carry the -2 sentinel id: never excluded by any
-    // replay view (per-batch attribution is gone after folding)
-    u.select(col(keyCol), col("graft_used").as("n"))
-      .withColumn("batch_id", lit(-2L))
-      .repartition(1).write.partitionBy("batch_id")
-      .mode("overwrite").parquet(tmp)
-    // crash-safe swap (shared choreography — GenerationSwap.replaceLive):
-    // the live state is renamed ASIDE, not deleted, so every crash
-    // point leaves either the live dir or a recoverable sibling that
-    // [[recoverCompact]] adopts on the next read — a crash can never
-    // silently reset budgets and over-admit exhausted keys on restart
-    GenerationSwap.replaceLive(fs, stateDir, tmp)
-  }
+  /** Fold the deltas into one row per key in the `batch_id=-2` sentinel
+    * partition (storage reclaim; crash-safe — a crash can never
+    * silently reset budgets and over-admit exhausted keys). Run it
+    * only for ids past the stream's committed checkpoint: folding
+    * erases per-batch attribution. */
+  def compact(): Unit = store.compact()
 }

@@ -58,4 +58,19 @@ class CompactionSpec extends SparkSpec {
       case _ => ()
     }
   }
+
+  test("a crash-stranded dir (only .compact or only .old left) is adopted, then compacted intact") {
+    val rows = (0 until 500).map(i => (i.toLong, s"v$i"))
+    Seq(".compact", ".old").foreach { sibling =>
+      val dir = freshDir()
+      rows.toDF("id", "body").repartition(8).write.parquet(dir + sibling)
+      assert(!new java.io.File(dir).exists, "fixture: the live dir is missing")
+      val n = Compaction.compactParquet(spark, dir, targetBytes = 1L << 30)
+      assert(n == 1 && parquetFiles(dir).length == 1, s"$sibling: expected one file, got $n")
+      assert(!new java.io.File(dir + ".compact").exists)
+      assert(!new java.io.File(dir + ".old").exists)
+      val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
+      assert(back == rows.toSet, s"$sibling: adopted content must survive the compaction")
+    }
+  }
 }

@@ -889,118 +889,43 @@ class StreamingCurationSpec extends SparkSpec {
       "folded mixture state must equal the pure incremental fold")
   }
 
-  test("quota upgrade: a pre-batch_id FLAT state layout migrates instead of breaking") {
-    // A state dir written by the pre-replay-safety version holds flat
-    // part files with NO batch_id column or partition dirs. The first
-    // new-format read must fold them into the batch_id=-2 sentinel
-    // (budgets preserved) — not die on partition discovery or on the
-    // missing-column replay filter, and not over-admit exhausted keys.
+  test("pre-batch_id layouts fail loudly and stay byte-identical: a flat quota dir, a band=-only index") {
+    // Layouts written before batch_id partitioning are not read as
+    // state: the store names the dir and throws instead of reading it
+    // (partition discovery would reject the mix, and the replay filter
+    // has no batch_id column), and it writes nothing there.
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft-squota-mig").toString + "/state"
-    def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "source")
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    import scala.jdk.CollectionConverters._
+    def snapshot(dir: String): Map[String, Seq[Byte]] = {
+      val root = Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
+    }
+    def assertRejected(dir: String)(call: => Any): Unit = {
+      val before = snapshot(dir)
+      val e = intercept[IllegalStateException](call)
+      assert(e.getMessage.contains(dir) && e.getMessage.contains("predates batch_id"),
+        s"message must name the dir and the layout: ${e.getMessage}")
+      assert(snapshot(dir) == before, s"$dir must be left byte-identical")
+    }
 
-    // hand-write the LEGACY layout: (key, n) rows, flat files, no
-    // batch_id anywhere — source "a" has already used 2 of budget 3
-    Seq(("a", 2L)).toDF("source", "n")
-      .repartition(1).write.parquet(dir)
-    assert(new java.io.File(dir).listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "precondition: legacy layout is flat part files")
-
-    val quota = new StreamingQuota(spark, dir,
+    // flat quota state: (key, n) part files, no batch_id anywhere
+    val qdir = Files.createTempDirectory("graft-squota-flat").toString + "/state"
+    Seq(("a", 2L)).toDF("source", "n").repartition(1).write.parquet(qdir)
+    val quota = new StreamingQuota(spark, qdir,
       keyCol = "source", orderCol = "doc_id", tieCol = "doc_id", budget = 3)
-    // replay-view read (batchId >= 0) over migrated state must see the
-    // legacy budget: only 1 of 2 rows fits
-    assert(ids(quota.admit(batch(5L -> "a", 6L -> "a"), batchId = 0L)) ==
-      Set(5L), "legacy budget must survive the migration")
-    // layout is now uniformly partitioned — flat files gone
-    val top = new java.io.File(dir).listFiles().map(_.getName)
-    assert(!top.exists(_.endsWith(".parquet")),
-      s"post-migration state must be partitioned only: ${top.toSeq}")
-    assert(top.contains("batch_id=-2"),
-      s"legacy rows must sit in the sentinel partition: ${top.toSeq}")
-    val used = quota.used().get.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(used == Map("a" -> 3L), s"fold must be exact: $used")
-  }
+    assertRejected(qdir)(quota.admit(Seq((5L, "a")).toDF("doc_id", "source"), batchId = 0L))
 
-  test("near-dup upgrade: a band=-only legacy index migrates instead of breaking") {
-    // The pre-batch_id index was partitioned by band alone. Once a
-    // new-format batch_id=N dir lands beside band= dirs, partition
-    // discovery rejects the mix and the replay filter has no batch_id
-    // column — the migration must rewrite legacy rows under the
-    // batch_id=-2 sentinel and keep deduping against them.
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft-snd-mig").toString + "/index"
-    val nd = new StreamingNearDup(spark, dir, minSim = 0.5)
+    // band=-only index: partitioned by band alone, no batch_id level
+    val idir = Files.createTempDirectory("graft-snd-band").toString + "/index"
+    Seq((1L, 0, 7L, Seq(1L, 2L), new Timestamp(1700000000000L)))
+      .toDF("doc_id", "band", "band_key", "sig", "ingest_ts")
+      .write.partitionBy("band").parquet(idir)
+    val nd = new StreamingNearDup(spark, idir, minSim = 0.5)
     val tA = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
-    val tB = "colorless green ideas sleep furiously while syntax dreams of semantic rivers flowing"
-    def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-
-    // seed via the current writer, then rewrite the dir into the
-    // LEGACY layout: band= dirs hoisted to the top, batch_id gone
-    assert(ids(nd.processBatch(docs(1L -> tA, 2L -> tB), batchId = 0L)) ==
-      Set(1L, 2L))
-    val root = Paths.get(dir)
-    val batchDir = Files.list(root).filter(_.getFileName.toString
-      .startsWith("batch_id=")).findFirst().get()
-    Files.list(batchDir).filter(_.getFileName.toString.startsWith("band="))
-      .forEach(b => Files.move(b, root.resolve(b.getFileName.toString),
-        StandardCopyOption.ATOMIC_MOVE))
-    Files.delete(batchDir)
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("band=")),
-      "precondition: legacy band=-only layout")
-
-    // next batch through a FRESH instance — the real upgrade shape
-    // (the layout probe is memoized per instance, as new writes are
-    // always new-format): the near-dup of a LEGACY-indexed doc must
-    // still drop, and the write must not die on conflicting directory
-    // structures
-    val nd2 = new StreamingNearDup(spark, dir, minSim = 0.5)
-    val tA2 = tA.replace("home tonight", "home forever")
-    assert(ids(nd2.processBatch(docs(3L -> tA2, 4L -> tB), batchId = 1L))
-      .isEmpty, "legacy index rows must keep deduping after migration")
-    val top = new java.io.File(dir).listFiles().map(_.getName)
-    assert(top.contains("batch_id=-2") && !top.exists(_.startsWith("band=")),
-      s"legacy rows must fold under the sentinel batch_id: ${top.toSeq}")
-  }
-
-  test("near-dup upgrade: the FLAT-era index (band as a data column) migrates too") {
-    // The oldest shipped layout: plain part files, no partition dirs
-    // at all, band in the data. hasIndex recognized it but the first
-    // migration pass only handled band= dirs — this is the regression
-    // row for the flat era.
-    import java.nio.file.Files
-    val dirNew = Files.createTempDirectory("graft-snd-flatseed").toString + "/index"
-    val nd0 = new StreamingNearDup(spark, dirNew, minSim = 0.5)
-    val tA = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
-    def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids(nd0.processBatch(docs(1L -> tA), batchId = 0L)) == Set(1L))
-    // rewrite as the FLAT layout into a fresh dir: band/batch_id
-    // partition values folded back into data columns, then dropped
-    // to the flat-era schema
-    val dirFlat = Files.createTempDirectory("graft-snd-flat").toString + "/index"
-    spark.read.parquet(dirNew)
-      .select("doc_id", "band", "band_key", "sig", "ingest_ts")
-      .write.parquet(dirFlat)
-    assert(new java.io.File(dirFlat).listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "precondition: flat-era layout")
-    val nd = new StreamingNearDup(spark, dirFlat, minSim = 0.5)
-    val tA2 = tA.replace("home tonight", "home forever")
-    assert(ids(nd.processBatch(docs(3L -> tA2), batchId = 1L)).isEmpty,
-      "flat-era index rows must keep deduping after migration")
-    val top = new java.io.File(dirFlat).listFiles().map(_.getName)
-    assert(top.contains("batch_id=-2") &&
-      !top.exists(n => n.endsWith(".parquet") && new java.io.File(dirFlat, n).isFile),
-      s"flat rows must fold under the sentinel batch_id: ${top.toSeq}")
+    assertRejected(idir)(nd.processBatch(Seq((3L, tA)).toDF("doc_id", "text"), batchId = 1L))
   }
 
   test("streaming quota: a crash mid-compact cannot silently reset budgets") {
@@ -1040,6 +965,105 @@ class StreamingCurationSpec extends SparkSpec {
     Files.move(Paths.get(dirB), Paths.get(dirB + ".compact"))
     assert(ids(restarted(dirB).admit(batch(3L -> "a"))).isEmpty,
       "budget must survive a crash before the into-place rename")
+
+    // the same two crash points under the store's other users
+    val tA = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
+    val tA2 = tA.replace("home tonight", "home forever")
+    def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    def dbatch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "domain")
+    def drows(df: org.apache.spark.sql.DataFrame) =
+      df.select("domain", "n_docs", "n_admitted", "admitted_id_sum")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    Seq(".old", ".compact").foreach { sibling =>
+      // near-dup: the index survives, so a near-copy of an indexed doc still drops
+      val ndir = Files.createTempDirectory("graft-snd-crash").toString + "/index"
+      assert(ids(new StreamingNearDup(spark, ndir, minSim = 0.5)
+        .processBatch(docs(1L -> tA), batchId = 0L)) == Set(1L))
+      Files.move(Paths.get(ndir), Paths.get(ndir + sibling))
+      assert(ids(new StreamingNearDup(spark, ndir, minSim = 0.5)
+        .processBatch(docs(2L -> tA2), batchId = 1L)).isEmpty,
+        s"near-dup index must survive a crash that left only $sibling")
+
+      // domain quota: the per-domain budgets survive
+      val ddir = Files.createTempDirectory("graft-sdq-crash").toString + "/state"
+      val dq = new StreamingDomainQuota(spark, ddir)
+      dq.admit(dbatch(1L -> "a", 2L -> "a", 3L -> "b"))
+      val before = drows(dq.state().get)
+      Files.move(Paths.get(ddir), Paths.get(ddir + sibling))
+      val after = new StreamingDomainQuota(spark, ddir).state()
+      assert(after.map(drows).contains(before),
+        s"domain budgets must survive a crash that left only $sibling")
+    }
+  }
+
+  test("steady calls run a fixed Spark job count; StreamingQuota.admit infers no schema per batch") {
+    // jobs per call, attributed by job group (the PlanBudget
+    // ConstructionShuffles pattern). StreamingQuota reads its state
+    // with the memoized schema: no footer-inference job per batch.
+    val jobs = new JobsPerGroup
+    spark.sparkContext.addSparkListener(jobs)
+    def counted(group: String)(call: => Unit): Unit = {
+      spark.sparkContext.setJobGroup(group, group)
+      try call finally spark.sparkContext.clearJobGroup()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-sjobs").toString
+    val quota = new StreamingQuota(spark, dir + "/quota",
+      keyCol = "source", orderCol = "doc_id", tieCol = "doc_id", budget = 3)
+    val nd = new StreamingNearDup(spark, dir + "/index", minSim = 0.5)
+    val dq = new StreamingDomainQuota(spark, dir + "/domain")
+    def text(b: Int, j: Int): String = (0 until 20).map(w => s"b${b}j${j}w$w").mkString(" ")
+    def step(b: Int, tag: String): Unit = {
+      val docs = (0 until 4).map(j => (b * 10L + j, text(b, j), s"d${j % 2}")).toDF("doc_id", "text", "domain")
+      counted(s"quota$tag")(quota.admit(docs.withColumnRenamed("domain", "source"), b.toLong))
+      counted(s"neardup$tag")(nd.processBatch(docs, b.toLong))
+      counted(s"domain$tag")(dq.admit(docs, b.toLong))
+    }
+    try {
+      (0 until 3).foreach(b => step(b, "-warm"))
+      (3 until 6).foreach(b => step(b, s"-$b"))
+      val n = jobs.drain()
+      def perCall(op: String) = (3 until 6).map(b => n.getOrElse(s"$op-$b", 0)).toSet
+      // measured; StreamingQuota.admit ran 7 while it read its state
+      // schemaless, the other two counts predate the shared store
+      assert(perCall("quota") == Set(6), s"StreamingQuota.admit jobs: ${perCall("quota")}")
+      assert(perCall("neardup") == Set(10), s"StreamingNearDup.processBatch jobs: ${perCall("neardup")}")
+      assert(perCall("domain") == Set(17), s"StreamingDomainQuota.admit jobs: ${perCall("domain")}")
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
+
+  test("the state-store protocol lives only in the store, not in its users") {
+    val protocol = Seq("partitionOverwriteMode", "GenerationSwap.", "migrateLegacyLayout",
+      "spark.read.parquet")
+    val offenders = for {
+      op <- Seq("StreamingQuota", "StreamingNearDup", "StreamingDomainQuota", "StreamingMixtureQuota")
+      text = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"src/main/scala/graft/streaming/$op.scala"))
+      p <- protocol if text.contains(p)
+    } yield s"$op.scala: $p"
+    assert(offenders.isEmpty,
+      s"state-store protocol outside BatchPartitionedStore: ${offenders.mkString(", ")}")
+  }
+}
+
+/** Spark jobs started per job group; [[drain]] waits for the async
+  * listener bus to go quiet, then snapshots. */
+final class JobsPerGroup extends org.apache.spark.scheduler.SparkListener {
+  private val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  private val events = new java.util.concurrent.atomic.AtomicLong(0)
+  override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .foreach(g => jobs.merge(g, 1, (a: Int, b: Int) => a + b))
+    events.incrementAndGet(); ()
+  }
+  def drain(): Map[String, Int] = {
+    var prev = -1L
+    var cur = events.get
+    val deadline = System.currentTimeMillis() + 5000
+    while (cur != prev && System.currentTimeMillis() < deadline) {
+      Thread.sleep(100); prev = cur; cur = events.get
+    }
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toMap
   }
 }
 
