@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.{Profile, QueryTrace}
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (a bare .count() would let Catalyst prune most of the work),
@@ -12,8 +14,7 @@ object Bench {
 
     // warm the JVM/codegen paths once on the smallest SF so per-query
     // numbers measure the plan, not first-call JIT + classloading.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    Profile.warmUp(spark)
 
     // Two full passes, per-query MIN: this machine carries bursty
     // co-tenant load (r5/r6 artifacts were both falsified by isolated
@@ -90,41 +91,12 @@ object Bench {
     }
     val calibPre = try calibrate() catch { case _: Throwable => (-1.0, -1.0) }
 
-    // Per-query shuffle-write volume (pass 1 only): the scale-limiting
-    // resource a wall-clock number can't show — a query that's fast at
-    // sf0.1 but shuffles its whole input is the one that dies at 100 TB.
-    // Stage-completion events are async on the listener bus, so the
-    // snapshot waits for the counter to go quiet; the wait sits OUTSIDE
-    // the timed window and only in the instrumented pass.
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shuffleWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    })
-    def quiesceShuffle(): Long = {
-      var prev = -1L; var cur = shuffleWrite.get
-      val deadline = System.currentTimeMillis() + 2000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        Thread.sleep(50); prev = cur; cur = shuffleWrite.get
-      }
-      cur
-    }
-    val shuffleMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-
     // ONE isolation primitive shared by every timing site (the passes,
     // the targeted reruns, ladder rungs, the split ladder): drop cache
     // entries and straggler persisted/checkpointed blocks so no timer
     // measures a predecessor's storage state (r6 recorded q33 at 2.5x
-    // its isolated cost for exactly this reason). A future isolation
-    // fix lands once, not in four hand-copied variants.
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    // its isolated cost for exactly this reason).
+    def isolate(): Unit = Profile.isolate(spark)
     // min over n isolated timed samples — the ladder/rerun primitive
     def minOfN(n: Int)(f: => Unit): Double =
       (0 until n).map { _ =>
@@ -134,23 +106,33 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.min
 
+    // Per-query shuffle-write volume (pass 1 only): the scale-limiting
+    // resource a wall-clock number can't show — a query that's fast at
+    // sf0.1 but shuffles its whole input is the one that dies at 100 TB.
+    // Pass 1 runs each query in its own job group; one trace drain after
+    // the pass, outside every timed window, reads the volumes.
+    val shuffleMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+
     def runPass(recordShuffle: Boolean = false): (Seq[(String, Double)], Double) = {
       var loadMax = osBean.getSystemLoadAverage
+      val trace = if (recordShuffle) Some(QueryTrace.attach(spark)) else None
       val times = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         isolate()
         loadMax = math.max(loadMax, osBean.getSystemLoadAverage)
-        val shuffleBefore = if (recordShuffle) quiesceShuffle() else 0L
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        def run() = Profile.timeNoop(fn(spark, sfDir))
+        val dt =
+          try trace.fold(run())(_.traced(name)(run()))
           catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+            System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
           }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (recordShuffle && ok)
-          shuffleMb(name) = (quiesceShuffle() - shuffleBefore) / 1e6
         // -1 marks a failed query so the JSON can't mistake it for fast
-        name -> (if (ok) dt else -1.0)
+        name -> dt
+      }
+      trace.foreach { t =>
+        val groups = try t.drain() finally t.close()
+        times.foreach { case (name, dt) =>
+          if (dt >= 0) shuffleMb(name) = groups.get(name).fold(0L)(_.shuffleWriteBytes) / 1e6
+        }
       }
       (times, loadMax)
     }
@@ -169,7 +151,7 @@ object Bench {
     // Divergent totals trigger one extra full pass (min-of-3); if the
     // two cleanest passes still disagree, "contaminated": true tells
     // the consumer not to bank per-query numbers without an isolated
-    // re-check (graft.tools.Time).
+    // re-check (`graft.tools.Profile reps`).
     //
     // Pre-flight load gate (r14 lesson: pass 1 ran at 1-minute load
     // 12.02, and all ~170 s of it were PAID FOR before the
@@ -217,12 +199,7 @@ object Bench {
     // the re-measure primitive for both targeted gates below
     def timeQuery(name: String, n: Int): Seq[Double] = {
       val fn = SparkEntry.queries(name)
-      (0 until n).map { _ =>
-        isolate()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      (0 until n).map { _ => isolate(); Profile.timeNoop(fn(spark, sfDir)) }
     }
     // Per-query pass-disagreement gate (r13 lesson: min-of-N KEEPS a
     // contaminated value when EVERY pass is hit — q147 shipped 13.3 s

@@ -460,7 +460,7 @@ object DedupFunctions {
     // join: jaccard >= t REQUIRES min(n1,n2) >= t*max(n1,n2) (the
     // smaller set fully contained still leaves union >= max), so the
     // filter is necessary-condition-exact — recall stays 100%.
-    // Measured at sf0.1/t=0.8 (ProfileQ19): 118,649 raw candidates ->
+    // Measured at sf0.1/t=0.8 (PLANS.md q19 breakdown): 118,649 raw candidates ->
     // 43,440 after the length filter (2.7x fewer array_intersect
     // verifications for the same 256 true matches; q19 warm run
     // 4.1-4.6 s -> 2.5-2.8 s). No bucket cap here: a cap would

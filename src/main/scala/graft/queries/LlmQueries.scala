@@ -139,7 +139,7 @@ object LlmQueries {
              |FROM x ORDER BY doc_id""".stripMargin)),
 
     // ---- exact n-gram Jaccard near-dup join (prefix-filtered) ----
-    // minPartitions measured as a NO-gain here (ProfileQ19: the
+    // minPartitions measured as a NO-gain here (PLANS.md q19 breakdown: the
     // 1-partition scan+shingle+hash pass is 0.3 s; the multi-pass tail
     // dominates) — left unset; the knob stays for compute-heavier docs
     QuerySpec("q19_ngram_jaccard",

@@ -1,10 +1,12 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Checked filesystem primitives for the two atomic generation swaps:
   * [[promote]] (write `.next` fully, park live as `.old`, promote, drop
-  * `.old`) for [[StreamingCdc]] and [[StreamingProfile]], and
+  * `.old`) for [[GenerationDir]], and
   * [[replaceLive]] (the `.compact` rewrite) for [[BatchPartitionedStore]]
   * and [[graft.operators.Compaction]]. Each comes with its recovery
   * probe, the one definition of its crash contract.
@@ -96,5 +98,53 @@ private[graft] object GenerationSwap {
       else if (fs.exists(new Path(stateDir + ".old")))
         renameOrThrow(fs, new Path(stateDir + ".old"), live)
     }
+  }
+}
+
+/** A whole-table state dir advanced one generation per write: the ONE
+  * owner of the [[GenerationSwap.promote]] protocol behind
+  * [[StreamingCdc]] and [[StreamingProfile]]. [[write]] materializes
+  * `<dir>.next` in full and then promotes it; the first read of an
+  * instance runs [[GenerationSwap.recoverPromote]], which adopts
+  * whichever complete generation a crash left.
+  *
+  * Reads carry the schema of the last read or write: a schemaless read
+  * runs a footer-inference job per call (per micro-batch), and the dir
+  * is instance-owned, so only the first read of an instance infers. */
+private[streaming] final class GenerationDir(spark: SparkSession, dir: String) {
+
+  private def fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Recovery runs once per instance start (the [[BatchPartitionedStore]]
+    * rule: an in-process swap throws rather than crash silently). An
+    * exception leaves the flag unset so the probe retries. */
+  @volatile private var recovered = false
+  @volatile private var schema: Option[StructType] = None
+
+  private def hasState: Boolean = {
+    if (!recovered) {
+      GenerationSwap.recoverPromote(fs, dir)
+      recovered = true
+    }
+    val p = new Path(dir)
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** The live generation; None before the first write. */
+  def read(): Option[DataFrame] =
+    if (!hasState) None
+    else Some(schema.fold {
+      val df = spark.read.parquet(dir)
+      schema = Some(df.schema)
+      df
+    }(spark.read.schema(_).parquet(dir)))
+
+  /** Replace the live generation with `rows` (which may be read from it). */
+  def write(rows: DataFrame): Unit = {
+    val next = dir + ".next"
+    GenerationSwap.deleteIfExists(fs, new Path(next))
+    rows.write.mode("overwrite").parquet(next)
+    GenerationSwap.promote(fs, dir)
+    schema = Some(rows.schema)
   }
 }

@@ -26,7 +26,7 @@ import graft.operators.Merge
   *  - CRASH between write and swap: state advances by atomic rename
   *    (fully materialize `.next`, park live as `.old`, rename into
   *    place, then drop `.old`); recovery adopts whichever complete
-  *    generation survives. Same discipline as [[StreamingQuota]].
+  *    generation survives ([[GenerationDir]]).
   *
   * Scale shape: per batch, ONE map-side-combinable `max_by` compaction
   * of the batch (tiny after compaction) and ONE merge join against the
@@ -42,23 +42,10 @@ final class StreamingCdc(
     opCol: String = "op") {
   require(keyCols.nonEmpty && seqCols.nonEmpty)
 
-  private def fs = new org.apache.hadoop.fs.Path(stateDir)
-    .getFileSystem(spark.sessionState.newHadoopConf())
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  /** Adopt a complete generation after a crash mid-swap — the shared
-    * [[GenerationSwap.recoverPromote]] choreography. */
-  private def recover(): Unit = GenerationSwap.recoverPromote(fs, stateDir)
-
-  private def hasState: Boolean = {
-    recover()
-    fs.exists(path(stateDir)) &&
-      fs.listStatus(path(stateDir)).exists(_.getPath.getName.endsWith(".parquet"))
-  }
+  private val store = new GenerationDir(spark, stateDir)
 
   /** Full state including tombstones and sequence columns. */
-  def state: Option[DataFrame] =
-    if (hasState) Some(spark.read.parquet(stateDir)) else None
+  def state: Option[DataFrame] = store.read()
 
   /** The live table: tombstones and bookkeeping columns dropped. */
   def snapshot: Option[DataFrame] =
@@ -91,13 +78,10 @@ final class StreamingCdc(
         whenNotMatchedInsert = Some(lit(true)))
     }
 
-    // atomic generation swap: .next is complete before live is touched;
-    // every rename/delete is CHECKED (GenerationSwap) so a false return
-    // fails the batch for retry instead of silently keeping the old
-    // generation live while the stream checkpoint advances
-    val next = stateDir + ".next"
-    GenerationSwap.deleteIfExists(fs, path(next))
-    merged.write.mode("overwrite").parquet(next)
-    GenerationSwap.promote(fs, stateDir)
+    // atomic generation swap: .next is complete before live is touched,
+    // and a failed rename/delete fails the batch for retry instead of
+    // silently keeping the old generation live while the stream
+    // checkpoint advances
+    store.write(merged)
   }
 }

@@ -42,19 +42,7 @@ final class StreamingProfile(
     markers: Seq[(String, Seq[String])] =
       TextFunctions.DefaultLangMarkers) {
 
-  private def fs = new org.apache.hadoop.fs.Path(stateDir)
-    .getFileSystem(spark.sessionState.newHadoopConf())
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  // adopt a complete generation after a crash mid-swap — the shared
-  // [[GenerationSwap.recoverPromote]] choreography
-  private def recover(): Unit = GenerationSwap.recoverPromote(fs, stateDir)
-
-  private def hasState: Boolean = {
-    recover()
-    fs.exists(path(stateDir)) &&
-      fs.listStatus(path(stateDir)).exists(_.getPath.getName.endsWith(".parquet"))
-  }
+  private val store = new GenerationDir(spark, stateDir)
 
   /** Stored per-slice states (slice, n_docs, n_tokens, batch_id,
     * vocab_st, len_st, lang_m). A state dir written before the
@@ -62,18 +50,15 @@ final class StreamingProfile(
     * map on read (the first applyBatch then persists the new schema),
     * so upgrades keep their card instead of dying on a missing
     * column. */
-  def state: Option[DataFrame] =
-    if (!hasState) None
-    else {
-      val df = spark.read.parquet(stateDir)
-      Some(
-        if (df.columns.contains("lang_m")) df
-        else df.withColumn("lang_m",
-          typedlit(Map.empty[String, Long])))
-    }
+  def state: Option[DataFrame] = store.read().map { df =>
+    if (df.columns.contains("lang_m")) df
+    else df.withColumn("lang_m", typedlit(Map.empty[String, Long]))
+  }
 
   /** Highest batch id folded in so far (−1 before any). */
-  def appliedBatchId: Long =
+  def appliedBatchId: Long = appliedIn(state)
+
+  private def appliedIn(state: Option[DataFrame]): Long =
     state.map(_.agg(max(col("batch_id"))).head.getLong(0)).getOrElse(-1L)
 
   private def batchStates(batch: DataFrame, batchId: Long): DataFrame = {
@@ -116,12 +101,13 @@ final class StreamingProfile(
   /** Fold one micro-batch of (slice, text) rows. Skips batch ids at or
     * below [[appliedBatchId]] (foreachBatch replay safety). */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= appliedBatchId || batch.isEmpty) return
+    val prior = state
+    if (batchId <= appliedIn(prior) || batch.isEmpty) return
     // eager: the union below references it from TWO aggregations
     // (sketch/counter merge + language-map fold) — without the pin the
     // whole tokenize pipeline would run twice per batch
     val incoming = batchStates(batch, batchId).localCheckpoint(true)
-    val merged = state match {
+    val merged = prior match {
       case None => incoming
       case Some(st) =>
         val u = st.unionByName(incoming)
@@ -146,12 +132,9 @@ final class StreamingProfile(
           .withColumn("lang_m", coalesce(col("lang_m"),
             typedlit(Map.empty[String, Long])))
     }
-    // checked swap (GenerationSwap): a false rename/delete fails the
-    // batch for retry instead of silently dropping its counts
-    val next = stateDir + ".next"
-    GenerationSwap.deleteIfExists(fs, path(next))
-    merged.write.mode("overwrite").parquet(next)
-    GenerationSwap.promote(fs, stateDir)
+    // checked swap: a failed rename/delete fails the batch for retry
+    // instead of silently dropping its counts
+    store.write(merged)
     // free this batch's checkpointed blocks NOW: a long-running
     // foreachBatch stream otherwise pins one batch-sized block set
     // per trigger until driver GC notices (the Hierarchy.scala

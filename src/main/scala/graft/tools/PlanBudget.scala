@@ -33,68 +33,22 @@ object PlanBudget {
         l.startsWith("Exchange rangepartitioning"))
       .toSeq.distinct.size
 
-  /** Distinct shuffle-map stages EXECUTED per job group — the
-    * construction-time exchanges an eager localCheckpoint/SitePin runs
-    * in its own jobs, which the final plan string never shows (the r20
-    * blind spot: the coPurchase `hashpartitioning(u)` exchange and
-    * every bucketPairs spread sit behind checkpoint leaves, so the
-    * plan-string gate alone under-counts real data movement). Job
-    * groups attribute stages to queries; distinct shuffleDepIds dedup
-    * AQE retries and reuse. Register BEFORE construction, call
-    * [[drain]] after the last one (stage events are async). */
-  final class ConstructionShuffles extends org.apache.spark.scheduler.SparkListener {
-    private val stageGroup =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val seen = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.Set[Int]]()
-    private val events = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val g = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
-      if (g != null) js.stageInfos.foreach(si => stageGroup.put(si.stageId, g))
-      events.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val g = stageGroup.get(sc.stageInfo.stageId)
-      if (g != null) org.apache.spark.graft.SchedulerBridge
-        .shuffleDepId(sc.stageInfo).foreach { dep =>
-        seen.computeIfAbsent(g,
-          _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Int]())
-          .add(dep)
-        ()
-      }
-      events.incrementAndGet(); ()
-    }
-    /** Wait for the async listener bus to go quiet, then snapshot. */
-    def drain(): Map[String, Int] = {
-      var prev = -1L
-      var cur = events.get
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); prev = cur; cur = events.get
-      }
-      import scala.jdk.CollectionConverters._
-      seen.asScala.map { case (k, v) => k -> v.size }.toMap
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0)
       else "src/test/resources/exchange_budgets.txt"
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val spark = GraftSession.local()
-    val cs = new ConstructionShuffles
-    spark.sparkContext.addSparkListener(cs)
+    // construction-time exchanges: shuffles an eager localCheckpoint or
+    // SitePin runs in its own jobs while the frame is built, which the
+    // final plan string never shows (the r20 blind spot)
+    val trace = QueryTrace.attach(spark)
     val plans = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      spark.sparkContext.setJobGroup(name, name)
-      val p = graft.SparkEntry.queries(name)(spark, dir)
-        .queryExecution.executedPlan.toString
-      spark.sparkContext.clearJobGroup()
+      val p = trace.traced(name)(graft.SparkEntry.queries(name)(spark, dir)
+        .queryExecution.executedPlan.toString)
       name -> dataExchanges(p)
     }
-    val hidden = cs.drain()
+    val hidden = trace.drain().map { case (name, g) => name -> g.shuffleDeps.size }
+    trace.close()
     // TWO columns: final-plan exchanges (deterministic — gated
     // strictly) and construction-time (checkpoint-hidden) shuffle
     // stages (runtime-adaptive: AQE decisions inside iterative rounds

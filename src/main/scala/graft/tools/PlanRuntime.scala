@@ -27,6 +27,7 @@ import graft.{GraftSession, SparkEntry}
   *
   * Usage:
   *   PlanRuntime <queryName> [sfDir]   — dump one query's final plan
+  *     (a name or numeric id, resolved by [[Profile.resolve]])
   *   PlanRuntime --all [sfDir]         — sweep the whole registry and
   *     print one line per query: executed scans / distinct source
   *     tables / excess (scans beyond one per distinct table — each
@@ -58,9 +59,9 @@ object PlanRuntime {
     }
   }
 
-  def audit(spark: org.apache.spark.sql.SparkSession, name: String,
-      dir: String): Audit = {
-    val df = SparkEntry.queries(name)(spark, dir)
+  /** Run `df` (registry query `name`) to completion and audit its
+    * final plan. */
+  def audit(name: String, df: org.apache.spark.sql.DataFrame): Audit = {
     df.write.format("noop").mode("overwrite").save()
     var scans, hashEx, rangeEx, reused = 0
     val caches = scala.collection.mutable.Map.empty[Int, InMemoryRelation]
@@ -106,27 +107,28 @@ object PlanRuntime {
   }
 
   def main(args: Array[String]): Unit = {
+    val target = args.headOption.map {
+      case "--all" => Right(None)
+      case q => Profile.resolve(SparkEntry.queries.keys, q).map(Some(_))
+    }.getOrElse(Left("usage: PlanRuntime <queryName> [sfDir] | PlanRuntime --all [sfDir]"))
+    target.swap.foreach { err => System.err.println(err); sys.exit(2) }
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val spark = GraftSession.local()
-    if (args.nonEmpty && args(0) == "--all") {
-      val audits = SparkEntry.queries.keys.toSeq.sorted.map { n =>
-        val a = audit(spark, n, dir)
-        System.err.println(a.line) // progress as it runs
-        a
-      }
-      println("== runtime scan audit (sorted by excess) ==")
-      audits.sortBy(a => (-a.excess, a.name)).foreach(a => println(a.line))
-      println(s"excess>0: ${audits.count(_.excess > 0)} of ${audits.size}")
-    } else {
-      val name = args(0)
-      val df = SparkEntry.queries(name)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      val fin = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      println("== FINAL ==")
-      println(fin)
-      println(audit(spark, name, dir).line)
-    }
-    spark.stop()
+    try target.foreach {
+      case None =>
+        val audits = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+          val a = audit(n, fn(spark, dir))
+          System.err.println(a.line) // progress as it runs
+          a
+        }
+        println("== runtime scan audit (sorted by excess) ==")
+        audits.sortBy(a => (-a.excess, a.name)).foreach(a => println(a.line))
+        println(s"excess>0: ${audits.count(_.excess > 0)} of ${audits.size}")
+      case Some(name) =>
+        val df = SparkEntry.queries(name)(spark, dir)
+        val a = audit(name, df)
+        println("== FINAL ==\n" + df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head)
+        println(a.line)
+    } finally spark.stop()
   }
 }

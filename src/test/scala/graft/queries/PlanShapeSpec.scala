@@ -149,21 +149,20 @@ class PlanShapeSpec extends SparkSpec {
       (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String)],
       constructionShuffles: Map[String, Int]) = {
     // construction-time shuffles (eager localCheckpoint/SitePin jobs)
-    // are attributed per query via job groups — the exchanges the
-    // final plan string hides behind checkpoint leaves, counted by the
-    // budget gate below (the r20 blind spot)
-    val cs = new graft.tools.PlanBudget.ConstructionShuffles
-    spark.sparkContext.addSparkListener(cs)
-    val walk = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      spark.sparkContext.setJobGroup(name, name)
-      val qe = graft.SparkEntry.queries(name)(spark, dir).queryExecution
-      val r = name -> ((qe.optimizedPlan, qe.executedPlan.toString))
-      spark.sparkContext.clearJobGroup()
-      r
-    }.toMap
-    val hidden = cs.drain()
-    spark.sparkContext.removeSparkListener(cs)
-    (walk, hidden)
+    // are attributed per query by QueryTrace's job groups: the distinct
+    // shuffle dependencies each query's construction wrote, the
+    // exchanges the final plan string hides behind checkpoint leaves,
+    // counted by the budget gate below (the r20 blind spot)
+    val trace = graft.tools.QueryTrace.attach(spark)
+    try {
+      val walk = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
+        name -> trace.traced(name) {
+          val qe = graft.SparkEntry.queries(name)(spark, dir).queryExecution
+          (qe.optimizedPlan, qe.executedPlan.toString)
+        }
+      }.toMap
+      (walk, trace.drain().map { case (name, g) => name -> g.shuffleDeps.size })
+    } finally trace.close()
   }
 
   test("no corpus-scale relation feeds a partitionless Window anywhere in the registry") {

@@ -997,73 +997,55 @@ class StreamingCurationSpec extends SparkSpec {
   }
 
   test("steady calls run a fixed Spark job count; StreamingQuota.admit infers no schema per batch") {
-    // jobs per call, attributed by job group (the PlanBudget
-    // ConstructionShuffles pattern). StreamingQuota reads its state
-    // with the memoized schema: no footer-inference job per batch.
-    val jobs = new JobsPerGroup
-    spark.sparkContext.addSparkListener(jobs)
-    def counted(group: String)(call: => Unit): Unit = {
-      spark.sparkContext.setJobGroup(group, group)
-      try call finally spark.sparkContext.clearJobGroup()
-    }
+    // jobs per call, attributed by job group (QueryTrace). Every state
+    // read carries a known schema: no footer-inference job per batch.
+    val trace = graft.tools.QueryTrace.attach(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft-sjobs").toString
     val quota = new StreamingQuota(spark, dir + "/quota",
       keyCol = "source", orderCol = "doc_id", tieCol = "doc_id", budget = 3)
     val nd = new StreamingNearDup(spark, dir + "/index", minSim = 0.5)
     val dq = new StreamingDomainQuota(spark, dir + "/domain")
+    val cdc = new StreamingCdc(spark, dir + "/cdc", Seq("k"), Seq("seq"))
+    val prof = new StreamingProfile(spark, dir + "/profile")
     def text(b: Int, j: Int): String = (0 until 20).map(w => s"b${b}j${j}w$w").mkString(" ")
     def step(b: Int, tag: String): Unit = {
       val docs = (0 until 4).map(j => (b * 10L + j, text(b, j), s"d${j % 2}")).toDF("doc_id", "text", "domain")
-      counted(s"quota$tag")(quota.admit(docs.withColumnRenamed("domain", "source"), b.toLong))
-      counted(s"neardup$tag")(nd.processBatch(docs, b.toLong))
-      counted(s"domain$tag")(dq.admit(docs, b.toLong))
+      trace.traced(s"quota$tag")(quota.admit(docs.withColumnRenamed("domain", "source"), b.toLong))
+      trace.traced(s"neardup$tag")(nd.processBatch(docs, b.toLong))
+      trace.traced(s"domain$tag")(dq.admit(docs, b.toLong))
+      val changes = (0 until 4).map(j => (j.toLong, b.toLong, "U", text(b, j))).toDF("k", "seq", "op", "v")
+      trace.traced(s"cdc$tag")(cdc.applyBatch(changes))
+      trace.traced(s"profile$tag")(prof.applyBatch(docs.withColumnRenamed("domain", "slice"), b.toLong))
     }
     try {
       (0 until 3).foreach(b => step(b, "-warm"))
       (3 until 6).foreach(b => step(b, s"-$b"))
-      val n = jobs.drain()
-      def perCall(op: String) = (3 until 6).map(b => n.getOrElse(s"$op-$b", 0)).toSet
+      val n = trace.drain()
+      def perCall(op: String) = (3 until 6).map(b => n.get(s"$op-$b").fold(0)(_.jobs)).toSet
       // measured; StreamingQuota.admit ran 7 while it read its state
-      // schemaless, the other two counts predate the shared store
+      // schemaless, StreamingCdc.applyBatch 4 and StreamingProfile.applyBatch
+      // 16 while they re-inferred their state schema on every read;
+      // near-dup and domain quota predate the shared store
       assert(perCall("quota") == Set(6), s"StreamingQuota.admit jobs: ${perCall("quota")}")
       assert(perCall("neardup") == Set(10), s"StreamingNearDup.processBatch jobs: ${perCall("neardup")}")
       assert(perCall("domain") == Set(17), s"StreamingDomainQuota.admit jobs: ${perCall("domain")}")
-    } finally spark.sparkContext.removeSparkListener(jobs)
+      assert(perCall("cdc") == Set(3), s"StreamingCdc.applyBatch jobs: ${perCall("cdc")}")
+      assert(perCall("profile") == Set(14), s"StreamingProfile.applyBatch jobs: ${perCall("profile")}")
+    } finally trace.close()
   }
 
   test("the state-store protocol lives only in the store, not in its users") {
     val protocol = Seq("partitionOverwriteMode", "GenerationSwap.", "migrateLegacyLayout",
       "spark.read.parquet")
     val offenders = for {
-      op <- Seq("StreamingQuota", "StreamingNearDup", "StreamingDomainQuota", "StreamingMixtureQuota")
+      op <- Seq("StreamingQuota", "StreamingNearDup", "StreamingDomainQuota", "StreamingMixtureQuota",
+        "StreamingCdc", "StreamingProfile")
       text = java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"src/main/scala/graft/streaming/$op.scala"))
       p <- protocol if text.contains(p)
     } yield s"$op.scala: $p"
     assert(offenders.isEmpty,
-      s"state-store protocol outside BatchPartitionedStore: ${offenders.mkString(", ")}")
-  }
-}
-
-/** Spark jobs started per job group; [[drain]] waits for the async
-  * listener bus to go quiet, then snapshots. */
-final class JobsPerGroup extends org.apache.spark.scheduler.SparkListener {
-  private val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
-  private val events = new java.util.concurrent.atomic.AtomicLong(0)
-  override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-    Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      .foreach(g => jobs.merge(g, 1, (a: Int, b: Int) => a + b))
-    events.incrementAndGet(); ()
-  }
-  def drain(): Map[String, Int] = {
-    var prev = -1L
-    var cur = events.get
-    val deadline = System.currentTimeMillis() + 5000
-    while (cur != prev && System.currentTimeMillis() < deadline) {
-      Thread.sleep(100); prev = cur; cur = events.get
-    }
-    import scala.jdk.CollectionConverters._
-    jobs.asScala.toMap
+      s"state-store protocol outside BatchPartitionedStore and GenerationDir: ${offenders.mkString(", ")}")
   }
 }
 
