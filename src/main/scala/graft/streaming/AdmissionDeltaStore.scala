@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -108,7 +109,9 @@ private[streaming] final class BatchPartitionedStore(spark: SparkSession,
     * arranges the rows (batch_id included) before the write. */
   def write(rows: DataFrame, batchId: Long,
       laidOut: DataFrame => DataFrame = identity): Unit = {
-    val w = laidOut(rows.withColumn("batch_id", lit(batchId)))
+    // a Long literal is inlined into generated code (a new class per
+    // batch); a string one is passed by reference. Same directory name.
+    val w = laidOut(rows.withColumn("batch_id", lit(batchId.toString)))
       .write.partitionBy(partitionCols: _*)
     if (batchId >= 0)
       w.option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(dir)
@@ -197,34 +200,51 @@ private[streaming] object AdmissionDeltaStore {
       .select(col(key) +: Counts.map(c =>
         (coalesce(col(c), lit(0L)) + coalesce(col("i_" + c), lit(0L))).as(c)): _*)
 
+  /** `st`'s per-key `n_docs` and a 1 per `nd` row, as one union: a
+    * rule's totals under the NEW corpus are ONE aggregate over it. */
+  def counts(st: DataFrame, nd: DataFrame, key: String): DataFrame =
+    st.select(col(key), col("n_docs"))
+      .unionByName(nd.select(col(key), lit(1L).as("n_docs")))
+
+  /** `nd` ranked per key in md5 order (the q169 discipline), with the
+    * slots its key's state already consumed (`a0`) and the one-row
+    * `consts`; the state join reuses the window's hash partitioning. */
+  def ranked(nd: DataFrame, st: DataFrame, key: String,
+      consts: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col(key))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    nd.withColumn("rn", row_number().over(w))
+      .join(st.select(col(key), col("n_admitted").as("a0")), Seq(key), "left")
+      .na.fill(0L, Seq("a0"))
+      .crossJoin(broadcast(consts))
+  }
+
+  private val Row = "__row" // the caller's whole row, one struct column
+
   /** One replay-safe admission step: `rule(state, canonical)` flags
-    * each canonical `(doc_id, key)` row of `batch` with `adm`; the
-    * per-key delta is written and `batch`'s admitted rows return in
-    * its original schema. The pin must be EAGER: the returned rows are
-    * the exact set whose delta was just written (a lazy pin could
-    * recompute against a grown state). The rule reads the folded state
-    * (one row per key) and `canonical` three times each, the verdicts
-    * feed the join-back and the delta: unpinned, every admit would
-    * re-aggregate the delta parquet and re-run the caller's batch plan
-    * up to four times. */
+    * each canonical `(doc_id, key, __row)` row of `batch` with `adm`;
+    * the per-key delta written and the admitted rows returned (in
+    * `batch`'s schema) both derive from that ONE pinned verdict frame.
+    * The pins must be EAGER: the returned rows are the exact set whose
+    * delta was just written. The rule reads `canonical` twice (totals,
+    * rank window), so the caller's batch runs once, in its pin; the
+    * folded state (one row per key) is read twice, inside the verdict
+    * pin. */
   def admit(store: BatchPartitionedStore, key: String, owner: String,
-      batch: DataFrame, batchId: Long, idCol: String,
-      materialize: graft.operators.Materialize, canonical: DataFrame)(
+      batch: DataFrame, batchId: Long, idCol: String, keyCol: String,
+      materialize: graft.operators.Materialize)(
       rule: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     store.compactIfDue(batchId)
     val m = materialize.resolveEagerFor(batch)
     require(m.isEager, s"$owner needs an EAGER Materialize " +
       s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
       "lazy pin could recompute the admitted set against a grown state")
-    val st = store.state(batchId).map(m(_))
-      .getOrElse(emptyState(canonical.sparkSession, key))
-    val verdicts = m(rule(st, m(canonical)))
-    // the admitted-id set is batch-sized: broadcast explicitly so AQE
-    // never sorts a micro-batch for a few-row join
-    val admittedIds = verdicts.filter(col("adm")).select(col("doc_id").as("__adm_id"))
-    val admitted = m(batch.join(broadcast(admittedIds),
-      col(idCol).cast("long") === col("__adm_id")).drop("__adm_id"))
+    val st = store.state(batchId).getOrElse(emptyState(batch.sparkSession, key))
+    val canonical = m(batch.select(col(idCol).cast("long").as("doc_id"),
+      col(keyCol).cast("string").as(key),
+      struct(batch.columns.map(c => col(s"`$c`")): _*).as(Row)))
+    val verdicts = m(rule(st, canonical))
     store.write(increment(verdicts, key), batchId)
-    admitted
+    verdicts.filter(col("adm")).select(col(Row + ".*"))
   }
 }

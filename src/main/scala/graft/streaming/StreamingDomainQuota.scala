@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental registrable-domain quota — q182's web-crawl domain-cap
@@ -18,11 +17,9 @@ import org.apache.spark.sql.functions._
   * new cap leaves).
   *
   * Scale: the rank window partitions by domain (high cardinality =
-  * even distribution); the state join keys on the same column, so it
-  * reuses the window's hash partitioning; (N, D) is ONE broadcast
-  * scalar row, never a second pass over ranked rows; state is
-  * per-domain (control-plane-scaled — one row per registrable domain,
-  * never row-scaled).
+  * even distribution) and the state join reuses its partitioning
+  * ([[AdmissionDeltaStore.ranked]]); (N, D) is ONE broadcast scalar
+  * row; state is one row per registrable domain, never row-scaled.
   */
 object DomainQuota {
 
@@ -38,12 +35,9 @@ object DomainQuota {
     * from [[emptyState]] over one slice is EXACTLY q182 on that slice
     * — the incremental and batch forms share the gate arithmetic.
     *
-    * Both inputs are read MORE THAN ONCE by the plan (`state` three
-    * times: totals, a0 join, final outer join; `newDocs` three times:
-    * count, domain union, ranking) — pin anything expensive before
-    * calling (q183 SitePins its slice-0 state; the streaming operator
-    * pins its micro-batch projection; stored-parquet state re-reads
-    * are pruned columnar scans and stay cheap). */
+    * The plan reads `state` three times (totals, a0 join, final outer
+    * join) and `newDocs` twice (totals, ranking): pin anything
+    * expensive before calling (q183 SitePins its slice-0 state). */
   def admitIncrement(state: DataFrame, newDocs: DataFrame,
       domainCol: String = "domain", idCol: String = "doc_id"): DataFrame = {
     val st = AdmissionDeltaStore.canonical(state, "domain")
@@ -60,13 +54,13 @@ object DomainQuota {
     * needs the per-ROW admission verdict, not just the per-domain sums). */
   private[streaming] def rankedAdmissions(st: DataFrame,
       nd: DataFrame): DataFrame = {
-    // (N, D) under the NEW totals: one scalar row, broadcast — the
-    // distinct-domain count is the only pass that reads both sides
-    val consts = st.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_old"))
-      .crossJoin(broadcast(nd.agg(count(lit(1)).as("n_new"))))
-      .crossJoin(broadcast(st.select(col("domain"))
-        .union(nd.select(col("domain")))
-        .agg(countDistinct(col("domain")).as("n_domains"))))
+    // (N, D) under the NEW totals: one scalar row over one per-domain
+    // aggregate of state and batch. count(domain), not count(*): a NULL
+    // domain counts toward N but, as in countDistinct, never toward D
+    val consts = AdmissionDeltaStore.counts(st, nd, "domain")
+      .groupBy(col("domain")).agg(sum(col("n_docs")).as("n_docs"))
+      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n"),
+        count(col("domain")).as("n_domains"))
       // the gate 2·rank·D ≤ 3·N evaluated in its overflow-proof
       // equivalent form rank ≤ (3·N) div (2·D): identical booleans for
       // every in-range integer (rank ≤ x ⟺ rank ≤ floor(x) for integer
@@ -83,15 +77,8 @@ object DomainQuota {
       // the raw div is a DIVIDE_BY_ZERO abort that would kill the
       // stream on an empty micro-batch — the floor keeps it a no-op
       // (no rows exist for adm_cap to gate when D = 0)
-      .select(expr("(n_old + n_new) * 3 div (greatest(n_domains, 1) * 2)")
-        .as("adm_cap"))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    nd.withColumn("rn", row_number().over(w))
-      .join(st.select(col("domain"), col("n_admitted").as("a0")),
-        Seq("domain"), "left")
-      .na.fill(0L, Seq("a0"))
-      .crossJoin(broadcast(consts))
+      .select(expr("n * 3 div (greatest(n_domains, 1) * 2)").as("adm_cap"))
+    AdmissionDeltaStore.ranked(nd, st, "domain", consts)
       .withColumn("adm", col("a0") + col("rn") <= col("adm_cap"))
   }
 }
@@ -127,9 +114,7 @@ final class StreamingDomainQuota(spark: SparkSession, stateDir: String,
     * appends, for bounded-loop callers). */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
     AdmissionDeltaStore.admit(store, "domain", "StreamingDomainQuota",
-      batch, batchId, idCol, materialize,
-      batch.select(col(idCol).cast("long").as("doc_id"),
-        col(domainCol).cast("string").as("domain")))(DomainQuota.rankedAdmissions)
+      batch, batchId, idCol, domainCol, materialize)(DomainQuota.rankedAdmissions)
 
   /** Fold the deltas into the `batch_id=-2` sentinel partition
     * (crash-safe: a crash can never silently reset domain budgets). */

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental target-share MIXTURE — q57's data-mixing goal (each
@@ -35,11 +34,8 @@ import org.apache.spark.sql.functions._
   * keeps the literal cross-multiplied gate: it errors loudly on
   * overflow and only runs at small SF.)
   *
-  * Scale notes shared with [[DomainQuota]]: the rank window
-  * partitions by stratum; the state join reuses its hash
-  * partitioning; N is ONE broadcast scalar row; state is per-stratum
-  * (control-plane-sized). The target map is a literal when-chain
-  * (codegen constant), never a joined table.
+  * Scale notes as in [[DomainQuota]], per stratum. The target map is a
+  * literal when-chain (codegen constant), never a joined table.
   */
 object MixtureQuota {
 
@@ -63,8 +59,7 @@ object MixtureQuota {
       idCol: String = "doc_id"): DataFrame = {
     val st = AdmissionDeltaStore.canonical(state, "stratum")
     val nd = newDocs.select(col(idCol).cast("long").as("doc_id"),
-        col(stratumCol).cast("string").as("stratum"))
-      .filter(col("stratum").isNotNull)
+      col(stratumCol).cast("string").as("stratum"))
     AdmissionDeltaStore.plus(st, AdmissionDeltaStore.increment(
       rankedAdmissions(st, nd, targetBp), "stratum"), "stratum")
   }
@@ -72,30 +67,24 @@ object MixtureQuota {
   /** The shared gate: new rows ranked per stratum (md5 order), offset
     * by the state's consumed slots, flagged `adm` under the
     * updated-total target-share cap. Inputs must already carry the
-    * canonical column names (NULL strata dropped). Used by the pure
-    * fold above and by [[StreamingMixtureQuota]] (which needs the
+    * canonical column names; NULL strata are dropped here. Used by the
+    * pure fold above and by [[StreamingMixtureQuota]] (which needs the
     * per-ROW verdict). */
-  private[streaming] def rankedAdmissions(st: DataFrame, nd: DataFrame,
+  private[streaming] def rankedAdmissions(st: DataFrame, canonicalDocs: DataFrame,
       targetBp: Map[String, Int]): DataFrame = {
     targetBp.values.foreach(bp =>
       require(bp >= 0 && bp <= 10000, s"share out of range: $bp bp"))
+    val nd = canonicalDocs.filter(col("stratum").isNotNull)
     // N under the NEW total: one scalar row, broadcast
-    val consts = st.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_old"))
-      .crossJoin(broadcast(nd.agg(count(lit(1)).as("n_new"))))
-      .select((col("n_old") + col("n_new")).as("n_total"))
+    val consts = AdmissionDeltaStore.counts(st, nd, "stratum")
+      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_total"))
     // the stratum → target_bp literal when-chain (the mixtureSample
     // shape): a codegen'd constant lookup, no join
     val bpCol: Column = targetBp.toSeq.sortBy(_._1)
       .foldLeft(lit(0L)) { case (acc, (v, bp)) =>
         when(col("stratum") === lit(v), lit(bp.toLong)).otherwise(acc)
       }
-    val w = Window.partitionBy(col("stratum"))
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    nd.withColumn("rn", row_number().over(w))
-      .join(st.select(col("stratum"), col("n_admitted").as("a0")),
-        Seq("stratum"), "left")
-      .na.fill(0L, Seq("a0"))
-      .crossJoin(broadcast(consts))
+    AdmissionDeltaStore.ranked(nd, st, "stratum", consts)
       .withColumn("target_bp", bpCol)
       // overflow-proof decomposed cap — see the object scaladoc
       .withColumn("adm_cap",
@@ -134,10 +123,8 @@ final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
     * -1 default appends, for bounded-loop callers). */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
     AdmissionDeltaStore.admit(store, "stratum", "StreamingMixtureQuota",
-      batch, batchId, idCol, materialize,
-      batch.select(col(idCol).cast("long").as("doc_id"),
-          col(stratumCol).cast("string").as("stratum"))
-        .filter(col("stratum").isNotNull))(MixtureQuota.rankedAdmissions(_, _, targetBp))
+      batch, batchId, idCol, stratumCol, materialize)(
+      MixtureQuota.rankedAdmissions(_, _, targetBp))
 
   /** Fold the deltas into the `batch_id=-2` sentinel partition
     * (crash-safe). */

@@ -135,7 +135,7 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
             .select(col("band"), col("band_key"), col("idx_sig")),
             Seq("band", "band_key"))
           .filter(estSim(col("sig"), col("idx_sig")) >= minSim)
-          .select(col(idCol)).distinct()
+          .select(col(idCol))
       }
       // within-batch: a doc loses to ANY verified-similar smaller id
       // (earliest-wins; a chain collapses onto its smallest member —
@@ -148,28 +148,21 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
         .select(col("a"), explode(col("ms")).as("b"))
         .filter(col("a.id") < col("b.id"))
         .filter(estSim(col("a.sg"), col("b.sg")) >= minSim)
-      val intraDropped = bucketPairs.select(col("b.id").as(idCol)).distinct()
+      val intraDropped = bucketPairs.select(col("b.id").as(idCol))
       val droppedIds = crossDropped.fold(intraDropped)(_.unionByName(intraDropped))
-        .distinct()
       // the dropped ids are batch-sized: broadcast them rather than
-      // shuffle the caller's batch into a sort-merge anti-join
+      // shuffle the caller's batch into a sort-merge anti-join. They are
+      // not deduplicated: a repeated key cannot change an anti-join
       val kept = batch.join(broadcast(droppedIds), Seq(idCol), "left_anti")
       // pin the kept-set BEFORE the index append (and before releasing
-      // bs): pinning AFTER the write evaluated `kept` TWICE — once
-      // inside the append's join, once in the pin — re-running the
-      // whole dedup pipeline (index scan, estSim verify, anti-join,
-      // the caller's batch source) per micro-batch, and with
-      // `retention` set the index view's current_timestamp() could
-      // cross the horizon BETWEEN the two evaluations: the returned
-      // kept-set would drift from the survivors whose bands were just
-      // appended (a doc kept by the second evaluation but not indexed
-      // by the first is re-admittable forever). One evaluation, one
-      // truth: pin first, append from the pinned frame. The strategy
-      // MUST be eager — a lazy pin with lineage kept reintroduces the
-      // same drift on recompute, so reject it loudly.
-      // resolveEagerFor: a session-conf 'persist' (the advertised
-      // one-flag knob) falls back to LocalCheckpoint with a warning;
-      // an EXPLICITLY passed lazy strategy still fails this require
+      // bs), then append from the pinned frame. Pinned after the write,
+      // `kept` ran twice (the whole dedup pipeline and the caller's
+      // batch), and with `retention` set the second run's
+      // current_timestamp() could cross the horizon: a doc kept but
+      // never indexed is re-admittable forever. A lazy pin with lineage
+      // kept can recompute the same way, so it fails the require;
+      // resolveEagerFor turns a session-conf 'persist' into
+      // LocalCheckpoint with a warning.
       val m = materialize.resolveEagerFor(kept)
       require(m.isEager, s"StreamingNearDup needs an EAGER Materialize " +
         s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +

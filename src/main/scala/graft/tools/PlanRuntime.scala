@@ -1,9 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.execution.SparkPlan
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.graft.SchedulerBridge
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{GraftSession, SparkEntry}
 
@@ -59,32 +66,41 @@ object PlanRuntime {
     }
   }
 
-  /** Run `df` (registry query `name`) to completion and audit its
-    * final plan. */
-  def audit(name: String, df: org.apache.spark.sql.DataFrame): Audit = {
-    df.write.format("noop").mode("overwrite").save()
+  /** Run `df` (registry query `name`) through the noop sink and audit
+    * the plan that ran; returns the audit and that plan. The write
+    * plans its own QueryExecution (`df.queryExecution.executedPlan`
+    * never runs and stays `isFinalPlan=false`): a query-execution
+    * listener hands the write's plan over. */
+  def audit(name: String, df: DataFrame): (Audit, SparkPlan) = {
+    val ran = new AtomicReference[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ran.set(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      Profile.timeNoop(df)
+      SchedulerBridge.drainListenerBus(df.sparkSession.sparkContext, timeoutMs = 10000L)
+    } finally df.sparkSession.listenerManager.unregister(listener)
+    val plan = Option(ran.get).getOrElse(sys.error(s"$name: the write's plan never reached the listener"))
     var scans, hashEx, rangeEx, reused = 0
     val caches = scala.collection.mutable.Map.empty[Int, InMemoryRelation]
-    def isParquetScan(p: SparkPlan): Boolean =
-      p.getClass.getSimpleName == "FileSourceScanExec"
     def classify(p: SparkPlan): Unit = p match {
-      case s if isParquetScan(s) => scans += 1
+      case s if s.getClass.getSimpleName == "FileSourceScanExec" => scans += 1
       case m: InMemoryTableScanExec =>
         // the CachedRDDBuilder is the shared handle: every reference
         // to one persisted frame carries the same builder instance
         caches.getOrElseUpdate(
           System.identityHashCode(m.relation.cacheBuilder), m.relation)
       case e: ShuffleExchangeLike => e.outputPartitioning match {
-        case _: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-          hashEx += 1
-        case _: org.apache.spark.sql.catalyst.plans.physical.RangePartitioning =>
-          rangeEx += 1
+        case _: HashPartitioning => hashEx += 1
+        case _: RangePartitioning => rangeEx += 1
         case _ => ()
       }
       case _: ReusedExchangeExec => reused += 1
       case _ => ()
     }
-    walk(df.queryExecution.executedPlan, classify)
+    walk(plan, classify)
     // each distinct cached relation fills once — count ITS work once
     // (worklist: a cached plan may itself reference another cache)
     var audited = Set.empty[Int]
@@ -94,16 +110,18 @@ object PlanRuntime {
       pending = caches.keySet.toSet -- audited
     }
     // distinct parquet tables the query reads, from the analyzed plan
-    val tables = df.queryExecution.analyzed.collectLeaves().flatMap {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      case _ => Nil
-    }.distinct.size
-    Audit(name, scans, tables, hashEx, rangeEx, reused, caches.size)
+    val tables = df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+        lr.relation.asInstanceOf[HadoopFsRelation].location.rootPaths
+    }.flatten.distinct.size
+    (Audit(name, scans, tables, hashEx, rangeEx, reused, caches.size), plan)
+  }
+
+  /** The single-query dump: the final plan that ran (its adaptive
+    * initial plan cut), then the audit line. */
+  def dump(name: String, df: DataFrame): String = {
+    val (a, plan) = audit(name, df)
+    "== FINAL ==\n" + plan.toString.split("== Initial Plan ==").head + "\n" + a.line
   }
 
   def main(args: Array[String]): Unit = {
@@ -117,7 +135,7 @@ object PlanRuntime {
     try target.foreach {
       case None =>
         val audits = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-          val a = audit(n, fn(spark, dir))
+          val (a, _) = audit(n, fn(spark, dir))
           System.err.println(a.line) // progress as it runs
           a
         }
@@ -125,10 +143,7 @@ object PlanRuntime {
         audits.sortBy(a => (-a.excess, a.name)).foreach(a => println(a.line))
         println(s"excess>0: ${audits.count(_.excess > 0)} of ${audits.size}")
       case Some(name) =>
-        val df = SparkEntry.queries(name)(spark, dir)
-        val a = audit(name, df)
-        println("== FINAL ==\n" + df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head)
-        println(a.line)
+        println(dump(name, SparkEntry.queries(name)(spark, dir)))
     } finally spark.stop()
   }
 }

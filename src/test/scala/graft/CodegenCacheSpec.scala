@@ -58,9 +58,10 @@ class CodegenCacheSpec extends SparkSpec {
     }
     (0 until 4).foreach(step) // first batches differ in shape (empty index, state)
     val perBatch = (4 until 7).map(b => compilesOf(step(b)))
-    // the residual: each batch's `batch_id` and `ingest_ts` literals are
-    // inlined into the near-dup index write and the quota delta write
-    // (one class each, compiled by the driver and the executor loader).
+    // the residual: each batch's `ingest_ts` literal is inlined into the
+    // near-dup index write (one class, compiled by the driver and the
+    // executor loader); the writes' `batch_id` is a string literal,
+    // passed to the generated code by reference.
     // The median tolerates one batch whose adaptive re-plan produced a
     // new plan variant as the state grew; with Spark's default cap every
     // batch recompiles most of its working set (~90 classes here).
@@ -68,5 +69,5 @@ class CodegenCacheSpec extends SparkSpec {
       s"steady batches compiled ${perBatch.mkString(", ")} classes, expected <= $Residual")
   }
 
-  private val Residual = 4
+  private val Residual = 2
 }

@@ -1005,6 +1005,8 @@ class StreamingCurationSpec extends SparkSpec {
       keyCol = "source", orderCol = "doc_id", tieCol = "doc_id", budget = 3)
     val nd = new StreamingNearDup(spark, dir + "/index", minSim = 0.5)
     val dq = new StreamingDomainQuota(spark, dir + "/domain")
+    val mq = new StreamingMixtureQuota(spark, dir + "/mixture", Map("d0" -> 6000, "d1" -> 4000),
+      stratumCol = "domain")
     val cdc = new StreamingCdc(spark, dir + "/cdc", Seq("k"), Seq("seq"))
     val prof = new StreamingProfile(spark, dir + "/profile")
     def text(b: Int, j: Int): String = (0 until 20).map(w => s"b${b}j${j}w$w").mkString(" ")
@@ -1013,6 +1015,7 @@ class StreamingCurationSpec extends SparkSpec {
       trace.traced(s"quota$tag")(quota.admit(docs.withColumnRenamed("domain", "source"), b.toLong))
       trace.traced(s"neardup$tag")(nd.processBatch(docs, b.toLong))
       trace.traced(s"domain$tag")(dq.admit(docs, b.toLong))
+      trace.traced(s"mixture$tag")(mq.admit(docs, b.toLong))
       val changes = (0 until 4).map(j => (j.toLong, b.toLong, "U", text(b, j))).toDF("k", "seq", "op", "v")
       trace.traced(s"cdc$tag")(cdc.applyBatch(changes))
       trace.traced(s"profile$tag")(prof.applyBatch(docs.withColumnRenamed("domain", "slice"), b.toLong))
@@ -1025,10 +1028,14 @@ class StreamingCurationSpec extends SparkSpec {
       // measured; StreamingQuota.admit ran 7 while it read its state
       // schemaless, StreamingCdc.applyBatch 4 and StreamingProfile.applyBatch
       // 16 while they re-inferred their state schema on every read;
-      // near-dup and domain quota predate the shared store
+      // near-dup ran 10 while it deduplicated its anti-join keys, and the
+      // domain and mixture quotas 17 and 14 while they pinned the state
+      // and the admitted rows apart from the verdicts and took their
+      // totals from three and two aggregates
       assert(perCall("quota") == Set(6), s"StreamingQuota.admit jobs: ${perCall("quota")}")
-      assert(perCall("neardup") == Set(10), s"StreamingNearDup.processBatch jobs: ${perCall("neardup")}")
-      assert(perCall("domain") == Set(17), s"StreamingDomainQuota.admit jobs: ${perCall("domain")}")
+      assert(perCall("neardup") == Set(9), s"StreamingNearDup.processBatch jobs: ${perCall("neardup")}")
+      assert(perCall("domain") == Set(11), s"StreamingDomainQuota.admit jobs: ${perCall("domain")}")
+      assert(perCall("mixture") == Set(10), s"StreamingMixtureQuota.admit jobs: ${perCall("mixture")}")
       assert(perCall("cdc") == Set(3), s"StreamingCdc.applyBatch jobs: ${perCall("cdc")}")
       assert(perCall("profile") == Set(14), s"StreamingProfile.applyBatch jobs: ${perCall("profile")}")
     } finally trace.close()

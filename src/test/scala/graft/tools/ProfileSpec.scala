@@ -55,6 +55,13 @@ class ProfileSpec extends SparkSpec {
     assert(plan.contains("== Physical Plan =="), plan)
   }
 
+  test("PlanRuntime dumps and audits the plan that ran, in its final adaptive form") {
+    val out = PlanRuntime.dump("q14_star_join", graft.SparkEntry.queries("q14_star_join")(spark, dir))
+    assert(out.startsWith("== FINAL ==") && out.contains("isFinalPlan=true"), out)
+    assert(!out.contains("isFinalPlan=false"), out)
+    assert(out.linesIterator.toSeq.last.matches("""q14_star_join\s+scans=[1-9]\d* .*"""), out)
+  }
+
   test("resolve: exact names and numeric ids; unknown and ambiguous ids are errors") {
     val names = Seq("q19_jaccard", "q1_a", "q190_x", "q21_p", "q21_q", "q3")
     assert(Profile.resolve(names, "q19_jaccard") == Right("q19_jaccard"))
