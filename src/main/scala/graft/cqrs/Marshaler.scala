@@ -27,8 +27,8 @@ object JsonCodec {
     * that detonates far from the parse (at Row-encode inside
     * publish/poll) — outside any catch that knows the input. Throwing
     * HERE lands in each caller's documented malformed-input path
-    * (HTTP: drop the carrier; SQL backfill: skip the row; SQL poll: a
-    * loud, named parse error instead of an encoder stack trace). */
+    * (HTTP: drop the carrier; SQL poll: a loud, named parse error
+    * instead of an encoder stack trace). */
   def readStringMap(bytes: Array[Byte]): Map[String, String] =
     read(bytes, classOf[Map[String, Any]]).map {
       case (k, v: String) => k -> v

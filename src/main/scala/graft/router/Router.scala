@@ -391,19 +391,6 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
       case _ => ()
     }
 
-  /** Publish one micro-batch, honoring per-row topic overrides and
-    * stripping `_graft_` ctx keys. Publishes through the idempotent
-    * epoch path — (handler, epochId, topic) identifies the write, so a
-    * batch retried after a sink failure cannot duplicate rows on
-    * transports with an idempotency handle.
-    *
-    * Transports advertising [[RoutedPublisher]] get the whole batch in
-    * ONE pass with a per-row `_topic` column — Forwarder-style routing
-    * has data-dependent destination cardinality, and O(topics) filtered
-    * passes would be the scale bottleneck. Only the fallback path (for
-    * plain publishers) does a distinct-topic collect + per-topic pass;
-    * that collect is over the set of destination topics, never
-    * data-sized. */
   /** Idempotency handle for one (group, handler, lineage, epoch)
     * write. The group segment is LENGTH-PREFIXED so names containing
     * '-' cannot alias across (group, handler) pairs — without it,
@@ -414,6 +401,37 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
     s"${g.length}.$g-${h.name}-$lineage-$epochId"
   }
 
+  /** Publish `cleaned` (Message columns + `_topic`) under `writerId`,
+    * shared by both sinks. Transports advertising [[RoutedPublisher]]
+    * get the whole batch in ONE pass with a per-row `_topic` column —
+    * Forwarder-style routing has data-dependent destination
+    * cardinality, and O(topics) filtered passes would be the scale
+    * bottleneck. Only the fallback path (for plain publishers) does a
+    * distinct-topic collect + per-topic pass, over a pinned frame so
+    * the handler's side effects never re-run per topic; that collect
+    * is over the set of destination topics, never data-sized. */
+  private def publishRouted(pub: Publisher, cleaned: DataFrame,
+      writerId: String): Unit = pub match {
+    case rp: RoutedPublisher => rp.publishRoutedEpoch(cleaned, "_topic", writerId)
+    case _ =>
+      val persisted = cleaned.persist()
+      try {
+        val topics =
+          persisted.select(col("_topic")).distinct().collect().map(_.getString(0))
+        topics.foreach { t =>
+          pub.publishEpoch(t,
+            persisted.filter(col("_topic") === t)
+              .select(Message.columns.map(col): _*),
+            writerId)
+        }
+      } finally { persisted.unpersist(); () }
+  }
+
+  /** Publish one micro-batch, honoring per-row topic overrides and
+    * stripping `_graft_` ctx keys. Publishes through the idempotent
+    * epoch path — (handler, epochId, topic) identifies the write, so a
+    * batch retried after a sink failure cannot duplicate rows on
+    * transports with an idempotency handle. */
   private def sinkBatch(h: HandlerDef, batch: DataFrame, epochId: Long): Unit = {
     val pub = h.publisher.get
     val default = h.publishTopic.get
@@ -428,21 +446,7 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
         coalesce(element_at(col("metadata"), lit(Ctx.TopicOverride)), lit(default)))
       val cleaned = routed.withColumn("metadata",
         Ctx.stripInternal(col("metadata")))
-      pub match {
-        case rp: RoutedPublisher => rp.publishRoutedEpoch(cleaned, "_topic", writerId)
-        case _ =>
-          val persisted = cleaned.persist()
-          try {
-            val topics =
-              persisted.select(col("_topic")).distinct().collect().map(_.getString(0))
-            topics.foreach { t =>
-              pub.publishEpoch(t,
-                persisted.filter(col("_topic") === t)
-                  .select(Message.columns.map(col): _*),
-                writerId)
-            }
-          } finally { persisted.unpersist(); () }
-      }
+      publishRouted(pub, cleaned, writerId)
       if (needAck) ackBatch(h, src)
     } finally { if (needAck) { src.unpersist(); () } }
   }
@@ -465,24 +469,12 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
       val routed = persisted.filter(
         element_at(col("metadata"), lit(Ctx.TopicOverride)).isNotNull)
       if (routed.limit(1).count() > 0) h.subscriber match {
-        case pub: graft.sources.Publisher =>
-          val cleaned = routed
+        case pub: Publisher =>
+          publishRouted(pub, routed
             .withColumn("_topic",
               element_at(col("metadata"), lit(Ctx.TopicOverride)))
-            .withColumn("metadata", Ctx.stripInternal(col("metadata")))
-          pub match {
-            case rp: graft.sources.RoutedPublisher =>
-              rp.publishRoutedEpoch(cleaned, "_topic", writerId(h, epochId))
-            case _ =>
-              val topics = cleaned.select(col("_topic")).distinct()
-                .collect().map(_.getString(0))
-              topics.foreach { t =>
-                pub.publishEpoch(t,
-                  cleaned.filter(col("_topic") === t)
-                    .select(Message.columns.map(col): _*),
-                  writerId(h, epochId))
-              }
-          }
+            .withColumn("metadata", Ctx.stripInternal(col("metadata"))),
+            writerId(h, epochId))
         case _ =>
           throw new IllegalStateException(
             s"consumer handler '${h.name}': middleware routed messages " +
@@ -491,59 +483,6 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
       }
       ackBatch(h, persisted)
     } finally { persisted.unpersist(); () }
-  }
-
-  /** One-time upgrade adoption of LEGACY-scheme checkpoints. Two
-    * legacy layouts shipped before the per-group path scheme:
-    * ungrouped handlers checkpointed at `$ckptBase/<handler>`, and
-    * grouped handlers at the JOINED `$ckptBase/<group>-<handler>`
-    * (whose aliasing — group "a-b"/handler "c" vs group "a"/handler
-    * "b-c" — is exactly why the layout changed). A restart on an
-    * existing deployment would otherwise find the NEW path empty,
-    * start a fresh offset lineage, and reprocess every topic from the
-    * beginning — with duplicated side effects, because the
-    * re-publishes carry new-scheme writerIds the old committed epochs
-    * don't dedup. So: if the new-scheme dir holds no committed
-    * offsets and the scheme-faithful legacy candidate does, RENAME
-    * the legacy dir into place — the lineage (and its epochIds, which
-    * the writerId lineage hash keys off the unchanged `ckptBase`)
-    * simply continues.
-    *
-    * Inherent limits, both consequences of the legacy layouts' own
-    * ambiguity (documented, not fixable losslessly): a legacy dir
-    * once SHARED by two groups follows the first group to restart
-    * (the other starts fresh), and on a reused checkpoint root an
-    * ungrouped handler literally named "<g>-<h>" is indistinguishable
-    * from group g's handler h — don't name ungrouped handlers after
-    * retired group-handler pairs when sharing a root. */
-  private def adoptLegacyCheckpoint(newLoc: String, handlerName: String): Unit = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val newP = new org.apache.hadoop.fs.Path(newLoc)
-    // the candidate under the scheme THIS router would have used
-    // pre-upgrade: joined "$g-$name" when grouped, bare name otherwise
-    val legacyName = group.fold(handlerName)(g => s"$g-$handlerName")
-    val oldP = new org.apache.hadoop.fs.Path(s"$ckptBase/$legacyName")
-    // a handler literally named "nogroup"/"grp_…" nests the legacy dir
-    // inside the new parent — renaming a dir into its own child fails
-    if (newP.toString.startsWith(oldP.toString + "/")) return
-    val fs = newP.getFileSystem(hconf)
-    // `offsets` is the marker every structured-streaming checkpoint
-    // writes — don't adopt arbitrary same-named directories
-    def hasOffsets(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(p) && fs.exists(new org.apache.hadoop.fs.Path(p, "offsets"))
-    if (!hasOffsets(oldP)) return
-    // an EXISTING new-scheme dir is only authoritative if it holds
-    // committed offsets; a crashed first start can leave metadata
-    // with no offsets, and skipping adoption on that husk would
-    // strand the legacy lineage forever
-    if (hasOffsets(newP)) return
-    if (fs.exists(newP) && !fs.delete(newP, true))
-      throw new java.io.IOException(
-        s"checkpoint adopt: could not clear offsets-less $newP")
-    if (!fs.mkdirs(newP.getParent))
-      throw new java.io.IOException(s"checkpoint adopt: mkdirs failed for ${newP.getParent}")
-    if (!fs.rename(oldP, newP))
-      throw new java.io.IOException(s"checkpoint adopt: rename failed: $oldP -> $newP")
   }
 
   /** Plugins run once per Router, not once per run() call: run() is
@@ -678,11 +617,8 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
           // "$g-$name" aliases (group "a-b", handler "c") with
           // (group "a", handler "b-c"), silently sharing one offset
           // log between two different handlers
-          .option("checkpointLocation", {
-            val loc = s"$ckptBase/${group.fold(s"nogroup/${h.name}")(g => s"grp_$g/${h.name}")}"
-            adoptLegacyCheckpoint(loc, h.name)
-            loc
-          })
+          .option("checkpointLocation",
+            s"$ckptBase/${group.fold(s"nogroup/${h.name}")(g => s"grp_$g/${h.name}")}")
           .foreachBatch { (batch: DataFrame, epochId: Long) =>
             val body = () => {
               if (h.publisher.isDefined) sinkBatch(h, batch, epochId)

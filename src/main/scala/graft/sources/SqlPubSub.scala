@@ -158,11 +158,11 @@ final class SqlPubSub(spark: SparkSession, url: String,
 
   // one DDL probe per topic per INSTANCE on the hot path: publish/
   // subscribe re-initialize on every call for idempotence, and
-  // un-memoized that cost four JDBC metadata round-trips plus the
-  // backfill sentinel SELECT per micro-batch per topic. Only the
-  // INTERNAL calls memoize — the public subscribeInitialize always
-  // probes, so an operator recovering from a destructive outage
-  // (dropped table) can explicitly re-create (SqlSpec's heal row).
+  // un-memoized that cost four JDBC metadata round-trips per
+  // micro-batch per topic. Only the INTERNAL calls memoize — the
+  // public subscribeInitialize always probes, so an operator
+  // recovering from a destructive outage (dropped table) can
+  // explicitly re-create (SqlSpec's heal row).
   private val initialized =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
@@ -182,12 +182,11 @@ final class SqlPubSub(spark: SparkSession, url: String,
   private def initializeImpl(c: Connection, topic: String): Unit = {
     if (!tableExists(c, table(topic))) {
       val st = c.createStatement()
-      // uuid 256 / metadata 32672 (Derby's VARCHAR max): the previous
-      // 64/4000 let ONE oversized message (a 70-char foreign uuid, a
+      // uuid 256 / metadata 32672 (Derby's VARCHAR max): narrower
+      // columns let ONE oversized message (a 70-char foreign uuid, a
       // poison-middleware reason pushing metadata past 4000) fail the
       // INSERT with SQLDataException on every redelivery — a permanent
-      // batch wedge. Pre-r14 tables keep their old widths (Derby ALTER
-      // can widen VARCHAR if an operator needs it in place).
+      // batch wedge.
       try st.executeUpdate(
         s"""CREATE TABLE ${quoted(table(topic))} (
            |  ${quoted("offset_id")} BIGINT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
@@ -241,105 +240,14 @@ final class SqlPubSub(spark: SparkSession, url: String,
       catch { case _: java.sql.SQLException => () }
       finally st.close()
     }
-    backfillReleased(c, topic)
   }
 
-  /** One-time-per-topic upgrade backfill: copies released by a
-    * PRE-side-table engine version carry only the metadata stamp and
-    * have no `graft_released` record — without this, an upgraded
-    * database would deliver every such copy to every OTHER consumer
-    * group (it was that group's private redelivery) and show it in
-    * replay beside its original: duplicates. Scans the topic table for
-    * stamped rows ONCE (gated by a sentinel row at offset −1, which no
-    * real offset can collide with) and records them. This is the one
-    * place the stamp is still read — a deliberate, documented trust of
-    * pre-upgrade data at upgrade time only; rows inserted after the
-    * sentinel exists are governed solely by the release transaction's
-    * own records. */
-  private def backfillReleased(c: Connection, topic: String): Unit = {
-    val sen = c.prepareStatement(
-      s"""SELECT 1 FROM ${quoted("graft_released")}
-         |WHERE ${quoted("topic")} = ? AND ${quoted("offset_id")} = -1""".stripMargin)
-    val hasSentinel =
-      try {
-        sen.setString(1, topic)
-        val rs = sen.executeQuery()
-        try rs.next() finally rs.close()
-      } finally sen.close()
-    if (hasSentinel) return
-    val stamped = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    val sel = c.prepareStatement(
-      s"""SELECT ${quoted("offset_id")}, ${quoted("metadata")}
-         |FROM ${quoted(table(topic))}
-         |WHERE ${quoted("metadata")} LIKE ?""".stripMargin)
-    try {
-      sel.setString(1, s"""%"${graft.router.Ctx.DelayGroup}"%""")
-      val rs = sel.executeQuery()
-      try while (rs.next()) {
-        // the topic table is an open surface: one foreign row with
-        // UNPARSEABLE metadata matching the LIKE filter must not wedge
-        // the backfill (and with it every initialize for the topic)
-        // forever — skip it; it carries no trustworthy stamp anyway
-        val meta =
-          try Option(rs.getString(2))
-            // validated read: ill-TYPED values ({"a":1}) skip like
-            // ill-FORMED ones, instead of erasure-smuggling through
-            .map(s => graft.cqrs.JsonCodec.readStringMap(s.getBytes("UTF-8")))
-            .getOrElse(Map.empty[String, String])
-          catch { case _: Exception =>
-            log.info(s"backfill: skipping row ${rs.getLong(1)} of topic " +
-              s"'$topic' with unparseable metadata")
-            Map.empty[String, String]
-          }
-        meta.get(graft.router.Ctx.DelayGroup)
-          // grp rides VARCHAR(128): a forged oversize stamp would throw
-          // SQLDataException mid-backfill — the sentinel would never
-          // commit and the topic would wedge. A >128-byte value cannot
-          // be a real group name (requireBookkeepable bounds them), so
-          // skip the row rather than trust a truncation of a forgery.
-          .filter(_.getBytes("UTF-8").length <= 128)
-          .foreach(g => stamped += rs.getLong(1) -> g)
-      } finally rs.close()
-    } finally sel.close()
-    // records + sentinel commit atomically: a crash mid-backfill
-    // re-runs the whole scan next initialize instead of half-trusting
-    c.setAutoCommit(false)
-    try {
-      val ins = c.prepareStatement(
-        s"""INSERT INTO ${quoted("graft_released")}
-           |(${quoted("topic")}, ${quoted("offset_id")}, ${quoted("grp")})
-           |VALUES (?, ?, ?)""".stripMargin)
-      try {
-        // a concurrent initializer may have inserted the same offset —
-        // swallow the duplicate PER ROW behind a savepoint: on engines
-        // with transaction-level abort (PostgreSQL), a caught
-        // constraint hit without ROLLBACK TO SAVEPOINT leaves the whole
-        // transaction aborted, the NEXT insert throws 25P02, the outer
-        // catch rolls everything back, and the sentinel never commits —
-        // every initialize for the topic re-wedges forever (the
-        // abort-semantics rule the epoch writers follow, applied to the
-        // backfill's statement loop; Derby's statement-level abort
-        // tolerates the savepoint harmlessly)
-        def insertIgnoreDup(): Unit = {
-          val sp = c.setSavepoint()
-          try { ins.executeUpdate(); c.releaseSavepoint(sp) }
-          catch {
-            case e: java.sql.SQLException if SqlPubSub.isDuplicateKey(e) =>
-              c.rollback(sp)
-          }
-        }
-        stamped.foreach { case (off, g) =>
-          ins.setString(1, topic); ins.setLong(2, off); ins.setString(3, g)
-          insertIgnoreDup()
-        }
-        ins.setString(1, topic); ins.setLong(2, -1L); ins.setString(3, "")
-        insertIgnoreDup()
-      } finally ins.close()
-      c.commit()
-    } catch { case e: Throwable => c.rollback(); throw e }
-    finally c.setAutoCommit(true)
-  }
-
+  /** Driver-side publish: one call's messages commit in ONE
+    * transaction, so a transaction-rollback error (SQLState class 40:
+    * lock timeout, deadlock, serialization failure) left nothing behind
+    * and the call retries it a bounded number of times. Embedded Derby
+    * raises one (40XL1, identity-generator contention) when parallel
+    * publishers make the first inserts into a freshly created table. */
   override def publish(topic: String, msgs: Seq[Message]): Unit = {
     ensureInitialized(topic)
     withConn { c =>
@@ -347,16 +255,29 @@ final class SqlPubSub(spark: SparkSession, url: String,
         s"""INSERT INTO ${quoted(table(topic))}
            |(${quoted("uuid")}, ${quoted("metadata")}, ${quoted("payload")}, ${quoted("ts")})
            |VALUES (?, ?, ?, ?)""".stripMargin)
+      c.setAutoCommit(false)
       try {
-        msgs.foreach { m =>
-          ps.setString(1, m.uuid)
-          ps.setString(2, new String(graft.cqrs.JsonCodec.write(m.metadata), "UTF-8"))
-          ps.setBytes(3, m.payload)
-          ps.setTimestamp(4, m.ts)
-          ps.addBatch()
-        }
-        ps.executeBatch(); ()
-      } finally ps.close()
+        def attempt(n: Int): Unit =
+          try {
+            msgs.foreach { m =>
+              ps.setString(1, m.uuid)
+              ps.setString(2, new String(graft.cqrs.JsonCodec.write(m.metadata), "UTF-8"))
+              ps.setBytes(3, m.payload)
+              ps.setTimestamp(4, m.ts)
+              ps.addBatch()
+            }
+            ps.executeBatch()
+            c.commit()
+          } catch {
+            case e: java.sql.SQLException
+                if n < 3 && SqlPubSub.isTransactionRollback(e) =>
+              c.rollback(); ps.clearBatch()
+              Thread.sleep(20L << n)
+              attempt(n + 1)
+          }
+        attempt(0)
+      } catch { case e: Throwable => c.rollback(); throw e }
+      finally { ps.close(); c.setAutoCommit(true) }
     }
   }
 
@@ -379,37 +300,18 @@ final class SqlPubSub(spark: SparkSession, url: String,
     * so the suffixed key can never overflow AFTER delivery started.
     * The suffix is in-band in the shared `graft_epochs` keyspace, so a
     * caller-supplied id that ITSELF ends in "#p<digits>" (e.g. "job#p3")
-    * would collide with writer "job"'s partition-3 marker and make the
-    * legacy-marker probe silently skip that caller's entire epoch — a
-    * silent data drop. Router-generated ids end in "-<epochId>" and can
-    * never hit this; the public API rejects the ambiguous shape loudly. */
+    * reads like writer "job"'s partition-3 marker, so the suffix is
+    * reserved for the per-partition keys. Router-generated ids end in
+    * "-<epochId>" and can never hit this; the public API rejects the
+    * ambiguous shape loudly. */
   private def requireWriterId(writerId: String): Unit = {
     require(writerId.getBytes("UTF-8").length <= 240,
       s"writerId exceeds the SQL transport's 240-byte limit: '$writerId'")
     require(!SqlPubSub.PartitionSuffix.matcher(writerId).find(),
       s"writerId '$writerId' ends in the reserved per-partition marker " +
-        "suffix '#p<digits>' — it would collide with another writer's " +
-        "partition marker in graft_epochs and silently skip an epoch")
+        "suffix '#p<digits>' — it would read like another writer's " +
+        "partition marker in graft_epochs")
   }
-
-  /** Pre-r15 upgrade probe: an epoch fully committed by the old
-    * driver-transactional path left ONE whole-epoch marker keyed
-    * (topic, writerId) exactly. A checkpoint replay that crosses an
-    * engine upgrade must skip such an epoch rather than re-insert it
-    * under the new per-partition keys. Never memoized: during a
-    * rolling upgrade an old-version writer may still be committing
-    * whole-epoch markers concurrently. */
-  private def legacyEpochDone(topic: String, writerId: String): Boolean =
-    withConn { c =>
-      val ps = c.prepareStatement(
-        s"""SELECT 1 FROM ${quoted("graft_epochs")}
-           |WHERE ${quoted("topic")} = ? AND ${quoted("writer_id")} = ?""".stripMargin)
-      try {
-        ps.setString(1, topic); ps.setString(2, writerId)
-        val rs = ps.executeQuery()
-        try rs.next() finally rs.close()
-      } finally ps.close()
-    }
 
   /** Exactly-once epoch publish, EXECUTOR-PARALLEL: each non-empty
     * partition opens its own transaction and commits its rows together
@@ -435,7 +337,6 @@ final class SqlPubSub(spark: SparkSession, url: String,
     ensureEpochTable()
     maybeSweepEpochs()
     requireWriterId(writerId)
-    if (legacyEpochDone(topic, writerId)) return
     val u = url
     val tbl = table(topic)
     df.select(col("uuid"), to_json(col("metadata")).as("metadata"),
@@ -453,8 +354,8 @@ final class SqlPubSub(spark: SparkSession, url: String,
     * [[SqlPubSub.writeRoutedEpochPartition]] make a torn replay loud,
     * never a silent drop). The only driver work is control-plane: the
     * DISTINCT destination set (bounded by topology fan-out, never
-    * data-sized) for DDL + the legacy-marker probe — the documented
-    * collect class the router's fallback path already uses. */
+    * data-sized) for DDL — the documented collect class the router's
+    * fallback path already uses. */
   override def publishRoutedEpoch(df: DataFrame, topicCol: String,
       writerId: String): Unit = {
     requireWriterId(writerId)
@@ -470,17 +371,10 @@ final class SqlPubSub(spark: SparkSession, url: String,
         topics.foreach(ensureInitialized) // driver-side DDL before executors write
         ensureEpochTable()
         maybeSweepEpochs()
-        // epochs fully committed by a pre-r15 engine skip wholesale
-        val live = topics.filterNot(t => legacyEpochDone(t, writerId))
-        if (live.nonEmpty) {
-          val tables = live.map(t => t -> table(t)).toMap
-          val u = url
-          val frame =
-            if (live.length == topics.length) persisted
-            else persisted.filter(col("_dest").isInCollection(live.toIndexedSeq))
-          frame.foreachPartition((it: Iterator[org.apache.spark.sql.Row]) =>
-            SqlPubSub.writeRoutedEpochPartition(u, tables, writerId, it))
-        }
+        val tables = topics.map(t => t -> table(t)).toMap
+        val u = url
+        persisted.foreachPartition((it: Iterator[org.apache.spark.sql.Row]) =>
+          SqlPubSub.writeRoutedEpochPartition(u, tables, writerId, it))
       }
     } finally { persisted.unpersist(); () }
   }
@@ -503,22 +397,6 @@ final class SqlPubSub(spark: SparkSession, url: String,
              |  ${quoted("row_count")} BIGINT,
              |  PRIMARY KEY (${quoted("topic")}, ${quoted("writer_id")}))""".stripMargin)
         catch { case _: java.sql.SQLException => () }
-        finally st.close()
-      } else {
-        // pre-r16 table: add the divergence-count column in place (a
-        // NULL count on old markers means "count unknown — existence
-        // check only", the rolling-upgrade rule legacyEpochDone follows)
-        val st = c.createStatement()
-        try { st.executeUpdate(s"""ALTER TABLE ${quoted("graft_epochs")}
-             | ADD COLUMN ${quoted("row_count")} BIGINT""".stripMargin); () }
-        catch { case e: java.sql.SQLException =>
-          // swallow ONLY the already-migrated case — a real failure
-          // (permissions, connectivity) must surface HERE, not later as
-          // a per-partition marker-UPDATE failure retrying every task
-          val rs = c.getMetaData.getColumns(null, null, "graft_epochs", "row_count")
-          val migrated = try rs.next() finally rs.close()
-          if (!migrated) throw e
-        }
         finally st.close()
       }
     }
@@ -655,8 +533,7 @@ final class SqlPubSub(spark: SparkSession, url: String,
     *    row was pruned) sweeps in the same call, UNCONDITIONALLY —
     *    markers orphaned by a crash between a previous prune's record
     *    deletes and its sweep clean up on the next call even when it
-    *    deletes nothing; the backfill sentinel (offset −1) is never
-    *    touched.
+    *    deletes nothing.
     *  - `olderThanMs` must be >= 0: a negative horizon would flip the
     *    cutoff into the future and widen pruning to rows with future
     *    event-times — rejected loudly.
@@ -738,7 +615,7 @@ final class SqlPubSub(spark: SparkSession, url: String,
         // the next call even when that call deletes nothing
         val sweep = c.prepareStatement(
           s"""DELETE FROM ${quoted("graft_released")}
-             |WHERE ${quoted("topic")} = ? AND ${quoted("offset_id")} >= 0
+             |WHERE ${quoted("topic")} = ?
              |  AND NOT EXISTS (
              |    SELECT 1 FROM ${quoted(table(topic))} m
              |    WHERE m.${quoted("offset_id")} =
@@ -1279,10 +1156,19 @@ object SqlPubSub {
     e.isInstanceOf[java.sql.SQLIntegrityConstraintViolationException] ||
       Option(e.getSQLState).exists(_.startsWith("23"))
 
+  /** SQLState class 40, transaction rollback, on the exception or its
+    * cause chain (a BatchUpdateException may carry the state only on
+    * the statement error it wraps). */
+  private[sources] def isTransactionRollback(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: java.sql.SQLException => Option(s.getSQLState).exists(_.startsWith("40"))
+      case _ => false
+    }
+
   /** Stamp the committed row count onto an open transaction's marker
     * (inserted NULL, updated once the partition iterator is drained —
-    * both commit atomically, so a visible marker either carries its
-    * exact count or a NULL from a pre-r16 engine). */
+    * both commit atomically, so every visible marker carries its exact
+    * count). */
   private def setMarkerCount(c: Connection, topic: String, key: String,
       n: Long): Unit = {
     val ps = c.prepareStatement(
@@ -1295,12 +1181,12 @@ object SqlPubSub {
   }
 
   /** Every destination the committed attempt of partition key `key`
-    * touched, with its committed row count (None = pre-r16 marker,
-    * count unknown). ONE query replaces a per-destination probe loop —
-    * keys are exact (the "#p<pid>" suffix is reserved by
-    * requireWriterId, so no foreign writerId can alias into this set). */
+    * touched, with its committed row count. ONE query replaces a
+    * per-destination probe loop — keys are exact (the "#p<pid>" suffix
+    * is reserved by requireWriterId, so no foreign writerId can alias
+    * into this set). */
   private def committedMarkers(c: Connection,
-      key: String): Map[String, Option[Long]] = {
+      key: String): Map[String, Long] = {
     val ps = c.prepareStatement(
       s"""SELECT ${q("topic")}, ${q("row_count")} FROM ${q("graft_epochs")}
          |WHERE ${q("writer_id")} = ?""".stripMargin)
@@ -1308,12 +1194,8 @@ object SqlPubSub {
       ps.setString(1, key)
       val rs = ps.executeQuery()
       try {
-        val b = Map.newBuilder[String, Option[Long]]
-        while (rs.next()) {
-          val t = rs.getString(1)
-          val n = rs.getLong(2)
-          b += t -> (if (rs.wasNull()) None else Some(n))
-        }
+        val b = Map.newBuilder[String, Long]
+        while (rs.next()) b += rs.getString(1) -> rs.getLong(2)
         b.result()
       } finally rs.close()
     } finally ps.close()
@@ -1355,9 +1237,7 @@ object SqlPubSub {
     * partitioning changed across a checkpoint restart (different
     * spark.sql.shuffle.partitions, AQE toggled) would otherwise
     * silently duplicate rows in fresh partition ids while the dup ids
-    * skip their changed contents. A count mismatch fails LOUDLY.
-    * Pre-r16 markers carry a NULL count and keep the existence-only
-    * check (rolling upgrade). */
+    * skip their changed contents. A count mismatch fails LOUDLY. */
   private[sources] def writeEpochPartition(url: String, tbl: String,
       topic: String, writerId: String,
       it: Iterator[org.apache.spark.sql.Row]): Unit = {
@@ -1386,7 +1266,7 @@ object SqlPubSub {
         c.rollback()
         var n = 0L
         while (it.hasNext) { it.next(); n += 1 }
-        committedMarkers(c, key).get(topic).flatten.foreach { committed =>
+        committedMarkers(c, key).get(topic).foreach { committed =>
           if (committed != n)
             throw new IllegalStateException(
               s"epoch replay diverged on partition $pid of writer " +
@@ -1471,9 +1351,9 @@ object SqlPubSub {
           committed.foreach { case (t, n) =>
             if (!counts.contains(t))
               diverged(s"committed destination '$t' is missing from the replay")
-            n.foreach(c0 => if (c0 != counts(t))
-              diverged(s"destination '$t' committed $c0 rows but the " +
-                s"replay produced ${counts(t)}"))
+            if (n != counts(t))
+              diverged(s"destination '$t' committed $n rows but the " +
+                s"replay produced ${counts(t)}")
           }
         } else {
           stmts.valuesIterator.foreach(_.executeBatch())

@@ -45,15 +45,8 @@ final class StreamingProfile(
   private val store = new GenerationDir(spark, stateDir)
 
   /** Stored per-slice states (slice, n_docs, n_tokens, batch_id,
-    * vocab_st, len_st, lang_m). A state dir written before the
-    * language-mix dimension lacks lang_m — normalize it to the empty
-    * map on read (the first applyBatch then persists the new schema),
-    * so upgrades keep their card instead of dying on a missing
-    * column. */
-  def state: Option[DataFrame] = store.read().map { df =>
-    if (df.columns.contains("lang_m")) df
-    else df.withColumn("lang_m", typedlit(Map.empty[String, Long]))
-  }
+    * vocab_st, len_st, lang_m). */
+  def state: Option[DataFrame] = store.read()
 
   /** Highest batch id folded in so far (−1 before any). */
   def appliedBatchId: Long = appliedIn(state)

@@ -3,11 +3,12 @@ package graft.router
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Message
-import graft.sources.{Decorators, FilePubSub, MemoryPubSub, RetryingPublisher}
+import graft.sources.{Decorators, FilePubSub, MemoryPubSub, PubSub, RetryingPublisher}
 
 /** Regression tests for the round-11 robustness review findings:
   * epoch forwarding through decorators, consumer-handler dead-letter
@@ -17,6 +18,7 @@ import graft.sources.{Decorators, FilePubSub, MemoryPubSub, RetryingPublisher}
 class RobustnessSpec extends SparkSpec {
 
   import spark.implicits._
+  import RobustnessSpec.PlainPubSub
 
   private def msg(u: String) =
     Message(u, Map.empty, u.getBytes("UTF-8"), new Timestamp(1700000000000L))
@@ -56,18 +58,47 @@ class RobustnessSpec extends SparkSpec {
   test("consumer handler routes poison messages to the dead-letter topic instead of dropping them") {
     val root = Files.createTempDirectory("graft-rb-").toString
     val ps = new FilePubSub(spark, root)
-    ps.subscribeInitialize("rb_in")
-    ps.subscribeInitialize("dlq")
-    ps.publish("rb_in", Seq(msg("ok1"), msg("boom"), msg("ok2")))
+    // both sink paths: the transport's one-pass routed publish, and the
+    // per-topic publishEpoch fallback of a plain publisher
+    val plain = new PlainPubSub(ps)
+    Seq("" -> ps, "_plain" -> plain).foreach { case (sfx, transport) =>
+      ps.subscribeInitialize(s"rb_in$sfx")
+      ps.subscribeInitialize(s"dlq$sfx")
+      ps.publish(s"rb_in$sfx", Seq(msg("ok1"), msg("boom"), msg("ok2")))
+      val r = new Router(spark,
+        Some(Files.createTempDirectory("rb-ck-").toString))
+      r.addConsumerHandler("rb", s"rb_in$sfx", transport,
+        consume = m => if (m.uuid == "boom") sys.error("handler failure"),
+        middlewares = Seq(Middlewares.poisonQueue(s"dlq$sfx")))
+      r.run(); r.processAllAvailable(); r.close()
+      val dlq = ps.subscribeBatch(s"dlq$sfx").collect().map(_.getAs[String]("uuid"))
+      assert(dlq.toSeq == Seq("boom"),
+        s"poison message must reach the dead-letter topic, got ${dlq.toSeq}")
+    }
+    assert(plain.epochTopics == Seq("dlq_plain"),
+      s"the plain transport must take the per-topic fallback: ${plain.epochTopics}")
+  }
+
+  test("a publishing handler's topic overrides reach a plain (non-routed) publisher exactly once") {
+    val root = Files.createTempDirectory("graft-pf-").toString
+    val ps = new FilePubSub(spark, root)
+    val plain = new PlainPubSub(ps)
+    Seq("pf_in", "pf_out", "pf_dlq").foreach(ps.subscribeInitialize)
+    ps.publish("pf_in", Seq(msg("ok1"), msg("boom"), msg("ok2")))
     val r = new Router(spark,
-      Some(Files.createTempDirectory("rb-ck-").toString))
-    r.addConsumerHandler("rb", "rb_in", ps,
-      consume = m => if (m.uuid == "boom") sys.error("handler failure"),
-      middlewares = Seq(Middlewares.poisonQueue("dlq")))
+      Some(Files.createTempDirectory("pf-ck-").toString))
+    r.addHandler("pf", "pf_in", ps, "pf_out", plain,
+      m => if (m.uuid == "boom") sys.error("handler failure") else Seq(m),
+      middlewares = Seq(Middlewares.poisonQueue("pf_dlq")))
     r.run(); r.processAllAvailable(); r.close()
-    val dlq = ps.subscribeBatch("dlq").collect().map(_.getAs[String]("uuid"))
-    assert(dlq.toSeq == Seq("boom"),
-      s"poison message must reach the dead-letter topic, got ${dlq.toSeq}")
+    def uuids(t: String) =
+      ps.subscribeBatch(t).collect().map(_.getAs[String]("uuid")).toSeq.sorted
+    assert(uuids("pf_dlq") == Seq("boom"),
+      s"the override row must be delivered once: ${uuids("pf_dlq")}")
+    assert(uuids("pf_out") == Seq("ok1", "ok2"),
+      s"default-topic rows must be delivered once: ${uuids("pf_out")}")
+    assert(plain.epochTopics.sorted == Seq("pf_dlq", "pf_out"),
+      s"one publishEpoch per destination topic: ${plain.epochTopics}")
   }
 
   test("(group, handler) names containing '-' cannot alias checkpoints or epoch writers") {
@@ -90,5 +121,25 @@ class RobustnessSpec extends SparkSpec {
     val o2 = ps.subscribeBatch("al_out_2").collect().map(_.getAs[String]("uuid")).toSet
     assert(o1 == want, s"handler 1 lost ${want -- o1} to checkpoint aliasing")
     assert(o2 == want, s"handler 2 lost ${want -- o2} to checkpoint aliasing")
+  }
+}
+
+object RobustnessSpec {
+
+  /** A FilePubSub behind the plain [[PubSub]] surface: not a
+    * RoutedPublisher, so the router sinks take their per-topic
+    * `publishEpoch` fallback. Records the topic of each epoch publish
+    * (the sinks call it on the driver). */
+  final class PlainPubSub(inner: FilePubSub) extends PubSub {
+    private val topics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def epochTopics: Seq[String] = topics.toArray(Array.empty[String]).toSeq
+    def publish(topic: String, msgs: Seq[Message]): Unit = inner.publish(topic, msgs)
+    def publishBatch(topic: String, df: DataFrame): Unit = inner.publishBatch(topic, df)
+    override def publishEpoch(topic: String, df: DataFrame, writerId: String): Unit = {
+      topics.add(topic); inner.publishEpoch(topic, df, writerId)
+    }
+    def subscribe(topic: String): DataFrame = inner.subscribe(topic)
+    def subscribeBatch(topic: String): DataFrame = inner.subscribeBatch(topic)
+    override def subscribeInitialize(topic: String): Unit = inner.subscribeInitialize(topic)
   }
 }

@@ -404,85 +404,6 @@ class RouterResumeSpec extends SparkSpec {
       "close() stops everything — nothing stranded")
   }
 
-  test("pre-group-layout checkpoints are adopted on restart: no replay, no loss") {
-    // Upgrade scenario (ADVICE r11): a deployment whose checkpoints
-    // were written by the pre-`grp_`/`nogroup` path scheme restarts on
-    // the new layout. Without adoption the new path is empty, the
-    // offset lineage restarts at zero, and every topic replays with
-    // side effects the old epochs' writerIds no longer dedup.
-    val root = Files.createTempDirectory("graft-adopt-").toString
-    val ckpt = Files.createTempDirectory("graft-adopt-ck-").toString
-    val ps = new FilePubSub(spark, root)
-    ps.subscribeInitialize("a_in")
-    ps.subscribeInitialize("a_out")
-    ps.publish("a_in", Seq(msg("m1", "a"), msg("m2", "b")))
-
-    val r1 = new Router(spark, checkpointRoot = Some(ckpt))
-    r1.addHandler("adoptable", "a_in", ps, "a_out", ps, Middlewares.passthrough)
-    r1.run(); r1.processAllAvailable(); r1.close()
-    assert(ps.subscribeBatch("a_out").count() == 2)
-
-    // rewrite the checkpoint into the LEGACY layout: handler dir at
-    // the root, no nogroup/ segment — what a pre-upgrade deployment
-    // actually has on disk
-    import java.nio.file.Paths
-    Files.move(Paths.get(ckpt, "nogroup", "adoptable"),
-      Paths.get(ckpt, "adoptable"))
-    Files.delete(Paths.get(ckpt, "nogroup"))
-
-    ps.publish("a_in", Seq(msg("m3", "c")))
-
-    val r2 = new Router(spark, checkpointRoot = Some(ckpt))
-    r2.addHandler("adoptable", "a_in", ps, "a_out", ps, Middlewares.passthrough)
-    r2.run(); r2.processAllAvailable(); r2.close()
-
-    val out = ps.subscribeBatch("a_out").collect().map(_.getAs[String]("uuid"))
-    assert(out.length == 3 && out.toSet == Set("m1", "m2", "m3"),
-      s"legacy checkpoint must be adopted (no replay, no loss): ${out.toSeq}")
-    // and the adoption is a MOVE, not a copy: the legacy dir is gone
-    assert(!Files.exists(Paths.get(ckpt, "adoptable")))
-  }
-
-  test("grouped routers adopt the joined '<g>-<h>' legacy scheme; an offsets-less husk does not block adoption") {
-    // Two review findings in one flow: (a) grouped deployments'
-    // intermediate checkpoint scheme was the JOINED "$g-$name" path —
-    // probing only the ungrouped "$name" candidate left them with the
-    // full-replay defect; (b) a crashed first start under the new
-    // scheme can leave a metadata-only dir with no committed offsets,
-    // and treating that husk as authoritative would strand the legacy
-    // lineage forever.
-    val root = Files.createTempDirectory("graft-gadopt-").toString
-    val ckpt = Files.createTempDirectory("graft-gadopt-ck-").toString
-    val ps = new FilePubSub(spark, root)
-    ps.subscribeInitialize("g_in")
-    ps.subscribeInitialize("g_out")
-    ps.publish("g_in", Seq(msg("g1", "a"), msg("g2", "b")))
-
-    val r1 = new Router(spark, checkpointRoot = Some(ckpt), group = Some("grp1"))
-    r1.addHandler("h", "g_in", ps, "g_out", ps, Middlewares.passthrough)
-    r1.run(); r1.processAllAvailable(); r1.close()
-    assert(ps.subscribeBatch("g_out").count() == 2)
-
-    // rewrite into the intermediate-era layout: joined dir at the root
-    import java.nio.file.Paths
-    Files.move(Paths.get(ckpt, "grp_grp1", "h"), Paths.get(ckpt, "grp1-h"))
-    Files.delete(Paths.get(ckpt, "grp_grp1"))
-    // and plant the offsets-less husk a crashed first start would leave
-    Files.createDirectories(Paths.get(ckpt, "grp_grp1", "h"))
-    Files.writeString(Paths.get(ckpt, "grp_grp1", "h", "metadata"), "{}")
-
-    ps.publish("g_in", Seq(msg("g3", "c")))
-
-    val r2 = new Router(spark, checkpointRoot = Some(ckpt), group = Some("grp1"))
-    r2.addHandler("h", "g_in", ps, "g_out", ps, Middlewares.passthrough)
-    r2.run(); r2.processAllAvailable(); r2.close()
-
-    val out = ps.subscribeBatch("g_out").collect().map(_.getAs[String]("uuid"))
-    assert(out.length == 3 && out.toSet == Set("g1", "g2", "g3"),
-      s"grouped legacy checkpoint must be adopted through the husk: ${out.toSeq}")
-    assert(!Files.exists(Paths.get(ckpt, "grp1-h")), "adoption is a move")
-  }
-
   test("throttle: maxPerTrigger paces consumption across micro-batches") {
     val root = Files.createTempDirectory("graft-throttle-").toString
     val ps = new FilePubSub(spark, root)

@@ -28,6 +28,11 @@ import java.util.concurrent.atomic.AtomicBoolean
   *    misclassifies this shape as fatal; only the SQLState-class-23
   *    rule ([[SqlPubSub.isDuplicateKey]]) passes both modes.
   *
+  * Both modes can also inject one transaction rollback: while
+  * [[AbortSimDriver.failNextBatch]] is set, the next `executeBatch`
+  * runs for real and then throws SQLState 40XL1 (Derby's lock
+  * timeout), leaving its rows in the open transaction.
+  *
   * URL shape: `jdbc:abortsim:<rest>` / `jdbc:mysim:<rest>` delegate
   * to `jdbc:<rest>`, e.g. `jdbc:abortsim:derby:memory:db;create=true`.
   * Executor-side writers resolve connections through
@@ -40,6 +45,9 @@ object AbortSimDriver {
   // breaking partitioned reads against the underlying Derby store —
   // the shim must simulate MySQL's ERROR SHAPES, not its SQL dialect
   val MysqlPrefix = "jdbc:mysim:"
+
+  /** One-shot fault: the next shim `executeBatch` throws 40XL1. */
+  val failNextBatch = new AtomicBoolean(false)
 
   @volatile private var registered = false
   def ensureRegistered(): Unit = synchronized {
@@ -86,8 +94,16 @@ final class AbortSimDriver extends java.sql.Driver {
                 throw new SQLException("abortsim: current transaction is " +
                   "aborted, commands ignored until end of transaction block",
                   "25P02")
-              try m.invoke(st, args: _*)
-              catch {
+              try {
+                val r = m.invoke(st, args: _*)
+                // handled below exactly like a real statement error
+                if (m.getName == "executeBatch" &&
+                    AbortSimDriver.failNextBatch.compareAndSet(true, false))
+                  throw new InvocationTargetException(
+                    new java.sql.SQLTransactionRollbackException(
+                      "abortsim: injected lock timeout", "40XL1"))
+                r
+              } catch {
                 case e: InvocationTargetException => e.getCause match {
                   case icv: SQLIntegrityConstraintViolationException =>
                     if (pgAbort && !real.getAutoCommit) aborted.set(true)

@@ -219,13 +219,19 @@ class SqlSpec extends SparkSpec {
       def rows(us: String*) = us.map(u =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
           new Timestamp(1700000000000L))).iterator
-      def holdMarker(key: String)(resolve: java.sql.Connection => Unit): Thread = {
+      // attempt A's marker carries its row count, as every committed
+      // marker does (the writers stamp it in the inserting transaction)
+      def holdMarker(key: String, rowCount: Long)(
+          resolve: java.sql.Connection => Unit): Thread = {
         val c = java.sql.DriverManager.getConnection(dbUrl)
         c.setAutoCommit(false)
         val st = c.prepareStatement(
-          """INSERT INTO "graft_epochs" ("topic", "writer_id") VALUES (?, ?)""")
-        try { st.setString(1, "t_conc"); st.setString(2, key); st.executeUpdate(); () }
-        finally st.close()
+          """INSERT INTO "graft_epochs" ("topic", "writer_id", "row_count")
+            |VALUES (?, ?, ?)""".stripMargin)
+        try {
+          st.setString(1, "t_conc"); st.setString(2, key); st.setLong(3, rowCount)
+          st.executeUpdate(); ()
+        } finally st.close()
         // resolve A's transaction AFTER B has had time to block on the lock
         val t = new Thread(() => {
           Thread.sleep(400)
@@ -234,14 +240,14 @@ class SqlSpec extends SparkSpec {
         t.start(); t
       }
       // shape 1: A commits (attempt A won) -> B must skip cleanly
-      val tc = holdMarker("w-c#p0")(_.commit())
+      val tc = holdMarker("w-c#p0", 2L)(_.commit())
       SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_conc", "w-c", rows("b1", "b2"))
       tc.join(10000)
       assert(ps.subscribeBatch("t_conc").filter(
         org.apache.spark.sql.functions.col("uuid").isin("b1", "b2")).count() == 0,
         "loser attempt must skip after the winner commits")
       // shape 2: A rolls back (attempt A died) -> B proceeds and writes
-      val tr = holdMarker("w-r#p0")(_.rollback())
+      val tr = holdMarker("w-r#p0", 1L)(_.rollback())
       SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_conc", "w-r", rows("c1"))
       tr.join(10000)
       assert(ps.subscribeBatch("t_conc").filter(
@@ -291,8 +297,7 @@ class SqlSpec extends SparkSpec {
   test("writerIds ending in the reserved #p<digits> suffix are rejected at the API edge") {
     // the per-partition marker keys are in-band (writerId + "#p<pid>")
     // in the shared graft_epochs keyspace: a caller-supplied "job#p3"
-    // would collide with writer "job"'s partition-3 marker and make
-    // legacyEpochDone silently skip the caller's entire epoch
+    // reads like writer "job"'s partition-3 marker
     val ps = new SqlPubSub(spark, url("sqlwid"))
     try {
       def frame(us: String*) = us.map(u => msg(u, u)).toDF()
@@ -338,18 +343,6 @@ class SqlSpec extends SparkSpec {
       assert(e.getMessage.contains("diverged"), e.getMessage)
       assert(ps.subscribeBatch("t_ed").count() == 3,
         "divergent replay must write nothing")
-      // pre-r16 marker (NULL row_count): existence-only skip — a
-      // rolling upgrade must not false-positive on old markers
-      val c = java.sql.DriverManager.getConnection(dbUrl)
-      try {
-        val st = c.prepareStatement(
-          """INSERT INTO "graft_epochs" ("topic", "writer_id") VALUES (?, ?)""")
-        try { st.setString(1, "t_ed"); st.setString(2, "w-old#p0"); st.executeUpdate(); () }
-        finally st.close()
-      } finally c.close()
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_ed", "w-old", rows("z1", "z2"))
-      assert(ps.subscribeBatch("t_ed").count() == 3,
-        "pre-r16 marker must still dedupe (existence-only)")
     } finally ps.close()
   }
 
@@ -517,66 +510,27 @@ class SqlSpec extends SparkSpec {
     } finally { ps.close(); psv.close() }
   }
 
-  test("backfill dup-row race under MySQL shape: plain-23000 skip, sentinel commits") {
-    // the PG twin above pins abort + savepoint semantics; this pins
-    // the CLASSIFICATION — the backfill's raced record insert throws
-    // MySQL's plain 23000, which a Derby-subclass or PG-literal catch
-    // would escalate to a permanent initialize wedge
+  test("driver-side publish retries a transaction rollback without leaving or duplicating rows") {
+    // parallel first inserts into a fresh Derby table can fail with
+    // 40XL1 (identity-generator contention); the shim injects that
+    // error AFTER the batch ran, under both engine shapes — the retry
+    // must roll the first attempt back, then commit every row once
     AbortSimDriver.ensureRegistered()
-    val db = url("sqlbfm")
-    val simUrl = AbortSimDriver.MysqlPrefix + db.substring("jdbc:".length)
-    val ps = new SqlPubSub(spark, db, group = "g1", pollIntervalMs = 20)
-    try ps.publish("t_bfm", Seq(
-      msg("o1", "original"),
-      msg("c1", "released-copy", Map(graft.router.Ctx.DelayGroup -> "g1"))))
-    finally ps.close()
-    val c = java.sql.DriverManager.getConnection(db)
-    val copyOff = try {
-      val st = c.createStatement()
-      try st.executeUpdate("DROP TABLE \"graft_released\"") finally st.close()
-      val mk = c.createStatement()
-      try mk.executeUpdate(
-        """CREATE TABLE "graft_released" (
-          |  "topic" VARCHAR(128), "offset_id" BIGINT, "grp" VARCHAR(128),
-          |  PRIMARY KEY ("topic", "offset_id"))""".stripMargin)
-      finally mk.close()
-      val q = c.createStatement()
-      val off = try {
-        val rs = q.executeQuery(
-          """SELECT "offset_id" FROM "graft_t_t_bfm" WHERE "uuid" = 'c1'""")
-        try { rs.next(); rs.getLong(1) } finally rs.close()
-      } finally q.close()
-      val ins = c.prepareStatement(
-        """INSERT INTO "graft_released" ("topic", "offset_id", "grp")
-          |VALUES (?, ?, ?)""".stripMargin)
-      try { ins.setString(1, "t_bfm"); ins.setLong(2, off); ins.setString(3, "g1")
-        ins.executeUpdate(); () }
-      finally ins.close()
-      off
-    } finally c.close()
-    val ps2 = new SqlPubSub(spark, simUrl, group = "g2", pollIntervalMs = 20)
-    try {
-      ps2.subscribeInitialize("t_bfm")
-      val c2 = java.sql.DriverManager.getConnection(db)
-      try {
-        val st = c2.createStatement()
-        val rs = st.executeQuery(
-          """SELECT "offset_id" FROM "graft_released" WHERE "topic" = 't_bfm'""")
-        val got = try {
-          val b = scala.collection.mutable.Set.empty[Long]
-          while (rs.next()) b += rs.getLong(1)
-          b.toSet
-        } finally { rs.close(); st.close() }
-        assert(got == Set(copyOff, -1L),
-          s"sentinel must commit beside the raced record, got $got")
-      } finally c2.close()
-      // a third instance over the plain URL initializes clean and
-      // reads the backfilled state (sentinel gates the rescan)
-      val ps3 = new SqlPubSub(spark, db, group = "g3", pollIntervalMs = 20)
-      try assert(ps3.subscribeBatch("t_bfm").as[Message].collect()
-        .map(_.uuid).toSet == Set("o1"))
-      finally ps3.close()
-    } finally ps2.close()
+    val db = url("sqlretry")
+    val psv = new SqlPubSub(spark, db, group = "verify")
+    try Seq(AbortSimDriver.Prefix, AbortSimDriver.MysqlPrefix).zipWithIndex.foreach {
+      case (prefix, i) =>
+        val ps = new SqlPubSub(spark, prefix + db.substring("jdbc:".length))
+        try {
+          ps.subscribeInitialize(s"t_rt$i")
+          AbortSimDriver.failNextBatch.set(true)
+          ps.publish(s"t_rt$i", Seq(msg("a", "a"), msg("b", "b")))
+          assert(!AbortSimDriver.failNextBatch.get, "the injected rollback fired")
+          val got = psv.subscribeBatch(s"t_rt$i").collect()
+            .map(_.getAs[String]("uuid")).toSeq.sorted
+          assert(got == Seq("a", "b"), s"$prefix: rows lost or duplicated: $got")
+        } finally ps.close()
+    } finally psv.close()
   }
 
   test("automatic marker sweep bounds graft_epochs while replay inside the horizon still dedupes") {
@@ -702,10 +656,12 @@ class SqlSpec extends SparkSpec {
   }
 
   test("pruneConsumed sweeps dead released markers, keeps live ones and the backfill sentinel") {
+    // the transport writes no sentinel row any more, so the live
+    // marker is the only one that must survive
     val dbUrl = url("sqlprunerel")
     val ps = new SqlPubSub(spark, dbUrl)
     try {
-      ps.subscribeInitialize("t_rm") // writes the backfill sentinel (offset -1)
+      ps.subscribeInitialize("t_rm")
       ps.publish("t_rm", (1 to 3).map(i => msg(s"r$i", s"r$i"))) // offsets 1..3
       ps.ack("t_rm", 2)
       val c = java.sql.DriverManager.getConnection(dbUrl)
@@ -730,9 +686,9 @@ class SqlSpec extends SparkSpec {
           st.setLong(1, 3L); st.executeUpdate() // marker on a SURVIVING record
         } finally st.close()
         assert(ps.pruneConsumed("t_rm") == 2) // offsets 1 and 2
-        // dead marker swept; live marker and the sentinel stay — dropping
-        // a live marker would expose a private redelivery to every group
-        assert(markers() == Set(-1L, 3L), s"got ${markers()}")
+        // dead marker swept; the live marker stays — dropping it would
+        // expose a private redelivery to every group
+        assert(markers() == Set(3L), s"got ${markers()}")
       } finally c.close()
     } finally ps.close()
   }
@@ -755,7 +711,7 @@ class SqlSpec extends SparkSpec {
     val dbUrl = url("sqlorph")
     val ps = new SqlPubSub(spark, dbUrl)
     try {
-      ps.subscribeInitialize("t_or") // writes the backfill sentinel (-1)
+      ps.subscribeInitialize("t_or")
       ps.publish("t_or", Seq(msg("a", "a"), msg("b", "b")))
       ps.ack("t_or", 2)
       assert(ps.pruneConsumed("t_or") == 2)
@@ -778,7 +734,7 @@ class SqlSpec extends SparkSpec {
             while (rs.next()) b += rs.getLong(1)
             b.result()
           } finally rs.close()
-          assert(got == Set(-1L),
+          assert(got == Set.empty[Long],
             s"orphaned marker survived a no-op prune: $got")
         } finally st.close()
       } finally c.close()
@@ -840,34 +796,6 @@ class SqlSpec extends SparkSpec {
         assert(psD.subscribeBatch("t_def").count() == 1,
           "default-off retention deleted records")
       } finally psD.close()
-    } finally ps.close()
-  }
-
-  test("an epoch committed by a pre-r15 whole-epoch marker skips wholesale on replay") {
-    val dbUrl = url("sqllegacy")
-    val ps = new SqlPubSub(spark, dbUrl)
-    try {
-      ps.publishEpoch("t_lg", Seq(msg("first", "f")).toDF(), "w-any") // creates tables
-      // simulate the OLD engine's whole-epoch marker: (topic, writerId)
-      // with no #p suffix
-      val c = java.sql.DriverManager.getConnection(dbUrl)
-      try {
-        val st = c.prepareStatement(
-          """INSERT INTO "graft_epochs" ("topic", "writer_id") VALUES (?, ?)""")
-        try { st.setString(1, "t_lg"); st.setString(2, "w-old"); st.executeUpdate(); () }
-        finally st.close()
-      } finally c.close()
-      // a replay of that epoch across the engine upgrade must skip
-      ps.publishEpoch("t_lg", Seq(msg("dup", "d")).toDF(), "w-old")
-      val got = ps.subscribeBatch("t_lg").collect().map(_.getAs[String]("uuid")).toSet
-      assert(got == Set("first"), s"legacy epoch replay duplicated: $got")
-      // routed replay honors the same legacy marker per destination
-      val routed = Seq(("r1", "t_lg"))
-        .map { case (u, t) => (u, Map.empty[String, String], u.getBytes("UTF-8"),
-          new Timestamp(1700000000000L), t) }
-        .toDF("uuid", "metadata", "payload", "ts", "_topic")
-      ps.publishRoutedEpoch(routed, "_topic", writerId = "w-old")
-      assert(ps.subscribeBatch("t_lg").count() == 1)
     } finally ps.close()
   }
 
@@ -1015,180 +943,6 @@ class SqlSpec extends SparkSpec {
           "the foreign stamp must be sanitized off before delivery")
       } finally q.stop()
     } finally ps.close()
-  }
-
-  test("upgrade: pre-side-table released copies backfill instead of duplicating") {
-    // a database written by the engine version BEFORE graft_released
-    // holds released copies identified only by their metadata stamp.
-    // Without the one-time backfill, an upgraded engine would deliver
-    // every such copy to every OTHER consumer group (it was one
-    // group's private redelivery) and show it in replay beside its
-    // original — duplicates. The backfill reads the stamp exactly
-    // once, gated by the per-topic sentinel row at offset -1.
-    val db = url("sqlupg")
-    val ps = new SqlPubSub(spark, db, group = "g1", pollIntervalMs = 20)
-    try ps.publish("t_upg", Seq(
-      msg("o1", "original"),
-      msg("c1", "released-copy", Map(graft.router.Ctx.DelayGroup -> "g1"))))
-    finally ps.close()
-    // simulate the pre-r14 database: that version had no side table
-    val c = java.sql.DriverManager.getConnection(db)
-    try {
-      val st = c.createStatement()
-      try st.executeUpdate("DROP TABLE \"graft_released\"") finally st.close()
-    } finally c.close()
-    // upgraded engine, DIFFERENT group: initialize must backfill
-    val ps2 = new SqlPubSub(spark, db, group = "g2", pollIntervalMs = 20)
-    try {
-      val replay = ps2.subscribeBatch("t_upg").as[Message].collect()
-        .map(_.uuid).toSet
-      assert(replay == Set("o1"),
-        s"legacy released copy must stay hidden from replay, got $replay")
-      val seen = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-      val q = ps2.subscribe("t_upg").writeStream
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-sqlu-").toString)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect().foreach(r => seen(r.getAs[String]("uuid")) = true); ()
-        }.start()
-      try {
-        ps2.awaitCaughtUp("t_upg"); q.processAllAvailable()
-        assert(seen.keySet == Set("o1"),
-          s"g1's legacy copy must not deliver to g2, got ${seen.keySet}")
-      } finally q.stop()
-    } finally ps2.close()
-  }
-
-  test("backfill dup-row race survives PostgreSQL-style abort: savepoint skip, sentinel commits") {
-    // two instances racing the one-time backfill: the loser's record
-    // insert hits the winner's primary key INSIDE the atomic
-    // records+sentinel transaction. On PostgreSQL the constraint hit
-    // aborts the whole transaction (plain SQLException, SQLState 23505
-    // — NOT the subclass Derby throws) — without a per-row savepoint
-    // the next insert dies 25P02, the sentinel never commits, and
-    // every initialize for the topic re-wedges forever.
-    AbortSimDriver.ensureRegistered()
-    val db = url("sqlbfa")
-    val simUrl = AbortSimDriver.Prefix + db.substring("jdbc:".length)
-    val ps = new SqlPubSub(spark, db, group = "g1", pollIntervalMs = 20)
-    try ps.publish("t_bfa", Seq(
-      msg("o1", "original"),
-      msg("c1", "released-copy", Map(graft.router.Ctx.DelayGroup -> "g1"))))
-    finally ps.close()
-    val c = java.sql.DriverManager.getConnection(db)
-    val copyOff = try {
-      val st = c.createStatement()
-      try st.executeUpdate("DROP TABLE \"graft_released\"") finally st.close()
-      // pre-upgrade DB, with the RACING initializer's half-finished
-      // state: the side table exists, the copy's record is already
-      // inserted, the sentinel is NOT (its transaction has not
-      // committed — we simulate the committed-records-first interleave
-      // a concurrent initializer produces)
-      val mk = c.createStatement()
-      try mk.executeUpdate(
-        """CREATE TABLE "graft_released" (
-          |  "topic" VARCHAR(128), "offset_id" BIGINT, "grp" VARCHAR(128),
-          |  PRIMARY KEY ("topic", "offset_id"))""".stripMargin)
-      finally mk.close()
-      val q = c.createStatement()
-      val off = try {
-        val rs = q.executeQuery(
-          """SELECT "offset_id" FROM "graft_t_t_bfa" WHERE "uuid" = 'c1'""")
-        try { rs.next(); rs.getLong(1) } finally rs.close()
-      } finally q.close()
-      val ins = c.prepareStatement(
-        """INSERT INTO "graft_released" ("topic", "offset_id", "grp")
-          |VALUES (?, ?, ?)""".stripMargin)
-      try { ins.setString(1, "t_bfa"); ins.setLong(2, off); ins.setString(3, "g1")
-        ins.executeUpdate(); () }
-      finally ins.close()
-      off
-    } finally c.close()
-    // upgraded engine through the STRICT-abort shim: the backfill's
-    // duplicate insert must savepoint-skip and the sentinel must commit
-    val ps2 = new SqlPubSub(spark, simUrl, group = "g2", pollIntervalMs = 20)
-    try {
-      ps2.subscribeInitialize("t_bfa")
-      val c2 = java.sql.DriverManager.getConnection(db)
-      try {
-        val st = c2.createStatement()
-        val rs = st.executeQuery(
-          """SELECT "offset_id" FROM "graft_released" WHERE "topic" = 't_bfa'""")
-        val got = try {
-          val b = scala.collection.mutable.Set.empty[Long]
-          while (rs.next()) b += rs.getLong(1)
-          b.toSet
-        } finally { rs.close(); st.close() }
-        assert(got == Set(copyOff, -1L),
-          s"sentinel must commit beside the raced record, got $got")
-      } finally c2.close()
-      // a third instance initializes clean (sentinel gates the rescan)
-      val ps3 = new SqlPubSub(spark, db, group = "g3", pollIntervalMs = 20)
-      try assert(ps3.subscribeBatch("t_bfa").as[Message].collect()
-        .map(_.uuid).toSet == Set("o1"))
-      finally ps3.close()
-    } finally ps2.close()
-  }
-
-  test("backfill converges past malformed metadata and an oversize forged stamp (no permanent wedge)") {
-    // the topic table is an open surface: ONE foreign pre-upgrade row
-    // with unparseable metadata matching the LIKE filter (JsonCodec
-    // throws) or a forged stamp longer than grp's VARCHAR(128)
-    // (SQLDataException on the record insert) used to abort the
-    // backfill BEFORE its sentinel committed — every initialize for
-    // the topic then re-ran into the same row forever: a permanent
-    // wedge on the engine's own initialization path
-    val db = url("sqlbfw")
-    val ps = new SqlPubSub(spark, db, group = "g1", pollIntervalMs = 20)
-    try ps.publish("t_bfw", Seq(
-      msg("o1", "original"),
-      msg("c1", "real-copy", Map(graft.router.Ctx.DelayGroup -> "g1"))))
-    finally ps.close()
-    val c = java.sql.DriverManager.getConnection(db)
-    try {
-      val st = c.createStatement()
-      try st.executeUpdate("DROP TABLE \"graft_released\"") finally st.close()
-      // foreign row: metadata contains the stamp key but is NOT JSON
-      val bad = c.prepareStatement(
-        """INSERT INTO "graft_t_t_bfw" ("uuid", "metadata", "payload", "ts")
-          |VALUES (?, ?, ?, ?)""".stripMargin)
-      try {
-        bad.setString(1, "f1")
-        bad.setString(2, s"""not json at all "${graft.router.Ctx.DelayGroup}" oops""")
-        bad.setBytes(3, "x".getBytes("UTF-8"))
-        bad.setTimestamp(4, new Timestamp(1700000000000L))
-        bad.executeUpdate()
-        // foreign row: valid JSON whose stamp value exceeds 128 bytes
-        bad.setString(1, "f2")
-        bad.setString(2, new String(graft.cqrs.JsonCodec.write(
-          Map(graft.router.Ctx.DelayGroup -> ("g" * 200))), "UTF-8"))
-        bad.setBytes(3, "y".getBytes("UTF-8"))
-        bad.setTimestamp(4, new Timestamp(1700000000000L))
-        bad.executeUpdate()
-        // foreign row: valid JSON but an ILL-TYPED stamp value — the
-        // erasure-validated read (JsonCodec.readStringMap) must make
-        // it skip like the ill-FORMED row, not smuggle an Integer
-        // through a Map[String, String]-typed parse
-        bad.setString(1, "f3")
-        bad.setString(2,
-          s"""{"${graft.router.Ctx.DelayGroup}": 5}""")
-        bad.setBytes(3, "z".getBytes("UTF-8"))
-        bad.setTimestamp(4, new Timestamp(1700000000000L))
-        bad.executeUpdate(); ()
-      } finally bad.close()
-    } finally c.close()
-    // upgraded engine: initialize must converge (sentinel committed),
-    // the REAL legacy copy stays hidden, the foreign rows deliver as
-    // ordinary (untrusted-stamp) topic content
-    val ps2 = new SqlPubSub(spark, db, group = "g2", pollIntervalMs = 20)
-    try {
-      val replay = ps2.subscribeBatch("t_bfw").as[Message].collect().map(_.uuid).toSet
-      assert(replay == Set("o1", "f1", "f2", "f3"),
-        s"backfill must skip the poison rows but still hide the real copy, got $replay")
-      // and the sentinel committed: a THIRD instance initializes clean
-      val ps3 = new SqlPubSub(spark, db, group = "g3")
-      try ps3.subscribeInitialize("t_bfw") finally ps3.close()
-    } finally ps2.close()
   }
 
   test("released delayed row survives a crash between release and consumer commit") {

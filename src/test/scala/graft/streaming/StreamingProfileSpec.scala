@@ -154,23 +154,6 @@ class StreamingProfileSpec extends SparkSpec {
     }
   }
 
-  test("pre-lang_m state dirs are normalized on read (upgrade safety)") {
-    val dir = tmp() + "/state"
-    val p = new StreamingProfile(spark, dir)
-    p.applyBatch(df(b1), 0L)
-    // rewrite the state WITHOUT lang_m — the pre-language-mix schema
-    val legacy = spark.read.parquet(dir).drop("lang_m")
-      .localCheckpoint(true)
-    legacy.write.mode("overwrite").parquet(dir)
-    val p2 = new StreamingProfile(spark, dir)
-    assert(card(p2) == expected(b1), "card must survive the old schema")
-    // merges and drift still work; the language history restarts empty
-    p2.applyBatch(df(b2), 1L)
-    assert(card(p2) == expected(b1 ++ b2))
-    val d = p2.drift(df(b2)).get.collect()
-    assert(d.nonEmpty && d.forall(_.getAs[Double]("lang_chisq") >= 0.0))
-  }
-
   test("property: random batch sequences — incremental card equals batch truth at every step") {
     // The merge-closure claim under randomization, not just the three
     // hand-written batches: for generated (slice, text) batches the
