@@ -73,15 +73,28 @@ final class DelayingPublisher(inner: Publisher,
   override def publish(topic: String, msgs: Seq[Message]): Unit =
     inner.publish(topic, msgs.map(stamp))
 
-  override def publishBatch(topic: String, df: DataFrame): Unit = {
-    // unstamped = missing OR empty value, matching the per-message
-    // path exactly (Message.get returns "" for a missing key, so
-    // `get(..).nonEmpty` treats "" as unstamped — a bare isNull here
-    // would deliver an empty-stamped row immediately on one path and
-    // delay it on the other)
+  override def publishBatch(topic: String, df: DataFrame): Unit =
+    inner.publishBatch(topic, stampFrame(df))
+
+  // forward the epoch forms too — the trait defaults would drop the
+  // writerId (publishBatch) and a replayed epoch would land twice
+  override def publishEpoch(topic: String, df: DataFrame, writerId: String): Unit =
+    inner.publishEpoch(topic, stampFrame(df), writerId)
+
+  override def publishRoutedEpoch(df: DataFrame, topicCol: String,
+      writerId: String): Unit =
+    inner.publishRoutedEpoch(stampFrame(df), topicCol, writerId)
+
+  /** The frame form of [[stamp]]; other columns (a routing column)
+    * pass through. Unstamped = missing OR empty value, matching the
+    * per-message path exactly (Message.get returns "" for a missing
+    * key, so `get(..).nonEmpty` treats "" as unstamped — a bare isNull
+    * here would deliver an empty-stamped row immediately on one path
+    * and delay it on the other). */
+  private def stampFrame(df: DataFrame): DataFrame = {
     val until = element_at(col("metadata"), lit(Ctx.DelayedUntil))
     val unstamped = until.isNull || until === ""
-    val stamped = defaultDelay match {
+    defaultDelay match {
       case Some(gen) =>
         val d = gen() // generated per publish call, one stamp per batch
         // coalesce: the envelope schema allows a NULL metadata map, and
@@ -106,7 +119,6 @@ final class DelayingPublisher(inner: Publisher,
             .cast("map<string,string>"))
             .otherwise(col("metadata")))
     }
-    inner.publishBatch(topic, stamped)
   }
   override def close(): Unit = inner.close()
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Message
-import graft.sources.{Publisher, RoutedPublisher, Subscriber}
+import graft.sources.{Publisher, Subscriber}
 import Middlewares.{Handler, Middleware}
 
 /** Dataset-level transform applied to the message stream before the
@@ -401,32 +401,6 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
     s"${g.length}.$g-${h.name}-$lineage-$epochId"
   }
 
-  /** Publish `cleaned` (Message columns + `_topic`) under `writerId`,
-    * shared by both sinks. Transports advertising [[RoutedPublisher]]
-    * get the whole batch in ONE pass with a per-row `_topic` column —
-    * Forwarder-style routing has data-dependent destination
-    * cardinality, and O(topics) filtered passes would be the scale
-    * bottleneck. Only the fallback path (for plain publishers) does a
-    * distinct-topic collect + per-topic pass, over a pinned frame so
-    * the handler's side effects never re-run per topic; that collect
-    * is over the set of destination topics, never data-sized. */
-  private def publishRouted(pub: Publisher, cleaned: DataFrame,
-      writerId: String): Unit = pub match {
-    case rp: RoutedPublisher => rp.publishRoutedEpoch(cleaned, "_topic", writerId)
-    case _ =>
-      val persisted = cleaned.persist()
-      try {
-        val topics =
-          persisted.select(col("_topic")).distinct().collect().map(_.getString(0))
-        topics.foreach { t =>
-          pub.publishEpoch(t,
-            persisted.filter(col("_topic") === t)
-              .select(Message.columns.map(col): _*),
-            writerId)
-        }
-      } finally { persisted.unpersist(); () }
-  }
-
   /** Publish one micro-batch, honoring per-row topic overrides and
     * stripping `_graft_` ctx keys. Publishes through the idempotent
     * epoch path — (handler, epochId, topic) identifies the write, so a
@@ -446,7 +420,7 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
         coalesce(element_at(col("metadata"), lit(Ctx.TopicOverride)), lit(default)))
       val cleaned = routed.withColumn("metadata",
         Ctx.stripInternal(col("metadata")))
-      publishRouted(pub, cleaned, writerId)
+      pub.publishRoutedEpoch(cleaned, "_topic", writerId)
       if (needAck) ackBatch(h, src)
     } finally { if (needAck) { src.unpersist(); () } }
   }
@@ -470,11 +444,11 @@ final class Router(spark: SparkSession, checkpointRoot: Option[String] = None,
         element_at(col("metadata"), lit(Ctx.TopicOverride)).isNotNull)
       if (routed.limit(1).count() > 0) h.subscriber match {
         case pub: Publisher =>
-          publishRouted(pub, routed
+          pub.publishRoutedEpoch(routed
             .withColumn("_topic",
               element_at(col("metadata"), lit(Ctx.TopicOverride)))
             .withColumn("metadata", Ctx.stripInternal(col("metadata"))),
-            writerId(h, epochId))
+            "_topic", writerId(h, epochId))
         case _ =>
           throw new IllegalStateException(
             s"consumer handler '${h.name}': middleware routed messages " +

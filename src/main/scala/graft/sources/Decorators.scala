@@ -48,12 +48,11 @@ object Decorators {
     }
   }
 
-  /** NOT forwarded on the publisher: [[RoutedPublisher]]. The routed
-    * frame carries the extra `_topic` column, and an arbitrary
-    * `perFrame` (written against the 4-column envelope) may drop it —
-    * the router's fallback per-topic loop is the safe path: it feeds
-    * `perFrame` clean envelope frames through `publishEpoch`, at the
-    * cost of one filtered pass per destination topic. */
+  /** The routed epoch write keeps the per-topic default: an arbitrary
+    * `perFrame` (written against the 4-column envelope) may drop the
+    * routing column, so it sees clean envelope frames through
+    * `publishEpoch`, at the cost of one filtered pass per destination
+    * topic. */
   def publisher(inner: Publisher, perMessage: Message => Message,
       perFrame: DataFrame => DataFrame): Publisher =
     new TransformingPublisher(inner, perMessage, perFrame)

@@ -22,7 +22,8 @@ import graft.core.{Ids, Message}
   *   response 200 = acked (enqueued); non-2xx = nack, sender retries.
   *
   * Delivery is at-least-once: HTTP has no idempotency handle, so
-  * `publishEpoch` falls back to plain append — receivers dedupe by
+  * both epoch forms fall back to plain appends (`publishRoutedEpoch`
+  * as one `publishEpoch` per destination) — receivers dedupe by
   * uuid (pair with `StreamingDedup.stage` exactly as the reference
   * pairs webhook ingestion with the Deduplicator middleware).
   */

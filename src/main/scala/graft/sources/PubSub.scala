@@ -1,14 +1,21 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, struct}
 
 import graft.core.Message
 
 /** Sink half of a transport, parity with the reference `Publisher`
-  * (reference: message/pubsub.go:8-23). Two forms: `publish` for
+  * (reference: message/pubsub.go:8-23). Two plain forms: `publish` for
   * driver-side test/interactive sends (small batches, the GoChannel
   * usage pattern) and `publishBatch` for distributed appends (the only
   * form that exists at 100 TB — a DataFrame write, never a collect).
+  * The exactly-once epoch write has two entry points over ONE writer
+  * per transport: [[publishRoutedEpoch]] (rows carry their own
+  * destination — the router's sink) and [[publishEpoch]] (one known
+  * topic, a one-topic call into the same writer), so a replay is
+  * skipped by the same rule on either path.
   */
 trait Publisher {
   def publish(topic: String, msgs: Seq[Message]): Unit
@@ -31,6 +38,25 @@ trait Publisher {
     * fail loudly rather than silently dropping or duplicating rows. */
   def publishEpoch(topic: String, df: DataFrame, writerId: String): Unit =
     publishBatch(topic, df)
+
+  /** Routed epoch write: `topicCol` holds each row's destination;
+    * `writerId` has the [[publishEpoch]] contract. The Forwarder
+    * (reference: components/forwarder/forwarder.go:52-98) makes topic
+    * cardinality data-dependent, so transports override this with ONE
+    * data pass. The default is per topic: a pinned frame (an upstream
+    * handler's side effects never re-run per topic), a distinct-topic
+    * collect (bounded by topology fan-out, never data-sized), and one
+    * [[publishEpoch]] per destination under the same writerId. */
+  def publishRoutedEpoch(df: DataFrame, topicCol: String, writerId: String): Unit = {
+    val persisted = df.persist()
+    try {
+      persisted.select(col(topicCol)).distinct().collect().map(_.getString(0))
+        .foreach { t =>
+          publishEpoch(t, persisted.filter(col(topicCol) === t)
+            .select(Message.columns.map(col): _*), writerId)
+        }
+    } finally { persisted.unpersist(); () }
+  }
 
   def close(): Unit = ()
 }
@@ -76,21 +102,6 @@ trait AckableSubscriber {
   def ack(topic: String, upTo: Long): Unit
 }
 
-/** Capability trait for transports that can publish a batch whose rows
-  * carry their OWN destination topic in one data pass. The Forwarder
-  * (reference: components/forwarder/forwarder.go:52-98) makes topic
-  * cardinality data-dependent, so the router sink must not loop
-  * one filtered pass per topic — a transport advertising this trait
-  * receives the whole routed batch once (Kafka: native per-row `topic`
-  * column; files: `partitionBy` + O(topics) driver-side renames).
-  */
-trait RoutedPublisher { self: Publisher =>
-  /** One-pass routed publish; `topicCol` holds each row's destination.
-    * `writerId` gives micro-batch idempotency where the transport has a
-    * handle for it (same contract as [[Publisher.publishEpoch]]). */
-  def publishRoutedEpoch(df: DataFrame, topicCol: String, writerId: String): Unit
-}
-
 trait PubSub extends Publisher with Subscriber with SubscribeInitializer
 
 /** In-memory broker over `MemoryStream`, the engine's GoChannel
@@ -127,7 +138,7 @@ trait PubSub extends Publisher with Subscriber with SubscribeInitializer
   *   subscribers needing full replay belong on [[FilePubSub]]. */
 class MemoryPubSub(spark: SparkSession, numPartitions: Option[Int] = None,
     maxTrackedEpochs: Int = 100000, maxHistoryPerTopic: Int = 1000000)
-  extends PubSub with RoutedPublisher {
+  extends PubSub {
   import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   import spark.implicits._
 
@@ -212,22 +223,15 @@ class MemoryPubSub(spark: SparkSession, numPartitions: Option[Int] = None,
     if (seenEpochs.remove(key, token)) { trackedEpochs.decrementAndGet(); () }
 
   override def publishEpoch(topic: String, df: DataFrame, writerId: String): Unit =
-    claimEpoch((topic, writerId)).foreach { token =>
-      try publishBatch(topic, df)
-      catch { case e: Throwable =>
-        releaseEpoch((topic, writerId), token); throw e
-      }
-    }
+    publishRoutedEpoch(df.withColumn("_topic", lit(topic)), "_topic", writerId)
 
-  /** One-pass routed publish for the test transport: a single driver
-    * collect, then per-topic appends grouped in memory (the collect was
-    * always this transport's data pass — see [[publishBatch]]). */
+  /** The epoch writer for the test transport: a single driver collect,
+    * then per-topic claims and appends grouped in memory (the collect
+    * was always this transport's data pass — see [[publishBatch]]). */
   override def publishRoutedEpoch(df: DataFrame, topicCol: String,
       writerId: String): Unit = {
     val rows = df
-      .select(org.apache.spark.sql.functions.col(topicCol).as("_1"),
-        org.apache.spark.sql.functions.struct(
-          Message.columns.map(org.apache.spark.sql.functions.col): _*).as("_2"))
+      .select(col(topicCol).as("_1"), struct(Message.columns.map(col): _*).as("_2"))
       .as[(String, Message)].collect()
     rows.groupBy(_._1).foreach { case (topic, ms) =>
       claimEpoch((topic, writerId)).foreach { token =>
@@ -248,7 +252,7 @@ class MemoryPubSub(spark: SparkSession, numPartitions: Option[Int] = None,
   * exactly-once per micro-batch via the streaming file-sink log.
   */
 class FilePubSub(spark: SparkSession, root: String)
-  extends PubSub with RoutedPublisher {
+  extends PubSub {
   import spark.implicits._
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -294,28 +298,31 @@ class FilePubSub(spark: SparkSession, root: String)
     * Coordination-free: correct across threads, JVMs, and cluster
     * writers alike; [[compact]] folds the directories back down. */
   override def publishBatch(topic: String, df: DataFrame): Unit =
-    df.select(Message.columns.map(org.apache.spark.sql.functions.col): _*)
+    df.select(Message.columns.map(col): _*)
       .write.mode("overwrite")
       .parquet(s"${path(topic)}/pub_${java.util.UUID.randomUUID().toString.replace("-", "")}")
 
-  /** Exactly-once epoch publish: each writer epoch owns a
-    * deterministic subdirectory — a retried micro-batch SKIPS when the
-    * epoch is already complete (`_SUCCESS` present — a partial dir
-    * from a crashed write has none and is overwritten), and a
-    * [[compact]]ed epoch is remembered in the topic's hidden manifest
-    * so a late retry after compaction cannot re-append rows the
-    * consolidated file already holds. Readers list recursively, so
-    * flat appends and epoch dirs coexist. */
+  /** Exactly-once epoch publish, a one-topic call into the epoch
+    * writer ([[publishRoutedEpoch]]); a known topic lets a replay skip
+    * before any data pass. Each writer epoch owns a deterministic
+    * `epoch_<writerId>` subdirectory per topic; readers list
+    * recursively, so flat appends and epoch dirs coexist. */
   override def publishEpoch(topic: String, df: DataFrame, writerId: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     requireWriterId(writerId)
-    val dir = new HPath(s"${path(topic)}/epoch_$writerId")
+    val dir = new HPath(path(topic), s"epoch_$writerId")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new HPath(dir, "_SUCCESS"))) return
-    if (compactedEpochs(fs, topic).contains(s"epoch_$writerId")) return
-    df.select(Message.columns.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("overwrite").parquet(dir.toString)
+    if (!epochDone(fs, topic, dir))
+      publishRoutedEpoch(df.withColumn("_topic", lit(topic)), "_topic", writerId)
   }
+
+  /** The skip rule of both epoch entry points: the epoch is complete
+    * (`_SUCCESS` present, carried in by its one rename — a partial dir
+    * from a crashed write has none and is overwritten), or [[compact]]
+    * folded it into the consolidated file (the topic's hidden
+    * manifest), so a late retry cannot re-append rows already held. */
+  private def epochDone(fs: FileSystem, topic: String, dir: HPath): Boolean =
+    fs.exists(new HPath(dir, "_SUCCESS")) ||
+      compactedEpochs(fs, topic).contains(dir.getName)
 
   /** Epoch dirs folded away by [[compact]], one name per line in the
     * topic's hidden `_epochs_manifest` file (underscore-prefixed:
@@ -323,9 +330,9 @@ class FilePubSub(spark: SparkSession, root: String)
     * survives compaction — without it, a checkpoint-replayed epoch
     * from inside the redelivery horizon would recreate its dir next to
     * the consolidated copy of the same rows. */
-  private def compactedEpochs(fs: org.apache.hadoop.fs.FileSystem,
+  private def compactedEpochs(fs: FileSystem,
       topic: String): Set[String] = {
-    val mf = new org.apache.hadoop.fs.Path(s"${path(topic)}/_epochs_manifest")
+    val mf = new HPath(s"${path(topic)}/_epochs_manifest")
     if (!fs.exists(mf)) Set.empty
     else {
       val in = fs.open(mf)
@@ -349,16 +356,17 @@ class FilePubSub(spark: SparkSession, root: String)
       .parquet(path(topic))
 
   /** Routed-epoch write: ONE `partitionBy` data pass over the whole
-    * batch (instead of the router's O(topics) filtered passes), then
-    * O(topics) driver-side directory renames to slot each partition
-    * under its topic's `epoch_<writerId>` dir — the same idempotent
-    * layout as [[publishEpoch]], so a retried micro-batch overwrites
-    * rather than duplicates. Renames are metadata ops on HDFS-like
-    * stores, never data copies. */
+    * batch (instead of O(topics) filtered passes), then O(topics)
+    * driver-side directory renames to slot each partition under its
+    * topic's `epoch_<writerId>` dir. Renames are metadata ops on
+    * HDFS-like stores, never data copies. Each rename carries a
+    * `_SUCCESS` into its target, and a target that already has one is
+    * skipped ([[epochDone]]), so a replayed epoch neither duplicates
+    * rows nor re-creates files a live `subscribe` stream would read a
+    * second time. */
   override def publishRoutedEpoch(df: DataFrame, topicCol: String,
       writerId: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.spark.sql.functions.col
+    import graft.streaming.GenerationSwap.{deleteIfExists, renameOrThrow}
     requireWriterId(writerId)
     val staging = s"$root/.routed_epoch_$writerId" // dot-prefixed: hidden from readers
     df.select((Message.columns.map(col) :+ col(topicCol).as("_topic")): _*)
@@ -380,32 +388,27 @@ class FilePubSub(spark: SparkSession, root: String)
         // retry of the batch (the same fail-closed class the delay path
         // eliminates). Quarantine instead: the rows land under a
         // reserved dir, preserved and observable, never lost; the
-        // escaped-name target keeps retries idempotent (overwrite).
-        // the SAME folded-epoch rule as publishEpoch: a checkpoint-
-        // replayed epoch that compact() already folded into the
-        // consolidated file must NOT re-appear as a fresh dir — this
-        // is the router's MAIN FilePubSub path (RoutedPublisher wins),
-        // so without the manifest consult here the exactly-once
-        // contract only covered the side path
-        if (isValidTopic(topic) &&
-            compactedEpochs(fs, topic).contains(s"epoch_$writerId")) {
-          graft.streaming.GenerationSwap.deleteIfExists(fs, s.getPath)
-        } else {
-          val target =
-            if (isValidTopic(topic)) new HPath(path(topic), s"epoch_$writerId")
-            else {
-              log.warn(s"routed publish: invalid topic '$topic' quarantined")
-              new HPath(s"$root/.quarantine",
-                s"epoch_${writerId}_${s.getPath.getName}")
-            }
+        // escaped-name target keeps retries idempotent.
+        val (target, done) =
+          if (isValidTopic(topic)) {
+            val dir = new HPath(path(topic), s"epoch_$writerId")
+            (dir, epochDone(fs, topic, dir))
+          } else {
+            log.warn(s"routed publish: invalid topic '$topic' quarantined")
+            val dir = new HPath(s"$root/.quarantine",
+              s"epoch_${writerId}_${s.getPath.getName}")
+            (dir, fs.exists(new HPath(dir, "_SUCCESS")))
+          }
+        if (!done) {
           // CHECKED ops (GenerationSwap): HDFS-style filesystems signal
           // rename/delete failure by returning false — unchecked, a
           // failed rename here would let the epoch "succeed", offsets
           // commit, and the finally below delete the only copy
-          graft.streaming.GenerationSwap.deleteIfExists(fs, target) // retry: overwrite
+          deleteIfExists(fs, target) // a partial dir from a crashed write
           if (!fs.mkdirs(target.getParent))
             throw new java.io.IOException(s"mkdirs failed: ${target.getParent}")
-          graft.streaming.GenerationSwap.renameOrThrow(fs, s.getPath, target)
+          fs.create(new HPath(s.getPath, "_SUCCESS"), true).close()
+          renameOrThrow(fs, s.getPath, target)
         }
       }
     } finally { fs.delete(stagingPath, true); () }
@@ -416,7 +419,6 @@ class FilePubSub(spark: SparkSession, root: String)
     * java.nio on an `hdfs://` root would "succeed" by creating a bogus
     * RELATIVE local directory and leave the real topic uncreated. */
   override def subscribeInitialize(topic: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val p = new HPath(path(topic))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.mkdirs(p))
@@ -442,7 +444,7 @@ class FilePubSub(spark: SparkSession, root: String)
     *
     * Exactly-once survives compaction: every folded `epoch_*` dir's
     * name is recorded (cumulatively) in the topic's hidden
-    * `_epochs_manifest`, and [[publishEpoch]] consults it — a
+    * `_epochs_manifest`, and both epoch entry points consult it — a
     * checkpoint-replayed epoch from inside the redelivery horizon
     * skips instead of duplicating rows the consolidated file already
     * holds.
@@ -460,7 +462,6 @@ class FilePubSub(spark: SparkSession, root: String)
     * operator decision, default off. */
   def compact(topic: String, targetFiles: Int = 1,
       retentionMs: Long = 0L): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val live = new HPath(path(topic))
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new HPath(s"$root/.compact_$topic")
@@ -509,11 +510,8 @@ class FilePubSub(spark: SparkSession, root: String)
         // NULL-ts rows are kept explicitly (a bare ts >= cutoff is
         // UNKNOWN on null and would silently expire a foreign writer's
         // unstamped rows); the predicate still pushes to the scan
-        consolidated.filter {
-          import org.apache.spark.sql.functions.col
-          col("ts").isNull || col("ts") >=
-            new java.sql.Timestamp(System.currentTimeMillis() - retentionMs)
-        }
+        consolidated.filter(col("ts").isNull || col("ts") >=
+          new java.sql.Timestamp(System.currentTimeMillis() - retentionMs))
       else consolidated
     retained.coalesce(targetFiles)
       .write.mode("overwrite").parquet(staging.toString)
@@ -547,7 +545,7 @@ class FilePubSub(spark: SparkSession, root: String)
   *    routing is native).
   */
 class KafkaPubSub(spark: SparkSession, bootstrap: String)
-  extends PubSub with RoutedPublisher {
+  extends PubSub {
   import org.apache.spark.sql.functions._
   import KafkaPubSub.{headersToMetadata, publishProjection}
 
@@ -556,11 +554,7 @@ class KafkaPubSub(spark: SparkSession, bootstrap: String)
     publishBatch(topic, msgs.toDF())
   }
 
-  override def publishBatch(topic: String, df: DataFrame): Unit =
-    publishProjection(df, lit(topic))
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .save()
+  override def publishBatch(topic: String, df: DataFrame): Unit = write(df, lit(topic))
 
   /** Per-row topic routing (the Forwarder/outbox production path):
     * rows carry their own destination in `topicCol` — Kafka's sink
@@ -571,8 +565,10 @@ class KafkaPubSub(spark: SparkSession, bootstrap: String)
     * handle short of transactional producers, which the Spark sink
     * does not expose — documented at-least-once on crash-retry. */
   override def publishRoutedEpoch(df: DataFrame, topicCol: String,
-      writerId: String): Unit =
-    publishProjection(df, col(topicCol))
+      writerId: String): Unit = write(df, col(topicCol))
+
+  private def write(df: DataFrame, topic: org.apache.spark.sql.Column): Unit =
+    publishProjection(df, topic)
       .write.format("kafka")
       .option("kafka.bootstrap.servers", bootstrap)
       .save()

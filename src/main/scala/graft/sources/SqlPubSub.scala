@@ -97,7 +97,7 @@ final class SqlPubSub(spark: SparkSession, url: String,
     // inside the horizon stay for replay/audit reads.
     consumedRetentionMs: Long = 0L,
     consumedSweepIntervalMs: Long = 10L * 60 * 1000)
-  extends PubSub with RoutedPublisher with AckableSubscriber
+  extends PubSub with AckableSubscriber
   with AutoCloseable {
 
   /** Poller hold-state for temporary identity-id holes:
@@ -313,7 +313,9 @@ final class SqlPubSub(spark: SparkSession, url: String,
         "partition marker in graft_epochs")
   }
 
-  /** Exactly-once epoch publish, EXECUTOR-PARALLEL: each non-empty
+  /** Exactly-once epoch publish, EXECUTOR-PARALLEL: a one-topic call
+    * into the epoch writer ([[SqlPubSub.writeEpochPartition]]) with
+    * the known one-table map — no pin, no distinct job. Each non-empty
     * partition opens its own transaction and commits its rows together
     * with a marker keyed (topic, writerId + "#p" + partitionId) — a
     * replayed partition (task retry, speculative attempt, or a whole
@@ -321,9 +323,8 @@ final class SqlPubSub(spark: SparkSession, url: String,
     * primary key and skips; a crash mid-partition rolls that
     * partition's rows and marker back together, so the retry delivers
     * it cleanly while already-committed partitions stay skipped. No
-    * row ever funnels through the driver — this is the router's
-    * default SQL sink path, and at bulk scale it writes with the
-    * cluster, not with one JVM.
+    * row ever funnels through the driver, so at bulk scale it writes
+    * with the cluster, not with one JVM.
     *
     * Same determinism contract as every idempotent Spark sink: a
     * replay must produce the same rows in the same partitions
@@ -333,50 +334,45 @@ final class SqlPubSub(spark: SparkSession, url: String,
     * partitions visible — readers see ordinary unacked rows, and the
     * retry completes the remainder exactly once. */
   override def publishEpoch(topic: String, df: DataFrame, writerId: String): Unit = {
-    ensureInitialized(topic)
-    ensureEpochTable()
-    maybeSweepEpochs()
     requireWriterId(writerId)
-    val u = url
-    val tbl = table(topic)
-    df.select(col("uuid"), to_json(col("metadata")).as("metadata"),
-        col("payload"), col("ts"))
-      .foreachPartition((it: Iterator[org.apache.spark.sql.Row]) =>
-        SqlPubSub.writeEpochPartition(u, tbl, topic, writerId, it))
+    ensureInitialized(topic)
+    writeEpoch(df, lit(topic), Map(topic -> table(topic)), writerId)
   }
 
-  /** One-pass routed epoch, EXECUTOR-PARALLEL: rows carry their
-    * destination in `topicCol`; each partition opens ONE transaction
-    * covering every destination it touches, with one marker per
-    * (destination, writerId + "#p" + partitionId) — all of a
-    * partition's markers commit atomically with its rows, so a replay
-    * is decided by any one of them (guards in
-    * [[SqlPubSub.writeRoutedEpochPartition]] make a torn replay loud,
-    * never a silent drop). The only driver work is control-plane: the
-    * DISTINCT destination set (bounded by topology fan-out, never
-    * data-sized) for DDL — the documented collect class the router's
-    * fallback path already uses. */
+  /** Routed epoch, the router's sink: rows carry their destination in
+    * `topicCol`, and each partition's ONE transaction covers every
+    * destination it touches, with one marker per (destination,
+    * writerId + "#p" + partitionId) — all of a partition's markers
+    * commit atomically with its rows, so a replay is decided by any
+    * one of them (guards in [[SqlPubSub.writeEpochPartition]] make a
+    * torn replay loud, never a silent drop). The only driver work is
+    * control-plane: the DISTINCT destination set (bounded by topology
+    * fan-out, never data-sized) for DDL, over a pinned frame so an
+    * upstream handler's flatMap never re-runs its side effects. */
   override def publishRoutedEpoch(df: DataFrame, topicCol: String,
       writerId: String): Unit = {
     requireWriterId(writerId)
-    val sel = df.select(col("uuid"), to_json(col("metadata")).as("metadata"),
-      col("payload"), col("ts"), col(topicCol).cast("string").as("_dest"))
-    // pin: two actions follow (distinct destinations + the write), and
-    // an upstream handler's flatMap must not re-run its side effects
-    val persisted = sel.persist()
+    val persisted = df.persist()
     try {
-      val topics = persisted.select(col("_dest")).distinct()
+      val topics = persisted.select(col(topicCol).cast("string")).distinct()
         .collect().map(_.getString(0))
       if (topics.nonEmpty) {
         topics.foreach(ensureInitialized) // driver-side DDL before executors write
-        ensureEpochTable()
-        maybeSweepEpochs()
-        val tables = topics.map(t => t -> table(t)).toMap
-        val u = url
-        persisted.foreachPartition((it: Iterator[org.apache.spark.sql.Row]) =>
-          SqlPubSub.writeRoutedEpochPartition(u, tables, writerId, it))
+        writeEpoch(persisted, col(topicCol),
+          topics.map(t => t -> table(t)).toMap, writerId)
       }
     } finally { persisted.unpersist(); () }
+  }
+
+  private def writeEpoch(df: DataFrame, dest: org.apache.spark.sql.Column,
+      tables: Map[String, String], writerId: String): Unit = {
+    ensureEpochTable()
+    maybeSweepEpochs()
+    val u = url
+    df.select(col("uuid"), to_json(col("metadata")).as("metadata"),
+        col("payload"), col("ts"), dest.cast("string").as("_dest"))
+      .foreachPartition((it: Iterator[org.apache.spark.sql.Row]) =>
+        SqlPubSub.writeEpochPartition(u, tables, writerId, it))
   }
 
   // memoized per instance like `initialized`: the epoch path runs per
@@ -1107,7 +1103,7 @@ final class SqlPubSub(spark: SparkSession, url: String,
   }
 }
 
-/** Executor-side partition writers for the exactly-once epoch paths.
+/** Executor-side partition writer for the exactly-once epoch paths.
   * Static on purpose: the closures shipped by [[SqlPubSub.publishEpoch]]
   * / [[SqlPubSub.publishRoutedEpoch]] capture only strings and a small
   * topic→table map, never the (non-serializable) transport instance —
@@ -1225,72 +1221,22 @@ object SqlPubSub {
     }
   }
 
-  /** One partition's exactly-once write for [[SqlPubSub.publishEpoch]]:
-    * marker (topic, writerId#p<pid>) + rows, one transaction. Rows are
-    * the pre-projected (uuid, metadata-json, payload, ts) shape. Empty
-    * partitions write nothing (and no marker — a deterministic replay
-    * of an empty partition re-inserts nothing).
+  /** One partition's exactly-once write, behind both epoch entry
+    * points. Rows are the pre-projected (uuid, metadata-json, payload,
+    * ts, destination) shape; every destination the partition touches
+    * gets a marker, and ALL markers + ALL rows commit in one
+    * transaction (each destination's JDBC batch flushes every 1000
+    * rows). Empty partitions write nothing, not even a marker.
     *
-    * Divergent-replay guard (the routed path's rule, applied here):
-    * the marker stores the partition's committed ROW COUNT, and a dup
-    * partition re-counts its replayed rows against it — a replay whose
-    * partitioning changed across a checkpoint restart (different
-    * spark.sql.shuffle.partitions, AQE toggled) would otherwise
-    * silently duplicate rows in fresh partition ids while the dup ids
-    * skip their changed contents. A count mismatch fails LOUDLY. */
-  private[sources] def writeEpochPartition(url: String, tbl: String,
-      topic: String, writerId: String,
-      it: Iterator[org.apache.spark.sql.Row]): Unit = {
-    if (!it.hasNext) return
-    val pid = org.apache.spark.TaskContext.getPartitionId()
-    val key = s"$writerId#p$pid"
-    withPartitionTxn(url) { c =>
-      if (insertMarker(c, topic, key)) {
-        val ins = c.prepareStatement(insertSql(tbl))
-        var n = 0L
-        try {
-          var pending = 0
-          it.foreach { r =>
-            addRow(ins, r); pending += 1; n += 1
-            if (pending >= 1000) { ins.executeBatch(); pending = 0 }
-          }
-          if (pending > 0) ins.executeBatch()
-        } finally ins.close()
-        setMarkerCount(c, topic, key, n)
-        c.commit()
-      } else {
-        // prior commit: roll back FIRST (a constraint hit aborts the
-        // whole transaction on engines like PostgreSQL — any statement
-        // inside an aborted transaction throws), THEN verify the replay
-        // matches what was committed
-        c.rollback()
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        committedMarkers(c, key).get(topic).foreach { committed =>
-          if (committed != n)
-            throw new IllegalStateException(
-              s"epoch replay diverged on partition $pid of writer " +
-                s"'$writerId' for topic '$topic': the committed attempt " +
-                s"wrote $committed rows but the replay produced $n — " +
-                "the sink's determinism precondition (same rows in the " +
-                "same partitions on replay) was broken, refusing to " +
-                "silently drop the difference")
-        }
-      }
-    }
-  }
-
-  /** One partition's exactly-once write for
-    * [[SqlPubSub.publishRoutedEpoch]]: rows carry their destination in
-    * column 4; every destination this partition touches gets a marker,
-    * and ALL markers + ALL rows commit in one transaction. A replayed
-    * partition therefore resolves off its FIRST marker probe:
-    * fresh ⇒ no prior commit (write everything), dup ⇒ prior commit
-    * (skip everything). Either mixed outcome can only mean the replay
+    * A replay resolves off its FIRST marker probe: fresh ⇒ write
+    * everything, dup ⇒ skip everything. Anything else means the replay
     * produced different partition contents than the committed attempt
-    * (broken sink determinism) — that fails LOUDLY instead of silently
-    * dropping or duplicating the divergent rows. */
-  private[sources] def writeRoutedEpochPartition(url: String,
+    * (broken sink determinism — e.g. shuffle partitions or AQE changed
+    * across a checkpoint restart): a mixed probe, a different
+    * destination set, or a per-destination count that differs from
+    * its marker's fails LOUDLY instead of silently dropping or
+    * duplicating rows. */
+  private[sources] def writeEpochPartition(url: String,
       tables: Map[String, String], writerId: String,
       it: Iterator[org.apache.spark.sql.Row]): Unit = {
     if (!it.hasNext) return
@@ -1311,14 +1257,17 @@ object SqlPubSub {
             if (insertMarker(c, t, key)) fresh += 1 else dup = true
             if (dup && fresh > 0)
               throw new IllegalStateException(
-                s"routed epoch replay diverged on partition $pid of " +
+                s"epoch replay diverged on partition $pid of " +
                   s"writer '$writerId': destination '$t' was already " +
                   "committed but another destination in this partition " +
                   "was not — the replay produced different partition " +
                   "contents than the committed attempt")
           }
-          if (!dup) addRow(stmts.getOrElseUpdate(t,
-            c.prepareStatement(insertSql(tables(t)))), r)
+          if (!dup) {
+            val ins = stmts.getOrElseUpdate(t, c.prepareStatement(insertSql(tables(t))))
+            addRow(ins, r)
+            if (counts(t) % 1000 == 0) ins.executeBatch()
+          }
         }
         if (dup) {
           // prior commit: roll back FIRST (a constraint hit aborts the
@@ -1340,7 +1289,7 @@ object SqlPubSub {
           val committed = committedMarkers(c, key)
           def diverged(what: String): Nothing =
             throw new IllegalStateException(
-              s"routed epoch replay diverged on partition $pid of " +
+              s"epoch replay diverged on partition $pid of " +
                 s"writer '$writerId': $what — the replay produced " +
                 "different partition contents than the committed attempt")
           counts.keysIterator.foreach { t =>
@@ -1356,7 +1305,7 @@ object SqlPubSub {
                 s"replay produced ${counts(t)}")
           }
         } else {
-          stmts.valuesIterator.foreach(_.executeBatch())
+          stmts.foreach { case (t, ins) => if (counts(t) % 1000 != 0) ins.executeBatch() }
           counts.foreach { case (t, n) => setMarkerCount(c, t, key, n) }
           c.commit()
         }

@@ -26,15 +26,9 @@ object BulkRead {
 
 /** Retrying publisher, parity with the internal retrying publisher
   * (reference: internal/publisher/retry.go:17-37): bounded attempts
-  * with doubling backoff. Wraps any transport. Construct via
-  * [[RetryingPublisher.apply]]: retry is shape-transparent, so
-  * wrapping a [[RoutedPublisher]] must PRESERVE the capability —
-  * `new RetryingPublisher(fileTransport)` silently downgraded the
-  * router sink from one routed pass per micro-batch to O(topics)
-  * filtered passes (the scale shape publishRoutedEpoch exists for),
-  * because the router's `case rp: RoutedPublisher` stopped matching.
-  * (Contrast Decorators, which deliberately WITHHOLDS RoutedPublisher:
-  * a perFrame hook may drop the routing column.) */
+  * with doubling backoff. Wraps any transport and forwards every form,
+  * the routed epoch write included — retry is shape-transparent, so
+  * the router sink keeps the inner transport's one routed pass. */
 class RetryingPublisher(inner: Publisher, maxRetries: Int = 5,
     initialBackoffMs: Long = 10, sleep: Long => Unit = Thread.sleep)
   extends Publisher {
@@ -56,33 +50,16 @@ class RetryingPublisher(inner: Publisher, maxRetries: Int = 5,
     withRetry(inner.publish(topic, msgs))
   override def publishBatch(topic: String, df: DataFrame): Unit =
     withRetry(inner.publishBatch(topic, df))
-  // forward the epoch form: the trait default would drop writerId and
-  // retry through publishBatch — a retry after a PARTIAL write would
-  // then append the successful prefix twice. Retrying publishEpoch
-  // keeps the retry idempotent, which is the entire point of both
-  // this wrapper and the epoch API.
+  // forward the epoch forms: the trait defaults would drop writerId
+  // or re-split the frame per topic — a retry after a PARTIAL write
+  // would then append the successful prefix twice. Retrying the inner
+  // epoch write keeps the retry idempotent, which is the entire point
+  // of both this wrapper and the epoch API.
   override def publishEpoch(topic: String, df: DataFrame,
       writerId: String): Unit =
     withRetry(inner.publishEpoch(topic, df, writerId))
-  protected def retry[A](body: => A): A = withRetry(body)
+  override def publishRoutedEpoch(df: DataFrame, topicCol: String,
+      writerId: String): Unit =
+    withRetry(inner.publishRoutedEpoch(df, topicCol, writerId))
   override def close(): Unit = inner.close()
-}
-
-object RetryingPublisher {
-  /** Capability-preserving constructor: a routed inner transport gets
-    * a routed retrying wrapper (see the class scaladoc). */
-  def apply(inner: Publisher, maxRetries: Int = 5,
-      initialBackoffMs: Long = 10,
-      sleep: Long => Unit = Thread.sleep): RetryingPublisher =
-    inner match {
-      case rp: Publisher with RoutedPublisher =>
-        new RetryingPublisher(inner, maxRetries, initialBackoffMs, sleep)
-          with RoutedPublisher {
-          override def publishRoutedEpoch(df: DataFrame, topicCol: String,
-              writerId: String): Unit =
-            retry(rp.publishRoutedEpoch(df, topicCol, writerId))
-        }
-      case _ =>
-        new RetryingPublisher(inner, maxRetries, initialBackoffMs, sleep)
-    }
 }

@@ -220,9 +220,12 @@ object StreamingBench {
     } finally { ps.close(); dropDb() }
   }
 
-  /** Exactly-once epoch-publish throughput — the router's DEFAULT SQL
-    * sink path ([[graft.sources.SqlPubSub.publishEpoch]]: per-partition
-    * transactions, rows + marker committed together, no driver funnel).
+  /** Exactly-once epoch-publish throughput of the SQL transport's one
+    * epoch writer — the one-topic entry point
+    * ([[graft.sources.SqlPubSub.publishEpoch]]) shares it with the
+    * router's sink, [[graft.sources.SqlPubSub.publishRoutedEpoch]]:
+    * per-partition transactions, rows + marker committed together, no
+    * driver funnel.
     * Measured at 8 partitions so the number reflects the
     * executor-parallel shape, reported beside the at-least-once
     * `publishBatch` row (sql_pub) it upgraded. Publish-only: the read

@@ -117,7 +117,7 @@ object Forwarder {
       // downgrades the router's exactly-once sink to at-least-once
       // (Decorators.TransformingPublisher names this bug class). The
       // ORIGINAL topic is folded into the forwarded writerId
-      // (length-prefixed, injective): the router's fallback path calls
+      // (length-prefixed, injective): the per-topic routed default calls
       // publishEpoch once per destination with the SAME writerId, and
       // funneling them into one forwarder topic unchanged would dedup
       // the second destination's publish as a replay.

@@ -126,10 +126,11 @@ class RobustnessSpec extends SparkSpec {
 
 object RobustnessSpec {
 
-  /** A FilePubSub behind the plain [[PubSub]] surface: not a
-    * RoutedPublisher, so the router sinks take their per-topic
-    * `publishEpoch` fallback. Records the topic of each epoch publish
-    * (the sinks call it on the driver). */
+  /** A FilePubSub behind the plain [[PubSub]] surface: it does not
+    * override `publishRoutedEpoch`, so the router sinks take the
+    * trait's per-topic default, one `publishEpoch` per destination.
+    * Records the topic of each epoch publish (the sinks call it on the
+    * driver). */
   final class PlainPubSub(inner: FilePubSub) extends PubSub {
     private val topics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def epochTopics: Seq[String] = topics.toArray(Array.empty[String]).toSeq

@@ -106,7 +106,7 @@ class HttpSpec extends SparkSpec {
 
     // publishers keep going THROUGH the downtime, retrying on refused
     // connections (bounded backoff spans the restart window)
-    val retrying = RetryingPublisher(new HttpPublisher(url),
+    val retrying = new RetryingPublisher(new HttpPublisher(url),
       maxRetries = 60, initialBackoffMs = 25,
       sleep = ms => Thread.sleep(math.min(ms, 200L)))
     val phase2 = (5 until 10).map(i => msg(s"r$i", s"v$i"))

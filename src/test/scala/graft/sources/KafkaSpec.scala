@@ -122,10 +122,6 @@ class KafkaSpec extends SparkSpec {
     assert(out == Map("u1" -> "dest_u1", "u2" -> "dest_u2"))
   }
 
-  test("KafkaPubSub advertises RoutedPublisher (native per-row topic sink)") {
-    assert(classOf[RoutedPublisher].isAssignableFrom(classOf[KafkaPubSub]))
-  }
-
   test("subscribeInitialize degrades to a no-op without kafka-clients on the classpath") {
     // this container has no kafka-clients jar: the reflective DDL path
     // must not throw (with the jar present it creates the topic)

@@ -193,15 +193,15 @@ class SqlSpec extends SparkSpec {
     try {
       ps.subscribeInitialize("t_part")
       ps.publishEpoch("t_part", Seq(msg("seed", "s")).toDF(), "w-seed") // creates marker table
-      def rows(us: String*) = us.map(u =>
+      def rows(topic: String, us: String*) = us.map(u =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
-          new Timestamp(1700000000000L))).iterator
+          new Timestamp(1700000000000L), topic)).iterator
       val tbl = "graft_t_t_part"
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_part", "w-r", rows("a", "b"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_part" -> tbl), "w-r", rows("t_part", "a", "b"))
       // the retry of the same partition (same key) must skip
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_part", "w-r", rows("a", "b"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_part" -> tbl), "w-r", rows("t_part", "a", "b"))
       // a different writer epoch still writes
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_part", "w-r2", rows("c"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_part" -> tbl), "w-r2", rows("t_part", "c"))
       val got = ps.subscribeBatch("t_part").collect().map(_.getAs[String]("uuid")).toSet
       assert(got == Set("seed", "a", "b", "c"), s"got $got")
     } finally ps.close()
@@ -216,9 +216,9 @@ class SqlSpec extends SparkSpec {
     try {
       ps.publishEpoch("t_conc", Seq(msg("seed", "s")).toDF(), "w-seed")
       val tbl = "graft_t_t_conc"
-      def rows(us: String*) = us.map(u =>
+      def rows(topic: String, us: String*) = us.map(u =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
-          new Timestamp(1700000000000L))).iterator
+          new Timestamp(1700000000000L), topic)).iterator
       // attempt A's marker carries its row count, as every committed
       // marker does (the writers stamp it in the inserting transaction)
       def holdMarker(key: String, rowCount: Long)(
@@ -241,14 +241,14 @@ class SqlSpec extends SparkSpec {
       }
       // shape 1: A commits (attempt A won) -> B must skip cleanly
       val tc = holdMarker("w-c#p0", 2L)(_.commit())
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_conc", "w-c", rows("b1", "b2"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_conc" -> tbl), "w-c", rows("t_conc", "b1", "b2"))
       tc.join(10000)
       assert(ps.subscribeBatch("t_conc").filter(
         org.apache.spark.sql.functions.col("uuid").isin("b1", "b2")).count() == 0,
         "loser attempt must skip after the winner commits")
       // shape 2: A rolls back (attempt A died) -> B proceeds and writes
       val tr = holdMarker("w-r#p0", 1L)(_.rollback())
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_conc", "w-r", rows("c1"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_conc" -> tbl), "w-r", rows("t_conc", "c1"))
       tr.join(10000)
       assert(ps.subscribeBatch("t_conc").filter(
         org.apache.spark.sql.functions.col("uuid") === "c1").count() == 1,
@@ -269,24 +269,24 @@ class SqlSpec extends SparkSpec {
           new Timestamp(1700000000000L), t)
       }.iterator
       // attempt 1 commits destinations {t_da}
-      SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-d",
+      SqlPubSub.writeEpochPartition(dbUrl, tables, "w-d",
         routedRows("x" -> "t_da"))
       // clean replay: same contents — skips silently
-      SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-d",
+      SqlPubSub.writeEpochPartition(dbUrl, tables, "w-d",
         routedRows("x" -> "t_da"))
       assert(ps.subscribeBatch("t_da").count() == 2) // seed + x, no dup
       // divergent replay, dup-first shape: committed t_da plus a NEW
       // destination t_db — the new destination's rows would be silently
       // dropped by a naive first-marker skip; must throw instead
       intercept[IllegalStateException] {
-        SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-d",
+        SqlPubSub.writeEpochPartition(dbUrl, tables, "w-d",
           routedRows("x" -> "t_da", "y" -> "t_db"))
       }
       // divergent replay, fresh-first shape: new destination first,
       // then the already-committed one — must also throw, and the
       // transaction rolls back so t_db stays clean
       intercept[IllegalStateException] {
-        SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-d",
+        SqlPubSub.writeEpochPartition(dbUrl, tables, "w-d",
           routedRows("y" -> "t_db", "x" -> "t_da"))
       }
       assert(ps.subscribeBatch("t_db").count() == 0,
@@ -328,17 +328,17 @@ class SqlSpec extends SparkSpec {
     try {
       ps.subscribeInitialize("t_ed")
       ps.publishEpoch("t_ed", Seq(msg("seed", "s")).toDF(), "w-seed") // creates tables
-      def rows(us: String*) = us.map(u =>
+      def rows(topic: String, us: String*) = us.map(u =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
-          new Timestamp(1700000000000L))).iterator
+          new Timestamp(1700000000000L), topic)).iterator
       val tbl = "graft_t_t_ed"
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_ed", "w-d", rows("a", "b"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_ed" -> tbl), "w-d", rows("t_ed", "a", "b"))
       // clean replay, same contents: silent skip
-      SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_ed", "w-d", rows("a", "b"))
+      SqlPubSub.writeEpochPartition(dbUrl, Map("t_ed" -> tbl), "w-d", rows("t_ed", "a", "b"))
       assert(ps.subscribeBatch("t_ed").count() == 3) // seed + a + b
       // divergent replay: same partition id, different contents
       val e = intercept[IllegalStateException] {
-        SqlPubSub.writeEpochPartition(dbUrl, tbl, "t_ed", "w-d", rows("a", "b", "c"))
+        SqlPubSub.writeEpochPartition(dbUrl, Map("t_ed" -> tbl), "w-d", rows("t_ed", "a", "b", "c"))
       }
       assert(e.getMessage.contains("diverged"), e.getMessage)
       assert(ps.subscribeBatch("t_ed").count() == 3,
@@ -359,22 +359,22 @@ class SqlSpec extends SparkSpec {
           new Timestamp(1700000000000L), t)
       }.iterator
       // attempt commits {t_rc: 2 rows, t_rc2: 1 row}
-      SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-m",
+      SqlPubSub.writeEpochPartition(dbUrl, tables, "w-m",
         routedRows("x" -> "t_rc", "y" -> "t_rc", "z" -> "t_rc2"))
       // clean replay: identical shape — silent skip
-      SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-m",
+      SqlPubSub.writeEpochPartition(dbUrl, tables, "w-m",
         routedRows("x" -> "t_rc", "y" -> "t_rc", "z" -> "t_rc2"))
       assert(ps.subscribeBatch("t_rc").count() == 3)  // seed + x + y
       assert(ps.subscribeBatch("t_rc2").count() == 1) // z
       // count drift: t_rc committed 2 rows, replay carries 1
       val e1 = intercept[IllegalStateException] {
-        SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-m",
+        SqlPubSub.writeEpochPartition(dbUrl, tables, "w-m",
           routedRows("x" -> "t_rc", "z" -> "t_rc2"))
       }
       assert(e1.getMessage.contains("committed 2 rows"), e1.getMessage)
       // destination-set drift: committed destination missing from replay
       val e2 = intercept[IllegalStateException] {
-        SqlPubSub.writeRoutedEpochPartition(dbUrl, tables, "w-m",
+        SqlPubSub.writeEpochPartition(dbUrl, tables, "w-m",
           routedRows("x" -> "t_rc", "y" -> "t_rc"))
       }
       assert(e2.getMessage.contains("missing from the replay"), e2.getMessage)
@@ -397,9 +397,9 @@ class SqlSpec extends SparkSpec {
       ps.subscribeInitialize("t_ab")
       ps.subscribeInitialize("t_ab2")
       ps.publishEpoch("t_ab", Seq(msg("seed", "s")).toDF(), "w-seed") // creates graft_epochs
-      def rows(us: String*) = us.map(u =>
+      def rows(topic: String, us: String*) = us.map(u =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
-          new Timestamp(1700000000000L))).iterator
+          new Timestamp(1700000000000L), topic)).iterator
       def routedRows(pairs: (String, String)*) = pairs.map { case (u, t) =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
           new Timestamp(1700000000000L), t)
@@ -407,14 +407,15 @@ class SqlSpec extends SparkSpec {
       // plain path: fresh attempt, then a dup replay THROUGH THE SHIM —
       // the marker PK hit aborts the transaction; the writer must
       // rollback FIRST, then run its divergence probes
-      SqlPubSub.writeEpochPartition(simUrl, "graft_t_t_ab", "t_ab", "w-a", rows("a", "b"))
-      SqlPubSub.writeEpochPartition(simUrl, "graft_t_t_ab", "t_ab", "w-a", rows("a", "b"))
+      val plain = Map("t_ab" -> "graft_t_t_ab")
+      SqlPubSub.writeEpochPartition(simUrl, plain, "w-a", rows("t_ab", "a", "b"))
+      SqlPubSub.writeEpochPartition(simUrl, plain, "w-a", rows("t_ab", "a", "b"))
       assert(ps.subscribeBatch("t_ab").count() == 3) // seed + a + b, no dup
       // routed path: dup-first replay through the shim, multi-destination
       val tables = Map("t_ab" -> "graft_t_t_ab", "t_ab2" -> "graft_t_t_ab2")
-      SqlPubSub.writeRoutedEpochPartition(simUrl, tables, "w-r",
+      SqlPubSub.writeEpochPartition(simUrl, tables, "w-r",
         routedRows("x" -> "t_ab", "y" -> "t_ab2"))
-      SqlPubSub.writeRoutedEpochPartition(simUrl, tables, "w-r",
+      SqlPubSub.writeEpochPartition(simUrl, tables, "w-r",
         routedRows("x" -> "t_ab", "y" -> "t_ab2"))
       assert(ps.subscribeBatch("t_ab").count() == 4)  // + x, no dup
       assert(ps.subscribeBatch("t_ab2").count() == 1) // y, no dup
@@ -442,22 +443,23 @@ class SqlSpec extends SparkSpec {
       ps.subscribeInitialize("t_my")
       ps.subscribeInitialize("t_my2")
       ps.publishEpoch("t_my", Seq(msg("seed", "s")).toDF(), "w-seed")
-      def rows(us: String*) = us.map(u =>
+      def rows(topic: String, us: String*) = us.map(u =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
-          new Timestamp(1700000000000L))).iterator
+          new Timestamp(1700000000000L), topic)).iterator
       def routedRows(pairs: (String, String)*) = pairs.map { case (u, t) =>
         org.apache.spark.sql.Row(u, null, u.getBytes("UTF-8"),
           new Timestamp(1700000000000L), t)
       }.iterator
       // site 1: plain epoch marker replay
-      SqlPubSub.writeEpochPartition(simUrl, "graft_t_t_my", "t_my", "w-a", rows("a", "b"))
-      SqlPubSub.writeEpochPartition(simUrl, "graft_t_t_my", "t_my", "w-a", rows("a", "b"))
+      val plain = Map("t_my" -> "graft_t_t_my")
+      SqlPubSub.writeEpochPartition(simUrl, plain, "w-a", rows("t_my", "a", "b"))
+      SqlPubSub.writeEpochPartition(simUrl, plain, "w-a", rows("t_my", "a", "b"))
       assert(psv.subscribeBatch("t_my").count() == 3) // seed + a + b, no dup
       // site 2: routed epoch replay, multi-destination
       val tables = Map("t_my" -> "graft_t_t_my", "t_my2" -> "graft_t_t_my2")
-      SqlPubSub.writeRoutedEpochPartition(simUrl, tables, "w-r",
+      SqlPubSub.writeEpochPartition(simUrl, tables, "w-r",
         routedRows("x" -> "t_my", "y" -> "t_my2"))
-      SqlPubSub.writeRoutedEpochPartition(simUrl, tables, "w-r",
+      SqlPubSub.writeEpochPartition(simUrl, tables, "w-r",
         routedRows("x" -> "t_my", "y" -> "t_my2"))
       assert(psv.subscribeBatch("t_my").count() == 4)  // + x, no dup
       assert(psv.subscribeBatch("t_my2").count() == 1) // y, no dup

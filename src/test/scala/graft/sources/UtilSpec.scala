@@ -39,31 +39,21 @@ class UtilSpec extends SparkSpec {
     assert(backoffs.toSeq == Seq(10L, 20L))
   }
 
-  test("RetryingPublisher.apply preserves the RoutedPublisher capability (with retries)") {
-    // pre-fix: wrapping a routed transport silently downgraded the
-    // router sink from one routed pass per micro-batch to O(topics)
-    // filtered passes — the router's `case rp: RoutedPublisher` no
-    // longer matched through the wrapper
+  test("RetryingPublisher retries the routed epoch write") {
+    // the wrapper forwards publishRoutedEpoch: the trait default would
+    // re-split a routed inner transport's one pass into per-topic passes
     val attempts = new java.util.concurrent.atomic.AtomicInteger
-    val flakyRouted = new Publisher with RoutedPublisher {
+    val flakyRouted = new Publisher {
       override def publish(topic: String, m: Seq[Message]): Unit = ()
       override def publishBatch(topic: String, df: org.apache.spark.sql.DataFrame): Unit = ()
       override def publishRoutedEpoch(df: org.apache.spark.sql.DataFrame,
           topicCol: String, writerId: String): Unit =
         if (attempts.incrementAndGet() < 3) throw new RuntimeException("transient")
     }
-    val p = RetryingPublisher(flakyRouted, maxRetries = 5,
+    val p = new RetryingPublisher(flakyRouted, maxRetries = 5,
       initialBackoffMs = 1, sleep = _ => ())
-    assert(p.isInstanceOf[RoutedPublisher],
-      "a routed inner transport must yield a routed retrying wrapper")
-    p.asInstanceOf[RoutedPublisher].publishRoutedEpoch(null, "t", "w")
+    p.publishRoutedEpoch(null, "t", "w")
     assert(attempts.get() == 3, "routed publishes must retry like the rest")
-    // a plain publisher stays plain — no phantom capability
-    val plain = RetryingPublisher(new Publisher {
-      override def publish(topic: String, m: Seq[Message]): Unit = ()
-      override def publishBatch(topic: String, df: org.apache.spark.sql.DataFrame): Unit = ()
-    })
-    assert(!plain.isInstanceOf[RoutedPublisher])
   }
 
   test("RetryingPublisher gives up after maxRetries") {
