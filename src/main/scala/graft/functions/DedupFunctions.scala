@@ -231,29 +231,19 @@ object DedupFunctions {
     * `agree` (gate on `agree >= ceil(t*k)`, never on the double) —
     * the integer-rational threshold discipline.
     *
-    * Scale shape: signatures materialize ONCE (strategy-selected, see
-    * `materialize` — three consumers: banding and both join sides; k
-    * longs per doc, the rows an index build would persist anyway);
+    * Scale shape: signatures materialize ONCE (eager
+    * `localCheckpoint()` — three consumers: banding and both join
+    * sides; k longs per doc, the rows an index build would persist
+    * anyway; a lost executor fails the job, which is re-run);
     * candidate pairs come from [[bandPairs]]' one grouped shuffle; the
     * estimate is two hash joins carrying k-long arrays plus a
     * row-local zip_with fold — never a shingle-set intersection (the
-    * full sets stay unshuffled).
-    *
-    * @param materialize pin strategy for the signature pass
-    *   ([[graft.operators.Materialize]]). Default: session conf
-    *   `graft.materialize` (local | persist | reliable), else eager
-    *   localCheckpoint — fastest single-machine, but lineage-
-    *   truncating; a 1000-executor run with dynamic allocation should
-    *   set `reliable` (or pass [[graft.operators.Materialize.ReliableCheckpoint]])
-    *   so a lost executor recomputes instead of killing the job. */
+    * full sets stay unshuffled). */
   def minhashEstimates(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int, r: Int, portable: Boolean,
-      maxBucket: Int = 1000, minAgree: Int = 0,
-      materialize: graft.operators.Materialize =
-        graft.operators.Materialize.SessionDefault(
-          "DedupFunctions.minhashEstimates.sig")): DataFrame = {
-    val sig = materialize(
-      minhashSignatures(docs, idCol, textCol, shingleN, k, portable))
+      maxBucket: Int = 1000, minAgree: Int = 0): DataFrame = {
+    val sig = minhashSignatures(docs, idCol, textCol, shingleN, k, portable)
+      .localCheckpoint()
     val pairs = bandPairs(lshBands(sig, idCol, "sig", k, r), idCol, maxBucket)
     // join keys must match bandPairs' member type: longs for integral
     // ids, strings otherwise (a blanket long cast would NULL every
@@ -326,17 +316,14 @@ object DedupFunctions {
     * equi-join on (band, band_key) — with the index stored bucketed by
     * band_key, only the new slice's bands move; new-vs-new candidates
     * reuse the grouped-bucket pair generation. The new bands relation
-    * MATERIALIZES EAGERLY by default (localCheckpoint): it has two
+    * MATERIALIZES EAGERLY (localCheckpoint): it has two
     * consumers (index join + self-pairs) which would otherwise re-run
     * the whole shingle/hash pipeline per reference, and the
     * materialized rows are exactly what a caller appends to the stored
     * index after accepting the slice — so the returned frame's plan
     * provably contains NO document-text scan (PlanShapeSpec pins
-    * this). `materialize` picks the durability trade: the default
-    * eager localCheckpoint truncates lineage (one lost executor kills
-    * the job — fine single-JVM); a cluster run under dynamic
-    * allocation should set session conf `graft.materialize=reliable`
-    * or pass [[graft.operators.Materialize.ReliableCheckpoint]].
+    * this). The pin truncates lineage: a lost executor fails the job,
+    * which is re-run.
     *
     * `index` must carry (band, band_key, `idCol`) with the SAME
     * (shingleN, k, r, portable, maxBucket) configuration it was built
@@ -345,12 +332,9 @@ object DedupFunctions {
     */
   def incrementalCandidates(newDocs: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleN: Int, k: Int, r: Int,
-      portable: Boolean, maxBucket: Int = 1000,
-      materialize: graft.operators.Materialize =
-        graft.operators.Materialize.SessionDefault(
-          "DedupFunctions.incrementalCandidates.newBands")): DataFrame = {
-    val nb = materialize(minhashBandIndex(newDocs, idCol, textCol,
-      shingleN, k, r, portable, maxBucket))
+      portable: Boolean, maxBucket: Int = 1000): DataFrame = {
+    val nb = minhashBandIndex(newDocs, idCol, textCol,
+      shingleN, k, r, portable, maxBucket).localCheckpoint()
     val oldPairs = nb
       .join(index.select(col("band"), col("band_key"),
         col(idCol).as("_acc_id")), Seq("band", "band_key"))
@@ -360,6 +344,19 @@ object DedupFunctions {
     val newPairs = bandPairs(nb, idCol, maxBucket)
     oldPairs.unionByName(newPairs).distinct()
   }
+
+  /** (doc_id, s): each doc's word `shingleN`-grams hashed to 64-bit
+    * longs, pinned — both exact joins read it four times. ONE site for
+    * both joins: given the same docs and `shingleN` they pin the same
+    * plan, which the cache manager keeps as one entry, so a site per
+    * join would hold that entry under two handles (the second persist
+    * a no-op, and either release evicting the other's pin). */
+  private def pinnedShingles(input: DataFrame, shingleN: Int): DataFrame =
+    graft.operators.Materialize.SitePin("DedupFunctions.shingles")(input
+      .select(col("doc_id"), TextFunctions.words(col("_text")).as("w"))
+      .filter(size(col("w")) >= shingleN)
+      .select(col("doc_id"), TextFunctions.shinglesFromWords(col("w"), shingleN).as("ss"))
+      .select(col("doc_id"), transform(col("ss"), x => xxhash64(x)).as("s")))
 
   /** Exact n-gram Jaccard similarity join with PREFIX FILTERING (the
     * PPJoin family): for threshold t, any pair with jaccard >= t must
@@ -375,12 +372,6 @@ object DedupFunctions {
     * relative to the doc count (every naive inverted index degenerates
     * to all-pairs there). No driver state; three shuffles total.
     */
-  /** @param persistShingles cache the hashed shingle relation
-    *   (memory-and-disk) for the algorithm's four passes. The cache
-    *   entry outlives the returned (lazy) frame — callers running many
-    *   joins in one long-lived session should pass false or
-    *   `spark.catalog.clearCache()` between runs; Spark's LRU evicts
-    *   it under pressure either way. */
   /** @param minPartitions when set, repartition the pruned (id, text)
     *   projection to at least this parallelism before the shingle/hash
     *   work. A small input scans as ONE partition (PLANS.md #4) and the
@@ -389,7 +380,6 @@ object DedupFunctions {
     *   at scale — file count already provides parallelism. */
   def jaccardSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double,
-      persistShingles: Boolean = true,
       minPartitions: Option[Int] = None): DataFrame = {
     // size(w) >= n guard instead of size(s) > 0: equivalent, but does
     // not re-evaluate the shingle HOF in a pushed-down filter.
@@ -399,11 +389,13 @@ object DedupFunctions {
     // array_intersect run over 8-byte longs instead of word strings.
     // Collision odds at 2^64 are negligible against any real corpus
     // slice's distinct-shingle count.
-    // The shingle relation is PERSISTED (memory-and-disk, spillable):
-    // the algorithm is inherently multi-pass — postings feed the
-    // frequency count and the prefix index, and both verification-join
-    // sides read the full sets — and recomputing scan+split+shingle+
-    // hash per pass is strictly worse at any scale.
+    // The shingle relation is PINNED (a SitePin: memory-and-disk,
+    // spillable, one live entry per site however many calls run in a
+    // session): the algorithm is inherently multi-pass — postings feed
+    // the frequency count and the prefix index, and both
+    // verification-join sides read the full sets — and recomputing
+    // scan+split+shingle+hash per pass is strictly worse at any scale.
+    // The hashed shingles are deterministic, so the lazy pin is safe.
     val pruned = docs.select(col(idCol).as("doc_id"), col(textCol).as("_text"))
     // minPartitions pins the width explicitly; unset, widen() adapts —
     // a single-row-group small-SF scan otherwise runs the whole
@@ -412,15 +404,7 @@ object DedupFunctions {
     // 2-task stages inside q81 on 32 idle cores). At scale the file
     // count exceeds the core count and widen() is the identity.
     val input = minPartitions.fold(widen(pruned))(n => pruned.repartition(n))
-    val shPlan = input
-      .select(col("doc_id"), TextFunctions.words(col("_text")).as("w"))
-      .filter(size(col("w")) >= shingleN)
-      .select(col("doc_id"), TextFunctions.shinglesFromWords(col("w"), shingleN).as("ss"))
-      .select(col("doc_id"), transform(col("ss"), x => xxhash64(x)).as("s"))
-    val sh =
-      if (persistShingles)
-        shPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shPlan
+    val sh = pinnedShingles(input, shingleN)
     val ex = sh.select(col("doc_id"), size(col("s")).as("n"), explode(col("s")).as("t"))
     val freq = ex.groupBy(col("t")).agg(count(lit(1)).as("df"))
     // rare-first prefix per doc, array-native: regroup the doc's
@@ -508,7 +492,6 @@ object DedupFunctions {
     * recall at the threshold. */
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double,
-      persistShingles: Boolean = true,
       minPartitions: Option[Int] = None): DataFrame = {
     // FLOOR, not round — the jaccardSimilarityJoin contract (see its
     // tMicro note): round can land ABOVE the caller's threshold
@@ -521,15 +504,7 @@ object DedupFunctions {
     val pruned = docs.select(col(idCol).as("doc_id"), col(textCol).as("_text"))
     // same width discipline as jaccardSimilarityJoin (see its note)
     val input = minPartitions.fold(widen(pruned))(n => pruned.repartition(n))
-    val shPlan = input
-      .select(col("doc_id"), TextFunctions.words(col("_text")).as("w"))
-      .filter(size(col("w")) >= shingleN)
-      .select(col("doc_id"), TextFunctions.shinglesFromWords(col("w"), shingleN).as("ss"))
-      .select(col("doc_id"), transform(col("ss"), x => xxhash64(x)).as("s"))
-    val sh =
-      if (persistShingles)
-        shPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shPlan
+    val sh = pinnedShingles(input, shingleN)
     val ex = sh.select(col("doc_id"), size(col("s")).as("n"), explode(col("s")).as("t"))
     val freq = ex.groupBy(col("t")).agg(count(lit(1)).as("df"))
     // prefix length n - ceil(t*n) + 1, ceil as exact integer division
@@ -1048,8 +1023,9 @@ object DedupFunctions {
     * position filter is row-local work inside the scan stage. The
     * word-array projection is consumed by three plan branches (span
     * detection, content hashing, rebuild) and the span-content frame
-    * by two (keeper election, removal join), so BOTH are
-    * localCheckpoint'd — one tokenization pass total, instead of the
+    * by two (keeper election, removal join), so BOTH are eagerly
+    * localCheckpoint'd (a lost executor fails the job, which is
+    * re-run) — one tokenization pass total, instead of the
     * measured 10-scan re-execution tree the lazy form planned (each
     * content reference re-ran span detection, which re-read the
     * input; the GlobalIndex round-12 lesson applied here). The words
@@ -1062,18 +1038,13 @@ object DedupFunctions {
       textCol: String,
       k: Int = 5,
       minDocs: Int = 2,
-      minRun: Int = 3,
-      // strategy for the CORPUS-SIZED words pin (the content pin below
-      // is span-count-sized and stays localCheckpoint): default eager
-      // localCheckpoint; cluster runs set graft.materialize=reliable
-      materialize: graft.operators.Materialize =
-        graft.operators.Materialize.SessionDefault(
-          "DedupFunctions.scrubDuplicateSpans.words")): DataFrame = {
-    val words = materialize(widen(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), TextFunctions.words(col(textCol)).as("_w")))
-      // one tokenization pass for all three consumers — WIDENED before
-      // the tokenize so the pass (and the pinned copy every later
-      // branch reads) is parallel on a narrow small-SF scan (see widen)
+      minRun: Int = 3): DataFrame = {
+    // one tokenization pass for all three consumers — WIDENED before
+    // the tokenize so the pass (and the pinned copy every later branch
+    // reads) is parallel on a narrow small-SF scan (see widen)
+    val words = widen(docs.select(col(idCol), col(textCol)))
+      .select(col(idCol), TextFunctions.words(col(textCol)).as("_w"))
+      .localCheckpoint()
     val spans = spanRuns(words, idCol, k, minDocs, minRun)
     // span content hash: the exact covered words, not the grams
     val content = spans.join(words, Seq(idCol))

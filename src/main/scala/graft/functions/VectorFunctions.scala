@@ -324,9 +324,10 @@ object VectorFunctions {
     * seeding has always used, so at corpus sizes ≤ N (every test and
     * bench scale here) the sample IS the corpus and training is
     * unchanged, while at 100 TB the per-round cost is bounded by the
-    * sample. The sample materializes ONCE (localCheckpoint,
+    * sample. The sample materializes ONCE (persisted,
     * hash-partitioned for a deterministic layout); rounds iterate over
-    * the pinned copy, never re-reading the corpus. */
+    * the pinned copy, never re-reading the corpus, and the pin is
+    * released when training ends. */
   def ivfTrain(vecs: DataFrame, vecCol: String, dim: Int, k: Int,
       iters: Int = 3, trainSampleN: Int = 1 << 17): Array[Array[Double]] = {
     val vAll = vecs.select(col(vecCol).cast("array<double>").as("v0"))
@@ -371,7 +372,10 @@ object VectorFunctions {
     * shape paid two jobs (an eager localCheckpoint pass, then a
     * re-hash + sort + collect over the pin) for the same rows; the
     * seed values are identical (same hash, same order, same top-k).
-    * Callers unpersist the returned frame when training ends. */
+    * The returned frame (columns `v`, `h`) IS the persisted one:
+    * callers unpersist it when training ends. Unpersisting a frame
+    * derived from it (a `select`) would be a silent no-op — the cache
+    * manager matches the exact cached plan — and leak the entry. */
   private def trainSample(vAll: DataFrame, n: Int,
       k: Int): (DataFrame, Array[Array[Double]]) = {
     val par = vAll.sparkSession.sparkContext.defaultParallelism
@@ -381,7 +385,7 @@ object VectorFunctions {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seeds = sampled.orderBy(col("h")).limit(k).select(col("v"))
       .collect().map(_.getSeq[Double](0).toArray)
-    (sampled.select(col("v")), seeds)
+    (sampled, seeds)
   }
 
   /** Argmax-similarity centroid id for a UNIT vector column. Native

@@ -30,14 +30,12 @@ import org.apache.spark.sql.functions._
   * boundaries with an RDD-id-derived seed, so two separate
   * materializations could legally pick different boundaries and the
   * offsets would then belong to a different partitioning than the
-  * local ranks (GlobalIndexSpec pins the plan shape). The
-  * [[Materialize]] strategy picks the durability/speed trade:
-  * localCheckpoint (default; single-machine), persist(DISK_ONLY_2) or
-  * a reliable checkpoint for cluster runs where executor loss is
-  * routine. The final index is boundary-invariant either way: it
-  * equals the global rank of the key under ANY ordered partitioning,
-  * so run-to-run results are identical even though sampled boundaries
-  * may not be.
+  * local ranks (GlobalIndexSpec pins the plan shape). The pin is an
+  * eager `localCheckpoint()`: it truncates lineage, so a lost executor
+  * fails the job, which is re-run. The final index is
+  * boundary-invariant: it equals the global rank of the key under ANY
+  * ordered partitioning, so run-to-run results are identical even
+  * though sampled boundaries may not be.
   *
   * Requires `keys` to be a TOTAL order (unique combination) — ties
   * would make the numbering nondeterministic; append a unique id column
@@ -45,19 +43,12 @@ import org.apache.spark.sql.functions._
   */
 object GlobalIndex {
 
-  /** @param materialize how the ranked pass is pinned so every branch
-    *   reads ONE partitioning (a boundary-consistency requirement, see
-    *   [[Materialize]]): LocalCheckpoint (default — fastest, but an
-    *   executor loss kills the job; single-machine/bench),
-    *   PersistDisk (replicated, lineage kept; the cluster choice), or
-    *   ReliableCheckpoint (survives anything; needs a checkpoint dir). */
   def withRowIndex(
       df: DataFrame,
       keys: Seq[Column],
       indexCol: String = "idx",
-      numPartitions: Option[Int] = None,
-      materialize: Materialize = Materialize.LocalCheckpoint): DataFrame =
-    indexed(df, keys, indexCol, numPartitions, countCol = None, materialize)
+      numPartitions: Option[Int] = None): DataFrame =
+    indexed(df, keys, indexCol, numPartitions, countCol = None)
 
   /** [[withRowIndex]] plus the GLOBAL row count as a column — rank AND
     * n in one plan, which is exactly what positional statistics need
@@ -72,18 +63,15 @@ object GlobalIndex {
       keys: Seq[Column],
       indexCol: String = "idx",
       countCol: String = "n_total",
-      numPartitions: Option[Int] = None,
-      materialize: Materialize = Materialize.LocalCheckpoint): DataFrame =
-    indexed(df, keys, indexCol, numPartitions, countCol = Some(countCol),
-      materialize)
+      numPartitions: Option[Int] = None): DataFrame =
+    indexed(df, keys, indexCol, numPartitions, countCol = Some(countCol))
 
   private def indexed(
       df: DataFrame,
       keys: Seq[Column],
       indexCol: String,
       numPartitions: Option[Int],
-      countCol: Option[String],
-      materialize: Materialize): DataFrame = {
+      countCol: Option[String]): DataFrame = {
     require(keys.nonEmpty, "at least one ordering key")
     // internal names fail fast (the Merge/TableDiff discipline): a
     // caller column with one of these names would be silently
@@ -114,7 +102,7 @@ object GlobalIndex {
       var i = -1L
       it.map { r => i += 1; Row.fromSeq(r.toSeq :+ pid :+ i) }
     }(Encoders.row(outSchema))
-    // MATERIALIZED once (strategy-selected, default localCheckpoint):
+    // MATERIALIZED once (eager localCheckpoint):
     // exchange reuse across the data/offsets/count branches is the
     // boundary-consistency precondition, and it is FRAGILE under
     // composition — with an upstream aggregation, column pruning
@@ -124,9 +112,8 @@ object GlobalIndex {
     // scans, 4 range exchanges, 0 reuse) — with each copy legally
     // sampling DIFFERENT range boundaries. One materialized pass is
     // both the single-data-movement claim made here and the guarantee
-    // every consumer sees the same partitioning. On a cluster, pick
-    // the strategy by failure-domain — see [[Materialize]].
-    val local = materialize(localRaw)
+    // every consumer sees the same partitioning.
+    val local = localRaw.localCheckpoint()
 
     // one row per partition → exclusive prefix sum. Partial
     // aggregation folds each partition to ONE row BEFORE this

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * Like [[GlobalIndex]], the accumulated pass is MATERIALIZED once and
   * both consumers read that one materialization (boundary consistency:
   * boundaries are RDD-id-seeded, so separate materializations could
-  * legally differ; GlobalPrefixSpec pins the plan shape). The
-  * [[Materialize]] strategy picks the durability/speed trade for
-  * cluster runs. The result is boundary-invariant: it equals the
+  * legally differ; GlobalPrefixSpec pins the plan shape). The pin is
+  * an eager `localCheckpoint()`: a lost executor fails the job, which
+  * is re-run. The result is boundary-invariant: it equals the
   * prefix sum under the total order whatever boundaries the sampler
   * picked.
   *
@@ -46,8 +46,7 @@ object GlobalPrefix {
       keys: Seq[Column],
       value: Column,
       outCol: String = "running",
-      numPartitions: Option[Int] = None,
-      materialize: Materialize = Materialize.LocalCheckpoint): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame = {
     require(keys.nonEmpty, "at least one ordering key")
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
@@ -111,7 +110,7 @@ object GlobalPrefix {
         }
       }
     }(Encoders.row(outSchema))
-    // MATERIALIZED once (strategy-selected, default localCheckpoint) —
+    // MATERIALIZED once (eager localCheckpoint) —
     // same reasoning as [[GlobalIndex]]: exchange reuse between the
     // offsets branch and the output join is the boundary-consistency
     // CORRECTNESS precondition (each re-materialized range exchange
@@ -119,9 +118,8 @@ object GlobalPrefix {
     // offsets with partitions), and reuse measurably breaks under
     // composition when pruning diverges the branch plans. One
     // materialized pass closes the hazard and pins the
-    // one-data-movement cost claim; [[Materialize]] documents the
-    // executor-loss trade per strategy.
-    val local = materialize(localRaw)
+    // one-data-movement cost claim.
+    val local = localRaw.localCheckpoint()
 
     // one total row per partition (partial agg folds BEFORE the
     // exchange — control-plane movement only). Totals read the

@@ -1,178 +1,58 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.CacheBridge
 import org.apache.spark.storage.StorageLevel
 
-/** Materialization strategy for operators whose correctness requires
-  * every downstream branch to read ONE physical materialization of an
-  * intermediate pass ([[GlobalIndex]], [[GlobalPrefix]]: range
-  * boundaries are sampled with an RDD-id-derived seed, so two separate
-  * materializations of the "same" ranged pass can legally hold
-  * DIFFERENT partitionings — joining control-plane offsets computed on
-  * one against data rows of the other silently mispairs).
+/** The repo's pin idiom, one form per kind of site:
   *
-  * The strategies trade speed against failure-domain:
-  *
-  *  - [[Materialize.LocalCheckpoint]] — fastest (executor-local blocks,
-  *    no lineage): the bench/single-machine default. TRUNCATES LINEAGE
-  *    and pins blocks to specific executors, so on a real cluster one
-  *    lost executor (routine at 1000-executor scale, guaranteed under
-  *    dynamic allocation downscaling) makes the job unrecoverable.
-  *    Do not use with `spark.dynamicAllocation.enabled` unless
-  *    `spark.dynamicAllocation.cachedExecutorIdleTimeout` is infinite.
-  *  - [[Materialize.persistDisk]] — `persist(DISK_ONLY_2)`: blocks are
-  *    written to disk with a replica on a second executor, and lineage
-  *    is KEPT, so a lost executor recomputes or reads the replica
-  *    instead of killing the job. All consumers share the one cached
-  *    plan (Spark's cache manager canonicalizes them onto a single
-  *    InMemoryRelation), so boundary consistency holds identically.
-  *    The cluster-scale default choice. The returned handle is
-  *    RELEASABLE — call `release()` when downstream consumption is
-  *    done (unpersisting the operator's output is a silent no-op; see
-  *    [[Materialize.PersistDisk]]).
-  *  - [[Materialize.ReliableCheckpoint]] — `checkpoint()` to the
-  *    configured `spark.sparkContext.setCheckpointDir` (HDFS/object
-  *    store): survives ANY number of executor losses; the most durable
-  *    and the slowest (a full write + read of the pass through the
-  *    reliable store). Requires the checkpoint dir to be set — fails
-  *    loudly otherwise.
-  *
-  * Callers pass the strategy per call; the default everywhere is
-  * LocalCheckpoint because this repo's tests and benches run
-  * single-JVM, where its executor-loss caveat cannot bite.
+  *  - EAGER sites (the streaming operators, [[GlobalIndex]],
+  *    [[GlobalPrefix]], the DedupFunctions signature/band/word passes)
+  *    call `df.localCheckpoint()` directly: the pin is taken at
+  *    construction time, so every consumer reads ONE evaluation (one
+  *    sampled range-boundary set, one `current_timestamp()`, the exact
+  *    rows whose state delta was just written). It truncates lineage
+  *    and keeps its blocks on the executor that computed them, so a
+  *    lost executor fails the job or micro-batch, which is re-run —
+  *    every streaming operator here is replay-safe by batch id.
+  *  - LAZY registry sites (deterministic multi-consumer relations in
+  *    query-registry functions, where no caller owns a cache entry's
+  *    lifetime) call [[Materialize.SitePin]].
   */
-sealed trait Materialize {
-  /** One shared materialization of `df` that every downstream branch
-    * reads — see the strategy docs for the durability trade. */
-  def apply(df: DataFrame): DataFrame
-
-  /** Whether this strategy materializes at CONSTRUCTION time (vs
-    * lazily on the first action). Operators whose pin must capture a
-    * non-deterministic evaluation (e.g. a `current_timestamp()` the
-    * caller just persisted a copy of — [[graft.streaming.StreamingNearDup]])
-    * require an eager strategy: a lazy pin with lineage kept would
-    * legally RE-evaluate on recompute and drift from the persisted
-    * copy. */
-  def isEager: Boolean = true
-
-  /** Conf-resolving strategies return the concrete choice for this
-    * frame's session; concrete strategies return themselves. */
-  def resolveFor(df: DataFrame): Materialize = this
-
-  /** [[resolveFor]] for an EAGER-REQUIRED site (streaming operators
-    * whose pin must capture the evaluation just persisted/counted).
-    * Concrete strategies return themselves unchanged — a caller who
-    * explicitly passed a lazy strategy gets the operator's loud
-    * `require` (they overrode the default deliberately). Conf-resolved
-    * strategies ([[Materialize.SessionDefault]]) instead substitute
-    * [[Materialize.LocalCheckpoint]] with a warning when the session
-    * flag picks a lazy one: `graft.materialize` is advertised as a
-    * one-flag session-wide switch, and `persist` crashing every
-    * streaming operator at its first micro-batch would contradict
-    * that contract (`reliable` is eager and passes through). */
-  def resolveEagerFor(df: DataFrame): Materialize = resolveFor(df)
-}
-
 object Materialize {
 
-  private lazy val log = new graft.core.Slf4jLogger("graft.materialize")
-
-  /** Session conf key for the conf-overridable strategies:
-    * `local` | `persist` | `reliable` (see [[SessionDefault]]). */
-  val ConfKey = "graft.materialize"
-
-  case object LocalCheckpoint extends Materialize {
-    // EAGER by choice: construction-time materialization IS the
-    // boundary-consistency statement these operators make (every
-    // consumer reads one pinned partitioning, whatever actions follow).
-    // The lazy form shares within one action too
-    // (MaterializationDisciplineSpec) and was measured here — no
-    // faster on the q65/q124 family — so eager keeps the stronger
-    // guarantee at no cost.
-    def apply(df: DataFrame): DataFrame = df.localCheckpoint()
-  }
-
-  /** Each call returns a fresh releasable instance — the caller that
-    * picked the persist strategy OWNS the cache entry's lifetime.
-    * `level` defaults to DISK_ONLY_2 (replica on a second executor —
-    * the corpus-scale choice); control-plane-sized pins can pass
-    * MEMORY_AND_DISK. */
-  def persistDisk(level: StorageLevel = StorageLevel.DISK_ONLY_2): PersistDisk =
-    new PersistDisk(level)
-
-  /** Releasable persist handle. Calling `unpersist()` on the
-    * OPERATOR'S OUTPUT would be a silent no-op — the cache manager
-    * matches the exact cached plan (the operator's internal pass), not
-    * the returned join plan — so without this handle every
-    * PersistDisk call in a long-lived session would leak one
-    * disk-cached relation until clearCache(). Call [[release]] once
-    * downstream consumption is done. */
-  final class PersistDisk private[Materialize] (
-      level: StorageLevel = StorageLevel.DISK_ONLY_2) extends Materialize {
-    // WEAK pins, not the Datasets themselves: a Dataset (and its
-    // analyzed plan) strongly references its SparkSession, and a
-    // handle sitting in the weak-keyed sitePins map would then pin its
-    // own key — the dropped session could never be collected. See
-    // [[org.apache.spark.sql.graft.CacheBridge]].
-    @volatile private var pinned: List[org.apache.spark.sql.graft.CacheBridge.PlanPin] = Nil
-    override def isEager: Boolean = false
-    // persist is lazy, but all references canonicalize onto the ONE
-    // InMemoryRelation, whose child executes once — one exchange, one
-    // sampled boundary set, shared by every branch. No eager action
-    // needed (an extra count() would be a second pass over the data).
-    def apply(df: DataFrame): DataFrame = {
-      val p = df.persist(level)
-      val pin = org.apache.spark.sql.graft.CacheBridge.pin(p)
-      synchronized { pinned ::= pin }
-      p
-    }
-    /** Unpersist every pass this instance pinned (no-op for entries
-      * the cache manager or the session has already dropped). */
-    def release(blocking: Boolean = false): Unit = synchronized {
-      pinned.foreach(_.release(blocking))
-      pinned = Nil
-    }
-  }
-
-  case object ReliableCheckpoint extends Materialize {
-    def apply(df: DataFrame): DataFrame = {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "Materialize.ReliableCheckpoint needs spark.sparkContext.setCheckpointDir(...)")
-      df.checkpoint()
-    }
-  }
-
-  /** Bounded, releasable persist pin for sites with no caller to own
-    * a [[PersistDisk]] handle's lifetime (query-registry functions): a
-    * plain lazy persist there would leak one cache entry PER CALL —
-    * the q151 rule that forced those sites onto `localCheckpoint` in
-    * the first place. At most ONE pinned relation per (session, site)
-    * is ever alive: pinning releases the site's previous handle first,
-    * and [[releaseSitePins]] clears a session's remainder.
+  /** Bounded, releasable persist pin for sites with no caller to own a
+    * cache entry's lifetime (query-registry functions): a plain lazy
+    * persist there would leak one cache entry PER CALL — the q151 rule
+    * that forced those sites onto `localCheckpoint` in the first
+    * place. At most ONE pinned relation per (session, site) is ever
+    * alive: pinning releases the site's previous entry first, and
+    * [[releaseSitePins]] clears a session's remainder.
     *
     * Lazy and shared via the cache manager (the fast shape `cache()`
     * had — no up-front job boundary, branches of one action share
-    * blocks as they compute, MaterializationDisciplineSpec), with
-    * lineage KEPT — an executor loss recomputes the lost blocks
-    * instead of killing the job, so this is ALSO the scale-safe
-    * default for these pins (the localCheckpoint forms it replaces
-    * truncate lineage). DETERMINISTIC pins only: a lazy pin may
-    * legally recompute, so a non-deterministic upstream
-    * (current_timestamp, rand, sampled boundaries) must use an eager
-    * strategy instead.
+    * blocks as they compute, MaterializationDisciplineSpec), at
+    * MEMORY_AND_DISK with lineage KEPT — an executor loss recomputes
+    * the lost blocks instead of killing the job. DETERMINISTIC pins
+    * only: a lazy pin may legally recompute, so a non-deterministic
+    * upstream (current_timestamp, rand, sampled boundaries) must use
+    * an eager `localCheckpoint()` instead.
     *
-    * SINGLE-FLIGHT per site: two CONCURRENT queries pinning the same
-    * site in one session release each other's live handle mid-job —
-    * with deterministic lineage that is a silent recompute (the
-    * evicted query re-derives its blocks), a performance hazard only,
-    * never corruption. Registry sites are invoked single-flight by
-    * Bench/Verify; a concurrent caller who needs isolation should own
-    * a [[PersistDisk]] handle instead. */
-  final case class SitePin(site: String,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK) extends Materialize {
-    override def isEager: Boolean = false
+    * Calling `unpersist()` on a frame DERIVED from the pinned one would
+    * be a silent no-op — the cache manager matches the exact cached
+    * plan — which is why the pin is released through the site, never
+    * through the caller's result.
+    *
+    * SINGLE-FLIGHT per site: two pins of one site inside ONE plan, or
+    * two CONCURRENT queries pinning the same site in one session,
+    * release each other's live entry mid-job — with deterministic
+    * lineage that is a silent recompute (the evicted consumer
+    * re-derives its blocks), a performance hazard only, never
+    * corruption. Registry sites are invoked single-flight by
+    * Bench/Verify. */
+  final case class SitePin(site: String) {
     def apply(df: DataFrame): DataFrame = sitePins.synchronized {
-      // the whole replace-release-pin sequence is atomic under the
+      // the whole release-persist-record sequence is atomic under the
       // registry lock: two concurrent pins at one site interleaving
       // release and persist could otherwise strand a persisted entry
       // under a handle already evicted from the map (the per-call leak
@@ -182,89 +62,42 @@ object Materialize {
       // unpersisting it after the new persist would evict the new pin.
       // persist() is a driver-side cache-manager registration, not a
       // job, so holding the lock across it is cheap.
-      val h = new PersistDisk(level)
       val m = Option(sitePins.get(df.sparkSession)).getOrElse {
-        val fresh = scala.collection.mutable.Map.empty[String, PersistDisk]
+        val fresh = scala.collection.mutable.Map.empty[String, CacheBridge.PlanPin]
         sitePins.put(df.sparkSession, fresh)
         fresh
       }
-      m.put(site, h).foreach(_.release())
-      h(df)
+      m.remove(site).foreach(_.release(blocking = false))
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      m.put(site, CacheBridge.pin(p))
+      p
     }
   }
 
   // weak keys: a dropped SparkSession must not be kept alive by its
   // pin bookkeeping (the cached blocks die with the session anyway).
   // This only works because the VALUES hold no strong path back to the
-  // key: PersistDisk pins via CacheBridge's weak (session, plan) refs —
-  // a handle holding Datasets would strongly reference the session and
-  // pin its own key forever (WeakHashMap semantics).
+  // key: CacheBridge pins hold weak (session, plan) refs — a handle
+  // holding Datasets would strongly reference the session and pin its
+  // own key forever (WeakHashMap semantics).
   private val sitePins =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, PersistDisk]]
+      scala.collection.mutable.Map[String, CacheBridge.PlanPin]]
 
-  /** Release every [[SitePin]] handle held for `spark` — harness/
+  /** Release every [[SitePin]] entry held for `spark` — harness/
     * session-teardown hook (Bench/Verify's `clearCache()` already
-    * evicts the blocks; this also clears the handle bookkeeping). */
+    * evicts the blocks; this also clears the pin bookkeeping). */
   def releaseSitePins(spark: SparkSession): Unit = sitePins.synchronized {
     Option(sitePins.get(spark)).foreach { m =>
-      m.values.foreach(_.release()); m.clear()
+      m.values.foreach(_.release(blocking = false)); m.clear()
     }
   }
 
-  /** Test/observability hook: live [[SitePin]] handle count for a
-    * session (bounded by the number of distinct sites, never by call
-    * count — the no-leak property MaterializationDisciplineSpec pins). */
+  /** Test/observability hook: live [[SitePin]] count for a session
+    * (bounded by the number of distinct sites, never by call count —
+    * the no-leak property MaterializationDisciplineSpec pins). */
   private[graft] def liveSitePins(spark: SparkSession): Int =
     sitePins.synchronized {
       Option(sitePins.get(spark)).map(_.size).getOrElse(0)
     }
-
-  /** The conf-overridable strategy for a library/registry pin site:
-    * session conf [[ConfKey]] (`graft.materialize`) picks
-    * `local` → [[LocalCheckpoint]], `persist` → [[SitePin]] (keyed by
-    * `site`), `reliable` → [[ReliableCheckpoint]]; unset falls back to
-    * `fallback` (same vocabulary). One session flag switches every
-    * threaded pin site to the reliable store for a 100 TB run with
-    * dynamic allocation — no per-call plumbing needed. */
-  final case class SessionDefault(site: String, fallback: String = "local")
-      extends Materialize {
-    override def resolveFor(df: DataFrame): Materialize =
-      strategy(df.sparkSession.conf.get(ConfKey, fallback), site)
-    /** Eager-required resolution: a session-conf `persist` (lazy) falls
-      * back to [[LocalCheckpoint]] with a warning instead of crashing
-      * the streaming operator — see [[Materialize.resolveEagerFor]]. */
-    override def resolveEagerFor(df: DataFrame): Materialize = {
-      val r = resolveFor(df)
-      if (r.isEager) r
-      else {
-        log.warn(s"$ConfKey resolved to the lazy strategy $r at " +
-          s"eager-required site '$site' — falling back to " +
-          "LocalCheckpoint (the pin must capture the evaluation just " +
-          "persisted; use 'reliable' for a durable eager pin)")
-        LocalCheckpoint
-      }
-    }
-    def apply(df: DataFrame): DataFrame = resolveFor(df)(df)
-    // unresolved eagerness is unknowable; callers that REQUIRE eager
-    // must check resolveFor(df).isEager (StreamingNearDup does)
-    override def isEager: Boolean =
-      throw new UnsupportedOperationException(
-        "SessionDefault.isEager is conf-dependent — call resolveFor(df).isEager")
-  }
-
-  private def strategy(name: String, site: String): Materialize = name match {
-    case "local"    => LocalCheckpoint
-    case "persist"  => SitePin(site)
-    case "reliable" => ReliableCheckpoint
-    case other => throw new IllegalArgumentException(
-      s"$ConfKey=$other (expected local | persist | reliable)")
-  }
-
-  /** Query-registry pin for a DETERMINISTIC multi-consumer relation:
-    * conf-overridable ([[ConfKey]]), defaulting to [[SitePin]] — the
-    * lazy shared shape that avoids both the per-call cache leak and
-    * the eager pin's extra job boundary (the q125/q145 regression). */
-  def registryPin(df: DataFrame, site: String): DataFrame =
-    SessionDefault(site, fallback = "persist")(df)
 }

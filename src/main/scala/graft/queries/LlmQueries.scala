@@ -1719,16 +1719,15 @@ object LlmQueries {
           .select(col("source"),
             explode(TextFunctions.shinglesFromWords(col("w"), 3)).as("sh"))
           .select(col("source"), xxhash64(col("sh")).as("h"))
-        // 20 rows, three plan branches. registryPin (bounded releasable
-        // SitePin by default): lazy-shared like cache WITHOUT the
+        // 20 rows, three plan branches. SitePin (bounded, releasable):
+        // lazy-shared like cache WITHOUT the
         // per-call leak the q151 rule forbids — the eager
         // localCheckpoint this replaces paid an up-front job boundary
         // per call (the r13 q125/q145 regression), and truncated
         // lineage (executor-loss job-killer at cluster scale)
-        val states = graft.operators.Materialize.registryPin(
+        val states = graft.operators.Materialize.SitePin("q125.states")(
           sh.groupBy(col("source"))
-            .agg(graft.functions.DistinctSketch.sketchState(col("h")).as("st")),
-          "q125.states")
+            .agg(graft.functions.DistinctSketch.sketchState(col("h")).as("st")))
         val ests = states.groupBy(col("source"))
           .agg(graft.functions.DistinctSketch.mergeEstimate(col("st")).as("est"))
         val unions = states.select(col("source").as("sa"), col("st").as("sta"))
@@ -2044,17 +2043,16 @@ object LlmQueries {
         val docs = t(s, dir, "documents")
         val seed = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         val ev = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-        // control-plane table, two consumers. registryPin (bounded
-        // releasable SitePin by default): the lazy-shared cache shape
+        // control-plane table, two consumers. SitePin (bounded,
+        // releasable): the lazy-shared cache shape
         // without the per-call leak (q151 rule) — keeps the train
         // pipeline fused into the first consumer's job, no up-front
         // job boundary, and lineage KEPT (the lazy-localCheckpoint
         // form this replaces finalized a lineage-truncating checkpoint
         // after the first job — the r13 q145 2.6→3.7 s regression)
-        val profiles = graft.operators.Materialize.registryPin(
+        val profiles = graft.operators.Materialize.SitePin("q145.profiles")(
           graft.functions.LangProfile
-            .trainProfiles(seed, col("lang"), col("text"), k = 100),
-          "q145.profiles")
+            .trainProfiles(seed, col("lang"), col("text"), k = 100))
         graft.functions.LangProfile
           .classify(ev, "doc_id", col("text"), profiles, k = 100, m = 20)
           .join(ev.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -3484,18 +3482,17 @@ object LlmQueries {
             .select((col("doc_id") + 300000L).as("doc_id"),
               substring(col("text"), 1, 400).as("text")))
         // (doc_id, h) long pairs — compact; THREE consumers (bench
-        // side, train side, per-doc sizes), so pinned once. registryPin
-        // (bounded releasable SitePin by default): this relation is
+        // side, train side, per-doc sizes), so pinned once. SitePin
+        // (bounded, releasable): this relation is
         // CORPUS-scale, so the lineage-kept lazy pin matters twice —
         // no per-call leak, and an executor loss recomputes instead of
         // killing the job (the localCheckpoint it replaces truncated
         // lineage)
-        val grams = graft.operators.Materialize.registryPin(corpus
+        val grams = graft.operators.Materialize.SitePin("q179.grams")(corpus
           .select(col("doc_id"), TextFunctions.words(col("text")).as("w"))
           .select(col("doc_id"),
             explode(TextFunctions.shinglesFromWords(col("w"), 5)).as("sh"))
-          .select(col("doc_id"), graft.functions.Hashes.md5Long(col("sh")).as("h")),
-          "q179.grams")
+          .select(col("doc_id"), graft.functions.Hashes.md5Long(col("sh")).as("h")))
         val bench = grams.filter(pmod(col("doc_id"), lit(13)) === 0)
           .select(col("doc_id").as("bench_id"), col("h"))
         val rare = bench.groupBy(col("h"))

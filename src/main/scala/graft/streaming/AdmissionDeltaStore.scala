@@ -225,25 +225,21 @@ private[streaming] object AdmissionDeltaStore {
     * each canonical `(doc_id, key, __row)` row of `batch` with `adm`;
     * the per-key delta written and the admitted rows returned (in
     * `batch`'s schema) both derive from that ONE pinned verdict frame.
-    * The pins must be EAGER: the returned rows are the exact set whose
-    * delta was just written. The rule reads `canonical` twice (totals,
-    * rank window), so the caller's batch runs once, in its pin; the
-    * folded state (one row per key) is read twice, inside the verdict
-    * pin. */
-  def admit(store: BatchPartitionedStore, key: String, owner: String,
-      batch: DataFrame, batchId: Long, idCol: String, keyCol: String,
-      materialize: graft.operators.Materialize)(
+    * Both pins are eager `localCheckpoint()`s: the returned rows are
+    * the exact set whose delta was just written, and a lost executor
+    * fails the micro-batch, which is re-run. The rule reads
+    * `canonical` twice (totals, rank window), so the caller's batch
+    * runs once, in its pin; the folded state (one row per key) is read
+    * twice, inside the verdict pin. */
+  def admit(store: BatchPartitionedStore, key: String,
+      batch: DataFrame, batchId: Long, idCol: String, keyCol: String)(
       rule: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     store.compactIfDue(batchId)
-    val m = materialize.resolveEagerFor(batch)
-    require(m.isEager, s"$owner needs an EAGER Materialize " +
-      s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
-      "lazy pin could recompute the admitted set against a grown state")
     val st = store.state(batchId).getOrElse(emptyState(batch.sparkSession, key))
-    val canonical = m(batch.select(col(idCol).cast("long").as("doc_id"),
+    val canonical = batch.select(col(idCol).cast("long").as("doc_id"),
       col(keyCol).cast("string").as(key),
-      struct(batch.columns.map(c => col(s"`$c`")): _*).as(Row)))
-    val verdicts = m(rule(st, canonical))
+      struct(batch.columns.map(c => col(s"`$c`")): _*).as(Row)).localCheckpoint()
+    val verdicts = rule(st, canonical).localCheckpoint()
     store.write(increment(verdicts, key), batchId)
     verdicts.filter(col("adm")).select(col(Row + ".*"))
   }

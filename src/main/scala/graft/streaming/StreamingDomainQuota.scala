@@ -90,16 +90,15 @@ object DomainQuota {
   * crash-safe compaction are the store's (see its scaladoc): a replayed
   * batch id admits exactly the rows of its first attempt.
   *
-  * @param materialize pin strategy for the admitted output — must
-  *   resolve EAGER (the StreamingQuota contract): the returned rows
-  *   must be the exact set whose delta was just written; a lazy pin
-  *   could recompute against a grown state.
+  * The admitted output is pinned eagerly (`localCheckpoint()`, the
+  * StreamingQuota contract): the returned rows are the exact set whose
+  * delta was just written; a lazy pin could recompute against a grown
+  * state. A lost executor fails the micro-batch, which is re-run.
+  *
   * @param compactEvery fold the deltas every N batches (0 = off), as
   *   [[BatchPartitionedStore]] describes. */
 final class StreamingDomainQuota(spark: SparkSession, stateDir: String,
     domainCol: String = "domain", idCol: String = "doc_id",
-    materialize: graft.operators.Materialize =
-      graft.operators.Materialize.SessionDefault("StreamingDomainQuota.admitted"),
     compactEvery: Int = 0) {
 
   private val store = AdmissionDeltaStore.open(spark, stateDir, "domain", compactEvery)
@@ -113,8 +112,8 @@ final class StreamingDomainQuota(spark: SparkSession, stateDir: String,
     * Pass the foreachBatch `batchId` for replay safety (the -1 default
     * appends, for bounded-loop callers). */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
-    AdmissionDeltaStore.admit(store, "domain", "StreamingDomainQuota",
-      batch, batchId, idCol, domainCol, materialize)(DomainQuota.rankedAdmissions)
+    AdmissionDeltaStore.admit(store, "domain",
+      batch, batchId, idCol, domainCol)(DomainQuota.rankedAdmissions)
 
   /** Fold the deltas into the `batch_id=-2` sentinel partition
     * (crash-safe: a crash can never silently reset domain budgets). */

@@ -99,16 +99,16 @@ object MixtureQuota {
   * `compactEvery` and crash-safe compaction are the store's) — the
   * structural twin of [[StreamingDomainQuota]] with the mixture gate.
   *
-  * @param materialize pin strategy for the admitted output — must
-  *   resolve EAGER (the StreamingQuota contract): the returned rows
-  *   must be the exact set whose delta was just written.
+  * The admitted output is pinned eagerly (`localCheckpoint()`, the
+  * StreamingQuota contract): the returned rows are the exact set whose
+  * delta was just written. A lost executor fails the micro-batch,
+  * which is re-run.
+  *
   * @param compactEvery fold the deltas every N batches (0 = off), as
   *   [[BatchPartitionedStore]] describes. */
 final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
     targetBp: Map[String, Int],
     stratumCol: String = "stratum", idCol: String = "doc_id",
-    materialize: graft.operators.Materialize =
-      graft.operators.Materialize.SessionDefault("StreamingMixtureQuota.admitted"),
     compactEvery: Int = 0) {
 
   private val store = AdmissionDeltaStore.open(spark, stateDir, "stratum", compactEvery)
@@ -122,8 +122,8 @@ final class StreamingMixtureQuota(spark: SparkSession, stateDir: String,
     * schema). Pass the foreachBatch `batchId` for replay safety (the
     * -1 default appends, for bounded-loop callers). */
   def admit(batch: DataFrame, batchId: Long = -1L): DataFrame =
-    AdmissionDeltaStore.admit(store, "stratum", "StreamingMixtureQuota",
-      batch, batchId, idCol, stratumCol, materialize)(
+    AdmissionDeltaStore.admit(store, "stratum",
+      batch, batchId, idCol, stratumCol)(
       MixtureQuota.rankedAdmissions(_, _, targetBp))
 
   /** Fold the deltas into the `batch_id=-2` sentinel partition

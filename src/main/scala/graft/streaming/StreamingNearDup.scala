@@ -41,14 +41,12 @@ import graft.functions.{DedupFunctions, TextFunctions}
   * the per-batch join shuffles the (small) batch side to the index's
   * band buckets; the retained corpus never re-shuffles.
   */
-/** @param materialize pin strategy for the returned kept-set
-  *   ([[graft.operators.Materialize]]) — must resolve to an EAGER
-  *   strategy (LocalCheckpoint default, or ReliableCheckpoint /
-  *   session conf `graft.materialize=reliable` for cluster runs under
-  *   dynamic allocation): the kept frame must capture the exact rows
-  *   whose bands were just appended to the index, and a LAZY pin with
-  *   lineage kept could legally recompute — re-evaluating
-  *   current_timestamp() and drifting from the persisted index. */
+/** The returned kept-set is pinned EAGERLY (`localCheckpoint()`): it
+  * must capture the exact rows whose bands were just appended to the
+  * index, and a lazy pin with lineage kept could legally recompute —
+  * re-evaluating current_timestamp() and drifting from the persisted
+  * index. A lost executor fails the micro-batch, which is re-run
+  * (replay-safe by batch id). */
 /** @param compactEvery fold the index's batch partitions every N
   *   batches (0 = off), as [[BatchPartitionedStore]] describes; expired
   *   rows drop in the same rewrite when `retention` is set, and the
@@ -57,9 +55,6 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
     idCol: String = "doc_id", textCol: String = "text",
     shingleN: Int = 3, k: Int = 12, r: Int = 2,
     minSim: Double = 0.7, retention: Option[String] = None,
-    materialize: graft.operators.Materialize =
-      graft.operators.Materialize.SessionDefault(
-        "StreamingNearDup.kept"),
     compactEvery: Int = 0) {
 
   // the index's fold: rows stay as they are (nothing aggregates),
@@ -160,14 +155,8 @@ final class StreamingNearDup(spark: SparkSession, indexDir: String,
       // batch), and with `retention` set the second run's
       // current_timestamp() could cross the horizon: a doc kept but
       // never indexed is re-admittable forever. A lazy pin with lineage
-      // kept can recompute the same way, so it fails the require;
-      // resolveEagerFor turns a session-conf 'persist' into
-      // LocalCheckpoint with a warning.
-      val m = materialize.resolveEagerFor(kept)
-      require(m.isEager, s"StreamingNearDup needs an EAGER Materialize " +
-        s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
-        "lazy pin may recompute and drift from the just-appended index")
-      val pinned = m(kept)
+      // kept can recompute the same way, so the pin is eager.
+      val pinned = kept.localCheckpoint()
       // index only survivors' bands; duplicates contribute no state
       index.write(bs.join(pinned.select(col(idCol)), Seq(idCol))
         .select(col(idCol), col("band"), col("band_key"), col("sig"),

@@ -29,24 +29,17 @@ import org.apache.spark.sql.functions._
   *
   * At cluster scale: the state side of the join is tiny and
   * broadcast; the batch side shuffles once on the key for the ranking
-  * window. The admitted output is eagerly materialized
-  * (strategy-selected, see `materialize`) before the state append so
-  * the side effect and the returned frame agree even if the caller
-  * re-evaluates lazily.
+  * window. The admitted output is pinned EAGERLY (`localCheckpoint()`)
+  * before the state append, so the returned frame is the exact rows
+  * whose delta was just written even if the caller re-evaluates
+  * lazily — a lazy pin could recompute against a state that has since
+  * grown. A lost executor fails the micro-batch, which is re-run
+  * (replay-safe by batch id, see [[admit]]).
   */
-/** @param materialize pin strategy for the admitted output
-  *   ([[graft.operators.Materialize]]) — must resolve EAGER
-  *   (LocalCheckpoint default, ReliableCheckpoint / session conf
-  *   `graft.materialize=reliable` for cluster runs): the returned
-  *   frame must be the exact rows whose delta was just written to the
-  *   state; a lazy pin could recompute against a state that has since
-  *   grown and return a DIFFERENT admitted set than was counted. */
 /** @param compactEvery fold the deltas every N batches (0 = off), as
   *   [[BatchPartitionedStore]] describes. */
 final class StreamingQuota(spark: SparkSession, stateDir: String,
     keyCol: String, orderCol: String, tieCol: String, budget: Int,
-    materialize: graft.operators.Materialize =
-      graft.operators.Materialize.SessionDefault("StreamingQuota.admitted"),
     compactEvery: Int = 0) {
   require(budget > 0, "budget must be positive")
 
@@ -75,16 +68,10 @@ final class StreamingQuota(spark: SparkSession, stateDir: String,
     val withUsed = usedExcluding(batchId)
       .fold(ranked.withColumn("graft_used", lit(0L)))(u =>
         ranked.join(broadcast(u), Seq(keyCol), "left"))
-    // resolveEagerFor: a session-conf 'persist' (the advertised
-    // one-flag knob) falls back to LocalCheckpoint with a warning;
-    // an EXPLICITLY passed lazy strategy still fails this require
-    val m = materialize.resolveEagerFor(batch)
-    require(m.isEager, s"StreamingQuota needs an EAGER Materialize " +
-      s"strategy (LocalCheckpoint or ReliableCheckpoint), got $m — a " +
-      "lazy pin could recompute the admitted set against a grown state")
-    val admitted = m(withUsed
+    val admitted = withUsed
       .filter(coalesce(col("graft_used"), lit(0L)) + col("graft_rk") <= budget)
-      .drop("graft_rk", "graft_used"))
+      .drop("graft_rk", "graft_used")
+      .localCheckpoint()
     store.write(admitted.groupBy(col(keyCol)).agg(count(lit(1)).as("n")), batchId)
     admitted
   }

@@ -19,7 +19,7 @@ import graft.GraftSession
   */
 object PlanBudget {
   /** Count of DISTINCT data exchanges in a physical-plan string. A
-    * cached relation (Materialize.SitePin / registryPin) is printed
+    * cached relation (Materialize.SitePin) is printed
     * once under EVERY InMemoryTableScan that references it, so a raw
     * occurrence count would bill the one shuffle that body executes
     * once per reference — dedup by the exchange's own line text

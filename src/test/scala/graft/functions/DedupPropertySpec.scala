@@ -169,8 +169,7 @@ class DedupPropertySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val portablePairs = cands(portable = true)
     val highJaccard = DedupFunctions.jaccardSimilarityJoin(
-      corpus, "doc_id", "text", shingleN = 3, threshold = 0.9,
-      persistShingles = false)
+      corpus, "doc_id", "text", shingleN = 3, threshold = 0.9)
       .select(col("d1"), col("d2"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val verified = portablePairs.intersect(highJaccard)

@@ -95,4 +95,25 @@ class IvfSpec extends SparkSpec {
       iters = 2, trainSampleN = 1)
     assert(sampled.map(_.toSeq).toSeq == sampled2.map(_.toSeq).toSeq)
   }
+
+  test("ivfTrain and pqTrain release their training-sample cache entry") {
+    // the sample is persisted for the Lloyd rounds; unpersisting a
+    // frame DERIVED from it (a select) is a silent no-op, which leaked
+    // one MEMORY_AND_DISK entry per training call. Compared as id sets:
+    // the ContextCleaner may drop OTHER entries during the call. The
+    // corpora are this row's own, one per trainer (both sample the
+    // same top-N plan): a sample plan that an earlier call already
+    // leaked would make the persist a no-op and hide the leak.
+    val own = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(dim)(d => math.cos(i * 11 + d * 5).toFloat))
+    }.toDF("vec_id", "embedding")
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet
+    val beforeIvf = persisted()
+    VectorFunctions.ivfTrain(own, "embedding", dim, k = 4, iters = 2)
+    assert((persisted() -- beforeIvf).isEmpty, "ivfTrain leaked its training sample")
+    val beforePq = persisted()
+    VectorFunctions.pqTrain(own.filter(col("vec_id") >= 5), "embedding", dim,
+      m = 4, ksub = 8, iters = 2)
+    assert((persisted() -- beforePq).isEmpty, "pqTrain leaked its training sample")
+  }
 }

@@ -116,61 +116,4 @@ class GlobalPrefixSpec extends SparkSpec {
     // the leading all-null prefix is NULL; everything after k=37 is not
     assert(got(0L).isEmpty && got(36L).isEmpty && got(40L).nonEmpty)
   }
-
-  test("Materialize.PersistDisk: same results, branches share one cached pass") {
-    val df = spark.range(0, 300).select(
-      ((col("id") * 7919) % 300).as("k"), (col("id") % 13).as("v"))
-    val byDefault = GlobalPrefix.runningSum(df, Seq(col("k")), col("v"),
-      numPartitions = Some(6)).select("k", "running")
-      .as[(Long, Long)].collect().toSet
-    val strat = Materialize.persistDisk()
-    val out = GlobalPrefix.runningSum(df, Seq(col("k")), col("v"),
-      numPartitions = Some(6), materialize = strat)
-    val byPersist = out.select("k", "running").as[(Long, Long)].collect().toSet
-    assert(byPersist == byDefault)
-    // boundary consistency in persist mode: both branches read the ONE
-    // InMemoryRelation (cache manager canonicalizes them). The cached
-    // relation's PRINTED body contains the single legitimate range
-    // exchange, so the invariant is: no range exchange beyond those
-    // inside printed InMemoryRelation bodies (an extra one would mean
-    // a branch re-materialized — and legally re-sampled — boundaries).
-    val fin = out.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    def occurrences(s: String, sub: String) =
-      s.sliding(sub.length).count(_ == sub)
-    assert(fin.contains("InMemoryTableScan"),
-      s"persist mode must read the cached pass:\n$fin")
-    assert(occurrences(fin, "Exchange rangepartitioning") <=
-      occurrences(fin, "InMemoryRelation"),
-      s"a branch re-materialized the range exchange outside the cache:\n$fin")
-    // the strategy handle owns the cache entry — unpersisting `out`
-    // would be a silent no-op (the cached plan is the internal pass,
-    // not the returned join plan), which in a long-lived session leaks
-    // one disk-cached relation per call. release() must drop it.
-    // DISK_ONLY_2 is this strategy's unique marker level, so the
-    // assertion is immune to OTHER tests' checkpoint blocks coming and
-    // going under the ContextCleaner.
-    def diskPinned = spark.sparkContext.getPersistentRDDs.values.count(
-      _.getStorageLevel == org.apache.spark.storage.StorageLevel.DISK_ONLY_2)
-    assert(diskPinned >= 1, "persist mode must pin a DISK_ONLY_2 pass")
-    strat.release(blocking = true)
-    assert(diskPinned == 0,
-      "release() must drop the pinned pass (cache leak)")
-  }
-
-  test("Materialize.ReliableCheckpoint needs a checkpoint dir, then works") {
-    val df = spark.range(0, 50).select(col("id").as("k"), lit(1L).as("v"))
-    val hadDir = spark.sparkContext.getCheckpointDir
-    if (hadDir.isEmpty)
-      intercept[IllegalArgumentException] {
-        GlobalPrefix.runningSum(df, Seq(col("k")), col("v"),
-          materialize = Materialize.ReliableCheckpoint)
-      }
-    val dir = java.nio.file.Files.createTempDirectory("graft-relckpt-")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    val got = GlobalPrefix.runningSum(df, Seq(col("k")), col("v"),
-        numPartitions = Some(4), materialize = Materialize.ReliableCheckpoint)
-      .select("k", "running").as[(Long, Long)].collect().toSet
-    assert(got == (0L until 50L).map(k => k -> (k + 1)).toSet)
-  }
 }

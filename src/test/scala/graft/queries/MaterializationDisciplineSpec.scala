@@ -70,12 +70,11 @@ class MaterializationDisciplineSpec extends SparkSpec {
     finally { df.unpersist(); () }
   }
 
-  // ---- the r14 strategy-threading rows: every corpus-scale pin site
-  // now goes through [[graft.operators.Materialize]], and the registry
-  // sites (q125.states, q145.profiles, q179.grams) use the bounded
-  // releasable SitePin — these rows pin its three load-bearing claims:
-  // cache-like sharing, per-site boundedness (NO per-call leak), and
-  // the conf override that switches a 100 TB run to the reliable store.
+  // ---- the SitePin rows: the registry sites (q125.states,
+  // q145.profiles, q179.grams) and the exact joins' shingle relations
+  // use the bounded releasable SitePin — these rows pin its two
+  // load-bearing claims: cache-like sharing and per-site boundedness
+  // (NO per-call leak).
 
   test("SitePin shares the upstream between branches of one action, like cache") {
     import graft.operators.Materialize
@@ -86,113 +85,40 @@ class MaterializationDisciplineSpec extends SparkSpec {
   }
 
   test("SitePin is BOUNDED per site: N calls leave one live handle and one cache entry") {
+    import graft.functions.DedupFunctions
     import graft.operators.Materialize
-    Materialize.releaseSitePins(spark)
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.size
-    (0 until 5).foreach { i =>
-      // distinct plans per call (the registry's per-SF reality) — a
-      // plain lazy persist here would leak 5 cache entries
-      val df = Materialize.SitePin("spec.bounded")(
-        base.filter(col("v") >= i))
-      df.agg(sum("v")).collect()
-      ()
-    }
-    assert(Materialize.liveSitePins(spark) == 1,
-      "repeated pins at one site must keep exactly one live handle")
-    assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
-      s"SitePin leaked cache entries: ${spark.sparkContext.getPersistentRDDs.size - before}")
-    Materialize.releaseSitePins(spark)
-    assert(spark.sparkContext.getPersistentRDDs.size <= before,
-      "releaseSitePins must drop the last pinned relation")
-    assert(Materialize.liveSitePins(spark) == 0)
-  }
-
-  test("registryPin: graft.materialize conf overrides the SitePin default at every threaded site") {
-    import graft.operators.Materialize
-    // local → eager localCheckpoint (no cache entry, LogicalRDD leaf)
-    spark.conf.set(Materialize.ConfKey, "local")
-    try {
-      spark.catalog.clearCache()
-      val pinned = Materialize.registryPin(base, "spec.conf")
-      // eager localCheckpoint = LogicalRDD leaf (its block-backed RDD
-      // rides getPersistentRDDs until the frame GCs — that's the
-      // documented reclamation model, not a cache-manager pin)
-      assert(pinned.queryExecution.optimizedPlan.toString.contains("LogicalRDD") ||
-        pinned.queryExecution.optimizedPlan.toString.contains("Scan ExistingRDD"),
-        "conf=local must resolve to an eager localCheckpoint")
-      assert(Materialize.liveSitePins(spark) == 0,
-        "conf=local must not create a SitePin handle")
-      // reliable without a checkpoint dir fails LOUDLY (the GlobalIndex
-      // contract) — the same strategy object serves the registry sites
-      spark.conf.set(Materialize.ConfKey, "reliable")
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        intercept[IllegalArgumentException] {
-          Materialize.registryPin(base, "spec.conf"); ()
-        }
-      spark.conf.set(Materialize.ConfKey, "garbage")
-      intercept[IllegalArgumentException] {
-        Materialize.registryPin(base, "spec.conf"); ()
-      }
-    } finally {
-      spark.conf.unset(Materialize.ConfKey)
+    import spark.implicits._
+    val docs = (0 until 30).map { i =>
+      (i.toLong, s"the quick brown fox jumps over the lazy dog ${i % 4} and ${i % 3}")
+    }.toDF("doc_id", "text")
+    // one call per i, each over a DISTINCT plan (the registry's per-SF
+    // reality) — a plain lazy persist here would leak 5 cache entries
+    val inputs: Seq[(String, Int => Unit)] = Seq(
+      "SitePin" -> { i =>
+        Materialize.SitePin("spec.bounded")(base.filter(col("v") >= i))
+          .agg(sum("v")).collect(); ()
+      },
+      "jaccardSimilarityJoin" -> { i =>
+        DedupFunctions.jaccardSimilarityJoin(docs.filter(col("doc_id") >= i),
+          "doc_id", "text", 3, 0.5).collect(); ()
+      },
+      "containmentJoin" -> { i =>
+        DedupFunctions.containmentJoin(docs.filter(col("doc_id") >= i),
+          "doc_id", "text", 3, 0.5).collect(); ()
+      })
+    inputs.foreach { case (name, call) =>
       Materialize.releaseSitePins(spark)
-    }
-  }
-
-  test("threaded library sites accept an explicit strategy and match the default's result") {
-    import graft.functions.DedupFunctions
-    import graft.operators.Materialize
-    import spark.implicits._
-    val docs = (0 until 40).map { i =>
-      val t = if (i % 10 == 0) "the quick brown fox jumps over the lazy dog again and again"
-      else s"doc $i with words ${i * 7} ${i * 13} unique tail ${i % 3}"
-      (i.toLong, t)
-    }.toDF("doc_id", "text")
-    def run(m: Materialize) = DedupFunctions.minhashEstimates(
-      docs, "doc_id", "text", shingleN = 3, k = 12, r = 2,
-      portable = true, materialize = m)
-      .orderBy(col("d1"), col("d2")).collect().toSeq
-    val dflt = run(Materialize.SessionDefault("spec.lib"))
-    assert(run(Materialize.LocalCheckpoint) == dflt)
-    val sp = run(Materialize.SitePin("spec.lib.pin"))
-    Materialize.releaseSitePins(spark)
-    assert(sp == dflt,
-      "strategy choice must never change minhashEstimates' results")
-  }
-
-  test("graft.materialize=reliable runs the incremental-dedup serving path end-to-end, hash-identical") {
-    // the one-flag dynamic-allocation story, proven THROUGH a real
-    // operator rather than only the strategy resolver: the q147
-    // serving path (frozen band index + incrementalCandidates) under
-    // the reliable store returns byte-identical candidates to the
-    // default run
-    import graft.functions.DedupFunctions
-    import graft.operators.Materialize
-    import spark.implicits._
-    val docs = (0 until 60).map { i =>
-      val t = if (i % 12 == 0) "the quick brown fox jumps over the lazy dog again and again tonight"
-      else s"document number $i carries words ${i * 7} ${i * 13} and a tail ${i % 4}"
-      (i.toLong, t)
-    }.toDF("doc_id", "text")
-    val accepted = docs.filter($"doc_id" < 40)
-    val fresh = docs.filter($"doc_id" >= 36) // overlaps: candidates exist
-    val index = DedupFunctions.minhashBandIndex(accepted, "doc_id", "text",
-      shingleN = 3, k = 12, r = 2, portable = true)
-    def run() = DedupFunctions.incrementalCandidates(fresh, index,
-      "doc_id", "text", shingleN = 3, k = 12, r = 2, portable = true)
-      .orderBy(col("d1"), col("d2")).collect().toSeq
-    val baseline = run()
-    assert(baseline.nonEmpty, "fixture must produce candidate pairs")
-    val prevCkpt = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-relb-").toString)
-    spark.conf.set(Materialize.ConfKey, "reliable")
-    try assert(run() == baseline,
-      "reliable store must be plumbing-only: results hash-identical")
-    finally {
-      spark.conf.unset(Materialize.ConfKey)
-      prevCkpt.foreach(spark.sparkContext.setCheckpointDir)
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.size
+      (0 until 5).foreach(call)
+      assert(Materialize.liveSitePins(spark) == 1,
+        s"$name: repeated pins at one site must keep exactly one live handle")
+      assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
+        s"$name leaked cache entries: ${spark.sparkContext.getPersistentRDDs.size - before}")
+      Materialize.releaseSitePins(spark)
+      assert(spark.sparkContext.getPersistentRDDs.size <= before,
+        s"$name: releaseSitePins must drop the last pinned relation")
+      assert(Materialize.liveSitePins(spark) == 0)
     }
   }
 }

@@ -230,8 +230,8 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("file transport: a checkpoint-replayed ROUTED epoch after compaction does not duplicate") {
-    // publishRoutedEpoch is the router's MAIN FilePubSub path
-    // (RoutedPublisher wins over publishEpoch) — pre-fix it never
+    // publishRoutedEpoch is the router's MAIN FilePubSub path (both
+    // Router sinks call it, never publishEpoch) — pre-fix it never
     // consulted the folded-epoch manifest, so the exactly-once-
     // across-compaction contract only covered the side path: a replay
     // of a folded routed epoch re-appended every row beside its

@@ -31,7 +31,7 @@ class StreamingCurationSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)))
 
     val src = new MemoryPubSub(spark)
-    val sink = new MemoryPubSub(spark) // RoutedPublisher: one-pass routed sink
+    val sink = new MemoryPubSub(spark) // one-pass publishRoutedEpoch sink
 
     // the curation stage: pure column expressions over the envelope
     val curate: Stages.Stage = ds => {
@@ -147,22 +147,6 @@ class StreamingCurationSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("near-dup REJECTS a lazy Materialize strategy loudly (kept-set must not drift from the index)") {
-    // the returned kept frame captures the exact rows whose bands were
-    // just appended (current_timestamp in the index rows): a lazy pin
-    // with lineage kept could legally recompute and drift — the
-    // constructor threads the strategy, processBatch enforces eagerness
-    val dir = java.nio.file.Files.createTempDirectory("graft-sndm-").toString
-    val nd = new StreamingNearDup(spark, dir + "/index", minSim = 0.5,
-      materialize = graft.operators.Materialize.SitePin("spec.nd"))
-    import spark.implicits._
-    val docs = Seq((1L, "one lonely document with enough words to shingle properly here"))
-      .toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] { nd.processBatch(docs); () }
-    assert(e.getMessage.contains("EAGER"), e.getMessage)
-    graft.operators.Materialize.releaseSitePins(spark)
-  }
-
   test("near-dup evaluates the caller's batch ONCE per processBatch consumer (pin precedes the append)") {
     // regression: the kept-set pin used to come AFTER the index append,
     // so `kept` (and through it the caller's batch source) evaluated a
@@ -190,63 +174,6 @@ class StreamingCurationSpec extends SparkSpec {
     val evals = NearDupEvalProbe.computes.get / nParts
     assert(evals == 2,
       s"batch source must compute exactly twice (bands + pinned anti-join), got $evals evaluations")
-  }
-
-  test("quota REJECTS a lazy Materialize strategy loudly (admitted set must match the counted delta)") {
-    // same hazard class as the near-dup pin: the returned admitted
-    // frame must be the exact rows whose delta was just written — a
-    // lazy pin could recompute against a state that has since grown
-    val dir = java.nio.file.Files.createTempDirectory("graft-sqm-").toString
-    val q = new StreamingQuota(spark, dir + "/state", "k", "o", "t",
-      budget = 5,
-      materialize = graft.operators.Materialize.SitePin("spec.quota"))
-    import spark.implicits._
-    val batch = Seq(("a", 1L, 1L)).toDF("k", "o", "t")
-    val e = intercept[IllegalArgumentException] { q.admit(batch, 0L); () }
-    assert(e.getMessage.contains("EAGER"), e.getMessage)
-    graft.operators.Materialize.releaseSitePins(spark)
-  }
-
-  test("session-conf graft.materialize=persist falls back to an eager pin for streaming ops (one-flag knob must not crash)") {
-    // the advertised one-flag session switch must not crash the
-    // eager-required streaming operators at their first micro-batch:
-    // a DEFAULT-constructed (SessionDefault) quota/near-dup under
-    // conf=persist substitutes LocalCheckpoint with a warning, while
-    // an EXPLICITLY passed lazy strategy still rejects (rows above)
-    import graft.operators.Materialize
-    spark.conf.set(Materialize.ConfKey, "persist")
-    try {
-      import spark.implicits._
-      val qDir = java.nio.file.Files.createTempDirectory("graft-sqcf-").toString
-      val q = new StreamingQuota(spark, qDir + "/state", "k", "o", "t", budget = 5)
-      val admitted = q.admit(Seq(("a", 1L, 1L), ("a", 2L, 2L)).toDF("k", "o", "t"), 0L)
-      assert(admitted.count() == 2, "conf=persist must admit via the eager fallback")
-      val ndDir = java.nio.file.Files.createTempDirectory("graft-sndcf-").toString
-      val nd = new StreamingNearDup(spark, ndDir + "/index", minSim = 0.5)
-      val kept = nd.processBatch(Seq(
-        (1L, "the quick brown fox jumps over the lazy dog again tonight"))
-        .toDF("doc_id", "text"), batchId = 0L)
-      assert(kept.count() == 1, "conf=persist must keep via the eager fallback")
-      val dqDir = java.nio.file.Files.createTempDirectory("graft-sdqcf-").toString
-      val dq = new StreamingDomainQuota(spark, dqDir + "/state")
-      val dqAdm = dq.admit(Seq((1L, "a"), (2L, "b")).toDF("doc_id", "domain"), 0L)
-      assert(dqAdm.count() == 2, "conf=persist must admit via the eager fallback")
-    } finally {
-      spark.conf.unset(Materialize.ConfKey)
-      graft.operators.Materialize.releaseSitePins(spark)
-    }
-  }
-
-  test("domain quota REJECTS a lazy Materialize strategy loudly (StreamingQuota's contract)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sdqm-").toString
-    val dq = new StreamingDomainQuota(spark, dir + "/state",
-      materialize = graft.operators.Materialize.SitePin("spec.domainquota"))
-    import spark.implicits._
-    val e = intercept[IllegalArgumentException] {
-      dq.admit(Seq((1L, "a")).toDF("doc_id", "domain"), 0L); ()
-    }
-    assert(e.getMessage.contains("EAGER"), e.getMessage)
-    graft.operators.Materialize.releaseSitePins(spark)
   }
 
   test("CurationStages compose: PII scrub + decontaminate + quality route in one handler") {

@@ -67,10 +67,10 @@ class TopologySpec extends SparkSpec {
   }
 
   test("Forwarder routes 50 distinct destinations in ONE routed pass (forwarder.go:52-98)") {
-    // Spy: counts routed vs per-topic sink calls. The router must
-    // dispatch on RoutedPublisher — data-dependent destination
-    // cardinality through O(topics) filtered passes is the scale
-    // bottleneck this trait exists to remove.
+    // Spy: counts routed vs per-topic sink calls. The router sink must
+    // call publishRoutedEpoch, and MemoryPubSub must land it in one
+    // pass — data-dependent destination cardinality through O(topics)
+    // filtered passes is the scale bottleneck the routed write removes.
     val routedCalls = new java.util.concurrent.atomic.AtomicInteger
     val perTopicEpochCalls = new java.util.concurrent.atomic.AtomicInteger
     val ps = new MemoryPubSub(spark) {
@@ -95,7 +95,7 @@ class TopologySpec extends SparkSpec {
       val got = ps.subscribeBatch(s"dest_$i").collect()
       assert(got.length == 1 && got.head.getAs[String]("uuid") == s"m$i", s"dest_$i")
     }
-    assert(routedCalls.get() >= 1, "router sink never took the RoutedPublisher path")
+    assert(routedCalls.get() >= 1, "router sink never called publishRoutedEpoch")
     assert(perTopicEpochCalls.get() == 0,
       s"router sink fell back to ${perTopicEpochCalls.get()} per-topic passes")
   }
