@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Count-Min sketch: fixed-size point-frequency summary — "how often
   * did THIS key occur" over a key space too large to groupBy-count,
@@ -18,10 +17,12 @@ import org.apache.spark.sql.functions.udaf
   * estimate equals the single-pass estimate for every partitioning
   * (CountMinSpec pins this equality, not just the bounds).
   *
-  * Spark-first: a typed [[Aggregator]], so Catalyst runs partial
-  * sketches per partition and merges buffers — the sketch never sees
-  * a shuffle of raw keys, only depth×width-long buffers. Hashes are
-  * seeded MurmurHash3 (JVM-stable, partition-independent).
+  * The sketch is a [[Summary]]: its two aggregators give it the
+  * build/merge lifecycle, the null-state rule and the shape check (a
+  * stored sketch holds depth×width longs). The [[sketch]] output is
+  * itself the storable state; only depth×width-long buffers shuffle,
+  * never raw keys. Hashes are seeded MurmurHash3 (JVM-stable,
+  * partition-independent).
   */
 object CountMin {
 
@@ -39,11 +40,10 @@ object CountMin {
     (0 until Depth).map(r => sketch(r * width + bucket(key, r, width))).min
   }
 
-  final class Sketch(width: Int)
-      extends Aggregator[String, Array[Long], Array[Long]] {
+  final class Sketch(width: Int) extends Summary[String, Array[Long]] {
     require(width >= 1, s"width must be positive: $width")
     override def zero: Array[Long] = new Array[Long](Depth * width)
-    override def reduce(buf: Array[Long], key: String): Array[Long] = {
+    override def add(buf: Array[Long], key: String): Array[Long] = {
       if (key == null) return buf // built-in aggregates skip nulls; so do we
       var r = 0
       while (r < Depth) {
@@ -57,44 +57,23 @@ object CountMin {
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
     }
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    override def check(st: Array[Long]): Unit =
+      require(st.length == Depth * width,
+        s"stored CountMin state: expected length ${Depth * width} " +
+          s"($Depth x $width), found ${st.length}")
+    override def inputEncoder: Encoder[String] = Encoders.STRING
+    override def stateEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** Aggregate column: ARRAY<BIGINT> of depth×width counters over the
     * group's keys (whole table when ungrouped). */
   def sketch(key: Column, width: Int): Column =
-    udaf(new Sketch(width), Encoders.STRING)(key)
+    Summary.buildState(new Sketch(width))(key)
 
-  /** Merge STORED sketches (the [[sketch]] output doubles as the
-    * storable state — completing the shelf lifecycle alongside
-    * [[DistinctSketch]]/[[QuantileSketch]]/[[HeavyHitters]]): the
-    * combine is the same exactly-lossless elementwise sum, so
-    * estimates from merged per-slice states EQUAL the single-pass
-    * estimates, bit-for-bit (CountMinSpec pins the equality). */
-  final class SketchMerge(width: Int)
-      extends Aggregator[Array[Long], Array[Long], Array[Long]] {
-    private val inner = new Sketch(width)
-    override def zero: Array[Long] = inner.zero
-    // null state rows SKIP (SQL-aggregate rule): stored state tables
-    // are an open parquet surface — one foreign/evolved null row must
-    // not NPE the whole aggregation
-    override def reduce(buf: Array[Long], st: Array[Long]): Array[Long] =
-      if (st == null) buf else inner.merge(buf, st)
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
-      inner.merge(a, b)
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Aggregate stored sketches → merged sketch. */
+  /** Aggregate stored sketches → merged sketch. The combine is the same
+    * exactly-lossless elementwise sum, so estimates from merged
+    * per-slice states EQUAL the single-pass estimates, bit-for-bit
+    * (CountMinSpec pins the equality). */
   def mergeSketches(state: Column, width: Int): Column =
-    udaf(new SketchMerge(width),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())(state)
+    Summary.mergeState(new Sketch(width))(state)
 }

@@ -3,8 +3,7 @@ package graft.functions
 import java.util.Arrays
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Mergeable distinct-count sketch (HyperLogLog, Flajolet et al. '07,
   * with the HLL++-style sparse-exact low range of Heule et al. '13):
@@ -35,15 +34,17 @@ import org.apache.spark.sql.functions.udaf
   * stronger property than the compaction sketches can offer (the spec
   * asserts equality across 1/7/32-partition runs, not just bounds).
   *
-  * Spark-first: a typed [[Aggregator]] — map-side partial sketches,
-  * register-array shuffles only; raw keys never leave the scan stage.
+  * The sketch is a [[Summary]]: its two aggregators give it the
+  * build/merge lifecycle, the null-state rule and the shape check (a
+  * dense state holds 1 + 2^p longs, a sparse one 2 + n). Map-side
+  * partial sketches, register-array shuffles only; raw keys never leave
+  * the scan stage.
   */
 object DistinctSketch {
 
   /** Buffer: sparse = [0, n, h_0 … h_{n-1}, unused…] (sorted hashes,
     * doubling capacity); dense = [1, M_0 … M_{m-1}] (rho registers). */
-  final class Sketch(p: Int, sparseMax: Int)
-      extends Aggregator[Long, Array[Long], Long] {
+  final class Sketch(p: Int, sparseMax: Int) extends Summary[Long, Array[Long]] {
     require(p >= 7 && p <= 18, s"p out of range [7,18]: $p")
     require(sparseMax >= 0, s"sparseMax must be >= 0: $sparseMax")
     private val m = 1 << p
@@ -70,7 +71,7 @@ object DistinctSketch {
       d
     }
 
-    override def reduce(buf: Array[Long], h: Long): Array[Long] = {
+    override def add(buf: Array[Long], h: Long): Array[Long] = {
       if (buf(0) == 1L) { denseAdd(buf, h); buf }
       else {
         val n = buf(1).toInt
@@ -104,114 +105,71 @@ object DistinctSketch {
         case _ =>
           var acc = a
           var i = 0; val n = b(1).toInt
-          while (i < n) { acc = reduce(acc, b(2 + i)); i += 1 }
+          while (i < n) { acc = add(acc, b(2 + i)); i += 1 }
           acc
       }
     }
 
-    override def finish(buf: Array[Long]): Long = {
-      if (buf(0) == 0L) buf(1)
-      else {
-        val alpha = 0.7213 / (1.0 + 1.079 / m)
-        var sum = 0.0
-        var zeros = 0
-        var j = 1
-        while (j <= m) {
-          sum += math.pow(2.0, -buf(j).toDouble)
-          if (buf(j) == 0L) zeros += 1
-          j += 1
-        }
-        val e = alpha * m.toDouble * m.toDouble / sum
-        val corrected =
-          if (e <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros)
-          else e
-        math.round(corrected)
-      }
+    /** The sparse hash list trimmed to its live prefix, so equal sets
+      * yield byte-equal states whatever growth path the buffer took. */
+    override def stored(buf: Array[Long]): Array[Long] =
+      if (buf(0) == 0L) Arrays.copyOf(buf, 2 + buf(1).toInt) else buf
+
+    override def check(st: Array[Long]): Unit = {
+      val expected =
+        if (st.length >= 1 && st(0) == 1L) 1L + m
+        else if (st.length >= 2) 2L + st(1)
+        else 2L
+      require(st.length == expected,
+        s"stored HLL state (p=$p): expected length $expected, found ${st.length}")
     }
 
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Long] = Encoders.scalaLong
+    override def inputEncoder: Encoder[Long] = Encoders.scalaLong
+    override def stateEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  /** Distinct estimate of a buffer: the set size while sparse; else the
+    * bias-corrected harmonic mean over the m = length − 1 registers,
+    * with linear counting below 2.5·m. */
+  private def estimate(buf: Array[Long]): Long = {
+    if (buf(0) == 0L) buf(1)
+    else {
+      val m = buf.length - 1
+      val alpha = 0.7213 / (1.0 + 1.079 / m)
+      var sum = 0.0
+      var zeros = 0
+      var j = 1
+      while (j <= m) {
+        sum += math.pow(2.0, -buf(j).toDouble)
+        if (buf(j) == 0L) zeros += 1
+        j += 1
+      }
+      val e = alpha * m.toDouble * m.toDouble / sum
+      val corrected =
+        if (e <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros)
+        else e
+      math.round(corrected)
+    }
   }
 
   /** Aggregate column: BIGINT distinct estimate of the group's 64-bit
     * hashes (exact while ≤ sparseMax distinct). Feed `xxhash64(key)`. */
   def sketch(hash: Column, p: Int = 12, sparseMax: Int = 8192): Column =
-    udaf(new Sketch(p, sparseMax), Encoders.scalaLong)(hash)
+    Summary.build(new Sketch(p, sparseMax), estimate, Encoders.scalaLong)(hash)
 
-  // ---- sketch-as-a-value lifecycle ---------------------------------
-  // The 100 TB pattern behind every sketch shelf: PRE-AGGREGATE each
-  // slice (day / source / shard) to a stored sketch state, then answer
-  // cross-slice questions ("distinct users last 90 days", "vocabulary
-  // shared by sources A and B") by merging a handful of state rows —
-  // never rescanning the raw corpus. Union is a state merge;
-  // intersection is inclusion–exclusion over union estimates (exact in
-  // the sparse regime, the q125 gate).
-
-  /** [[Sketch]] with the STATE as output — storable, re-mergeable. The
-    * sparse buffer is trimmed to its live prefix so equal sets yield
-    * byte-equal states whatever growth path the buffer took. */
-  final class SketchState(p: Int, sparseMax: Int)
-      extends Aggregator[Long, Array[Long], Array[Long]] {
-    private val inner = new Sketch(p, sparseMax)
-    override def zero: Array[Long] = inner.zero
-    override def reduce(b: Array[Long], h: Long): Array[Long] = inner.reduce(b, h)
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = inner.merge(a, b)
-    override def finish(buf: Array[Long]): Array[Long] =
-      if (buf(0) == 0L) Arrays.copyOf(buf, 2 + buf(1).toInt) else buf
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Merge stored states → BIGINT estimate of the union. */
-  final class SketchMerge(p: Int, sparseMax: Int)
-      extends Aggregator[Array[Long], Array[Long], Long] {
-    private val inner = new Sketch(p, sparseMax)
-    override def zero: Array[Long] = inner.zero
-    // null state rows SKIP (SQL-aggregate rule): stored state tables
-    // are an open parquet surface, and one foreign/evolved null row
-    // must degrade like a null input to any built-in aggregate, not
-    // NPE the whole aggregation
-    override def reduce(buf: Array[Long], st: Array[Long]): Array[Long] =
-      if (st == null) buf else inner.merge(buf, st)
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = inner.merge(a, b)
-    override def finish(buf: Array[Long]): Long = inner.finish(buf)
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
-
-  /** Merge stored states → merged STATE (roll daily states into a
-    * monthly state and store THAT — compaction for sketch tables). */
-  final class SketchMergeState(p: Int, sparseMax: Int)
-      extends Aggregator[Array[Long], Array[Long], Array[Long]] {
-    private val inner = new SketchState(p, sparseMax)
-    override def zero: Array[Long] = inner.zero
-    // null state rows skip — see SketchMerge.reduce
-    override def reduce(buf: Array[Long], st: Array[Long]): Array[Long] =
-      if (st == null) buf else inner.merge(buf, st)
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = inner.merge(a, b)
-    override def finish(buf: Array[Long]): Array[Long] = inner.finish(buf)
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  private def longArrayEnc =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  // ---- stored states (ARRAY<BIGINT>, see [[Summary]]) ---------------
+  // Union is a state merge; intersection is inclusion–exclusion over
+  // union estimates (exact in the sparse regime, the q125 gate).
 
   /** Aggregate 64-bit hashes → storable sketch state (ARRAY<BIGINT>). */
   def sketchState(hash: Column, p: Int = 12, sparseMax: Int = 8192): Column =
-    udaf(new SketchState(p, sparseMax), Encoders.scalaLong)(hash)
+    Summary.buildState(new Sketch(p, sparseMax))(hash)
 
   /** Aggregate stored states → BIGINT union-distinct estimate. */
   def mergeEstimate(state: Column, p: Int = 12, sparseMax: Int = 8192): Column =
-    udaf(new SketchMerge(p, sparseMax), longArrayEnc)(state)
+    Summary.merge(new Sketch(p, sparseMax), estimate, Encoders.scalaLong)(state)
 
   /** Aggregate stored states → merged state (for re-storage). */
   def mergeState(state: Column, p: Int = 12, sparseMax: Int = 8192): Column =
-    udaf(new SketchMergeState(p, sparseMax), longArrayEnc)(state)
+    Summary.mergeState(new Sketch(p, sparseMax))(state)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Misra–Gries heavy hitters: a fixed-size frequency summary that
   * finds every item occurring more than `n / (capacity+1)` times in
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions.udaf
   * big to groupBy-count (a 100 TB corpus has billions of distinct
   * tokens; the sketch holds the few thousand that matter).
   *
-  * Spark-first: implemented as a typed [[Aggregator]], so Catalyst
-  * runs it with partial aggregation — each partition builds a local
-  * sketch, and the MERGE combines sketches pairwise. Misra–Gries
+  * The sketch is a [[Summary]], whose two aggregators give it the
+  * build/merge lifecycle and the null-state rule: each partition builds
+  * a local sketch, and the MERGE combines sketches pairwise. Misra–Gries
   * summaries are closed under that merge (Agarwal et al., "Mergeable
   * Summaries", PODS'12): sum counters, then subtract the (capacity+1)
   * largest combined count and drop non-positives. The merged guarantee
@@ -25,91 +24,57 @@ import org.apache.spark.sql.functions.udaf
   *
   * With `capacity` >= |distinct keys| no counter is ever evicted and
   * the sketch IS the exact count map — q90 gates that regime against
-  * a DuckDB groupBy-count oracle, so the aggregation plumbing (reduce,
-  * merge, finish) is hash-verified; the spec covers the lossy regime.
+  * a DuckDB groupBy-count oracle, so the aggregation plumbing (add,
+  * merge) is hash-verified; the spec covers the lossy regime.
   */
 object HeavyHitters {
 
-  /** The decremented-counter update: O(1) amortized per row; a miss on
-    * a full sketch decrements ALL counters by one (conceptually one
-    * shared occurrence of each), dropping zeros. */
-  private[functions] def update(buf: Map[String, Long], key: String,
-      capacity: Int): Map[String, Long] =
-    buf.get(key) match {
-      case Some(c) => buf.updated(key, c + 1)
-      case None if buf.size < capacity => buf.updated(key, 1L)
-      case None =>
-        buf.view.mapValues(_ - 1).filter(_._2 > 0).toMap
-    }
-
-  /** Mergeable-summaries combine: sum, then rank-truncate back to
-    * `capacity` by subtracting the (capacity+1)-th largest count. */
-  private[functions] def combine(a: Map[String, Long], b: Map[String, Long],
-      capacity: Int): Map[String, Long] = {
-    val summed = b.foldLeft(a) { case (acc, (k, v)) =>
-      acc.updated(k, acc.getOrElse(k, 0L) + v)
-    }
-    if (summed.size <= capacity) summed
-    else {
-      val cut = summed.values.toSeq.sorted(Ordering[Long].reverse)(capacity)
-      summed.view.mapValues(_ - cut).filter(_._2 > 0).toMap
-    }
-  }
-
-  final class MisraGries(capacity: Int)
-      extends Aggregator[String, Map[String, Long], Map[String, Long]] {
+  final class MisraGries(capacity: Int) extends Summary[String, Map[String, Long]] {
     require(capacity >= 1, s"capacity must be positive: $capacity")
     override def zero: Map[String, Long] = Map.empty
-    override def reduce(buf: Map[String, Long], key: String): Map[String, Long] =
+
+    /** The decremented-counter update: O(1) amortized per row; a miss on
+      * a full sketch decrements ALL counters by one (conceptually one
+      * shared occurrence of each), dropping zeros. */
+    override def add(buf: Map[String, Long], key: String): Map[String, Long] =
       if (key == null) buf // built-in aggregates skip nulls; so do we
-      else reduceNonNull(buf, key)
-    private def reduceNonNull(buf: Map[String, Long], key: String): Map[String, Long] =
-      update(buf, key, capacity)
-    override def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
-      combine(a, b, capacity)
-    override def finish(buf: Map[String, Long]): Map[String, Long] = buf
-    override def bufferEncoder: Encoder[Map[String, Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    override def outputEncoder: Encoder[Map[String, Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
+      else buf.get(key) match {
+        case Some(c) => buf.updated(key, c + 1)
+        case None if buf.size < capacity => buf.updated(key, 1L)
+        case None =>
+          buf.view.mapValues(_ - 1).filter(_._2 > 0).toMap
+      }
+
+    /** Mergeable-summaries combine: sum, then rank-truncate back to
+      * `capacity` by subtracting the (capacity+1)-th largest count. */
+    override def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] = {
+      val summed = b.foldLeft(a) { case (acc, (k, v)) =>
+        acc.updated(k, acc.getOrElse(k, 0L) + v)
+      }
+      if (summed.size <= capacity) summed
+      else {
+        val cut = summed.values.toSeq.sorted(Ordering[Long].reverse)(capacity)
+        summed.view.mapValues(_ - cut).filter(_._2 > 0).toMap
+      }
+    }
+
+    override def inputEncoder: Encoder[String] = Encoders.STRING
+    override def stateEncoder: Encoder[Map[String, Long]] =
+      ExpressionEncoder[Map[String, Long]]()
   }
 
   /** Aggregate column: MAP<STRING, BIGINT> of surviving counters for
     * the rows of the group (use under `groupBy` for per-group sketches
     * or alone for a global one). */
   def sketch(key: Column, capacity: Int): Column =
-    udaf(new MisraGries(capacity), Encoders.STRING)(key)
+    Summary.buildState(new MisraGries(capacity))(key)
 
   /** Merge STORED sketch maps (the [[sketch]] output doubles as the
-    * storable state — same shelf lifecycle as
-    * [[DistinctSketch.mergeEstimate]] / [[QuantileSketch.mergeQuantiles]]):
-    * persist per-slice frequency maps, answer cross-slice top-k by
-    * merging the handful of state rows. Closed under the mergeable-
-    * summaries combine, so the merged guarantee equals the single-pass
-    * one; with capacity ≥ |distinct keys| everywhere it is exact (the
-    * q130 gate). */
-  final class MisraGriesMerge(capacity: Int)
-      extends Aggregator[Map[String, Long], Map[String, Long], Map[String, Long]] {
-    require(capacity >= 1, s"capacity must be positive: $capacity")
-    override def zero: Map[String, Long] = Map.empty
-    // null state rows SKIP (SQL-aggregate rule): stored state tables
-    // are an open parquet surface — one foreign/evolved null row must
-    // not NPE the whole aggregation
-    override def reduce(buf: Map[String, Long], st: Map[String, Long]): Map[String, Long] =
-      if (st == null) buf else combine(buf, st, capacity)
-    override def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
-      combine(a, b, capacity)
-    override def finish(buf: Map[String, Long]): Map[String, Long] = buf
-    override def bufferEncoder: Encoder[Map[String, Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    override def outputEncoder: Encoder[Map[String, Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-  }
-
-  private def mapEnc =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-
-  /** Aggregate stored sketch maps → merged sketch map. */
+    * storable state): persist per-slice frequency maps, answer
+    * cross-slice top-k by merging the handful of state rows. Closed
+    * under the mergeable-summaries combine, so the merged guarantee
+    * equals the single-pass one; with capacity ≥ |distinct keys|
+    * everywhere it is exact (the q130 gate). */
   def mergeSketches(state: Column, capacity: Int): Column =
-    udaf(new MisraGriesMerge(capacity), mapEnc)(state)
+    Summary.mergeState(new MisraGries(capacity))(state)
 }

@@ -2,9 +2,8 @@ package graft.functions
 
 import java.util.Arrays
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Column, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Mergeable quantile summary: fixed-memory rank estimates over a
   * column too large to sort — the percentile complement of
@@ -28,18 +27,18 @@ import org.apache.spark.sql.functions.udaf
   *
   * EXACT regime — the oracle gate: with k ≥ group size, no compaction
   * ever fires under ANY partitioning (merges concatenate level 0 and
-  * only compact past k), `finish` sorts weight-1 values, and
+  * only compact past k), the finish sorts weight-1 values, and
   * `quantile(q)` = the exact lower-rank order statistic ⌈q·n⌉ — which
   * is what q120 hash-matches against DuckDB's explicit rank selection.
   *
-  * Spark-first: a typed [[Aggregator]] (TypedImperativeAggregate), so
-  * the ladder lives as a live object per partition — map-side partial
-  * sketches, buffer-only shuffles, O(1) amortized per row.
+  * The ladder is a [[Summary]]: its two aggregators give it the
+  * build/merge lifecycle, the null-state rule and the shape check (the
+  * level-0 count fits its stored length); O(1) amortized per row.
   */
 object QuantileSketch {
 
   /** Smallest value whose cumulative weight reaches q·W, from a
-    * `finish`-shaped interleaved [v0,w0,v1,w1,…] CDF (sorted by v). */
+    * [[sketch]]-shaped interleaved [v0,w0,v1,w1,…] CDF (sorted by v). */
   def quantileFromCdf(cdf: Array[Double], q: Double): Double = {
     require(cdf.nonEmpty, "quantile of an empty summary")
     var total = 0.0
@@ -59,8 +58,7 @@ object QuantileSketch {
   /** Buffer layout: buf(0) = Array(n0) metadata; buf(1) = level-0
     * storage at fixed capacity k (first n0 slots live, unsorted);
     * buf(l+1) for l ≥ 1 = level-l values, sorted, weight 2^l. */
-  final class Summary(k: Int, qs: Array[Double])
-      extends Aggregator[Option[Double], Array[Array[Double]], Array[Double]] {
+  final class Ladder(k: Int) extends Summary[Option[Double], Array[Array[Double]]] {
     require(k >= 2 && k % 2 == 0, s"k must be even and >= 2: $k")
 
     override def zero: Array[Array[Double]] =
@@ -70,10 +68,11 @@ object QuantileSketch {
     // into 0.0 and silently injects zeros into the summary; the Option
     // form receives None and skips it, like every built-in aggregate
     // (percentile_approx, avg)
-    override def reduce(
-        buf: Array[Array[Double]], opt: Option[Double]): Array[Array[Double]] = {
-      if (opt.isEmpty) return buf
-      val v = opt.get
+    override def add(
+        buf: Array[Array[Double]], opt: Option[Double]): Array[Array[Double]] =
+      if (opt.isEmpty) buf else put(buf, opt.get)
+
+    private def put(buf: Array[Array[Double]], v: Double): Array[Array[Double]] = {
       val n0 = buf(0)(0).toInt
       if (n0 < k) { buf(1)(n0) = v; buf(0)(0) = n0 + 1; buf }
       else {
@@ -88,10 +87,10 @@ object QuantileSketch {
         a: Array[Array[Double]],
         b: Array[Array[Double]]): Array[Array[Double]] = {
       var acc = a
-      // level 0 of b feeds through reduce (keeps the capacity invariant)
+      // level 0 of b feeds through put (keeps the capacity invariant)
       val bn0 = b(0)(0).toInt
       var i = 0
-      while (i < bn0) { acc = reduce(acc, Some(b(1)(i))); i += 1 }
+      while (i < bn0) { acc = put(acc, b(1)(i)); i += 1 }
       // higher levels concatenate, then compact past k
       var l = 2
       while (l < b.length) {
@@ -108,6 +107,25 @@ object QuantileSketch {
       }
       acc
     }
+
+    /** Level 0 trimmed to its live prefix: merge only reads a stored
+      * state's first n0 level-0 slots (the accumulating buffer keeps
+      * fixed-capacity storage). */
+    override def stored(buf: Array[Array[Double]]): Array[Array[Double]] =
+      buf.updated(1, Arrays.copyOf(buf(1), buf(0)(0).toInt))
+
+    override def check(st: Array[Array[Double]]): Unit = {
+      val len = if (st.length < 2) 0 else st(1).length
+      val n0 = if (st.isEmpty || st(0).isEmpty) -1 else st(0)(0).toInt
+      require(st.length >= 2 && n0 >= 0 && n0 <= len,
+        s"stored KLL state: expected a level-0 count in [0, $len] (its " +
+          s"stored length), found $n0")
+    }
+
+    override def inputEncoder: Encoder[Option[Double]] =
+      ExpressionEncoder[Option[Double]]()
+    override def stateEncoder: Encoder[Array[Array[Double]]] =
+      ExpressionEncoder[Array[Array[Double]]]()
 
     /** Sort + pair-collapse level 0 into level 1 (cascading), leaving
       * level 0 empty. Called only when level 0 holds exactly k items. */
@@ -155,152 +173,75 @@ object QuantileSketch {
       }
     }
 
-    /** Interleaved weighted CDF sorted by value; or the requested
-      * quantiles when `qs` is non-empty. Empty input → empty array. */
-    override def finish(buf: Array[Array[Double]]): Array[Double] = {
-      val n0 = buf(0)(0).toInt
-      var m = n0
-      var l = 2
-      while (l < buf.length) { m += buf(l).length; l += 1 }
-      if (m == 0) return Array.emptyDoubleArray
-      val pairs = new Array[(Double, Double)](m)
-      var j = 0
-      var i = 0
-      while (i < n0) { pairs(j) = (buf(1)(i), 1.0); j += 1; i += 1 }
-      l = 2
-      while (l < buf.length) {
-        val w = math.pow(2.0, (l - 1).toDouble)
-        i = 0
-        while (i < buf(l).length) {
-          pairs(j) = (buf(l)(i), w); j += 1; i += 1
-        }
-        l += 1
-      }
-      val sorted = pairs.sortBy(_._1)
-      val cdf = new Array[Double](2 * m)
-      i = 0
-      while (i < m) {
-        cdf(2 * i) = sorted(i)._1
-        cdf(2 * i + 1) = sorted(i)._2
-        i += 1
-      }
-      if (qs.isEmpty) cdf else qs.map(q => quantileFromCdf(cdf, q))
-    }
-
-    override def bufferEncoder: Encoder[Array[Array[Double]]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Array[Double]]]()
-    override def outputEncoder: Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Double]]()
   }
+
+  /** Interleaved weighted CDF of a ladder, sorted by value. Empty input
+    * → empty array. */
+  private def cdf(buf: Array[Array[Double]]): Array[Double] = {
+    val n0 = buf(0)(0).toInt
+    var m = n0
+    var l = 2
+    while (l < buf.length) { m += buf(l).length; l += 1 }
+    if (m == 0) return Array.emptyDoubleArray
+    val pairs = new Array[(Double, Double)](m)
+    var j = 0
+    var i = 0
+    while (i < n0) { pairs(j) = (buf(1)(i), 1.0); j += 1; i += 1 }
+    l = 2
+    while (l < buf.length) {
+      val w = math.pow(2.0, (l - 1).toDouble)
+      i = 0
+      while (i < buf(l).length) {
+        pairs(j) = (buf(l)(i), w); j += 1; i += 1
+      }
+      l += 1
+    }
+    val sorted = pairs.sortBy(_._1)
+    val out = new Array[Double](2 * m)
+    i = 0
+    while (i < m) {
+      out(2 * i) = sorted(i)._1
+      out(2 * i + 1) = sorted(i)._2
+      i += 1
+    }
+    out
+  }
+
+  /** The requested quantiles of a ladder (its CDF when `qs` is empty). */
+  private def quantilesOf(qs: Array[Double])(buf: Array[Array[Double]]): Array[Double] = {
+    val c = cdf(buf)
+    if (qs.isEmpty || c.isEmpty) c else qs.map(q => quantileFromCdf(c, q))
+  }
+
+  private def cdfEnc: Encoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
 
   /** Aggregate column: interleaved [value, weight, …] CDF of the
     * group (sorted by value). */
   def sketch(value: Column, k: Int): Column =
-    udaf(new Summary(k, Array.empty),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Double]]())(value)
+    Summary.build(new Ladder(k), cdf, cdfEnc)(value)
 
   /** Aggregate column: ARRAY<DOUBLE> of the requested quantiles
     * (lower-rank order statistics of the summary's weighted CDF). */
   def quantiles(value: Column, k: Int, qs: Seq[Double]): Column =
-    udaf(new Summary(k, qs.toArray),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Double]]())(value)
+    Summary.build(new Ladder(k), quantilesOf(qs.toArray), cdfEnc)(value)
 
-  // ---- sketch-as-a-value lifecycle ---------------------------------
-  // Same shelf pattern as [[DistinctSketch.sketchState]]: pre-aggregate
-  // each slice (day / source / shard) to a stored ladder state, answer
-  // cross-slice percentile questions by merging the handful of state
-  // rows. In the exact regime (k ≥ the merged group's size) the merge
-  // path only concatenates level 0, so merged-state quantiles ARE the
-  // exact order statistics — the q129 gate.
-
-  /** [[Summary]] with the ladder STATE as output — storable and
-    * re-mergeable (ARRAY<ARRAY<DOUBLE>>). Level 0 is trimmed to its
-    * live prefix: safe, because merge only READS a consumed state's
-    * level 0 (the accumulating buffer keeps fixed-capacity storage). */
-  final class SummaryState(k: Int)
-      extends Aggregator[Option[Double], Array[Array[Double]], Array[Array[Double]]] {
-    private val inner = new Summary(k, Array.empty)
-    override def zero: Array[Array[Double]] = inner.zero
-    override def reduce(b: Array[Array[Double]], v: Option[Double]): Array[Array[Double]] =
-      inner.reduce(b, v)
-    override def merge(a: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] =
-      inner.merge(a, b)
-    override def finish(buf: Array[Array[Double]]): Array[Array[Double]] = {
-      val n0 = buf(0)(0).toInt
-      buf.updated(1, Arrays.copyOf(buf(1), n0))
-    }
-    override def bufferEncoder: Encoder[Array[Array[Double]]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Array[Double]]]()
-    override def outputEncoder: Encoder[Array[Array[Double]]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Array[Double]]]()
-  }
-
-  /** Merge stored ladder states → quantiles (or the CDF when `qs` is
-    * empty). */
-  final class SummaryMerge(k: Int, qs: Array[Double])
-      extends Aggregator[Array[Array[Double]], Array[Array[Double]], Array[Double]] {
-    private val inner = new Summary(k, qs)
-    override def zero: Array[Array[Double]] = inner.zero
-    // null state rows SKIP (SQL-aggregate rule): stored state tables
-    // are an open parquet surface — one foreign/evolved null row must
-    // not NPE the whole aggregation
-    override def reduce(buf: Array[Array[Double]], st: Array[Array[Double]]): Array[Array[Double]] =
-      if (st == null) buf else inner.merge(buf, st)
-    override def merge(a: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] =
-      inner.merge(a, b)
-    override def finish(buf: Array[Array[Double]]): Array[Double] = inner.finish(buf)
-    override def bufferEncoder: Encoder[Array[Array[Double]]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Array[Double]]]()
-    override def outputEncoder: Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Double]]()
-  }
-
-  /** Merge stored ladder states → merged STATE (re-storable — the
-    * compaction path for sketch tables, mirroring
-    * [[DistinctSketch.mergeState]]). */
-  final class SummaryMergeState(k: Int)
-      extends Aggregator[Array[Array[Double]], Array[Array[Double]], Array[Array[Double]]] {
-    private val inner = new SummaryState(k)
-    override def zero: Array[Array[Double]] = inner.zero
-    // null state rows skip — see SummaryMerge.reduce
-    override def reduce(buf: Array[Array[Double]], st: Array[Array[Double]]): Array[Array[Double]] =
-      if (st == null) buf else inner.merge(buf, st)
-    override def merge(a: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] =
-      inner.merge(a, b)
-    override def finish(buf: Array[Array[Double]]): Array[Array[Double]] =
-      inner.finish(buf)
-    override def bufferEncoder: Encoder[Array[Array[Double]]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Array[Double]]]()
-    override def outputEncoder: Encoder[Array[Array[Double]]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Array[Double]]]()
-  }
-
-  private def stateEnc =
-    org.apache.spark.sql.catalyst.encoders
-      .ExpressionEncoder[Array[Array[Double]]]()
+  // ---- stored states (ARRAY<ARRAY<DOUBLE>>, see [[Summary]]) ---------
+  // With k ≥ the merged group's size a merge only concatenates level 0,
+  // so merged-state quantiles ARE the exact order statistics (q129).
 
   /** Aggregate values → storable ladder state. */
   def sketchState(value: Column, k: Int): Column =
-    udaf(new SummaryState(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Double]]())(value)
+    Summary.buildState(new Ladder(k))(value)
 
   /** Aggregate stored states → merged state (for re-storage). */
   def mergeState(state: Column, k: Int): Column =
-    udaf(new SummaryMergeState(k), stateEnc)(state)
+    Summary.mergeState(new Ladder(k))(state)
 
   /** Aggregate stored states → ARRAY<DOUBLE> quantiles. */
   def mergeQuantiles(state: Column, k: Int, qs: Seq[Double]): Column =
-    udaf(new SummaryMerge(k, qs.toArray), stateEnc)(state)
+    Summary.merge(new Ladder(k), quantilesOf(qs.toArray), cdfEnc)(state)
 
   /** Aggregate stored states → interleaved CDF. */
   def mergeCdf(state: Column, k: Int): Column =
-    udaf(new SummaryMerge(k, Array.empty), stateEnc)(state)
+    Summary.merge(new Ladder(k), cdf, cdfEnc)(state)
 }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.SparkSession
   * or call with [[traced]] and reads its cost after one [[drain]]: the
   * job count, one [[QueryTrace.Stage]] row per completed stage (with
   * its task durations, the skew a stage aggregate cannot show) and the
-  * distinct shuffle dependencies written (which dedups AQE retries and
-  * exchange reuse). Jobs outside any group are not recorded. */
+  * distinct shuffle dependencies written by stages that succeeded
+  * (which dedups AQE retries and exchange reuse). Jobs outside any
+  * group are not recorded. */
 final class QueryTrace private (sc: SparkContext) extends SparkListener
     with AutoCloseable {
   import QueryTrace._
@@ -53,7 +54,8 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener
         si.numTasks, tm.executorRunTime, tm.executorCpuTime / 1000000L,
         tm.shuffleReadMetrics.fetchWaitTime, tm.shuffleWriteMetrics.bytesWritten,
         Option(taskMs.remove(si.stageId)).fold(Vector.empty[Long])(_.asScala.toVector.sorted)))
-      SchedulerBridge.shuffleDepId(si).foreach(a.shuffleDeps.add)
+      // a failed or cancelled map stage wrote no usable shuffle
+      if (si.failureReason.isEmpty) SchedulerBridge.shuffleDepId(si).foreach(a.shuffleDeps.add)
     }
   }
 

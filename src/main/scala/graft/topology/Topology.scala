@@ -102,17 +102,8 @@ object Forwarder {
     new Publisher {
       override def publish(topic: String, msgs: Seq[Message]): Unit =
         inner.publish(forwarderTopic, msgs.map(Envelope.wrap(_, topic)))
-      override def publishBatch(topic: String, df: org.apache.spark.sql.DataFrame): Unit = {
-        // distributed wrap: to_json over the envelope struct
-        import org.apache.spark.sql.functions._
-        inner.publishBatch(forwarderTopic, df.select(
-          col("uuid"),
-          map().cast("map<string,string>").as("metadata"),
-          to_json(struct(
-            lit(topic).as("destination_topic"), col("uuid"),
-            col("payload"), col("metadata"))).cast("binary").as("payload"),
-          col("ts")))
-      }
+      override def publishBatch(topic: String, df: org.apache.spark.sql.DataFrame): Unit =
+        inner.publishBatch(forwarderTopic, wrap(df, topic))
       // forward the epoch form — the trait default drops writerId and
       // downgrades the router's exactly-once sink to at-least-once
       // (Decorators.TransformingPublisher names this bug class). The
@@ -122,18 +113,22 @@ object Forwarder {
       // funneling them into one forwarder topic unchanged would dedup
       // the second destination's publish as a replay.
       override def publishEpoch(topic: String, df: org.apache.spark.sql.DataFrame,
-          writerId: String): Unit = {
-        import org.apache.spark.sql.functions._
-        inner.publishEpoch(forwarderTopic, df.select(
-          col("uuid"),
-          map().cast("map<string,string>").as("metadata"),
-          to_json(struct(
-            lit(topic).as("destination_topic"), col("uuid"),
-            col("payload"), col("metadata"))).cast("binary").as("payload"),
-          col("ts")), s"${topic.length}.$topic-$writerId")
-      }
+          writerId: String): Unit =
+        inner.publishEpoch(forwarderTopic, wrap(df, topic), s"${topic.length}.$topic-$writerId")
       override def close(): Unit = inner.close()
     }
+
+  /** Distributed envelope wrap: `to_json` over the envelope struct. */
+  private def wrap(df: org.apache.spark.sql.DataFrame, topic: String) = {
+    import org.apache.spark.sql.functions._
+    df.select(
+      col("uuid"),
+      map().cast("map<string,string>").as("metadata"),
+      to_json(struct(
+        lit(topic).as("destination_topic"), col("uuid"),
+        col("payload"), col("metadata"))).cast("binary").as("payload"),
+      col("ts"))
+  }
 
   def register(router: Router, sub: Subscriber, pub: Publisher,
       forwarderTopic: String, ackWhenCannotUnwrap: Boolean = false,

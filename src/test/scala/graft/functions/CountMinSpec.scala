@@ -66,4 +66,18 @@ class CountMinSpec extends SparkSpec {
     assert(viaStates.sameElements(direct),
       "elementwise-sum merge must make state round-trips exactly lossless")
   }
+
+  test("merging a stored sketch of another width fails naming both sizes") {
+    // a narrower state used to index past its end, a wider one to be
+    // silently truncated into wrong counts
+    val st = Seq("a", "b").toDF("k").agg(CountMin.sketch(col("k"), 64).as("st"))
+    for (width <- Seq(128, 32)) {
+      val e = intercept[Exception](
+        st.agg(CountMin.mergeSketches(col("st"), width)).collect())
+      val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+      assert(iae.exists(m => m.contains(s"expected length ${CountMin.Depth * width}") &&
+        m.contains("found 256")), s"width=$width: $e")
+    }
+  }
 }

@@ -180,4 +180,21 @@ class DistinctSketchSpec extends SparkSpec {
     assert(est === 100L)
     assert(empty.agg(DistinctSketch.mergeEstimate($"st")).head.getLong(0) === 0L)
   }
+
+  test("merging a stored state of another precision or a torn sparse state " +
+      "fails naming both sizes") {
+    // a dense p=10 state merged at p=12 used to index past its 1025
+    // registers; a sparse state shorter than its count past its end
+    val dense = spread(3000).toDF("h")
+      .agg(DistinctSketch.sketchState($"h", 10, 0).as("st"))
+    val torn = spark.sql("SELECT array(0L, 5L, 7L) AS st")
+    for ((states, sizes) <- Seq((dense, ("length 4097", "found 1025")),
+                                (torn, ("length 7", "found 3")))) {
+      val e = intercept[Exception](
+        states.agg(DistinctSketch.mergeEstimate($"st", 12, 8192)).collect())
+      val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+      assert(iae.exists(m => m.contains(sizes._1) && m.contains(sizes._2)), s"$sizes: $e")
+    }
+  }
 }

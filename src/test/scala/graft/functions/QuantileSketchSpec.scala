@@ -111,4 +111,15 @@ class QuantileSketchSpec extends SparkSpec {
       .head.getSeq[Double](0)
     assert(out.isEmpty)
   }
+
+  test("merging a stored ladder whose level-0 count exceeds its length " +
+      "fails naming both sizes") {
+    // used to read past the stored level 0
+    val torn = spark.sql("SELECT array(array(5d), array(1d, 2d)) AS st")
+    val e = intercept[Exception](
+      torn.agg(QuantileSketch.mergeQuantiles($"st", 64, Qs)).collect())
+    val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x.getMessage }
+    assert(iae.exists(m => m.contains("[0, 2]") && m.contains("found 5")), e)
+  }
 }

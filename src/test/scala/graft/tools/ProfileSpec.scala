@@ -97,4 +97,18 @@ class ProfileSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"Spark listeners outside tools/QueryTrace.scala: ${offenders.mkString(", ")}")
   }
+
+  test("QueryTrace counts no shuffle dependency of a failed map stage") {
+    val trace = QueryTrace.attach(spark)
+    try {
+      intercept[Exception](trace.traced("failed-map-stage") {
+        spark.sparkContext.parallelize(1 to 8, 2)
+          .map(i => if (i > 0) throw new IllegalStateException("boom") else (i, i))
+          .reduceByKey(_ + _).collect()
+      })
+      val g = trace.drain()("failed-map-stage")
+      assert(g.jobs == 1 && g.stages.nonEmpty, g)
+      assert(g.shuffleDeps.isEmpty, g)
+    } finally trace.close()
+  }
 }
