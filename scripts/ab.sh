@@ -16,10 +16,21 @@
 # first, pair 2: change first, ...). Each run's log is kept under
 # $AB_DIR/logs. From the last-line JSON of every run the script prints,
 # per end-to-end metric of BENCHMARK.json: the median, q1 and q3 of each
-# side, the pairs the change wins (its value is better in the metric's
-# direction), the parent's IQR, and each side's `failed` (failed
-# operations over its runs; a run that prints no JSON line counts one).
-# Quartiles are Python's statistics.quantiles(n=4, method="inclusive").
+# side, each side's IQR, the pairs the change wins (its value is better
+# in the metric's direction), and a verdict against the metric's `bound`,
+# read as a fraction of the parent's median (bound 0.25 on a 14.4 s
+# parent median allows the change 3.6 s worse):
+#
+#   within bound      the change's median is worse by at most the bound
+#   worse than bound  the change's median is worse by more than the bound
+#   unresolved        the parent's IQR is wider than the bound, so these
+#                     runs cannot tell a move of that size from the box
+#                     (unless every change run beats every parent run:
+#                     then within bound)
+#
+# Last it prints each side's `failed` (failed operations over its runs; a
+# run that prints no JSON line counts one). Quartiles are Python's
+# statistics.quantiles(n=4, method="inclusive").
 # Exits non-zero when either side's `failed` is not 0.
 #
 # The script only reads graftbench/ and BENCHMARK.json and edits no
@@ -106,8 +117,9 @@ rep = os.path.join(logs, os.pardir, "change", "graftbench", ".work",
                    "last-%s-trace0.json" % workload)
 n_cpu = json.load(open(rep))["env"]["n_cpu"] if os.path.exists(rep) else None
 print("n_cpu %s" % n_cpu)
-print("%-16s %-28s %-28s %-7s %s" % ("metric", "parent med (q1-q3)",
-                                     "change med (q1-q3)", "wins", "parent IQR"))
+print("%-16s %-28s %-28s %-7s %-10s %-10s %-8s %s" % (
+    "metric", "parent med (q1-q3)", "change med (q1-q3)", "wins",
+    "parent IQR", "change IQR", "bound", "verdict"))
 for m in spec:
     name, lower = m["name"], m["better"] == "lower"
     both = [(p["metrics"][name]["value"], c["metrics"][name]["value"])
@@ -121,10 +133,20 @@ for m in spec:
     cs = [c for _, c in both]
     wins = sum(1 for p, c in both if (c < p if lower else c > p))
     pq, cq = quart(ps), quart(cs)
-    print("%-16s %-28s %-28s %-7s %.4g" % (
+    bound = m["bound"] * abs(pq[1])
+    worse = (cq[1] - pq[1]) if lower else (pq[1] - cq[1])
+    all_better = (max(cs) < min(ps)) if lower else (min(cs) > max(ps))
+    if pq[2] - pq[0] > bound and not all_better:
+        verdict = "unresolved"
+    elif worse > bound:
+        verdict = "worse than bound"
+    else:
+        verdict = "within bound"
+    print("%-16s %-28s %-28s %-7s %-10.4g %-10.4g %-8.4g %s" % (
         name, "%.4g (%.4g-%.4g)" % (pq[1], pq[0], pq[2]),
         "%.4g (%.4g-%.4g)" % (cq[1], cq[0], cq[2]),
-        "%d/%d" % (wins, len(both)), pq[2] - pq[0]))
+        "%d/%d" % (wins, len(both)), pq[2] - pq[0], cq[2] - cq[0], bound,
+        verdict))
 # `failed`: failed operations summed over a side's runs; a run with no
 # JSON line counts as one
 fails = {s: sum(1 if r is None else r.get("failed", 1) for r in runs[s])

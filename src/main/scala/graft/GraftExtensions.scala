@@ -1,25 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{BinaryType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions._
 
-/** Session extension registering the engine's native expressions as
-  * SQL functions, so `spark.sql` users (and external tools speaking
-  * SQL to a graft-configured cluster) reach the same codegen'd
-  * kernels the Column API uses:
+/** Session extension registering the engine's native kernels as SQL
+  * functions, so `spark.sql` users (and external tools speaking SQL to
+  * a graft-configured cluster) reach the same kernels the Column API
+  * uses — each SQL function builds its call through the Column-API
+  * function, so a kernel is declared once:
   *
   * {{{
-  *   SELECT graft_dot(a, b)                -- vector dot product
-  *   SELECT graft_simhash64(hash_array)    -- single-pass SimHash vote
-  *   SELECT graft_token_runs(lower(text))  -- token count, no regex
-  *   SELECT graft_top_token_count(tokens)  -- max per-token frequency
-  *   SELECT graft_adler32(payload)         -- streaming dedup checksum
-  *   SELECT graft_md5_prefix_long(s)       -- portable 60-bit hash
+  *   SELECT graft_token_runs(lower(text))     -- STRING: [a-z0-9] run count, no regex
+  *   SELECT graft_top_token_count(tokens)     -- ARRAY<STRING>: max per-token frequency
+  *   SELECT graft_simhash64(tokens)           -- ARRAY<STRING>: single-pass SimHash vote
+  *   SELECT graft_adler32(payload)            -- BINARY/STRING: streaming dedup checksum
+  *   SELECT graft_md5_prefix_long(s)          -- BINARY/STRING: portable 60-bit hash
+  *   SELECT graft_deflate_ratio(text)         -- BINARY/STRING: compressibility
+  *   SELECT graft_nfc(text)                   -- STRING: Unicode NFC composition
+  *   SELECT graft_zvalue16(x, y)              -- INT, INT: Morton interleave
+  *   SELECT graft_dot(a, b)                   -- ARRAY<DOUBLE>, ARRAY<DOUBLE>: dot product
+  *   SELECT graft_srp_bucket(v, 16, 8, 42)    -- ARRAY<DOUBLE>, INT literals: SRP LSH bucket
   * }}}
+  *
+  * An argument of another type is cast to the one listed (an
+  * `ARRAY<FLOAT>` vector is widened) or the call is rejected at
+  * analysis.
   *
   * Wired automatically by [[GraftSession.builder]]; external deploys
   * can instead set `spark.sql.extensions=graft.GraftExtensions`
@@ -33,76 +42,68 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  private def fn(name: String, usage: String, arity: Int)(f: Seq[Column] => Column) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+      (args: Seq[Expression]) => {
+        require(args.length == arity,
+          s"$name expects $arity argument(s), got ${args.length}")
+        ColumnBridge.converted(f(args.map(ColumnBridge.column)))
+      })
 
-  private def unary(name: String, usage: String)(f: Expression => Expression) =
-    (FunctionIdentifier(name), info(name, usage), (args: Seq[Expression]) => {
-      require(args.length == 1, s"$name expects 1 argument, got ${args.length}")
-      f(args.head)
-    })
+  /** An INT literal argument: an integer literal in the Int range (a
+    * wider value is rejected, never narrowed). */
+  private def intLit(c: Column, name: String): Int = {
+    val e = ColumnBridge.expression(c)
+    require(e.foldable, s"graft_srp_bucket: $name must be a literal")
+    e.eval(null) match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case s: Short => s.toInt
+      case b: Byte => b.toInt
+      case other => throw new IllegalArgumentException(
+        s"graft_srp_bucket: $name must be an integer literal in the INT range, got $other")
+    }
+  }
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    unary("graft_token_runs",
-      "graft_token_runs(str) - count of [a-z0-9] runs (token count without a regex engine)")(
-      TokenRunCountExpr),
-    unary("graft_top_token_count",
-      "graft_top_token_count(arr) - highest per-token occurrence count in a string array")(
-      TopTokenCountExpr),
-    unary("graft_simhash64",
-      "graft_simhash64(arr) - 64-bit SimHash of a LONG hash array (single-pass bit vote)")(
-      SimHash64Expr),
-    // the digest kernels consume BINARY; mirror the Column wrappers'
-    // implicit cast so STRING arguments work from SQL too
-    unary("graft_adler32",
-      "graft_adler32(bin) - Adler-32 checksum of a BINARY column as LONG")(
-      e => Adler32Expr(Cast(e, BinaryType))),
-    unary("graft_md5_prefix_long",
-      "graft_md5_prefix_long(str) - first 60 bits of md5 as a non-negative LONG (portable hash family)")(
-      e => Md5PrefixLongExpr(Cast(e, BinaryType))),
-    unary("graft_deflate_ratio",
-      "graft_deflate_ratio(str) - deflate(BEST_SPEED) compressed/raw size; repetitive text compresses low")(
-      e => DeflateRatioExpr(Cast(e, BinaryType))),
-    unary("graft_nfc",
-      "graft_nfc(str) - Unicode NFC canonical composition (normalize before hashing/dedup)")(
-      NfcNormalizeExpr),
-    (FunctionIdentifier("graft_zvalue16"),
-      info("graft_zvalue16",
-        "graft_zvalue16(x, y) - Morton/z-order interleave of two 16-bit dimension keys as LONG"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"graft_zvalue16 expects 2 arguments, got ${args.length}")
-        ZValue16Expr(Cast(args.head, IntegerType), Cast(args(1), IntegerType))
-      }),
-    (FunctionIdentifier("graft_dot"),
-      info("graft_dot",
-        "graft_dot(a, b) - dot product of two ARRAY<DOUBLE> columns (sequential fold)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"graft_dot expects 2 arguments, got ${args.length}")
-        DotProductExpr(args.head, args(1))
-      }),
+    fn("graft_token_runs",
+      "graft_token_runs(str) - count of [a-z0-9] runs of a STRING (token count without a regex engine)",
+      1)(a => TextFunctions.tokenRuns(a(0))),
+    fn("graft_top_token_count",
+      "graft_top_token_count(arr) - highest per-token occurrence count in an ARRAY<STRING>",
+      1)(a => TextFunctions.topTokenCount(a(0))),
+    fn("graft_simhash64",
+      "graft_simhash64(arr) - 64-bit SimHash of an ARRAY<STRING> (xxhash64 per token, single-pass bit vote)",
+      1)(a => Hashes.simhash64(a(0))),
+    // the digest kernels read BINARY; the Column functions cast, so
+    // STRING arguments work from SQL too
+    fn("graft_adler32",
+      "graft_adler32(bin) - Adler-32 checksum of a BINARY (or STRING) as LONG",
+      1)(a => Hashes.adler32(a(0))),
+    fn("graft_md5_prefix_long",
+      "graft_md5_prefix_long(str) - first 60 bits of md5 as a non-negative LONG (portable hash family)",
+      1)(a => Hashes.md5Long(a(0))),
+    fn("graft_deflate_ratio",
+      "graft_deflate_ratio(str) - deflate(BEST_SPEED) compressed/raw size; repetitive text compresses low",
+      1)(a => TextFunctions.compressionRatio(a(0))),
+    fn("graft_nfc",
+      "graft_nfc(str) - Unicode NFC canonical composition (normalize before hashing/dedup)",
+      1)(a => TextFunctions.nfc(a(0))),
+    fn("graft_zvalue16",
+      "graft_zvalue16(x, y) - Morton/z-order interleave of two 16-bit INT dimension keys as LONG",
+      2)(a => ZOrder.zvalue16(a(0), a(1))),
+    fn("graft_dot",
+      "graft_dot(a, b) - dot product of two ARRAY<DOUBLE> columns (sequential fold)",
+      2)(a => VectorFunctions.dot(a(0), a(1))),
     // model-free LSH: the plane family derives from (seed, bit, dim)
     // alone, so SQL callers get the SAME buckets as the Column API —
     // cross-engine/cross-job bucket compatibility with no stored model
-    (FunctionIdentifier("graft_srp_bucket"),
-      info("graft_srp_bucket",
-        "graft_srp_bucket(vec, dim, nbits, seed) - sign-random-projection LSH " +
-          "bucket of an ARRAY<DOUBLE>; dim/nbits/seed must be integer literals"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_srp_bucket expects 4 arguments, got ${args.length}")
-        def intLit(e: Expression, name: String): Int = {
-          require(e.foldable, s"graft_srp_bucket: $name must be a literal")
-          e.eval(null) match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case s: Short => s.toInt
-            case b: Byte => b.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_srp_bucket: $name must be an integer literal, got $other")
-          }
-        }
-        graft.functions.VectorFunctions.sqlSrpBucket(args.head,
-          intLit(args(1), "dim"), intLit(args(2), "nbits"), intLit(args(3), "seed"))
-      }))
+    fn("graft_srp_bucket",
+      "graft_srp_bucket(vec, dim, nbits, seed) - sign-random-projection LSH " +
+        "bucket of an ARRAY<DOUBLE>; dim/nbits/seed must be INT literals, " +
+        "dim >= 1, 1 <= nbits <= 64",
+      4)(a => VectorFunctions.srpBucket(a(0),
+        intLit(a(1), "dim"), intLit(a(2), "nbits"), intLit(a(3), "seed"))))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graft.Kernel
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair encoding over a MERGES TABLE — the real tokenizer behind
@@ -17,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * until none applies.
   *
   * Scale shape: the model is a driver-side object shipped to executors
-  * as ONE plan reference (`addReferenceObj`, like the IVF centroids) —
-  * never a join side, never per-row state. Words repeat Zipf-style, so
+  * as ONE plan reference object (like the IVF centroids) — never a
+  * join side, never per-row state. Words repeat Zipf-style, so
   * encoding memoizes per executor in a bounded cache.
   */
 final class BpeModel(val merges: Array[(String, String)],
@@ -157,26 +156,8 @@ object BpeModel {
   }
 }
 
-/** BPE token count of a string column — native, codegen'd, model as a
-  * single plan reference object. */
-case class BpeCountExpr(child: Expression, model: BpeModel)
-  extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_bpe_count"
-  protected override def nullSafeEval(input: Any): Any =
-    model.countTokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeModel", model, "graft.functions.BpeModel")
-    defineCodeGen(ctx, ev, c => s"$ref.countTokens($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeCountExpr =
-    copy(child = newChild)
-}
-
 object Bpe {
   /** Column API: BPE token count under `model`. */
-  def tokenCount(text: Column, model: BpeModel): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(BpeCountExpr(ColumnBridge.expression(text), model))
-  }
+  def tokenCount(text: Column, model: BpeModel): Column =
+    Kernel.method(model, "countTokens", LongType, text -> StringType)
 }

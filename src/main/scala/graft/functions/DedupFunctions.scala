@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernel
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Corpus-scale deduplication operators: exact, MinHash+LSH, SimHash,
   * n-gram Jaccard. Generalizes the reference's windowed exact-hash
@@ -254,22 +256,22 @@ object DedupFunctions {
         Seq("d1"))
       .join(sig.select(col(idCol).cast(keyType).as("d2"), col("sig").as("_s2")),
         Seq("d2"))
-      // native per-pair agreement count (SigAgreeExpr) — the composed
-      // zip_with/aggregate re-entered interpreted lambdas once per
-      // signature position per candidate pair; bit-identical values
-      // (DedupPropertySpec pins native == composed)
-      .withColumn("agree", {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.functions.SigAgreeExpr(
-          ColumnBridge.expression(col("_s1")),
-          ColumnBridge.expression(col("_s2"))))
-      })
+      .withColumn("agree", agree(col("_s1"), col("_s2")))
       .filter(col("agree") >= minAgree)
       .select(col("d1"), col("d2"), col("agree"))
   }
 
+  /** Native per-pair signature agreement count
+    * ([[VecUtil.agreeCount]]) — the composed zip_with/aggregate form
+    * re-entered interpreted lambdas once per signature position per
+    * candidate pair; values are bit-identical (DedupPropertySpec pins
+    * native == composed). */
+  private[graft] def agree(a: Column, b: Column): Column =
+    Kernel.static(VecUtil, "agreeCount", LongType,
+      a -> ArrayType(LongType), b -> ArrayType(LongType))
+
   /** The composed-HOF agreement form, kept ONLY for the equivalence
-    * test pinning [[graft.functions.SigAgreeExpr]]. */
+    * test pinning [[agree]]. */
   private[graft] def agreeComposed(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => when(x === y, lit(1L)).otherwise(lit(0L))),
@@ -565,19 +567,16 @@ object DedupFunctions {
     * fast/portable split as minhash q31/q20. */
   private val Pow2To60: Column = array((0 until 60).map(b => lit(1L << b)): _*)
 
-  def simhash60Portable(hashedCol: Column): Column = {
-    // native single pass (SimHash60Expr) — the composed HOF fold below
-    // allocated three 60-wide arrays + ~180 interpreted lambda
+  def simhash60Portable(hashedCol: Column): Column =
+    // native single pass (HashUtil.simhash60) — the composed HOF fold
+    // below allocated three 60-wide arrays + ~180 interpreted lambda
     // re-entries per token and dominated q48's scan stage; values are
     // bit-identical (SimhashSpec pins native == composed, nulls and
     // empties included), so the DuckDB oracle is untouched
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.SimHash60Expr(
-      ColumnBridge.expression(hashedCol)))
-  }
+    Kernel.static(HashUtil, "simhash60", LongType, hashedCol -> ArrayType(LongType))
 
   /** The composed-HOF reference form, kept ONLY for the equivalence
-    * test pinning [[graft.functions.SimHash60Expr]] to the same bit
+    * test pinning [[simhash60Portable]] to the same bit
     * pattern (the dotComposed pattern). */
   private[graft] def simhash60Composed(hashedCol: Column): Column = {
     val votes = aggregate(hashedCol, array_repeat(lit(0L), 60),

@@ -1,13 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.graft.Kernel
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, LongType, StringType}
+import org.apache.spark.util.sketch.BloomFilter
 
-/** JVM-side hash helpers, callable from generated code (static refs). */
+/** The hash and text kernels: plain JVM methods that the column
+  * functions call through [[org.apache.spark.sql.graft.Kernel]]. */
 object HashUtil {
   def adler32(bytes: Array[Byte]): Long = {
     val a = new java.util.zip.Adler32()
@@ -182,7 +182,8 @@ object HashUtil {
   }
 }
 
-/** JVM-side vector kernels, callable from generated code. */
+/** The vector kernels, called through
+  * [[org.apache.spark.sql.graft.Kernel]] like [[HashUtil]]'s. */
 object VecUtil {
   /** Count of positions where two `array<long>` values agree — the
     * MinHash signature-agreement kernel. Bit-identical to the composed
@@ -336,291 +337,6 @@ object VecUtil {
   }
 }
 
-/** Count of maximal `[a-z0-9]` runs in a string — exactly the number
-  * of matches `regexp_extract_all(s, '[a-z0-9]+')` would produce, as a
-  * single byte scan: the class is pure ASCII (multi-byte UTF-8 units
-  * have the high bit set, so they can never join a run), no regex
-  * engine, and no match-array materialization just to take `size()`.
-  * Feed it the SAME lowered column the regex form used for exact
-  * count parity.
-  */
-case class TokenRunCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_token_runs"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.tokenRuns(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.tokenRuns($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenRunCountExpr =
-    copy(child = newChild)
-}
-
-/** Native dot product of two `array<double>` columns. The composed
-  * HOF form re-enters expression evaluation per element; on an
-  * all-pairs similarity join (|pairs| × dim element visits) that
-  * interpreter overhead dominates the arithmetic — this is a tight
-  * primitive loop under whole-stage codegen instead.
-  */
-case class DotProductExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "graft_dot"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    VecUtil.dotD(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecUtil.dotD($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DotProductExpr = copy(left = newLeft, right = newRight)
-}
-
-/** Max per-token occurrence count of an `array<string>` column as a
-  * native Catalyst expression with codegen — the repetition-quality
-  * signal for corpus filtering (see [[HashUtil.topTokenCount]] for the
-  * complexity argument vs the composed HOF form).
-  */
-case class TopTokenCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_top_token_count"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.topTokenCount(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.topTokenCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): TopTokenCountExpr =
-    copy(child = newChild)
-}
-
-/** Single-pass SimHash of an `array<string>` column as a native
-  * Catalyst expression with codegen. Semantically identical to the
-  * composed form `sum_b(sign(sum_tok ±1(bit_b(xxhash64(tok)))) << b)`
-  * but one pass instead of 64 (reference for the dedup family:
-  * message/router/middleware/deduplicator.go generalized per SURVEY
-  * §2.10 extension surface).
-  */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.simhash64(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-}
-
-/** MinHash signature agreement count of two `array<long>` columns as a
-  * native codegen'd expression — per candidate pair the composed
-  * zip_with/aggregate form re-entered interpreted lambda evaluation
-  * once per signature position; see [[VecUtil.agreeCount]] for the
-  * bit-equivalence contract. */
-case class SigAgreeExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_sig_agree"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    VecUtil.agreeCount(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecUtil.agreeCount($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): SigAgreeExpr = copy(left = newLeft, right = newRight)
-}
-
-/** 60-bit SimHash over PRE-HASHED longs (the portable md5-prefix hash
-  * family) as a native codegen'd expression — the cross-engine twin of
-  * [[SimHash64Expr]]; see [[HashUtil.simhash60]] for the
-  * bit-equivalence contract with the composed HOF form it replaces. */
-case class SimHash60Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash60"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.simhash60(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.simhash60($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash60Expr =
-    copy(child = newChild)
-}
-
-/** Adler32 checksum of a binary column, as a native Catalyst expression
-  * with codegen (no UDF boxing). Parity with the reference's
-  * `NewMessageHasherAdler32` dedup hasher
-  * (reference: message/router/middleware/deduplicator.go:219-234).
-  */
-case class Adler32Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_adler32"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.adler32(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.adler32($c)")
-  override protected def withNewChildInternal(newChild: Expression): Adler32Expr =
-    copy(child = newChild)
-}
-
-/** Argmax-similarity centroid assignment against a small centroid
-  * matrix carried as a plan REFERENCE OBJECT (not inlined literals).
-  * The composed form this replaces inlined k × dim double literals
-  * into the expression tree TWICE per query (assignment + probing) —
-  * at k=16, dim=64 that's thousands of generated-code constants, and
-  * codegen compile time dominated the q36 wall clock at bench scale.
-  */
-case class NearestCentroidExpr(child: Expression, cents: Array[Array[Double]])
-  extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "graft_nearest_centroid"
-  protected override def nullSafeEval(input: Any): Any =
-    VecUtil.nearestCentroid(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecUtil.nearestCentroid($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidExpr =
-    copy(child = newChild)
-}
-
-/** SRP bucket id against a hyperplane matrix carried as a plan
-  * reference object — one vector pass per plane. Replaces a composed
-  * form that re-derived every hyperplane component with a per-element
-  * xxhash64 inside `aggregate(zip_with(...))` for EVERY ROW (the
-  * planes are row-independent): at sf0.1 that was ~5M interpreted
-  * lambda re-entries per band table and dominated the q49 scan. */
-case class SrpBucketExpr(child: Expression, planes: Array[Array[Double]])
-  extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_srp_bucket"
-  protected override def nullSafeEval(input: Any): Any =
-    VecUtil.srpBucket(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecUtil.srpBucket($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): SrpBucketExpr =
-    copy(child = newChild)
-}
-
-/** Membership probe against a Bloom filter carried as a plan reference
-  * object — the corpus-scale decontamination/anti-join filter: when
-  * the "drop if present" set outgrows an array literal or a
-  * comfortable broadcast hash relation, ship a fixed-size sketch
-  * instead and accept the (tunable) false-positive rate. Codegen'd;
-  * same reference-object pattern as the IVF centroids. */
-case class BloomContainsExpr(child: Expression,
-    bf: org.apache.spark.util.sketch.BloomFilter)
-  extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "graft_bloom_contains"
-  protected override def nullSafeEval(input: Any): Any =
-    bf.mightContainLong(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bf", bf,
-      classOf[org.apache.spark.util.sketch.BloomFilter].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BloomContainsExpr =
-    copy(child = newChild)
-}
-
-/** Top-`nProbes` centroid indices by similarity (sim DESC, idx DESC) —
-  * the multi-probe companion of [[NearestCentroidExpr]]. */
-case class TopCentroidsExpr(child: Expression, cents: Array[Array[Double]],
-    nProbes: Int) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def prettyName: String = "graft_top_centroids"
-  protected override def nullSafeEval(input: Any): Any =
-    VecUtil.topCentroids(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, nProbes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VecUtil.topCentroids($c, $ref, $nProbes)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): TopCentroidsExpr =
-    copy(child = newChild)
-}
-
-/** Product-quantization codes for a vector against `m` sub-codebooks
-  * carried as ONE plan reference object (Jégou et al. 2011, "Product
-  * Quantization for Nearest Neighbor Search"). Same reference-object
-  * pattern as [[NearestCentroidExpr]]: inlining m × ksub × dsub double
-  * literals would dominate codegen compile time. */
-case class PqEncodeExpr(child: Expression, books: Array[Array[Array[Double]]])
-  extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-  protected override def nullSafeEval(input: Any): Any =
-    VecUtil.pqEncode(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], books)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("books", books, "double[][][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecUtil.pqEncode($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
-    copy(child = newChild)
-}
-
-/** ADC approximate distance between a raw query vector (left) and a
-  * PQ code array (right) — the codes-only scan that makes PQ a
-  * bandwidth win: `m` table lookups per corpus row instead of `dim`
-  * multiplies against the original vector. */
-case class PqAdcDistExpr(left: Expression, right: Expression,
-    books: Array[Array[Array[Double]]])
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "graft_pq_adc_dist"
-  protected override def nullSafeEval(q: Any, codes: Any): Any =
-    VecUtil.pqAdcDist(
-      q.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      codes.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], books)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("books", books, "double[][][]")
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.VecUtil.pqAdcDist($a, $b, $ref)")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): PqAdcDistExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** First 60 bits of md5 as a long — the engine-portable hash family's
-  * workhorse, as a single codegen'd pass (digest → long). The composed
-  * `conv(substring(md5(...)))` form it replaces paid a 32-char hex
-  * string, a substring copy, and a base-16 string parse per value —
-  * the dominant cost of every portable-path query (q20/q33/q37/q43/
-  * q45/q48 oracle twins), which hash EVERY TOKEN of the corpus.
-  * Bit-identity with the composed form (hence with the DuckDB oracle's
-  * `('0x'||substr(md5(..),1,15))::BIGINT`) is pinned by an equivalence
-  * test and proven end-to-end by the existing oracle gates.
-  */
-case class Md5PrefixLongExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_md5_prefix60"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.md5Prefix60(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.md5Prefix60($c)")
-  override protected def withNewChildInternal(newChild: Expression): Md5PrefixLongExpr =
-    copy(child = newChild)
-}
-
-/** Deflate-compressibility of a BINARY column — the CCNet/Gopher-style
-  * repetitiveness signal no composed expression can produce (zlib is
-  * not expressible in Catalyst built-ins). Codegen'd scalar; the
-  * thread-local Deflater amortizes native-object setup across rows. */
-case class DeflateRatioExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "graft_deflate_ratio"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.deflateRatio(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.deflateRatio($c)")
-  override protected def withNewChildInternal(newChild: Expression): DeflateRatioExpr =
-    copy(child = newChild)
-}
-
 /** Hash column functions. Two families:
   *  - fast path: `xxhash64` (Spark-native, codegen'd) — use in
   *    production pipelines;
@@ -630,22 +346,24 @@ case class DeflateRatioExpr(child: Expression) extends UnaryExpression {
   */
 object Hashes {
 
-  def adler32(c: Column): Column = ColumnBridge.column(
-    Adler32Expr(ColumnBridge.expression(c.cast(BinaryType))))
+  /** Adler-32 checksum — the reference's `NewMessageHasherAdler32`
+    * dedup hasher (message/router/middleware/deduplicator.go:219-234). */
+  def adler32(c: Column): Column =
+    Kernel.static(HashUtil, "adler32", LongType, c.cast(BinaryType) -> BinaryType)
 
-  /** Single-pass SimHash of an array<string> column (codegen'd). */
-  def simhash64(tokens: Column): Column = ColumnBridge.column(
-    SimHash64Expr(ColumnBridge.expression(tokens)))
+  /** Single-pass SimHash of an array<string> column
+    * ([[HashUtil.simhash64]]). */
+  def simhash64(tokens: Column): Column =
+    Kernel.static(HashUtil, "simhash64", LongType, tokens -> ArrayType(StringType))
 
   /** First 15 hex chars of md5 as a positive 60-bit long. Engine-portable
     * (DuckDB reproduces it from the hex md5); computed natively in one
-    * digest pass ([[Md5PrefixLongExpr]]). */
-  def md5Long(c: Column): Column = ColumnBridge.column(
-    Md5PrefixLongExpr(ColumnBridge.expression(c.cast(BinaryType))))
+    * digest pass ([[HashUtil.md5Prefix60]]). */
+  def md5Long(c: Column): Column =
+    Kernel.static(HashUtil, "md5Prefix60", LongType, c.cast(BinaryType) -> BinaryType)
 
   /** The composed column form — kept for the equivalence test that pins
-    * [[Md5PrefixLongExpr]] to the same bit pattern; do not use in query
-    * paths. */
+    * [[md5Long]] to the same bit pattern; do not use in query paths. */
   private[graft] def md5LongComposed(c: Column): Column =
     conv(substring(md5(c.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
 
@@ -658,31 +376,13 @@ object Hashes {
     * MinHash hash family; not oracle-portable. */
   def fastLong(c: Column, salt: Int): Column = xxhash64(lit(salt), c)
 
-  /** Bloom membership probe of a LONG column ([[BloomContainsExpr]]). */
-  def bloomContains(c: Column,
-      bf: org.apache.spark.util.sketch.BloomFilter): Column =
-    ColumnBridge.column(BloomContainsExpr(ColumnBridge.expression(c), bf))
+  /** Bloom membership probe of a LONG column, the filter riding the
+    * plan as one reference object — the corpus-scale decontamination
+    * filter when the "drop if present" set outgrows a broadcast hash
+    * relation (a tunable false-positive rate for a fixed size). */
+  def bloomContains(c: Column, bf: BloomFilter): Column =
+    Kernel.method(bf, "mightContainLong", BooleanType, c -> LongType)
 
   /** Content hash used by exact dedup: hex md5 (engine-portable). */
   def contentHash(c: Column): Column = md5(c.cast(BinaryType))
-}
-
-/** Unicode NFC normalization as a native expression — the canonical-
-  * composition pass every dedup/hash pipeline needs BEFORE hashing
-  * (the same text arrives composed from one crawler and decomposed
-  * from another; byte-level hashes then miss the duplicate). Spark
-  * has no built-in normalizer; the JDK one is `java.text.Normalizer`.
-  * `isNormalized` short-circuits the (overwhelmingly common) already-
-  * NFC case without allocating — ASCII corpora pay one table-driven
-  * scan per value and nothing else.
-  */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def prettyName: String = "graft_nfc"
-  protected override def nullSafeEval(input: Any): Any =
-    HashUtil.nfcNormalize(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.nfcNormalize($c)")
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
-    copy(child = newChild)
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graft.Kernel
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType, StringType}
 
 /** Text-analysis operators for large-scale corpus pipelines: token
   * counting, quality scoring, language id, fingerprinting. All pure
@@ -26,11 +27,12 @@ object TextFunctions {
     * At corpus scale token counting is the hottest text op; keep the
     * array-producing [[tokens]] for paths that need the tokens
     * themselves. */
-  def tokenCount(text: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.TokenRunCountExpr(
-      ColumnBridge.expression(lower(text))))
-  }
+  def tokenCount(text: Column): Column = tokenRuns(lower(text))
+
+  /** Count of maximal `[a-z0-9]` runs of an already-lowered string
+    * ([[HashUtil.tokenRuns]]); SQL's `graft_token_runs`. */
+  private[graft] def tokenRuns(s: Column): Column =
+    Kernel.static(HashUtil, "tokenRuns", LongType, s -> StringType)
 
   /** The regex-composed form, kept for the equivalence test pinning
     * [[tokenCount]] to identical counts. */
@@ -40,11 +42,8 @@ object TextFunctions {
     * the Gopher-style repetition signal (top_tok_n / n_tok close to 1
     * means boilerplate). Native single-pass expression; pass it a
     * MATERIALIZED token-array attribute so tokenization runs once. */
-  def topTokenCount(tokenArr: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.TopTokenCountExpr(
-      ColumnBridge.expression(tokenArr)))
-  }
+  def topTokenCount(tokenArr: Column): Column =
+    Kernel.static(HashUtil, "topTokenCount", LongType, tokenArr -> ArrayType(StringType))
 
   /** The composed-HOF equivalent, kept only for the equivalence test
     * pinning [[topTokenCount]] (O(distinct × n) per row — not a
@@ -205,22 +204,17 @@ object TextFunctions {
 
   /** Deflate-compressibility (compressed/raw bytes, BEST_SPEED): the
     * CCNet/Gopher-style repetitiveness signal — boilerplate and spam
-    * compress far below natural prose. Native codegen'd expression
-    * ([[DeflateRatioExpr]]); zlib is not expressible in built-ins. */
-  def compressionRatio(text: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.DeflateRatioExpr(
-      ColumnBridge.expression(text.cast("binary"))))
-  }
+    * compress far below natural prose. Native kernel
+    * ([[HashUtil.deflateRatio]]); zlib is not expressible in built-ins. */
+  def compressionRatio(text: Column): Column =
+    Kernel.static(HashUtil, "deflateRatio", DoubleType, text.cast("binary") -> BinaryType)
 
-  /** Unicode NFC canonical composition ([[NfcNormalizeExpr]]) — run
+  /** Unicode NFC canonical composition ([[HashUtil.nfcNormalize]]) — run
     * before any byte-level hash/dedup: composed and decomposed forms
-    * of the same text must collide. */
-  def nfc(text: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.NfcNormalizeExpr(
-      ColumnBridge.expression(text)))
-  }
+    * of the same text must collide. Spark has no built-in normalizer;
+    * the already-NFC case costs one scan and no allocation. */
+  def nfc(text: Column): Column =
+    Kernel.static(HashUtil, "nfcNormalize", StringType, text -> StringType)
 
   /** Full text canonicalization for dedup keys: NFC, control chars to
     * spaces, space runs collapsed, ends trimmed. The collapse pattern

@@ -3,28 +3,32 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernel
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 /** Embedding-similarity operators over `ARRAY<FLOAT/DOUBLE>` columns.
-  * All arithmetic is built from `zip_with`/`aggregate` column
-  * expressions (codegen'd, sequential left fold — deterministic and
-  * bit-reproducible across runs), never UDFs.
+  * All arithmetic is native kernels ([[VecUtil]], reading
+  * `ARRAY<DOUBLE>`; a FLOAT array is widened) or composed column
+  * expressions — sequential left folds, deterministic and
+  * bit-reproducible across runs, never UDFs.
   */
 object VectorFunctions {
 
-  /** Dot product of two equal-length vectors: a native codegen'd
-    * expression ([[DotProductExpr]]) with the same sequential-fold
-    * accumulation order (bit-identical results) as the composed
+  /** The type every vector kernel reads; an `ARRAY<FLOAT>` argument is
+    * widened to it by the analyzer. */
+  private val Vec = ArrayType(DoubleType)
+
+  /** Dot product of two equal-length vectors: a native kernel
+    * ([[VecUtil.dotD]]) with the same sequential-fold accumulation
+    * order (bit-identical results) as the composed
     * `aggregate(zip_with(...))` form it replaces — the HOF form
     * re-enters expression evaluation per element, which dominates
     * all-pairs similarity joins. */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(DotProductExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  }
+  def dot(a: Column, b: Column): Column =
+    Kernel.static(VecUtil, "dotD", DoubleType, a -> Vec, b -> Vec)
 
   /** The composed-HOF reference form, kept for the equivalence test
-    * that pins [[DotProductExpr]] to the same bit pattern. */
+    * that pins [[dot]] to the same bit pattern. */
   private[graft] def dotComposed(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
@@ -389,23 +393,20 @@ object VectorFunctions {
   }
 
   /** Argmax-similarity centroid id for a UNIT vector column. Native
-    * expression carrying the centroid matrix as ONE reference object:
+    * kernel carrying the centroid matrix as ONE reference object:
     * the previous composed form (`array_max` over k `struct(dot(v,
     * typedLit(centroid)), i)` branches) inlined k × dim double
     * literals into the tree, and generated-code compilation dominated
     * the query at bench scale. Tie-break (higher id) is identical. */
-  private def nearestCentroid(vhat: Column, cents: Array[Array[Double]]): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(NearestCentroidExpr(ColumnBridge.expression(vhat), cents))
-  }
+  private[graft] def nearestCentroid(vhat: Column, cents: Array[Array[Double]]): Column =
+    Kernel.static(VecUtil, "nearestCentroid", IntegerType, vhat -> Vec, Kernel.model(cents))
 
   /** Top-`nProbes` centroid ids by similarity, ordered (sim DESC, id
     * DESC) — same order as the composed reverse-sort-slice form. */
-  private def topCentroids(vhat: Column, cents: Array[Array[Double]],
-      nProbes: Int): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(TopCentroidsExpr(ColumnBridge.expression(vhat), cents, nProbes))
-  }
+  private[graft] def topCentroids(vhat: Column, cents: Array[Array[Double]],
+      nProbes: Int): Column =
+    Kernel.static(VecUtil, "topCentroids", ArrayType(IntegerType, containsNull = false),
+      vhat -> Vec, Kernel.model(cents), lit(nProbes) -> IntegerType)
 
   /** IVF search: corpus vectors live in exactly ONE centroid's posting
     * list (one assignment pass, no duplication); each query probes its
@@ -446,28 +447,22 @@ object VectorFunctions {
     *
     * The planes are ROW-INDEPENDENT, so they are materialized ONCE at
     * plan-construction time and ride the plan as a single reference
-    * object ([[SrpBucketExpr]], same pattern as the IVF centroids).
+    * object ([[VecUtil.srpBucket]], same pattern as the IVF centroids).
     * The previous composed form re-derived every component with a
     * per-element xxhash64 inside `aggregate(zip_with(...))` for every
     * row — ~5M interpreted lambda re-entries per band table at sf0.1,
     * dominating the bucketed-dedup scan stage. */
-  def srpBucket(vec: Column, dim: Int, nBits: Int, seed: Int = 42): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      SrpBucketExpr(ColumnBridge.expression(vec), srpPlanes(dim, nBits, seed)))
-  }
+  def srpBucket(vec: Column, dim: Int, nBits: Int, seed: Int = 42): Column =
+    Kernel.static(VecUtil, "srpBucket", LongType,
+      vec -> Vec, Kernel.model(srpPlanes(dim, nBits, seed)))
 
-  /** Expression-level form for the SQL registration
-    * (`graft_srp_bucket` in [[graft.GraftExtensions]]). */
-  private[graft] def sqlSrpBucket(
-      vec: org.apache.spark.sql.catalyst.expressions.Expression,
-      dim: Int, nBits: Int, seed: Int): SrpBucketExpr =
-    SrpBucketExpr(vec, srpPlanes(dim, nBits, seed))
-
-  /** The deterministic ±1 hyperplane family behind [[srpBucket]] —
-    * shared with the SQL registration (`graft_srp_bucket`). */
+  /** The deterministic ±1 hyperplane family behind [[srpBucket]] (and
+    * so `graft_srp_bucket`). A bucket packs one bit per plane into a
+    * LONG, so `nBits` is 1..64: a 65th plane would wrap onto bit 0. */
   private[graft] def srpPlanes(dim: Int, nBits: Int,
-      seed: Int): Array[Array[Double]] =
+      seed: Int): Array[Array[Double]] = {
+    require(nBits >= 1 && nBits <= 64, s"SRP nBits must be in 1..64, got $nBits")
+    require(dim >= 1, s"SRP dim must be at least 1, got $dim")
     Array.tabulate(nBits, dim) { (b, d) =>
       // splitmix64 finalizer over the (seed, bit, dim) triple
       var z = seed.toLong * 0x9E3779B97F4A7C15L +
@@ -477,6 +472,7 @@ object VectorFunctions {
       z ^= z >>> 31
       if ((z & 1L) == 0L) -1.0 else 1.0
     }
+  }
 
   /** IVF-style ANN: bucket corpus and queries by [[srpBucket]], join on
     * bucket, then exact top-k within candidates. Trades recall for a
@@ -561,22 +557,22 @@ object VectorFunctions {
 
   /** PQ codes column: `m` sub-centroid indices per vector, the
     * codebooks riding the plan as one reference object. */
-  def pqCodes(vec: Column, books: Array[Array[Array[Double]]]): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(PqEncodeExpr(ColumnBridge.expression(vec), books))
-  }
+  def pqCodes(vec: Column, books: Array[Array[Array[Double]]]): Column =
+    Kernel.static(VecUtil, "pqEncode", ArrayType(IntegerType, containsNull = false),
+      vec -> Vec, Kernel.model(books))
 
-  private def pqAdcDist(qv: Column, codes: Column,
-      books: Array[Array[Array[Double]]]): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(PqAdcDistExpr(ColumnBridge.expression(qv),
-      ColumnBridge.expression(codes), books))
-  }
+  /** ADC distance between a raw query vector and a PQ code array
+    * ([[VecUtil.pqAdcDist]]): `m` table lookups per corpus row instead
+    * of `dim` multiplies. */
+  private[graft] def pqAdcDist(qv: Column, codes: Column,
+      books: Array[Array[Array[Double]]]): Column =
+    Kernel.static(VecUtil, "pqAdcDist", DoubleType,
+      qv -> Vec, codes -> ArrayType(IntegerType), Kernel.model(books))
 
   /** Product-quantization codebooks (Jégou et al. 2011): split `dim`
     * into `m` subspaces of `dim/m` dims, k-means each subspace to
     * `ksub` sub-centroids. Every Lloyd round trains ALL `m` subspaces
-    * in ONE pass — assign via [[PqEncodeExpr]] on the full vector,
+    * in ONE pass — assign via [[pqCodes]] on the full vector,
     * re-estimate via a single (subspace, code, pos) aggregation — so
     * the per-round cost is one scan + one shuffle regardless of `m`,
     * and the driver only ever holds the m × ksub × dsub model.

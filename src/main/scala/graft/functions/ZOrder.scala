@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.BinaryExpression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+import org.apache.spark.sql.graft.Kernel
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Z-order (Morton) clustering: interleave the bits of two dimension
   * keys so that sorting by ONE value keeps rows close in BOTH — the
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   * stripes, so a query filtering on either (or both) dimensions prunes
   * most files at planning time — no index structure, just sort order.
   *
-  * The kernel is a codegen'd Catalyst expression (5 shift/mask steps
+  * The kernel is [[ZOrderUtil.interleave16]] (5 shift/mask steps
   * per dimension — the standard bit-spread, no loop), so z-values ride
   * the scan inside whole-stage codegen. Layout itself is plain
   * `repartitionByRange(zvalue).sortWithinPartitions(zvalue)`: range
@@ -27,12 +25,9 @@ object ZOrder {
   /** Z-value of two 16-bit dimension keys (callers bucket/rank real
     * columns into 0..65535 first — rank-normalizing first makes the
     * curve robust to skewed value distributions). */
-  def zvalue16(x: Column, y: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(ZValue16Expr(
-      ColumnBridge.expression(x.cast("int")),
-      ColumnBridge.expression(y.cast("int"))))
-  }
+  def zvalue16(x: Column, y: Column): Column =
+    Kernel.static(ZOrderUtil, "interleave16", LongType,
+      x.cast("int") -> IntegerType, y.cast("int") -> IntegerType)
 
   /** Cluster `df` for scans that filter on either interleaved
     * dimension: range-partition into `files` disjoint z-ranges, sort
@@ -66,19 +61,4 @@ object ZOrderUtil {
     * x-major on ties — deterministic and engine-reproducible). */
   def interleave16(x: Int, y: Int): Long =
     spread16(x) | (spread16(y) << 1)
-}
-
-/** `zvalue16` as a native expression: LONG Morton code of two INT
-  * dimension keys (low 16 bits each). */
-case class ZValue16Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_zvalue16"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderUtil.interleave16(a.asInstanceOf[Int], b.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ZOrderUtil.interleave16($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ZValue16Expr = copy(left = newLeft, right = newRight)
 }

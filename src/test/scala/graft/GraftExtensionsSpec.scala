@@ -74,6 +74,51 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  /** The messages of `t` and its causes, outermost first. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+
+  /** A parquet-backed view, so the kernels run on scanned rows under
+    * whole-stage codegen rather than on a folded local relation. */
+  private def parquetView(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ext-").resolve("t").toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView(name)
+  }
+
+  test("graft_simhash64 casts a BIGINT array to the ARRAY<STRING> it reads") {
+    parquetView("ext_sh_pq", Seq((1L, 2L)).toDF("one", "two"))
+    val r = spark.sql(
+      """SELECT graft_simhash64(array(CAST(1 AS BIGINT), CAST(2 AS BIGINT))) AS lit,
+        |  graft_simhash64(array(one, two)) AS col,
+        |  graft_simhash64(array('1', '2')) AS str
+        |FROM ext_sh_pq""".stripMargin).collect().head
+    assert(r.getLong(0) == r.getLong(2) && r.getLong(1) == r.getLong(2),
+      s"BIGINT forms ${r.getLong(0)}, ${r.getLong(1)} vs STRING form ${r.getLong(2)}")
+  }
+
+  test("graft_srp_bucket rejects nbits outside 1..64 and dim below 1") {
+    parquetView("ext_srp_pq", Seq((1L, Array.fill(16)(0.5))).toDF("id", "v"))
+    for ((q, word) <- Seq("v, 16, 65, 42" -> "nBits", "v, 16, 0, 42" -> "nBits",
+        "v, 0, 8, 42" -> "dim")) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT graft_srp_bucket($q) FROM ext_srp_pq").collect()
+      }
+      assert(messages(e).contains(word), s"graft_srp_bucket($q): ${messages(e)}")
+    }
+    val e = intercept[IllegalArgumentException](VectorFunctions.srpBucket(col("v"), 16, 65))
+    assert(e.getMessage.contains("1..64"), e.getMessage)
+  }
+
+  test("graft_srp_bucket rejects an integer literal outside the INT range") {
+    parquetView("ext_srp_wide_pq", Seq((1L, Array.fill(16)(0.5))).toDF("id", "v"))
+    // 4294967312 = 2^32 + 16: narrowed, it would run at dim 16
+    val e = intercept[Exception] {
+      spark.sql("SELECT graft_srp_bucket(v, 4294967312, 8, 42) FROM ext_srp_wide_pq").collect()
+    }
+    assert(messages(e).contains("INT range"), messages(e))
+  }
+
   test("wrong arity is rejected at analysis") {
     intercept[Exception] { spark.sql("SELECT graft_dot(array(1.0))").collect() }
   }

@@ -228,6 +228,25 @@ class DedupPropertySpec extends SparkSpec {
     }
   }
 
+  test("dot over ARRAY<FLOAT> columns equals dot over their ARRAY<DOUBLE> casts") {
+    // the kernel reads 8-byte doubles; a FLOAT array must be widened
+    // first, never read as doubles
+    val vecs = (0 until 25).map { i =>
+      (i.toLong,
+        Array.tabulate(16)(d => math.sin(i * 7 + d).toFloat),
+        Array.tabulate(16)(d => math.cos(i * 11 + d * 5).toFloat))
+    }.toDF("id", "a", "b")
+    val both = vecs.select(col("id"),
+      VectorFunctions.dot(col("a"), col("b")).as("f"),
+      VectorFunctions.dot(col("a").cast("array<double>"),
+        col("b").cast("array<double>")).as("d")).collect()
+    both.foreach { r =>
+      assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ==
+        java.lang.Double.doubleToLongBits(r.getDouble(2)),
+        s"id ${r.getLong(0)}: ${r.getDouble(1)} vs ${r.getDouble(2)}")
+    }
+  }
+
   test("native portable simhash60 is bit-identical to the composed HOF fold") {
     // the composed fold allocated three 60-wide arrays + ~180
     // interpreted lambda re-entries per token (q48's scan-stage
@@ -272,11 +291,7 @@ class DedupPropertySpec extends SparkSpec {
       (3L, (0 until 64).map(_.toLong), (0 until 64).map(i => (i * 2).toLong))
     ).toDF("id", "a", "b")
     val both = df.select(col("id"),
-      {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.functions.SigAgreeExpr(
-          ColumnBridge.expression(col("a")), ColumnBridge.expression(col("b"))))
-      }.as("fast"),
+      DedupFunctions.agree(col("a"), col("b")).as("fast"),
       DedupFunctions.agreeComposed(col("a"), col("b")).as("slow")).collect()
     both.foreach(r => assert(r.getLong(1) == r.getLong(2),
       s"id ${r.getLong(0)}: ${r.getLong(1)} vs ${r.getLong(2)}"))
@@ -286,11 +301,7 @@ class DedupPropertySpec extends SparkSpec {
       """SELECT array(CAST(1 AS BIGINT), CAST(null AS BIGINT)) AS a,
         |       array(CAST(1 AS BIGINT), CAST(null AS BIGINT)) AS b""".stripMargin)
     val nr = nulls.select(
-      {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.functions.SigAgreeExpr(
-          ColumnBridge.expression(col("a")), ColumnBridge.expression(col("b"))))
-      }.as("fast"),
+      DedupFunctions.agree(col("a"), col("b")).as("fast"),
       DedupFunctions.agreeComposed(col("a"), col("b")).as("slow")).collect().head
     assert(nr.getLong(0) == 1L && nr.getLong(1) == 1L,
       s"null elements must not match: ${nr.getLong(0)} vs ${nr.getLong(1)}")
