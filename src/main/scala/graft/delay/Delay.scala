@@ -34,6 +34,16 @@ object Delay {
     m.withMeta(Ctx.DelayedUntil, Instant.ofEpochMilli(d.untilMs).toString)
       .withMeta(Ctx.DelayedFor, d.forDesc)
 
+  /** The due instant of a `delayed_until` stamp, in epoch ms; None for
+    * an absent or MALFORMED stamp, which is deliverable now. The one
+    * stamp rule of the JVM delivery paths ([[DelayedDelivery.releaseWhenDue]],
+    * `SqlPubSub`); [[isReady]] is its column form. NonFatal, not just
+    * DateTimeParseException: a valid-ISO stamp at year +999999999
+    * parses fine and then throws ArithmeticException in toEpochMilli. */
+  def dueMs(stamp: String): Option[Long] =
+    try Some(Instant.parse(stamp).toEpochMilli)
+    catch { case scala.util.control.NonFatal(_) => None }
+
   /** Column predicate: true when the row is deliverable as of `asOf`.
     * Rows without delay metadata are always ready. A MALFORMED stamp is
     * also ready: `try_to_timestamp`, not `to_timestamp` — under ANSI
@@ -41,10 +51,12 @@ object Delay {
     * kill every retry of the micro-batch at the filter, before any
     * poison-queue middleware could route it. Fail-open to visibility:
     * the row flows now and is observable downstream; failing closed
-    * would hide it forever (silent loss). */
+    * would hide it forever (silent loss). The pattern accepts what
+    * [[dueMs]]'s `Instant.parse` accepts: a zone-less or date-only
+    * stamp is malformed on every path. */
   def isReady(asOf: Column): Column = {
     val until = element_at(col("metadata"), lit(Ctx.DelayedUntil))
-    val parsed = try_to_timestamp(until)
+    val parsed = try_to_timestamp(until, lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSSSSS]XXX"))
     until.isNull || parsed.isNull || parsed <= asOf
   }
 }
@@ -181,19 +193,10 @@ object DelayedDelivery {
             Iterator.single(due)
           } else {
             val out = scala.collection.mutable.ArrayBuffer.empty[Message]
-            def dueMsOf(m: Message): Option[Long] = {
-              val untilStr = m.get(Ctx.DelayedUntil)
-              // malformed stamps (foreign writers can stamp anything)
-              // pass through like undelayed rows — a throwing parse here
-              // would kill the stateful query on one corrupt row, the
-              // same fail-open contract as isReady and SqlPubSub.dueAt
-              if (untilStr.isEmpty) None
-              else try Some(java.time.Instant.parse(untilStr).toEpochMilli)
-                // NonFatal, not just DateTimeParseException: a valid-ISO
-                // stamp at year +999999999 parses fine and then throws
-                // ArithmeticException in toEpochMilli — same poison class
-                catch { case scala.util.control.NonFatal(_) => None }
-            }
+            // malformed stamps (foreign writers can stamp anything)
+            // pass through like undelayed rows — a throwing parse here
+            // would kill the stateful query on one corrupt row
+            def dueMsOf(m: Message): Option[Long] = Delay.dueMs(m.get(Ctx.DelayedUntil))
             msgs.foreach { m =>
               dueMsOf(m) match {
                 case None => out += m // undelayed or malformed: pass through

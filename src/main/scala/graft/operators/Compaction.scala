@@ -15,12 +15,10 @@ import org.apache.spark.sql.functions.col
   *
   * File count comes from the directory's ACTUAL byte size (an FS
   * listing — metadata, not data), never from in-memory plan estimates
-  * that miss parquet's compression ratio. The swap is crash-safe —
-  * the rename-aside choreography of
-  * [[graft.streaming.GenerationSwap.replaceLive]] (materialize
-  * `.compact` fully, move live aside to `.old`, promote, delete), whose
-  * recovery probe runs first, so every crash point leaves a complete
-  * directory to adopt.
+  * that miss parquet's compression ratio. The rewrite is one
+  * [[graft.streaming.GenerationSwap.replace]], after a
+  * [[graft.streaming.GenerationSwap.recover]] that settles an earlier
+  * crashed one.
   */
 object Compaction {
 
@@ -32,9 +30,7 @@ object Compaction {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(dir)
-    // self-healing: a crash between "live moved aside" and "compacted
-    // dir promoted" left live missing — adopt the surviving sibling
-    graft.streaming.GenerationSwap.recoverReplace(fs, dir)
+    graft.streaming.GenerationSwap.recover(fs, dir)
     val entries = fs.listStatus(live)
     // partitioned layouts (key=value subdirs) would be read through
     // partition discovery and rewritten FLAT — partition columns
@@ -59,10 +55,7 @@ object Compaction {
         df.repartitionByRange(nFiles, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
       else df.repartition(nFiles)
-
-    val tmp = dir + ".compact"
-    out.write.mode("overwrite").parquet(tmp)
-    graft.streaming.GenerationSwap.replaceLive(fs, dir, tmp)
+    graft.streaming.GenerationSwap.replace(fs, dir)(out.write.mode("overwrite").parquet)
     nFiles
   }
 }

@@ -262,9 +262,9 @@ class FilePubSub(spark: SparkSession, root: String)
     * topic "a" — readers list recursively), traversal ("../x" escapes
     * the root entirely), and '.'/'_' prefixes — Spark readers treat
     * those as hidden, and they collide with this transport's own
-    * internal dirs (".trash_<t>"/".compact_<t>"/".routed_epoch_<w>":
-    * a topic literally named ".trash_a" would be DELETED by
-    * compact("a")). Loud beats aliased. */
+    * internal dirs (the swap siblings `.<t>.next` and `.<t>.old`,
+    * `.routed_epoch_<w>`: a topic literally named `.a.old` would be
+    * DELETED by compact("a")). Loud beats aliased. */
   private[sources] def isValidTopic(topic: String): Boolean =
     topic.nonEmpty && !topic.contains("/") &&
       !topic.startsWith(".") && !topic.startsWith("_")
@@ -429,9 +429,10 @@ class FilePubSub(spark: SparkSession, root: String)
   /** Maintenance compaction: epoch-per-micro-batch writes accumulate
     * one small file per epoch — the classic small-files ailment of any
     * file-backed log at scale. Rewrites the topic as `targetFiles`
-    * consolidated parquet files, swapping directories so a crash never
-    * loses data: write `.compact`, move the live dir to `.trash`, move
-    * `.compact` in, delete `.trash`.
+    * consolidated parquet files in one
+    * [[graft.streaming.GenerationSwap.replace]], after a
+    * [[graft.streaming.GenerationSwap.recover]] that settles an earlier
+    * crashed compact, so a crash never loses data.
     *
     * QUIESCENT-TOPIC maintenance op — run with no concurrent
     * publishers AND no active streaming subscribers on the topic:
@@ -462,28 +463,11 @@ class FilePubSub(spark: SparkSession, root: String)
     * operator decision, default off. */
   def compact(topic: String, targetFiles: Int = 1,
       retentionMs: Long = 0L): Unit = {
-    val live = new HPath(path(topic))
+    val dir = path(topic)
+    val live = new HPath(dir)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new HPath(s"$root/.compact_$topic")
-    val trash = new HPath(s"$root/.trash_$topic")
-    // Self-healing: a prior compact() that crashed between the two
-    // renames leaves live MISSING with the data stranded in staging
-    // (complete compacted copy — the swap only starts after its write
-    // finishes) or trash (the original). Finish the swap forward if
-    // staging exists, else roll back from trash, so no crash window
-    // loses data or strands the topic.
-    // every rename/delete in the swap is CHECKED — a false return
-    // (HDFS-style signalling) mid-swap would otherwise strand or lose
-    // the topic silently (same class as the GenerationSwap fix)
-    import graft.streaming.GenerationSwap.{deleteIfExists, renameOrThrow}
-    if (!fs.exists(live)) {
-      if (fs.exists(staging)) {
-        renameOrThrow(fs, staging, live); deleteIfExists(fs, trash)
-      }
-      else if (fs.exists(trash)) renameOrThrow(fs, trash, live)
-      else return // topic never existed
-      ()
-    }
+    graft.streaming.GenerationSwap.recover(fs, dir)
+    if (!fs.exists(live)) return // topic never existed
     // ONE listing drives BOTH the consolidated read and the manifest.
     // Listing after the read left a window: an epoch published between
     // the read and the listing was recorded as FOLDED while its rows
@@ -513,26 +497,22 @@ class FilePubSub(spark: SparkSession, root: String)
         consolidated.filter(col("ts").isNull || col("ts") >=
           new java.sql.Timestamp(System.currentTimeMillis() - retentionMs))
       else consolidated
-    retained.coalesce(targetFiles)
-      .write.mode("overwrite").parquet(staging.toString)
-    // the folded epoch dirs (cumulative with prior compacts) come from
-    // the SAME listing the data pass read, and are written BEFORE the
-    // swap, inside the staged output, so the manifest rides the same
-    // atomic rename as the data it covers
-    val folded = entries.collect {
-      case s if s.isDirectory && s.getPath.getName.startsWith("epoch_") =>
-        s.getPath.getName
-    }.toSet ++ compactedEpochs(fs, topic)
-    if (folded.nonEmpty) {
-      val out = fs.create(new HPath(staging, "_epochs_manifest"), true)
-      try out.write(folded.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
+    graft.streaming.GenerationSwap.replace(fs, dir) { next =>
+      retained.coalesce(targetFiles).write.mode("overwrite").parquet(next)
+      // the folded epoch dirs (cumulative with prior compacts) come from
+      // the SAME listing the data pass read, and are written inside the
+      // new generation, so the manifest rides the same atomic rename as
+      // the data it covers
+      val folded = entries.collect {
+        case s if s.isDirectory && s.getPath.getName.startsWith("epoch_") =>
+          s.getPath.getName
+      }.toSet ++ compactedEpochs(fs, topic)
+      if (folded.nonEmpty) {
+        val out = fs.create(new HPath(next, "_epochs_manifest"), true)
+        try out.write(folded.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+        finally out.close()
+      }
     }
-    deleteIfExists(fs, trash)
-    renameOrThrow(fs, live, trash)
-    renameOrThrow(fs, staging, live)
-    deleteIfExists(fs, trash)
-    ()
   }
 }
 

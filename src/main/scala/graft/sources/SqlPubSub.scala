@@ -775,13 +775,13 @@ final class SqlPubSub(spark: SparkSession, url: String,
 
   /** Delay metadata → due timestamp. Absent or malformed metadata
     * (foreign writers can stamp anything) means deliverable now. */
-  private def dueAt(m: Message): Option[Timestamp] =
-    m.get(graft.router.Ctx.DelayedUntil) match {
-      case "" => None
-      case s => try Some(Timestamp.from(java.time.Instant.parse(s)))
-        catch { case _: Exception =>
-          log.info(s"unparseable ${graft.router.Ctx.DelayedUntil}='$s'; delivering now"); None }
-    }
+  private def dueAt(m: Message): Option[Timestamp] = {
+    val s = m.get(graft.router.Ctx.DelayedUntil)
+    val due = graft.delay.Delay.dueMs(s)
+    if (due.isEmpty && s.nonEmpty)
+      log.info(s"unparseable ${graft.router.Ctx.DelayedUntil}='$s'; delivering now")
+    due.map(new Timestamp(_))
+  }
 
   /** Park not-yet-due rows durably, keyed (group, topic, offset) — a
     * re-examined row (crash between park and offset store) hits the

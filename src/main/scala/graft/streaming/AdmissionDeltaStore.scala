@@ -39,11 +39,9 @@ import org.apache.spark.sql.types.StructType
   * partition per micro-batch forever. [[compact]] is the quiescent form
   * that folds every batch (run it only for committed ids).
   *
-  * CRASH SAFETY: a fold is written in full to `<dir>.compact` and
-  * swapped in by [[GenerationSwap.replaceLive]]; the first read of an
-  * instance runs [[GenerationSwap.recoverReplace]], which adopts
-  * whichever sibling a crash left, so a restart never silently resets
-  * state (an over-admitting quota, a re-admitting near-dup index).
+  * CRASH SAFETY: a fold is one [[GenerationSwap.replace]]; the first
+  * read of an instance runs [[GenerationSwap.recover]], so a restart
+  * never silently resets state.
   *
   * What stays with each operator: its partition columns, its `fold`
   * (the live state of a set of rows, e.g. a sum per key; it must be
@@ -64,7 +62,7 @@ private[streaming] final class BatchPartitionedStore(spark: SparkSession,
 
   private def hasState: Boolean = {
     if (!recovered) {
-      GenerationSwap.recoverReplace(fs, dir)
+      GenerationSwap.recover(fs, dir)
       recovered = true
     }
     val p = new Path(dir)
@@ -132,13 +130,9 @@ private[streaming] final class BatchPartitionedStore(spark: SparkSession,
   private def sentinel(folded: DataFrame): DataFrame =
     folded.withColumn("batch_id", lit(-2L))
 
-  /** Rewrite the whole dir as `rows` (which may be read from it):
-    * written to the `.compact` sibling first, then swapped in. */
-  def replace(rows: DataFrame): Unit = {
-    val tmp = dir + ".compact"
-    layout(rows).write.partitionBy(partitionCols: _*).mode("overwrite").parquet(tmp)
-    GenerationSwap.replaceLive(fs, dir, tmp)
-  }
+  /** Rewrite the whole dir as `rows` (which may be read from it). */
+  def replace(rows: DataFrame): Unit = GenerationSwap.replace(fs, dir)(
+    layout(rows).write.partitionBy(partitionCols: _*).mode("overwrite").parquet)
 }
 
 private[streaming] object BatchPartitionedStore {

@@ -4,12 +4,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Checked filesystem primitives for the two atomic generation swaps:
-  * [[promote]] (write `.next` fully, park live as `.old`, promote, drop
-  * `.old`) for [[GenerationDir]], and
-  * [[replaceLive]] (the `.compact` rewrite) for [[BatchPartitionedStore]]
-  * and [[graft.operators.Compaction]]. Each comes with its recovery
-  * probe, the one definition of its crash contract.
+/** The one crash-safe directory swap: [[replace]] rewrites a live dir
+  * through two hidden siblings and [[recover]] settles whatever a crash
+  * left. Its users are [[GenerationDir]], [[BatchPartitionedStore]],
+  * [[graft.operators.Compaction]] and `FilePubSub.compact`.
+  *
+  * SIBLINGS: `<parent>/.<name>.next` (the generation being written) and
+  * `<parent>/.<name>.old` (the parked live dir). Dot-prefixed, so Spark
+  * readers, partition discovery (a `.k=1.old` beside `k=2` is skipped,
+  * a `k=1.old` would read as partition value `1.old`) and FilePubSub's
+  * topic namespace never see them.
   *
   * Hadoop's `FileSystem.rename`/`delete` signal failure by RETURNING
   * FALSE (dest exists, src missing, concurrent writer), not by
@@ -19,8 +23,8 @@ import org.apache.spark.sql.types.StructType
   * with no error anywhere. These wrappers turn every false into an
   * IOException so the swap either completes or the batch retries.
   *
-  * FILESYSTEM CONTRACT: the choreography relies on directory `rename`
-  * being atomic and O(1) — true on HDFS and POSIX, FALSE on raw object
+  * FILESYSTEM CONTRACT: the swap relies on directory `rename` being
+  * atomic and O(1) — true on HDFS and POSIX, FALSE on raw object
   * stores (S3A emulates rename as copy+delete: non-atomic, and a crash
   * mid-"rename" leaves a partial copy the recovery probe can adopt).
   * Point state/index dirs at an HDFS-semantics filesystem (HDFS,
@@ -38,75 +42,53 @@ private[graft] object GenerationSwap {
       throw new java.io.IOException(
         s"generation swap: rename failed: $src -> $dst")
 
-  /** Replace the live dir with a FULLY-WRITTEN sibling via the
-    * rename-aside choreography (park live as `.old`, promote the
-    * sibling, drop `.old`); [[recoverReplace]] adopts whichever
-    * sibling survives a crash at any step. The sibling must be
-    * complete before calling: every crash point then leaves either
-    * the old live dir or a complete replacement. */
-  def replaceLive(fs: FileSystem, liveDir: String, tmpDir: String): Unit = {
-    val live = new Path(liveDir)
-    val old = new Path(liveDir + ".old")
-    renameOrThrow(fs, live, old)
-    renameOrThrow(fs, new Path(tmpDir), live)
-    deleteIfExists(fs, old)
+  /** (live, next, old) for `dir`: the one naming rule. */
+  private def siblings(dir: String): (Path, Path, Path) = {
+    val live = new Path(dir)
+    def sibling(suffix: String) = new Path(live.getParent, s".${live.getName}.$suffix")
+    (live, sibling("next"), sibling("old"))
   }
 
-  /** Promote a fully-written `<stateDir>.next` to live. Ordering makes
-    * every crash point recoverable by adopt-last-complete:
-    * pre-promotion crashes leave live (or `.old`) intact; a crash
-    * after the final rename leaves only a stale `.old` to sweep. */
-  def promote(fs: FileSystem, stateDir: String): Unit = {
-    val live = new Path(stateDir)
-    val next = new Path(stateDir + ".next")
-    val old = new Path(stateDir + ".old")
+  /** Replace `dir` with what `write` puts at the path it is handed (the
+    * cleared next sibling; `write` may read the live dir). The live dir,
+    * if any, is parked as the old sibling (a stale one is dropped
+    * first, or the rename would fail), the next one is renamed into
+    * place and the old one dropped, so every crash point leaves a
+    * complete generation for [[recover]] to adopt. */
+  def replace(fs: FileSystem, dir: String)(write: String => Unit): Unit = {
+    val (live, next, old) = siblings(dir)
+    deleteIfExists(fs, next)
+    write(next.toString)
     deleteIfExists(fs, old)
     if (fs.exists(live)) renameOrThrow(fs, live, old)
     renameOrThrow(fs, next, live)
     deleteIfExists(fs, old)
   }
 
-  /** Crash recovery for [[replaceLive]]: if a crash landed between
-    * "live renamed aside" and "compacted dir renamed into place", the
-    * live dir is missing but the fully-materialized `.compact` sibling
-    * (or the untouched `.old`) holds the state — adopt it rather than
-    * silently resetting (a quota state reset over-admits every
-    * exhausted key; a near-dup index reset re-admits every duplicate).
-    * Leftovers from a completed or recovered swap are dead state and
-    * are swept. */
-  def recoverReplace(fs: FileSystem, liveDir: String): Unit = {
-    val live = new Path(liveDir)
-    val tmp = new Path(liveDir + ".compact")
-    val old = new Path(liveDir + ".old")
+  /** Settle a crashed [[replace]]. Live missing: adopt the next sibling
+    * when it carries `_SUCCESS` (its write finished), else roll back to
+    * the old one; a partial next with no old (a crashed first write) is
+    * left for the next [[replace]] to clear. Live present: both
+    * siblings are dead state and are swept. Adopting rather than
+    * starting empty matters: a quota state reset over-admits every
+    * exhausted key, a near-dup index reset re-admits every duplicate. */
+  def recover(fs: FileSystem, dir: String): Unit = {
+    val (live, next, old) = siblings(dir)
     if (!fs.exists(live)) {
-      if (fs.exists(tmp)) renameOrThrow(fs, tmp, live)
+      if (fs.exists(new Path(next, "_SUCCESS"))) renameOrThrow(fs, next, live)
       else if (fs.exists(old)) renameOrThrow(fs, old, live)
     }
     if (fs.exists(live)) {
-      deleteIfExists(fs, tmp)
+      deleteIfExists(fs, next)
       deleteIfExists(fs, old)
-    }
-  }
-
-  /** Crash recovery for [[promote]]: live missing → adopt the COMPLETE
-    * (`_SUCCESS`-marked) `.next`, else roll back to `.old`. */
-  def recoverPromote(fs: FileSystem, stateDir: String): Unit = {
-    val live = new Path(stateDir)
-    if (!fs.exists(live)) {
-      if (fs.exists(new Path(stateDir + ".next/_SUCCESS")))
-        renameOrThrow(fs, new Path(stateDir + ".next"), live)
-      else if (fs.exists(new Path(stateDir + ".old")))
-        renameOrThrow(fs, new Path(stateDir + ".old"), live)
     }
   }
 }
 
 /** A whole-table state dir advanced one generation per write: the ONE
-  * owner of the [[GenerationSwap.promote]] protocol behind
-  * [[StreamingCdc]] and [[StreamingProfile]]. [[write]] materializes
-  * `<dir>.next` in full and then promotes it; the first read of an
-  * instance runs [[GenerationSwap.recoverPromote]], which adopts
-  * whichever complete generation a crash left.
+  * owner of the generation protocol behind [[StreamingCdc]] and
+  * [[StreamingProfile]]. [[write]] is one [[GenerationSwap.replace]];
+  * the first read of an instance runs [[GenerationSwap.recover]].
   *
   * Reads carry the schema of the last read or write: a schemaless read
   * runs a footer-inference job per call (per micro-batch), and the dir
@@ -123,7 +105,7 @@ private[streaming] final class GenerationDir(spark: SparkSession, dir: String) {
 
   private def hasState: Boolean = {
     if (!recovered) {
-      GenerationSwap.recoverPromote(fs, dir)
+      GenerationSwap.recover(fs, dir)
       recovered = true
     }
     val p = new Path(dir)
@@ -141,10 +123,7 @@ private[streaming] final class GenerationDir(spark: SparkSession, dir: String) {
 
   /** Replace the live generation with `rows` (which may be read from it). */
   def write(rows: DataFrame): Unit = {
-    val next = dir + ".next"
-    GenerationSwap.deleteIfExists(fs, new Path(next))
-    rows.write.mode("overwrite").parquet(next)
-    GenerationSwap.promote(fs, dir)
+    GenerationSwap.replace(fs, dir)(rows.write.mode("overwrite").parquet)
     schema = Some(rows.schema)
   }
 }

@@ -23,10 +23,9 @@ import graft.operators.Merge
   *  - REPLAYED batches (foreachBatch's at-least-once contract) are
   *    idempotent: equal sequence does not overwrite, so re-applying a
   *    batch leaves the state byte-identical.
-  *  - CRASH between write and swap: state advances by atomic rename
-  *    (fully materialize `.next`, park live as `.old`, rename into
-  *    place, then drop `.old`); recovery adopts whichever complete
-  *    generation survives ([[GenerationDir]]).
+  *  - CRASH between write and swap: state advances one
+  *    [[GenerationDir]] generation per batch, whose recovery adopts
+  *    the complete generation a crash left.
   *
   * Scale shape: per batch, ONE map-side-combinable `max_by` compaction
   * of the batch (tiny after compaction) and ONE merge join against the

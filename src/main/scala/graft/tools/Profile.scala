@@ -22,7 +22,8 @@ import graft.{GraftSession, SparkEntry}
   *    fresh executions (exec1 pays cold codegen), with the last one's
   *    jobs and stages.
   *  - `plans [outDir]`: `explain("formatted")` per query, to
-  *    `<outDir>/<name>.txt` when given, else to stdout. */
+  *    `<outDir>/<name>.txt` when given, else to stdout, with its
+  *    per-construction ids renumbered ([[stable]]). */
 object Profile {
   private val Usage =
     "usage: Profile <reps|passes|fixed|plans> <sfDir> <q1,q2,...> [reps|outDir]"
@@ -50,7 +51,7 @@ object Profile {
     def query(name: String): DataFrame = all(name)(spark, dir)
     if (mode == "plans") {
       names.foreach { name =>
-        val plan = query(name).queryExecution.explainString(FormattedMode)
+        val plan = stable(query(name).queryExecution.explainString(FormattedMode))
         args.lift(3).fold(println(s"[plans] $name\n$plan")) { d =>
           val out = Files.createDirectories(Paths.get(d)).resolve(s"$name.txt")
           Files.writeString(out, plan)
@@ -121,6 +122,20 @@ object Profile {
       case many => Left(s"ambiguous query '$q': ${many.mkString(", ")}")
     }
   }
+
+  /** `plan` with what differs between two constructions of one query
+    * renumbered in order of first appearance: expression ids `#N`,
+    * `plan_id=N`, `RDD[N]` and `@<hex>` identity hashes (plan-time
+    * models such as `[[D@151ce559`), so two dumps of the same code diff
+    * clean. Each kind counts from 1; the plan's structure is kept. */
+  private[tools] def stable(plan: String): String =
+    Seq("#" -> """#(\d+)""", "plan_id=" -> """plan_id=(\d+)""",
+      "RDD[" -> """RDD\[(\d+)""", "@" -> """@([0-9a-f]{1,8})\b""")
+      .foldLeft(plan) { case (text, (prefix, pattern)) =>
+        val seen = scala.collection.mutable.HashMap.empty[String, Int]
+        pattern.r.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+          prefix + seen.getOrElseUpdate(m.group(1), seen.size + 1)))
+      }
 
   /** Run the entry query once, untimed, so the first timed run measures
     * its plan rather than first-call JIT and class loading. */

@@ -74,6 +74,31 @@ class DelaySpec extends SparkSpec {
     assert(visible == Set("corrupt", "clean"), s"got $visible")
   }
 
+  test("one delay-stamp rule: ready() and Delay.dueMs agree on every stamp shape") {
+    // (stamp, held as of 2023): a future instant is held, a stamp
+    // Instant.parse rejects is malformed and ready now on every path
+    val table = Seq(
+      "2999-01-01T00:00:00Z" -> true,
+      "2999-01-01T00:00:00.123Z" -> true,
+      "2999-01-01T00:00:00.1Z" -> true,
+      "2999-01-01T00:00:00+01:00" -> true,
+      "2999-01-01T00:00:00" -> false,
+      "2999-01-01" -> false,
+      "2999-01-01 00:00:00Z" -> false)
+    val now = Instant.ofEpochMilli(1700000000000L)
+    val ps = new MemoryPubSub(spark)
+    ps.publish("stamps", table.zipWithIndex.map { case ((stamp, _), i) =>
+      msg(s"m$i").withMeta(Ctx.DelayedUntil, stamp)
+    })
+    val visible = DelayedDelivery.ready(ps.subscribeBatch("stamps"), to_timestamp(lit(now.toString)))
+      .collect().map(_.getAs[String]("uuid")).toSet
+    val held = table.map(_._2)
+    val dueHeld = table.map { case (stamp, _) => Delay.dueMs(stamp).exists(_ > now.toEpochMilli) }
+    val readyHeld = table.indices.map(i => !visible(s"m$i"))
+    assert(dueHeld == held, s"dueMs holds: ${table.map(_._1).zip(dueHeld)}")
+    assert(readyHeld == held, s"ready() holds: ${table.map(_._1).zip(readyHeld)}")
+  }
+
   test("releaseWhenDue: streaming state holds delayed rows until the watermark passes") {
     import spark.implicits._
     val ps = new MemoryPubSub(spark)

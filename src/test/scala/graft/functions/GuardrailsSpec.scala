@@ -195,23 +195,54 @@ class GuardrailsSpec extends SparkSpec {
 
   test("GenerationSwap surfaces rename/delete failures instead of returning") {
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft-swap-").toString
-    val fs = new Path(dir).getFileSystem(
+    import graft.streaming.GenerationSwap
+    val root = java.nio.file.Files.createTempDirectory("graft-swap-").toString
+    val fs = new Path(root).getFileSystem(
       spark.sessionState.newHadoopConf())
-    // promote with no .next present must throw (local FS throws FNF
-    // itself; HDFS-style filesystems return false, which the wrapper
-    // converts — either way the failure surfaces instead of returning)
+    // a generation: a dir holding one part file, `_SUCCESS` when complete
+    def gen(p: String, tag: String, complete: Boolean = true): Unit = {
+      fs.create(new Path(p, s"part-$tag")).close()
+      if (complete) fs.create(new Path(p, "_SUCCESS")).close()
+    }
+    // recover over every sibling combination a crash can leave: next is
+    // None when absent, else Some(complete); `after` names the
+    // generation live holds after recover, None when live stays missing
+    case class Row(name: String, next: Option[Boolean], old: Boolean,
+        live: Boolean, after: Option[String])
+    val table = Seq(
+      Row("live present: both siblings are swept", Some(true), true, true, Some("live")),
+      Row("live missing, complete next: next is adopted", Some(true), true, false, Some("next")),
+      Row("live missing, partial next, old: old is adopted", Some(false), true, false, Some("old")),
+      Row("live missing, only a partial next: nothing is adopted", Some(false), false, false, None),
+      Row("live missing, only old: old is adopted", None, true, false, Some("old")))
+    table.zipWithIndex.foreach { case (r, i) =>
+      val dir = s"$root/s$i"
+      r.next.foreach(gen(s"$root/.s$i.next", "next", _))
+      // a parked live dir need not carry `_SUCCESS` (a dynamic partition
+      // overwrite leaves none), so old is adopted without it
+      if (r.old) gen(s"$root/.s$i.old", "old", complete = false)
+      if (r.live) gen(dir, "live")
+      GenerationSwap.recover(fs, dir)
+      assert(r.after.forall(t => fs.exists(new Path(dir, s"part-$t"))), r.name)
+      assert(fs.exists(new Path(dir)) == r.after.nonEmpty, r.name)
+      if (r.after.nonEmpty)
+        assert(!fs.exists(new Path(s"$root/.s$i.next")) && !fs.exists(new Path(s"$root/.s$i.old")), r.name)
+    }
+    // replace whose write leaves no next sibling must throw (local FS
+    // throws FNF itself; HDFS-style filesystems return false, which the
+    // wrapper converts — either way the failure surfaces instead of returning)
     intercept[java.io.IOException] {
-      graft.streaming.GenerationSwap.promote(fs, dir + "/state")
+      GenerationSwap.replace(fs, s"$root/state")(_ => ())
     }
     // deleteIfExists on a missing path is a quiet no-op
-    graft.streaming.GenerationSwap.deleteIfExists(fs, new Path(dir + "/nope"))
-    // and a real promote works: write .next, promote, read back
-    fs.mkdirs(new Path(dir + "/state.next"))
-    fs.create(new Path(dir + "/state.next/part-0")).close()
-    graft.streaming.GenerationSwap.promote(fs, dir + "/state")
-    assert(fs.exists(new Path(dir + "/state/part-0")))
-    assert(!fs.exists(new Path(dir + "/state.next")))
-    assert(!fs.exists(new Path(dir + "/state.old")))
+    GenerationSwap.deleteIfExists(fs, new Path(s"$root/nope"))
+    // the first generation (no prior live dir), then a second over it
+    Seq("g1", "g2").foreach { tag =>
+      GenerationSwap.replace(fs, s"$root/state")(gen(_, tag))
+      assert(fs.listStatus(new Path(s"$root/state")).map(_.getPath.getName).toSet ==
+        Set(s"part-$tag", "_SUCCESS"), tag)
+      assert(!fs.exists(new Path(s"$root/.state.next")))
+      assert(!fs.exists(new Path(s"$root/.state.old")))
+    }
   }
 }

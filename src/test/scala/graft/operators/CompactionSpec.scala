@@ -19,6 +19,12 @@ class CompactionSpec extends SparkSpec {
     d.delete(); d.getAbsolutePath
   }
 
+  /** The hidden sibling `<parent>/.<name><suffix>` of `dir`. */
+  private def hidden(dir: String, suffix: String): java.io.File = {
+    val f = new java.io.File(dir)
+    new java.io.File(f.getParent, s".${f.getName}$suffix")
+  }
+
   private def parquetFiles(dir: String): Array[java.io.File] =
     new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
 
@@ -33,8 +39,8 @@ class CompactionSpec extends SparkSpec {
 
     assert(n >= 3 && n <= 5, s"expected ~4 size-targeted files, got $n")
     assert(parquetFiles(dir).length == n)
-    assert(!new java.io.File(dir + ".compact").exists)
-    assert(!new java.io.File(dir + ".old").exists)
+    assert(!hidden(dir, ".next").exists)
+    assert(!hidden(dir, ".old").exists)
     val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
     assert(back == rows.toSet, "compaction must not change content")
   }
@@ -60,17 +66,32 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a crash-stranded dir (only .compact or only .old left) is adopted, then compacted intact") {
+    // the name predates the hidden siblings: ".compact" is now `.<name>.next`
     val rows = (0 until 500).map(i => (i.toLong, s"v$i"))
-    Seq(".compact", ".old").foreach { sibling =>
+    Seq(".next", ".old").foreach { sibling =>
       val dir = freshDir()
-      rows.toDF("id", "body").repartition(8).write.parquet(dir + sibling)
+      rows.toDF("id", "body").repartition(8).write.parquet(hidden(dir, sibling).getPath)
       assert(!new java.io.File(dir).exists, "fixture: the live dir is missing")
       val n = Compaction.compactParquet(spark, dir, targetBytes = 1L << 30)
       assert(n == 1 && parquetFiles(dir).length == 1, s"$sibling: expected one file, got $n")
-      assert(!new java.io.File(dir + ".compact").exists)
-      assert(!new java.io.File(dir + ".old").exists)
+      assert(!hidden(dir, ".next").exists)
+      assert(!hidden(dir, ".old").exists)
       val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
       assert(back == rows.toSet, s"$sibling: adopted content must survive the compaction")
     }
+  }
+
+  test("a compacted partition's crash siblings stay invisible to the table root") {
+    val root = freshDir()
+    val rows = (0 until 400).map(i => (i.toLong, s"v$i", 1 + i % 2))
+    rows.toDF("id", "body", "k").repartition(8).write.partitionBy("k").parquet(root)
+    // the crash point between the two renames: k=1 parked, not yet replaced
+    val k1 = new java.io.File(root, "k=1")
+    assert(k1.renameTo(hidden(k1.getPath, ".old")), "fixture: strand k=1")
+    val ks = spark.read.parquet(root).select("k").distinct().as[Int].collect().toSet
+    assert(ks.subsetOf(Set(1, 2)), s"a sibling leaked into partition discovery: $ks")
+    Compaction.compactParquet(spark, k1.getPath, targetBytes = 1L << 30)
+    val back = spark.read.parquet(root).as[(Long, String, Int)].collect().toSet
+    assert(back == rows.toSet, "every row must be back under its original k")
   }
 }

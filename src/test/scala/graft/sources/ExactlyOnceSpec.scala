@@ -297,8 +297,8 @@ class ExactlyOnceSpec extends SparkSpec {
     // crash window A: after rename(live -> trash), before rename(staging -> live):
     // staging holds the complete compacted copy, live is missing
     val live = new HPath(s"$root/heal")
-    val staging = new HPath(s"$root/.compact_heal")
-    val trash = new HPath(s"$root/.trash_heal")
+    val staging = new HPath(s"$root/.heal.next")
+    val trash = new HPath(s"$root/.heal.old")
     ps.subscribeBatch("heal").coalesce(1).write.mode("overwrite").parquet(staging.toString)
     assert(fs.rename(live, trash))
     ps.compact("heal") // must finish the swap forward, then recompact

@@ -87,7 +87,7 @@ class StreamingCdcSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sessionState.newHadoopConf())
     c.state.get.withColumn("v", lit("gen2"))
-      .write.parquet(dir + "/state.next")
+      .write.parquet(dir + "/.state.next")
     fs.delete(new org.apache.hadoop.fs.Path(dir + "/state"), true)
     assert(snap(cdc(dir)) == Map(1L -> (10L, "gen2")))
   }

@@ -878,18 +878,18 @@ class StreamingCurationSpec extends SparkSpec {
       keyCol = "source", orderCol = "doc_id", tieCol = "doc_id", budget = 2)
 
     // crash point A: live dir renamed aside, compacted dir not yet in
-    // place — only ".old" exists
+    // place — only ".state.old" exists
     val (dirA, qa) = mkQuota()
     qa.admit(batch(1L -> "a", 2L -> "a"))
-    Files.move(Paths.get(dirA), Paths.get(dirA + ".old"))
+    Files.move(Paths.get(dirA), Paths.get(dirA).resolveSibling(".state.old"))
     assert(ids(restarted(dirA).admit(batch(3L -> "a"))).isEmpty,
       "budget must survive a crash after the aside-rename")
 
     // crash point B: compacted dir fully written, live dir gone — only
-    // ".compact" exists
+    // ".state.next" exists
     val (dirB, qb) = mkQuota()
     qb.admit(batch(1L -> "a", 2L -> "a"))
-    Files.move(Paths.get(dirB), Paths.get(dirB + ".compact"))
+    Files.move(Paths.get(dirB), Paths.get(dirB).resolveSibling(".state.next"))
     assert(ids(restarted(dirB).admit(batch(3L -> "a"))).isEmpty,
       "budget must survive a crash before the into-place rename")
 
@@ -901,12 +901,18 @@ class StreamingCurationSpec extends SparkSpec {
     def drows(df: org.apache.spark.sql.DataFrame) =
       df.select("domain", "n_docs", "n_admitted", "admitted_id_sum")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    Seq(".old", ".compact").foreach { sibling =>
+    Seq(".old", ".next").foreach { sibling =>
       // near-dup: the index survives, so a near-copy of an indexed doc still drops
       val ndir = Files.createTempDirectory("graft-snd-crash").toString + "/index"
       assert(ids(new StreamingNearDup(spark, ndir, minSim = 0.5)
         .processBatch(docs(1L -> tA), batchId = 0L)) == Set(1L))
-      Files.move(Paths.get(ndir), Paths.get(ndir + sibling))
+      Files.move(Paths.get(ndir), Paths.get(ndir).resolveSibling(".index" + sibling))
+      // a swap's next sibling is one committed write, which leaves
+      // _SUCCESS; this dir's dynamic partition overwrites left none, and
+      // a parked old sibling keeps it that way
+      if (sibling == ".next")
+        Files.write(Paths.get(ndir).resolveSibling(".index.next").resolve("_SUCCESS"),
+          Array.emptyByteArray)
       assert(ids(new StreamingNearDup(spark, ndir, minSim = 0.5)
         .processBatch(docs(2L -> tA2), batchId = 1L)).isEmpty,
         s"near-dup index must survive a crash that left only $sibling")
@@ -916,7 +922,7 @@ class StreamingCurationSpec extends SparkSpec {
       val dq = new StreamingDomainQuota(spark, ddir)
       dq.admit(dbatch(1L -> "a", 2L -> "a", 3L -> "b"))
       val before = drows(dq.state().get)
-      Files.move(Paths.get(ddir), Paths.get(ddir + sibling))
+      Files.move(Paths.get(ddir), Paths.get(ddir).resolveSibling(".state" + sibling))
       val after = new StreamingDomainQuota(spark, ddir).state()
       assert(after.map(drows).contains(before),
         s"domain budgets must survive a crash that left only $sibling")

@@ -250,7 +250,7 @@ class StreamingProfileSpec extends SparkSpec {
     p.applyBatch(df(b1), 0L)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sessionState.newHadoopConf())
-    p.state.get.write.parquet(dir + "/state.next")
+    p.state.get.write.parquet(dir + "/.state.next")
     fs.delete(new org.apache.hadoop.fs.Path(dir + "/state"), true)
     val p2 = new StreamingProfile(spark, dir + "/state")
     assert(card(p2) == expected(b1))

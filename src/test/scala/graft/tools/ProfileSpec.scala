@@ -55,6 +55,15 @@ class ProfileSpec extends SparkSpec {
     assert(plan.contains("== Physical Plan =="), plan)
   }
 
+  test("plans: two constructions of one query print the same text") {
+    // q101 carries a plan-time Bloom filter, printed by identity hash
+    val (c1, first) = profile("plans", dir, "q101")
+    val (c2, second) = profile("plans", dir, "q101")
+    assert(c1 == 0 && c2 == 0)
+    assert(first.contains("== Physical Plan =="), first)
+    assert(first == second, s"first:\n$first\nsecond:\n$second")
+  }
+
   test("PlanRuntime dumps and audits the plan that ran, in its final adaptive form") {
     val out = PlanRuntime.dump("q14_star_join", graft.SparkEntry.queries("q14_star_join")(spark, dir))
     assert(out.startsWith("== FINAL ==") && out.contains("isFinalPlan=true"), out)
