@@ -648,45 +648,30 @@ object DedupFunctions {
     *
     * At 100 TB each round is one shuffle of the (persisted) edge list
     * plus one label-sized self-join; labels never leave the cluster.
-    */
-  /** @param strict when true, throw `IllegalStateException` if the
+    * The rounds run under [[graft.operators.Iterate]], which pins,
+    * clamps and frees each one and reads the convergence verdict
+    * (`cluster_id =!= prev` on no row) from the pin's own job.
+    *
+    * @param strict when true, throw `IllegalStateException` if the
     *   round cap is hit before the labels reach a fixed point —
     *   unconverged labels under-merge clusters, and downstream
     *   [[keepers]] would silently keep extra "duplicates". Default
     *   false preserves the lenient log-and-return behavior for
     *   exploratory use; production dedup pipelines should pass true. */
-  /** Rounds the most recent [[dupClusters]] call ran (init round
-    * included) — a perf diagnostic for the optimization harness, not
-    * part of any result. */
-  private[graft] val lastDupClustersRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Whether the most recent round read its convergence verdict from
-    * the observed metric (vs the defensive count fallback) — pinned by
-    * DedupSpec so a Spark upgrade silently breaking observe-on-
-    * checkpoint shows up as a test failure, not a quiet 2× job count. */
-  private[graft] val lastConvergenceViaObserve =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
   def dupClusters(pairs: DataFrame, maxIter: Int = 10,
       strict: Boolean = false): DataFrame = {
     // undirected edge list + self-loops (so singletons keep their id
     // and every node appears even when it only shows up as d2).
-    // PERSISTED: every propagation round joins against it — without
-    // the cache the upstream candidate-generation pipeline would be
-    // recomputed once per iteration. The edge list is the working set
-    // of the iteration and is small relative to the corpus.
     // All four edge directions come from ONE reference to `pairs` via
     // explode — a 4-way union would evaluate the upstream candidate
     // pipeline once per branch (Catalyst does not CSE across union
     // branches), quadrupling the expensive shingle/minhash/banding work.
-    // localCheckpoint (eager), not persist: a persisted frame keeps its
-    // full candidate-pipeline LOGICAL tree, and every round's self-join
-    // references it 4x (two pointer jumps × two prop references) — the
-    // analyzer re-walks the whole tree per reference per round. The
-    // checkpoint leaf makes each round's analyzed plan constant-sized.
-    // Same materialization cost (persist ran the pipeline on round 1
-    // anyway); executor-local durability is the documented trade.
+    // localCheckpoint (eager), not persist: every round joins against
+    // the edge list, and a persisted frame keeps its full candidate-
+    // pipeline LOGICAL tree, which the analyzer would re-walk per
+    // reference per round. The checkpoint leaf makes each round's
+    // analyzed plan constant-sized; executor-local durability is the
+    // documented trade.
     val edges = pairs
       .select(explode(array(
         struct(col("d1").as("a"), col("d2").as("b")),
@@ -700,157 +685,54 @@ object DedupFunctions {
     // of its closed neighborhood (self-loops included), which already
     // converges the near-cliques banding emits — so the loop usually
     // runs exactly once, as the confirming round.
-    var current = edges.groupBy(col("a").as("doc_id"))
+    val init = edges.groupBy(col("a").as("doc_id"))
       .agg(min(col("b")).as("cluster_id"))
       .persist()
-    var labels = current
-    var converged = false
-    var i = 0
-    // the PREVIOUS round's checkpoint RDD: its blocks are dead the
-    // moment the next round materializes, but ContextCleaner only
-    // reclaims them at some future GC — a long-chain call would hold
-    // O(rounds) block sets in the meantime. Track and free explicitly
-    // so live checkpoint storage is bounded at ONE round's labels.
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    while (!converged && i < maxIter) {
-      // Each node takes the min of its neighbors' labels. The node's
-      // PREVIOUS label rides the self-loop row (b === a carries
-      // labels[a]), so the convergence check is a filter over this
-      // round's cached output — no extra join, no per-round compare
-      // job re-reading the lineage. Measured on sf0.1: the old
-      // shape's tail (separate compare join + skipped-round heuristic)
-      // was 5.4 s over 2.8k edges — all fixed job overhead.
-      val prop = edges
-        .join(labels.withColumnRenamed("doc_id", "b"), Seq("b"))
-        .groupBy(col("a").as("doc_id"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          min(when(col("b") === col("a"), col("cluster_id"))).as("prev"))
-        .persist()
-      // pointer jump: adopt this round's label's label, doubling reach
-      // per round. `prop` is self-joined, hence its own persist (two
-      // plan references would re-run the propagation join). The jump
-      // can only lower a label, so the fixed point is unchanged; if
-      // nothing changed this round, neighbor-min alone changed nothing
-      // either, so the convergence check stays sound.
-      //
-      // localCheckpoint (eager), NOT persist: the self-join references
-      // `prop` TWICE, so under plain caching the round's LOGICAL plan
-      // would be 2x the previous round's — exponential across rounds.
-      // Persist truncates execution but not analysis; the analyzer
-      // (DeduplicateRelations on the self-join especially) re-walks
-      // the whole tree every round, which measured as q33 going
-      // 5.5 s -> ~50 s. The checkpoint makes each round's output a
-      // leaf, so plan size is constant no matter how many rounds run.
-      // (localCheckpoint is executor-local state — fine here: labels
-      // are a small working set and the loop re-materializes each
-      // round; a lost executor just fails-fast the job.)
-      // convergence metric rides the checkpoint job itself (observe =
-      // CollectMetricsExec accumulators): the previous shape ran a
-      // SECOND action per round (filter+limit+count) that re-read the
-      // whole label table — one full labels pass per round for a
-      // boolean. At any scale the fused form saves that pass; locally
-      // it saves a job launch per round.
-      // ADAPTIVE pointer jump: reach ×2 in the first loop round, ×4
-      // (a second jump) from round 2 on. Banding emits near-cliques
-      // that converge in 1-2 rounds — for those the second self-join
-      // is pure per-round overhead (measured: q33/q71/q72 regressed
-      // 30-60% under an unconditional double jump) — while a graph
-      // still unconverged after the first loop round is the
-      // chain-heavy class (q44 measured diameter 16 at sf0.1) where
-      // halving the remaining rounds wins. The r20 double-jump attempt
-      // was catastrophic for a different reason: each extra self-join
-      // reference SQUARES the size estimate the next checkpoint leaf
-      // inherits (×4 refs → size^4 per round → 10⁶-digit BigInteger
-      // stats walks on the driver); the leaf is now stats-CLAMPED to
-      // its observed row count (see below), so the compounding term is
-      // gone at any jump depth. Jumps only lower labels toward the
-      // min-reachable fixed point — the fixed point, and so the
-      // converged result, is unchanged by jump depth.
-      def jump(d: DataFrame): DataFrame = d
-        .join(d.select(col("doc_id").as("j_doc"), col("cluster_id").as("j_cl")),
-          col("cluster_id") === col("j_doc"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"),
-            coalesce(col("j_cl"), col("cluster_id"))).as("cluster_id"),
-          col("prev"))
-      val jumped = if (i == 0) jump(prop) else jump(jump(prop))
-      val obs = jumped
-        .observe("graft_cc",
-          sum(when(col("cluster_id") =!= col("prev"), 1L).otherwise(0L))
-            .as("changed"),
-          count(lit(1)).as("n"))
-      val next0 = obs.localCheckpoint(true)
-      val row = obs.queryExecution.observedMetrics.get("graft_cc")
-      val observed = row.map(r => Option(r.getAs[Any]("changed"))
-        .fold(0L)(_.asInstanceOf[Long]))
-      lastConvergenceViaObserve.set(observed.isDefined)
-      val changed = observed.getOrElse(
-        // defensive: if the metric did not surface (plan shape drift),
-        // fall back to the explicit count — correctness over speed
-        next0.filter(col("cluster_id") =!= col("prev")).limit(1).count())
-      // clamp the checkpoint leaf's inherited stats to the row count
-      // the SAME job observed: localCheckpoint copies the optimized
-      // plan's size estimate (a product over the round's joins) onto
-      // the leaf, and the next round's references compound it — the
-      // BigInteger stats-walk burn documented above. ~56 bytes/row =
-      // three numeric/short-string columns + row overhead; the point
-      // is the ORDER of magnitude (small, broadcastable), not the
-      // exact byte count.
-      val next = row.map(r => Option(r.getAs[Any]("n"))
-          .fold(0L)(_.asInstanceOf[Long]))
-        .fold(next0)(n =>
-          org.apache.spark.sql.graft.StatsBridge.clampStats(next0, n, 56L))
-      current.unpersist(); prop.unpersist()
-      // `next` is eager, so the previous round's blocks are now
-      // unreachable from any live plan — free them instead of waiting
-      // for a GC cycle (unpersisting a truncated-lineage RDD is final,
-      // which is exactly why it only happens AFTER the next round
-      // materialized)
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = checkpointRdd(next)
-      current = next
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      converged = changed == 0
-      i += 1
-    }
-    lastDupClustersRounds.set(i)
-    if (!converged) {
-      if (strict) {
-        checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-        throw new IllegalStateException(
-          s"dupClusters: round cap $maxIter hit before convergence — " +
-            "labels are partial (clusters under-merged); raise maxIter")
+    // pointer jump: adopt this round's label's label, doubling reach
+    // per round. The jump can only lower a label, so the fixed point is
+    // unchanged; if nothing changed this round, neighbor-min alone
+    // changed nothing either, so the convergence check stays sound.
+    def jump(d: DataFrame): DataFrame = d
+      .join(d.select(col("doc_id").as("j_doc"), col("cluster_id").as("j_cl")),
+        col("cluster_id") === col("j_doc"), "left")
+      .select(col("doc_id"),
+        least(col("cluster_id"),
+          coalesce(col("j_cl"), col("cluster_id"))).as("cluster_id"),
+        col("prev"))
+    try {
+      val labels = graft.operators.Iterate("dupClusters", init, maxIter,
+          Some(col("cluster_id") =!= col("prev")), strict) { (cur, round) =>
+        // Each node takes the min of its neighbors' labels. The node's
+        // PREVIOUS label rides the self-loop row (b === a carries
+        // labels[a]), so the convergence check is a filter over this
+        // round's own output — no extra join, no per-round compare job
+        // re-reading the lineage.
+        val prop = round.cache(edges
+          .join(cur.select(col("doc_id").as("b"), col("cluster_id")), Seq("b"))
+          .groupBy(col("a").as("doc_id"))
+          .agg(min(col("cluster_id")).as("cluster_id"),
+            min(when(col("b") === col("a"), col("cluster_id"))).as("prev")))
+        // `prop` is self-joined, hence cached: two plan references
+        // would re-run the propagation join. ADAPTIVE jump depth: reach
+        // ×2 in the first round, ×4 (a second jump) from round 2 on.
+        // Banding emits near-cliques that converge in 1-2 rounds — for
+        // those the second self-join is pure per-round overhead
+        // (measured: q33/q71/q72 regressed 30-60% under an
+        // unconditional double jump) — while a graph still unconverged
+        // after the first round is the chain-heavy class (q44 measured
+        // diameter 16 at sf0.1) where halving the remaining rounds
+        // wins. Each extra self-join reference would square the size
+        // estimate the next checkpoint leaf inherits; the driver's
+        // stats clamp removes that compounding at any jump depth.
+        if (round.index == 0) jump(prop) else jump(jump(prop))
       }
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"dupClusters: round cap $maxIter hit before convergence — " +
-          "labels may be partial; raise maxIter")
-    }
-    // After ≥1 round `labels` is a checkpointed leaf, so the working
-    // edge list can be released — without this every call leaks one
-    // persisted edge list for the session's lifetime. The degenerate
-    // maxIter<=0 path still reads through `edges`, so pin the labels
-    // first there.
-    if (i == 0) labels = labels.localCheckpoint(true)
-    // `current.unpersist` matters only on the degenerate maxIter<=0
-    // path, where `current` is the initial persisted aggregation; after
-    // >=1 round it's a localCheckpoint leaf the CacheManager never saw
-    // (Dataset.unpersist does not free localCheckpoint blocks — those
-    // are reclaimed by ContextCleaner GC when the RDD is unreferenced).
-    if (i == 0) current.unpersist()
-    checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    labels
+      // maxIter <= 0 ran no round, so the labels still read through
+      // `edges`: pin them before the edge list is freed
+      (if (maxIter > 0) labels
+       else try labels.localCheckpoint(true) finally labels.unpersist())
+        .select(col("doc_id"), col("cluster_id"))
+    } finally graft.operators.Iterate.free(edges)
   }
-
-  /** The block-holding RDD behind a `localCheckpoint(true)`-ed frame
-    * (its analyzed plan is a `LogicalRDD` leaf). None for any other
-    * plan shape — callers then simply skip the explicit free. Shared
-    * by every iterative operator that frees rounds explicitly
-    * (dupClusters here, operators.Hierarchy). */
-  private[graft] def checkpointRdd(ds: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    ds.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
 
   /** Keeper selection over [[dupClusters]]: one row per cluster with
     * the canonical (minimum-id) keeper and the cluster size. */

@@ -118,11 +118,15 @@ object MediaCodec {
   /** JPEG via the in-JDK `javax.imageio` plugin — zero new
     * dependencies, headless-safe. Two passes: (1) the plugin decodes
     * the DCT stream to a `BufferedImage` (whatever raster layout it
-    * picks); (2) a normalization pass copies it through `getRGB` into
-    * the canonical row-major RGB layout every other decoder here
-    * produces, so downstream arithmetic (resize/pool/aHash) never sees
-    * the plugin's internal representation. Grayscale JPEGs come back
-    * 3-channel (getRGB's sRGB conversion) — uniform, documented.
+    * picks); (2) a normalization pass copies the raster's samples
+    * (`getRaster.getPixels`, band order) into the canonical row-major
+    * interleaved layout every other decoder here produces, so
+    * downstream arithmetic (resize/pool/aHash) never sees the plugin's
+    * internal representation. The file's band count is kept: 1 channel
+    * for grayscale, 3 for colour. Samples are copied as stored — not
+    * through `getRGB`, whose colour-space conversion gamma-maps gray
+    * (a flat-64 gray JPEG read back as 137 in each of 3 channels), so
+    * the same gray pixels hash alike as JPEG and as PPM/PNG.
     *
     * JDK-VERSION CAVEAT: JPEG decoding is exact-deterministic WITHIN a
     * JVM (same bytes → same pixels, every call — MultimodalSpec pins
@@ -147,19 +151,10 @@ object MediaCodec {
       "(progressive/arithmetic variants unsupported by the JDK plugin)")
     val w = img.getWidth; val h = img.getHeight
     require(w > 0 && h > 0, s"bad JPEG dimensions ${w}x$h")
-    // one batched getRGB call (not per-pixel): the plugin converts the
-    // raster to packed sRGB ints in a single pass
-    val argb = img.getRGB(0, 0, w, h, null, 0, w)
-    val out = new Array[Byte](w * h * 3)
-    var i = 0
-    while (i < argb.length) {
-      val v = argb(i)
-      out(i * 3) = ((v >> 16) & 0xff).toByte
-      out(i * 3 + 1) = ((v >> 8) & 0xff).toByte
-      out(i * 3 + 2) = (v & 0xff).toByte
-      i += 1
-    }
-    Pixels(w, h, 3, out)
+    // one batched getPixels call (not per-pixel): every band's samples,
+    // interleaved per pixel in band order (R, G, B for colour)
+    val raster = img.getRaster
+    Pixels(w, h, raster.getNumBands, raster.getPixels(0, 0, w, h, null: Array[Int]).map(_.toByte))
   }
 
   /** Binary PPM (P6): ASCII header `P6 <w> <h> <maxval>` with

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is ONE self-join of the jump table (hash
   * shuffle on the ancestor key) and the table never grows — always
   * |non-root nodes| rows. A 64-deep hierarchy costs 6 rounds instead
-  * of 64; plan size stays constant via per-round localCheckpoint.
+  * of 64. The rounds run under [[Iterate]], which keeps plan size
+  * constant by pinning each one.
   */
 object Hierarchy {
 
@@ -27,41 +28,23 @@ object Hierarchy {
     * bounds the deepest chain (rounds = ceil(log2 maxDepth)). */
   def flatten(nodes: DataFrame, edges: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    var jump = edges.select(col("id").as("v"), col("parent").as("anc"),
+    val init = edges.select(col("id").as("v"), col("parent").as("anc"),
         lit(1L).as("d"), col("parent").as("s"))
       .localCheckpoint()
-    // the jump table NEVER changes size (always |non-root nodes| rows:
-    // the self-join is a left join composing pointers in place), so
-    // round 0's honest scan-derived estimate is the right statistics
-    // for every round's checkpoint leaf. Unclamped, each leaf inherits
-    // the self-join's PRODUCT estimate (size² per round — digits
-    // double per round, and the inflated numbers block the broadcast
-    // the small-at-this-scale jump side should get); the clamp keeps
-    // the estimate constant and honest at zero extra jobs, so the
-    // planner's broadcast-vs-shuffle choice tracks the REAL size at
-    // any scale (big at 100 TB → shuffle join, as before).
-    val st0 = jump.queryExecution.optimizedPlan.stats
-    var prevCkpt = checkpointRdd(jump)
-    var span = 1L
-    while (span < maxDepth) {
-      val j2 = jump.select(col("v").as("v2"), col("anc").as("anc2"),
+    // the jump table never changes size (always |non-root nodes| rows:
+    // the self-join is a left join composing pointers in place); round
+    // k's table spans 2^k hops, so ceil(log2 maxDepth) rounds
+    val rounds = 32 - Integer.numberOfLeadingZeros(maxDepth - 1)
+    val jump = Iterate("Hierarchy", init, rounds) { (j, _) =>
+      val j2 = j.select(col("v").as("v2"), col("anc").as("anc2"),
         col("d").as("d2"), col("s").as("s2"))
       // left join: an entry whose ancestor is a root (no jump entry)
       // is already saturated and passes through unchanged
-      jump = jump.join(j2, col("anc") === col("v2"), "left")
+      j.join(j2, col("anc") === col("v2"), "left")
         .select(col("v"),
           coalesce(col("anc2"), col("anc")).as("anc"),
           (col("d") + coalesce(col("d2"), lit(0L))).as("d"),
           (col("s") + coalesce(col("s2"), lit(0L))).as("s"))
-        .localCheckpoint()
-      jump = org.apache.spark.sql.graft.StatsBridge.clampStatsTo(jump, st0)
-      // free the previous round's checkpoint blocks AT THE RDD — the
-      // eager checkpoint above no longer references them, and
-      // Dataset.unpersist would be a no-op (checkpoint blocks never
-      // enter the CacheManager; dupClusters learned this the hard way)
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = checkpointRdd(jump)
-      span *= 2
     }
     nodes.select(col("id"))
       .join(jump, col("id") === col("v"), "left")
@@ -70,7 +53,4 @@ object Hierarchy {
         coalesce(col("d"), lit(0L)).as("depth"),
         (col("id") + coalesce(col("s"), lit(0L))).as("path_sum"))
   }
-
-  private def checkpointRdd(ds: DataFrame) =
-    graft.functions.DedupFunctions.checkpointRdd(ds)
 }

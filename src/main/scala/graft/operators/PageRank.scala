@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * millions of in-edges) is aggregation skew, which partial
   * aggregation absorbs. Iteration count is a fixed parameter (the
   * caller picks convergence depth), so the physical plan is statically
-  * bounded; for deep iteration counts compose with localCheckpoint as
-  * dupClusters does.
+  * bounded; deep iteration counts run as pinned blocks under
+  * [[Iterate]].
   */
 object PageRank {
 
@@ -49,27 +49,29 @@ object PageRank {
       .localCheckpoint()
     val deg = und.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val adj = und.join(deg, "u").localCheckpoint()
-    var r = deg.select(col("u").as("node"), lit(1000000L).as("rank"))
-    for (i <- 1 to iterations) {
-      // (850 * s) div 1000 ≡ (850000 * s) div 1000000 exactly (both
-      // scale numerator and denominator by 1000), with 1000x the
-      // overflow headroom: the old form wrapped Long past s ≈ 1.08e13
-      // — a hub with ~1.2e7 unit-rank in-neighbors — silently
-      // poisoning every later round. The DuckDB oracle keeps the
-      // 850000/1000000 spelling (HUGEINT arithmetic cannot wrap);
-      // the values are identical.
-      r = adj.join(r, adj("u") === r("node"))
+    // (850 * s) div 1000 ≡ (850000 * s) div 1000000 exactly (both
+    // scale numerator and denominator by 1000), with 1000x the
+    // overflow headroom: the old form wrapped Long past s ≈ 1.08e13
+    // — a hub with ~1.2e7 unit-rank in-neighbors — silently
+    // poisoning every later round. The DuckDB oracle keeps the
+    // 850000/1000000 spelling (HUGEINT arithmetic cannot wrap);
+    // the values are identical.
+    def advance(from: DataFrame, n: Int): DataFrame = (1 to n).foldLeft(from) { (r, _) =>
+      adj.join(r, adj("u") === r("node"))
         .select(col("v"), expr("rank div deg").as("c"))
         .groupBy(col("v")).agg(sum(col("c")).as("s"))
         .select(col("v").as("node"),
           (lit(150000L) + expr("(850 * s) div 1000")).as("rank"))
-      // bound plan depth: each round nests a join+agg over the prior
-      // round's plan and Catalyst's analysis cost grows superlinearly
-      // with depth — deep iteration counts need a periodic lineage
-      // cut (the Hierarchy discipline). Every 5 rounds keeps q97's
-      // 5-iteration plan untouched while ranks(_, 50) stays plannable.
-      if (i % 5 == 0 && i < iterations) r = r.localCheckpoint()
     }
-    r
+    // bound plan depth: each iteration nests a join+agg over the prior
+    // one's plan and Catalyst's analysis cost grows superlinearly with
+    // depth, so one driver round is a lazy block of 5 iterations,
+    // pinned by [[Iterate]]. The last block (1 to 5 iterations) stays
+    // lazy, so q97's 5-iteration plan carries no pin at all while
+    // ranks(_, 50) stays plannable.
+    val pinned = (iterations - 1) / 5
+    val blocks = Iterate("PageRank", deg.select(col("u").as("node"), lit(1000000L).as("rank")),
+      pinned)((r, _) => advance(r, 5))
+    advance(blocks, iterations - 5 * pinned)
   }
 }

@@ -130,11 +130,10 @@ final class StreamingProfile(
     store.write(merged)
     // free this batch's checkpointed blocks NOW: a long-running
     // foreachBatch stream otherwise pins one batch-sized block set
-    // per trigger until driver GC notices (the Hierarchy.scala
-    // discipline; Dataset.unpersist does not free localCheckpoint
-    // blocks — only the RDD-level call does)
-    graft.functions.DedupFunctions.checkpointRdd(incoming)
-      .foreach(_.unpersist(blocking = false))
+    // per trigger until driver GC notices (Dataset.unpersist does not
+    // free localCheckpoint blocks — Iterate.free frees at the RDD, as
+    // it does each round of the iterative operators)
+    graft.operators.Iterate.free(incoming)
   }
 
   /** The dataset card over everything folded so far: (slice, n_docs,

@@ -15,12 +15,12 @@ import graft.{GraftSession, SparkEntry}
   *   runMain graft.tools.Profile <mode> <sfDir> <q1,q2,...> [reps|outDir]
   *  - `reps [n]`: min-of-n seconds per query, plus the warmest (last)
   *    rep's per-stage table (wall, tasks, run/cpu/fetch-wait, shuffle
-  *    write, task max/median).
+  *    write, task max/median) and its iterative-operator rounds.
   *  - `passes`: three bench-shaped passes over the list (interleaved,
   *    unlike `reps`): the per-query seconds min-of-passes sees.
   *  - `fixed [n]`: the driver-side constant: build+analyze, plan and n
   *    fresh executions (exec1 pays cold codegen), with the last one's
-  *    jobs and stages.
+  *    jobs, stages and iterative-operator rounds.
   *  - `plans [outDir]`: `explain("formatted")` per query, to
   *    `<outDir>/<name>.txt` when given, else to stdout, with its
   *    per-construction ids renumbered ([[stable]]). */
@@ -75,11 +75,12 @@ object Profile {
             println(f"[reps] $name rep $i: $dt%.3f s")
             dt
           }
-          stageTable(name, trace.drain()(s"$name#$n").stages)
-          name -> ts.min
+          val last = trace.drain()(s"$name#$n")
+          stageTable(name, last.stages)
+          (name, ts.min, last.rounds)
         }
         println("[reps] ---- min seconds ----")
-        mins.foreach { case (q, t) => println(f"[reps] $q%-40s $t%.3f") }
+        mins.foreach { case (q, t, r) => println(f"[reps] $q%-40s $t%.3f rounds=$r") }
         println(f"[reps] sum-of-mins: ${mins.map(_._2).sum}%.3f")
       case "passes" =>
         val ps = (1 to 3).map(p => names.map(timed(_, p)))
@@ -88,7 +89,7 @@ object Profile {
           println(f"[pass] ${names(i)}%-36s ${ps(0)(i)}%.3f ${ps(1)(i)}%.3f ${ps(2)(i)}%.3f"))
         println(f"[pass] totals ${ps(0).sum}%.2f ${ps(1).sum}%.2f ${ps(2).sum}%.2f")
       case "fixed" =>
-        println("[fixed] name build+analyze plan exec1..execN jobs stages (ms)")
+        println("[fixed] name build+analyze plan exec1..execN jobs stages rounds (ms)")
         names.foreach { name =>
           isolate(spark)
           val t0 = System.nanoTime()
@@ -102,7 +103,8 @@ object Profile {
           val execs = (1 to n).map(i => math.round(timed(name, i) * 1000))
           val last = trace.drain()(s"$name#$n")
           println(s"[fixed] $name build=${(t1 - t0) / 1000000} plan=${(t2 - t1) / 1000000} " +
-            s"exec=${execs.mkString(",")} jobs=${last.jobs} stages=${last.stages.size}")
+            s"exec=${execs.mkString(",")} jobs=${last.jobs} stages=${last.stages.size} " +
+            s"rounds=${last.rounds}")
         }
     } finally trace.close()
     0

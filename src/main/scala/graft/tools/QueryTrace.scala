@@ -17,15 +17,16 @@ import org.apache.spark.sql.SparkSession
   * job count, one [[QueryTrace.Stage]] row per completed stage (with
   * its task durations, the skew a stage aggregate cannot show) and the
   * distinct shuffle dependencies written by stages that succeeded
-  * (which dedups AQE retries and exchange reuse). Jobs outside any
-  * group are not recorded. */
+  * (which dedups AQE retries and exchange reuse) and the iterative-
+  * operator rounds it ran. Jobs outside any group are not recorded. */
 final class QueryTrace private (sc: SparkContext) extends SparkListener
     with AutoCloseable {
   import QueryTrace._
 
   private final class Acc(val jobs: AtomicInteger = new AtomicInteger(0),
       val stages: ConcurrentLinkedQueue[Stage] = new ConcurrentLinkedQueue[Stage](),
-      val shuffleDeps: java.util.Set[Int] = ConcurrentHashMap.newKeySet[Int]())
+      val shuffleDeps: java.util.Set[Int] = ConcurrentHashMap.newKeySet[Int](),
+      val rounds: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]())
   private val groups = new ConcurrentHashMap[String, Acc]()
   private val stageGroup = new ConcurrentHashMap[Int, String]()
   private val taskMs = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
@@ -36,6 +37,7 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener
     Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
       .foreach { g =>
         acc(g).jobs.incrementAndGet()
+        Option(js.properties.getProperty(graft.operators.Iterate.RoundTag)).foreach(acc(g).rounds.add)
         js.stageInfos.foreach(si => stageGroup.put(si.stageId, g))
       }
 
@@ -72,7 +74,7 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener
   def drain(): Map[String, Group] = {
     SchedulerBridge.drainListenerBus(sc, timeoutMs = 10000L)
     groups.asScala.map { case (g, a) =>
-      g -> Group(a.jobs.get, a.stages.asScala.toVector, a.shuffleDeps.asScala.toSet)
+      g -> Group(a.jobs.get, a.stages.asScala.toVector, a.shuffleDeps.asScala.toSet, a.rounds.size)
     }.toMap
   }
 
@@ -86,7 +88,11 @@ object QueryTrace {
       runMs: Long, cpuMs: Long, fetchWaitMs: Long, shuffleWriteBytes: Long,
       taskMs: Vector[Long])
 
-  final case class Group(jobs: Int, stages: Vector[Stage], shuffleDeps: Set[Int]) {
+  /** One group's cost. `rounds` is the number of distinct
+    * [[graft.operators.Iterate]] rounds whose jobs ran in the group:
+    * counted by round tag, not by job, because AQE stage jobs inherit
+    * the tag and their number varies between identical runs. */
+  final case class Group(jobs: Int, stages: Vector[Stage], shuffleDeps: Set[Int], rounds: Int) {
     def shuffleWriteBytes: Long = stages.map(_.shuffleWriteBytes).sum
   }
 

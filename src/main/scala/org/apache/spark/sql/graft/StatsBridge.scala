@@ -2,11 +2,13 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into the `private[sql]` Dataset/LogicalRDD constructors so
-  * iterative operators can CLAMP a localCheckpoint leaf's inherited
+  * [[graft.operators.Iterate]], the driver behind every iterative
+  * operator, can CLAMP a localCheckpoint leaf's inherited
   * statistics (same visibility rationale as [[ColumnBridge]]).
   *
   * Why this exists: `Dataset.localCheckpoint` copies the OPTIMIZED
@@ -27,26 +29,21 @@ import org.apache.spark.sql.execution.LogicalRDD
 object StatsBridge {
 
   /** If `df` is a checkpoint leaf (`LogicalRDD`), a copy whose stats
-    * are `rowCount` rows at `rowCount * bytesPerRow` bytes; any other
+    * are `rowCount` rows at `EstimationUtils.getSizePerRow` bytes each
+    * (row overhead plus each column type's default size: the ORDER of
+    * magnitude the planner needs, not an exact byte count); any other
     * plan shape is returned unchanged (nothing to clamp — only
     * checkpoint leaves inherit compounded estimates). Column-level
     * stats are dropped (the size-only estimator never had them here);
     * constraints are preserved. */
-  def clampStats(df: DataFrame, rowCount: Long, bytesPerRow: Long): DataFrame = {
-    val n = math.max(rowCount, 0L)
-    clampStatsTo(df, Statistics(
-      sizeInBytes = BigInt(math.max(n * bytesPerRow, 1L)),
-      rowCount = Some(BigInt(n))))
-  }
-
-  /** Same clamp with caller-supplied statistics — for iterative
-    * operators whose working set has CONSTANT size (Hierarchy's jump
-    * table), where round 0's honest scan-derived estimate is the right
-    * clamp for every later round at zero extra jobs. */
-  def clampStatsTo(df: DataFrame, stats: Statistics): DataFrame =
+  def clampStats(df: DataFrame, rowCount: Long): DataFrame =
     df.queryExecution.analyzed match {
       case l: LogicalRDD =>
         val session = df.sparkSession.asInstanceOf[SparkSession]
+        val n = BigInt(math.max(rowCount, 0L))
+        val stats = Statistics(
+          sizeInBytes = (n * EstimationUtils.getSizePerRow(l.output)).max(1),
+          rowCount = Some(n))
         // case-class copy: first parameter list keeps the leaf's own
         // fields (same RDD — no recompute, no new blocks); the curried
         // list swaps in the clamped stats. Constraints ride along via

@@ -416,17 +416,30 @@ class DedupPropertySpec extends SparkSpec {
   test("dupClusters frees per-round checkpoint blocks on deep chains") {
     // a 300-node path needs ~log2(300) pointer-jump rounds; without the
     // per-round free, each round strands one localCheckpoint block set
-    // until some future GC — here live persistent RDDs must stay
-    // bounded at the final round's labels (+0/1 transient)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // until some future GC — here the RDDs the call leaves registered
+    // must stay bounded at the final round's labels. Compared as id
+    // sets: the ContextCleaner may drop OTHER entries during the call,
+    // which a size count would read as a negative leak.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val chain = (0 until 300).map(i => (i.toLong, i + 1L)).toDF("d1", "d2")
     val out = DedupFunctions.dupClusters(chain, maxIter = 20)
     assert(out.count() == 301 &&
       out.filter(col("cluster_id") === 0L).count() == 301,
       "the whole path must collapse to cluster 0")
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 1,
-      s"checkpoint blocks leaked across rounds: $before persistent RDDs -> $after")
+    val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(live.size <= 1, s"checkpoint blocks leaked across rounds: $live")
+  }
+
+  test("dupClusters frees every RDD it created when strict mode hits the round cap") {
+    // the cap-hit throws after the last round is pinned; that round's
+    // labels are nobody's to free but the call's own
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val chain = (0 until 300).map(i => (i.toLong, i + 1L)).toDF("d1", "d2")
+    intercept[IllegalStateException] {
+      DedupFunctions.dupClusters(chain, maxIter = 2, strict = true)
+    }
+    val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(live.isEmpty, s"RDDs created by the failed call still registered: $live")
   }
 
   test("qualityScore is bounded in [0,1], rewards clean text over punctuation soup") {
@@ -463,13 +476,16 @@ class DedupPropertySpec extends SparkSpec {
     // count (and, at scale, re-read the label table once per round) —
     // pin that the fast path actually engages on this Spark version
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("d1", "d2")
-    val labels = DedupFunctions.dupClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    assert(DedupFunctions.lastConvergenceViaObserve.get(),
-      "convergence verdict fell back to the explicit count job — " +
-        "observe-on-localCheckpoint stopped surfacing metrics")
-    assert(DedupFunctions.lastDupClustersRounds.get() >= 1)
+    val trace = graft.tools.QueryTrace.attach(spark)
+    try {
+      val labels = trace.traced("dupClusters-observe")(DedupFunctions.dupClusters(pairs))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+      assert(graft.operators.Iterate.lastConvergenceViaObserve.get(),
+        "convergence verdict fell back to the explicit count job — " +
+          "observe-on-localCheckpoint stopped surfacing metrics")
+      assert(trace.drain()("dupClusters-observe").rounds >= 1)
+    } finally trace.close()
   }
 
   test("dupClusters converges on a long chain (diameter > 2)") {

@@ -441,6 +441,23 @@ class MultimodalSpec extends SparkSpec {
     info(f"JPEG roundtrip mean abs error: $meanErr%.2f")
   }
 
+  test("grayscale JPEG decodes to its stored samples, one channel") {
+    // read through getRGB, gray is gamma-mapped to sRGB: a flat-64
+    // image came back as 137 in each of 3 channels
+    val (w, h) = (16, 16)
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    for (y <- 0 until h; x <- 0 until w) raster.setSample(x, y, 0, 64)
+    val baos = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "jpg", baos),
+      "JDK has no JPEG writer — imageio plugin missing")
+    val px = MediaCodec.decodeImage(baos.toByteArray)
+    assert(px.width == w && px.height == h && px.channels == 1, px)
+    val values = px.data.map(_ & 0xff).toSet
+    assert(values.forall(v => math.abs(v - 64) <= 1), s"flat 64 decoded as $values")
+  }
+
   test("JPEG survives the perceptual-hash path and the distributed pipeline") {
     val blob = encodeJpeg(64, 64)
     // the perceptual fingerprint of the decoded JPEG must match the

@@ -54,4 +54,16 @@ class HierarchySpec extends SparkSpec {
     assert(got.contains((99L, 99L, 0L, 99L)), "isolated node roots itself")
     assert(got.contains((12L, 10L, 2L, 33L)), "12 + 11 + 10 path sum")
   }
+
+  test("maxDepth 256: live checkpoint blocks stay at one round's jump table") {
+    // 8 doubling rounds; every round but the last must be freed by the
+    // call, not left to a later GC. Compared as id sets: the
+    // ContextCleaner may drop OTHER entries during the call.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ids = (0L until 200L).toSeq
+    val parent = (id: Long) => if (id >= 1) Some(id - 1) else None
+    assert(run(ids, parent, maxDepth = 256) == expected(ids, parent))
+    val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(live.size <= 1, s"round checkpoints left registered: $live")
+  }
 }

@@ -39,4 +39,17 @@ class PageRankSpec extends SparkSpec {
     assert(r(0L) == 1000000L && r(10L) == 1000000L,
       "symmetric components sit at the fixed point")
   }
+
+  test("50 iterations: live checkpoint blocks stay at one round plus the adjacency pins") {
+    // nine pinned 5-iteration blocks; the call may leave registered
+    // only its own pins (the undirected edge list and the adjacency)
+    // and the last block's ranks. Compared as id sets: the
+    // ContextCleaner may drop OTHER entries during the call.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cycle = (0L until 6L).map(i => (i, (i + 1) % 6))
+    val r = rankMap(cycle, 50)
+    assert(r.values.toSet == Set(1000000L), s"cycle ranks must stay at 1.0: $r")
+    val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(live.size <= 3, s"round checkpoints left registered: $live")
+  }
 }

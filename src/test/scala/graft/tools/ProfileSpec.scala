@@ -43,7 +43,24 @@ class ProfileSpec extends SparkSpec {
     assert(code == 0)
     val row = rows(out, "[fixed] q14_star_join ")
     assert(row.size == 1, out)
-    assert(row.head.matches(""".* exec=\d+,\d+ jobs=[1-9]\d* stages=\d+"""), out)
+    assert(row.head.matches(""".* exec=\d+,\d+ jobs=[1-9]\d* stages=\d+ rounds=\d+"""), out)
+  }
+
+  test("reps and fixed: the iterative operators' rounds per query") {
+    // rounds are counted by Iterate's round tags: q33's dupClusters
+    // runs at least its confirming round, q118's Hierarchy.flatten at
+    // maxDepth 256 runs ceil(log2 256) = 8
+    def rounds(out: String, prefix: String, name: String) =
+      rows(out, s"$prefix $name").flatMap(l => """ rounds=(\d+)""".r.findFirstMatchIn(l))
+        .map(_.group(1).toInt)
+    val (c1, reps) = profile("reps", dir, "q33,q118", "1")
+    val (c2, fixed) = profile("fixed", dir, "q33,q118", "1")
+    assert(c1 == 0 && c2 == 0)
+    for ((out, prefix) <- Seq(reps -> "[reps]", fixed -> "[fixed]")) {
+      val q33 = rounds(out, prefix, "q33_dup_clusters")
+      assert(q33.size == 1 && q33.head >= 1, out)
+      assert(rounds(out, prefix, "q118_hierarchy_doubling") == Seq(8), out)
+    }
   }
 
   test("plans: one formatted plan file per query") {
